@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.BindParams
+
 /** Table loaders over the driver-generated parquet test data.
   *
   * The time-series "fact" table is `events` (event_id, ts, user_id,
@@ -173,7 +175,18 @@ object GraftSession {
       // identical plans. 5000 entries covers the whole suite;
       // ReservedCodeCacheSize=1g (run_verify.sh / build.sbt) holds the
       // compiled code comfortably.
+      // Caveat: Spark builds that cache ONCE per JVM, sized from
+      // `SQLConf.get` on whichever thread compiles first, and a thread
+      // with no active session reads Spark's default there, not this.
+      // A facade whose first compile ran on its flusher thread measured
+      // a 100-entry cache; HttpApi therefore runs every thread it owns
+      // with the session active (see its scaladoc), and any other
+      // embedding thread that may compile first must do the same.
       .config("spark.sql.codegen.cache.maxEntries", "5000")
+      // plan constants become references, not Java literals, so a query
+      // re-run with new bounds (a dashboard refresh) reuses its compiled
+      // classes instead of compiling new ones (graft.functions.Param)
+      .withExtensions(_.injectQueryStagePrepRule(_ => BindParams))
       .config("spark.ui.enabled", "false")
       // the app-status store populates even with the UI off, and its
       // DEFAULTS are sized for a human browsing a UI, not a long-lived

@@ -6,6 +6,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.CodegenShim
 
 import graft.promql.{EvalParams, FuncCall, LabelCall, Parser, PromSource,
   Selector}
@@ -47,6 +48,17 @@ import graft.tsdb.{MatchEq, Matcher, Matchers, MutableMapping}
   * hands every slot back to the write pool at each stage boundary —
   * a minShare is what actually bounds read latency (measured: 0.44 s
   * quiesced, 13-15 s under 43k pts/s with 1:1 FAIR, see SCALE.md).
+  *
+  * Threads and the session: every thread the facade owns — the HTTP
+  * handler pool, `facade-flusher` and `graft-hot-compact` (the folds and
+  * the upkeep they run) — runs its whole life with `spark` as the active
+  * session. Code that reads `SQLConf.get` outside a Dataset action sees
+  * Spark's defaults on a thread with no active session, and the most
+  * expensive such reader is Spark's codegen cache, built once per JVM by
+  * the first compile: when that was a flusher pin, the cache got 100
+  * entries instead of the session's 5000 and dashboard refreshes
+  * recompiled their evicted classes. New facade threads must come from
+  * `sessionThreads`.
   *
   * Storage: an APPEND-ONLY hot store (S10 — the reference's temporary
   * store appends batches per metric while background goroutines flush,
@@ -184,6 +196,11 @@ final class HttpApi(spark: SparkSession,
   // sample falls behind an earlier spill MAY duplicate keys already on
   // disk; only then do reads pay the LWW dedup shuffle over the cold tier
   @volatile private var lastSpillCutoff = Long.MinValue
+  // the TIME frontier of the latest spill (the wall-derived cutoff, see
+  // `aggTo` in compactNow): everything below it is on disk, so it bounds
+  // how far [[preAggregate]] may move the agg_5m watermark (0 = nothing
+  // spilled by this process: the watermark, 0 or later, stays put)
+  @volatile private var spillTimeFrontier = 0L
   @volatile private var coldDirty = false
   // Partial (leveled) rewrite tracking — the reference's TWCS discipline
   // (`cassandra/tsdb/tsdb.go:205-215`: time-window compaction never
@@ -241,12 +258,23 @@ final class HttpApi(spark: SparkSession,
   // per-query details
   @volatile private var debugQueries = false
   private val compacting = new java.util.concurrent.atomic.AtomicBoolean
-  private val compactExec =
-    java.util.concurrent.Executors.newSingleThreadExecutor(r => {
-      val t = new Thread(r, "graft-hot-compact")
-      t.setDaemon(true)
-      t
-    })
+  // set by [[stop]]: no background fold starts after it
+  @volatile private var stopped = false
+  /** Threads for the facade's executors, each running its whole life with
+    * this facade's session active (the thread/session rule in the class
+    * doc).
+    */
+  private def sessionThreads(name: String,
+      daemon: Boolean = true): java.util.concurrent.ThreadFactory = r => {
+    val t = new Thread(() => {
+      SparkSession.setActiveSession(spark)
+      r.run()
+    }, name)
+    t.setDaemon(daemon)
+    t
+  }
+  private val compactExec = java.util.concurrent.Executors
+    .newSingleThreadExecutor(sessionThreads("graft-hot-compact"))
 
   // internal telemetry (the reference serves promhttp at /metrics,
   // `api/api.go:210`)
@@ -595,10 +623,8 @@ final class HttpApi(spark: SparkSession,
   // single-flusher queue: pins happen in submission order OFF the HTTP
   // threads, so concurrent posts never block on a Spark job; reads drain
   // the queue ([[flushPending]]) for read-your-writes
-  private val flushExec =
-    java.util.concurrent.Executors.newSingleThreadExecutor(r => {
-      val t = new Thread(r, "facade-flusher"); t.setDaemon(true); t
-    })
+  private val flushExec = java.util.concurrent.Executors
+    .newSingleThreadExecutor(sessionThreads("facade-flusher"))
   @volatile private var lastFlush: java.util.concurrent.Future[_] =
     java.util.concurrent.CompletableFuture.completedFuture(null)
   // flush snapshots submitted but not yet appended to `batches`
@@ -740,6 +766,16 @@ final class HttpApi(spark: SparkSession,
     * flusher).
     */
   private[graft] def drainFlushes(): Unit = flushPending()
+
+  /** The active session each facade executor's threads see, by thread
+    * name (tests; the handler pool only once [[start]] ran).
+    */
+  private[graft] def threadSessions(): Map[String, Option[SparkSession]] = {
+    val probe: java.util.concurrent.Callable[(String, Option[SparkSession])] =
+      () => Thread.currentThread.getName -> SparkSession.getActiveSession
+    (Seq(flushExec, compactExec) ++ serverPool)
+      .map(_.submit(probe).get()).toMap
+  }
 
   /** The hot-batch view a read should scan, staleness-aware. Default
     * (no header) is strict read-your-writes: drain the flush queue, then
@@ -982,8 +1018,11 @@ final class HttpApi(spark: SparkSession,
     // re-checks on release).
     val full = fullWanted && !compactLock.isLocked
     val delta = deltaFoldEvery > 0 && rawTailLen >= deltaFoldEvery
-    if ((full || delta) && compacting.compareAndSet(false, true))
-      compactExec.execute { () =>
+    if ((full || delta) && compacting.compareAndSet(false, true)) {
+      // checked AFTER claiming the flag: once stop() has set `stopped`
+      // and seen the flag clear, no fold can start behind its back
+      if (stopped) compacting.set(false)
+      else compactExec.execute { () =>
         try {
           if (pinsSinceFullFold >= compactEvery && compactLock.tryLock())
             try compactNow() finally compactLock.unlock()
@@ -992,6 +1031,7 @@ final class HttpApi(spark: SparkSession,
         finally compacting.set(false)
         maybeScheduleCompact()
       }
+    }
   }
 
   /** Raw (unfolded) pins at the tail of the batch vector. */
@@ -1313,6 +1353,7 @@ final class HttpApi(spark: SparkSession,
         // below an earlier spill's keys) — the frontier keeps covering
         // everything ever written to disk
         lastSpillCutoff = math.max(lastSpillCutoff, overlapTo)
+        spillTimeFrontier = math.max(spillTimeFrontier, aggTo)
       }
       newDim.foreach(d => ttlDim = Some(d))
       val snapPaths = batchPaths.take(snap.size)
@@ -1912,8 +1953,10 @@ final class HttpApi(spark: SparkSession,
   /** A5 incremental pre-aggregation over the COLD tier: downsample
     * [watermark, endMs) into agg_5m and advance the watermark — run from
     * compaction after each spill (the spill frontier is exactly the
-    * "data below this is final" boundary) or on demand. Returns the new
-    * watermark.
+    * "data below this is final" boundary) or on demand. `endMs` is
+    * clamped to that frontier: buckets past it may still sit in the hot
+    * tier, and a watermark over them would serve them from agg_5m as
+    * empty. Returns the new watermark.
     */
   def preAggregate(endMs: Long): Long = withColdLock {
     // background-upkeep pool, not the request lane (see deltaFoldNow):
@@ -1925,7 +1968,8 @@ final class HttpApi(spark: SparkSession,
       "graft-upkeep")
     aggPath.fold(0L) { ap =>
     val wm = graft.store.Store.readWatermark(ap)
-    val end = endMs - math.floorMod(endMs, PreAggResolutionMs)
+    val endAt = math.min(endMs, spillTimeFrontier)
+    val end = endAt - math.floorMod(endAt, PreAggResolutionMs)
     if (end <= wm || coldWritesBlocked) wm
     else coldPoints(wm, end - 1) match {
       case None => wm
@@ -2189,7 +2233,8 @@ final class HttpApi(spark: SparkSession,
     // 4 saturating writers on a 4-thread pool, with the handler itself
     // accounting for <4 s — see SCALE.md). Admission stays bounded:
     // writes still block their own thread at the backpressure gate.
-    val pool = java.util.concurrent.Executors.newCachedThreadPool()
+    val pool = java.util.concurrent.Executors.newCachedThreadPool(
+      sessionThreads("facade-http", daemon = false))
     s.setExecutor(pool)
     s.start()
     server = Some(s)
@@ -2201,6 +2246,10 @@ final class HttpApi(spark: SparkSession,
     // drain OUTSIDE the monitor: flushPending blocks on the flusher,
     // which needs `this` for its batch append
     flushPending()
+    // then the background fold: one still in flight would pin (and
+    // spill) after the scope clear below, leaking its staged fold
+    stopped = true
+    while (compacting.get) Thread.sleep(5)
     synchronized {
       server.foreach(_.stop(0))
       server = None
@@ -2963,7 +3012,10 @@ final class HttpApi(spark: SparkSession,
           staleReadsTotal.get) +
         c("graft_stale_head_reads_total",
           "Budgeted reads served from the compacted head alone",
-          staleHeadReadsTotal.get)
+          staleHeadReadsTotal.get) +
+        c("graft_codegen_compilations_total",
+          "Generated-code compilations in this JVM (codegen cache misses)",
+          CodegenShim.compilations)
     respondBytes(h, 200, body.getBytes(UTF_8),
       "text/plain; version=0.0.4")
   }

@@ -839,6 +839,21 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
     assert(m.statusCode() === 200)
     assert(m.body().contains("graft_points_written_total"), m.body())
     assert(m.body().contains("# TYPE graft_writes_total counter"))
+    // Spark's process-wide compile count: a parseable counter sample that
+    // never moves backwards
+    def compiles(body: String): Long = {
+      val lines = body.linesIterator.toSeq
+      assert(lines.contains(
+        "# TYPE graft_codegen_compilations_total counter"), body)
+      lines.collectFirst {
+        case l if l.startsWith("graft_codegen_compilations_total ") =>
+          l.split(' ').last.toLong
+      }.getOrElse(fail(body))
+    }
+    val c0 = compiles(m.body())
+    get(s"/api/v1/query?query=${enc("count(node_load)")}&time=${T9 / 1000}")
+    val c1 = compiles(get("/metrics").body())
+    assert(c1 >= c0 && c1 > 0, s"$c0 -> $c1: a query ran generated code")
     val dump = get("/debug/index_dump").body()
     assert(dump.contains("""__name__="node_load""""), dump.take(300))
     val byLabels = get(s"/debug/index_dump_by_labels?query=${
@@ -2079,5 +2094,118 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
       .where(col("__name__") === "bk" && col("ts_ms") === T0 + 3 * day)
       .select("value").collect().map(_.getDouble(0))
     assert(vP.toSeq === Seq(6666.0))
+  }
+
+  private def getOn(p: Int, pathAndQuery: String,
+      headers: Seq[(String, String)] = Nil): HttpResponse[String] = {
+    val b = HttpRequest.newBuilder(
+      URI.create(s"http://127.0.0.1:$p$pathAndQuery"))
+    headers.foreach { case (k, v) => b.header(k, v) }
+    client.send(b.GET().build(), HttpResponse.BodyHandlers.ofString())
+  }
+
+  /** Every sample value of a query_range matrix response, per series. */
+  private def matrixValues(body: String): Seq[Seq[Double]] =
+    "\"values\":\\[(.*?)\\]\\]".r.findAllMatchIn(body).map(m =>
+      "\"([^\"]+)\"\\]".r.findAllMatchIn(m.group(1) + "]")
+        .map(_.group(1).toDouble).toSeq).toSeq
+
+  test("preAggregate stops at the spill frontier: a far-future end keeps " +
+    "hot buckets out of agg_5m, routed avg_over_time keeps every step") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_preagg_clamp")
+      .resolve("cold").toString
+    val apiPC = new HttpApi(spark, compactEvery = 1, durablePath = Some(dir))
+    val portPC = apiPC.start(0)
+    try {
+      val hourAgo = System.currentTimeMillis() - 3600000L
+      val hotStart = hourAgo - Math.floorMod(hourAgo, 300000L)
+      // 2024 history spills (older than hotRetainMs) and starts agg_5m;
+      // the last hour, one sample a minute, stays in the hot tier
+      val ts = (0 until 12).map(i => T0 + i * 300000L) ++
+        (0 to 60).map(i => hotStart + i * 60000L)
+      apiPC.write(Seq(PromSeries(Map("__name__" -> "pc_metric",
+        "instance" -> "a", "job" -> "node"), ts.map(t => (t, 1.0)))),
+        "default")
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while ((apiPC.pendingBatches > 0 || apiPC.preAggWatermark == 0L) &&
+        System.nanoTime() < deadline) Thread.sleep(50)
+      val wm0 = apiPC.preAggWatermark
+      assert(wm0 > T0 && wm0 <= hotStart, s"watermark $wm0")
+      // the hazard: an end far past the spill frontier
+      assert(apiPC.preAggregate(hotStart + 365L * 86400000L) === wm0)
+      assert(apiPC.preAggWatermark === wm0)
+      // steps every 10 min over the hot hour: routed (step >= 5 min) and
+      // raw answers both hold every step
+      def q(hdrs: Seq[(String, String)]) = getOn(portPC,
+        s"/api/v1/query_range?query=${enc("avg_over_time(pc_metric[10m])")}" +
+          s"&start=${(hotStart + 600000L) / 1000}" +
+          s"&end=${(hotStart + 3600000L) / 1000}&step=600", hdrs)
+      def routedTotal(): Long = getOn(portPC, "/metrics").body()
+        .linesIterator.find(_.startsWith("graft_preagg_routed_total"))
+        .get.split(" ").last.toLong
+      val r0 = routedTotal()
+      val routed = q(Nil)
+      assert(routedTotal() === r0 + 1, "step >= 5 min must route to agg_5m")
+      val raw = q(Seq("X-SquirrelDB-ForceRaw" -> "true"))
+      assert(routed.statusCode() === 200, routed.body())
+      assert(matrixValues(routed.body()) === Seq(Seq.fill(6)(1.0)),
+        routed.body())
+      assert(routed.body() === raw.body())
+    } finally apiPC.stop()
+  }
+
+  test("a refresh moved by one step compiles no new code") {
+    import org.apache.spark.sql.graftshim.CodegenShim
+    val apiCR = new HttpApi(spark, compactEvery = 1000000)
+    val portCR = apiCR.start(0)
+    try {
+      // a counter rising 2/s, one sample every 15 s for 30 min
+      apiCR.write(Seq(PromSeries(Map("__name__" -> "cr_total",
+        "instance" -> "a", "job" -> "node"),
+        (0 until 120).map(i => (T0 + i * 15000L, i * 30.0)))), "default")
+      apiCR.drainFlushes()
+      def refresh(k: Int) = {
+        val from = (T0 + 600000L) / 1000 + k * 15
+        getOn(portCR, s"/api/v1/query_range?query=${
+          enc("rate(cr_total[1m])")}&start=$from&end=${from + 900}&step=15")
+      }
+      val first = refresh(0)
+      val before = CodegenShim.compilations
+      val second = refresh(1)
+      assert(CodegenShim.compilations === before,
+        "the moved window must reuse the first request's generated classes")
+      for (r <- Seq(first, second)) {
+        assert(r.statusCode() === 200, r.body())
+        val vs = matrixValues(r.body())
+        assert(vs.size === 1 && vs.head.size === 61, r.body())
+        assert(vs.head.forall(v => math.abs(v - 2.0) < 1e-9), r.body())
+      }
+    } finally apiCR.stop()
+  }
+
+  test("facade threads run with the facade's session active") {
+    import org.apache.spark.sql.SparkSession
+    // nothing to inherit: the flusher and handler threads start from here
+    SparkSession.clearActiveSession()
+    val apiTS = new HttpApi(spark)
+    try {
+      val portTS = apiTS.start(0)
+      val w = client.send(HttpRequest.newBuilder(URI.create(
+        s"http://127.0.0.1:$portTS/api/v1/write"))
+        .header("Content-Type", "application/x-protobuf")
+        .POST(HttpRequest.BodyPublishers.ofByteArray(Prompb.encodeSnappy(
+          Seq(series("ts_metric", "i1", i => i.toDouble))))).build(),
+        HttpResponse.BodyHandlers.ofString())
+      assert(w.statusCode() === 204, w.body())
+      assert(getOn(portTS, s"/api/v1/query?query=ts_metric&time=${
+        T9 / 1000}").body().contains("ts_metric"))
+      val seen = apiTS.threadSessions()
+      assert(seen.keySet ===
+        Set("facade-flusher", "graft-hot-compact", "facade-http"))
+      assert(seen.values.forall(_.contains(spark)), seen)
+    } finally {
+      apiTS.stop()
+      SparkSession.setActiveSession(spark)
+    }
   }
 }

@@ -289,4 +289,99 @@ class PlanSpec extends SparkSpec {
     // "*(n)" prefixes mark WholeStageCodegen stages in the tree string
     assert(p.contains("*("), p)
   }
+
+  // --- bound constants (graft.functions.BindParams) ---
+
+  private def bound(p: org.apache.spark.sql.execution.SparkPlan): Boolean =
+    p.expressions.exists(_.exists(_.isInstanceOf[graft.functions.Param]))
+
+  /** The physical plan an adaptive query runs (after the prep rules). */
+  private def adaptivePlan(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        a.executedPlan
+      case p => fail(s"expected an adaptive plan:\n$p")
+    }
+
+  test("bound constants: a bounded facade read keeps its ts_ms pushed " +
+    "filters and day partition filters on the scan") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec}
+    import graft.streaming.Prompb.PromSeries
+    val dir = java.nio.file.Files.createTempDirectory("plan_bound_read")
+      .resolve("cold").toString
+    val api = new graft.api.HttpApi(spark, compactEvery = 1000000,
+      deltaFoldEvery = 0, durablePath = Some(dir))
+    def s(base: Long) = PromSeries(Map("__name__" -> "b_metric",
+      "instance" -> "a"), (0 until 10).map(i => (base + i * 60000L, i * 1.0)))
+    val t0 = 1704067200000L
+    api.write(Seq(s(t0)), "default")
+    api.compact() // spills the 2024 history into the cold tier
+    // an unfolded hot pin puts the LWW aggregate (an exchange) in the
+    // read, so the plan is adaptive and the rule runs on it
+    val now = System.currentTimeMillis()
+    api.write(Seq(s(now - 1200000L)), "default")
+    api.drainFlushes()
+    try {
+      val df = api.source("default", t0, now).get.points
+      val p = adaptivePlan(df)
+      val scan = p.collectFirst { case f: FileSourceScanExec => f }
+        .getOrElse(fail(p.toString))
+      val pushed = scan.metadata("PushedFilters")
+      assert(pushed.contains("GreaterThanOrEqual(ts_ms,") &&
+        pushed.contains("LessThanOrEqual(ts_ms,"), pushed)
+      assert(scan.metadata("PartitionFilters").contains("day"),
+        scan.metadata("PartitionFilters"))
+      assert(!bound(scan))
+      // ...while the same bounds above the scan are bound
+      assert(p.collect { case f: FilterExec => f }.exists(bound), p)
+      assert(df.count() === 20)
+    } finally api.stop()
+  }
+
+  test("bound constants: rangeBetween windows keep literal frame bounds " +
+    "and their results") {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.execution.FilterExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    import spark.implicits._
+    val rows = (0 until 60).map(i => (i % 3L, i * 7000L, i * 0.5))
+    val out = graft.tsdb.RangeWindows.overTime(rows.toDF("sid", "ts_ms",
+      "value"), Seq("sid"), 30000L, Seq(sum(_), count(_)), Seq("s", "n"))
+      .where(col("ts_ms") >= 70000L)
+    val p = adaptivePlan(out)
+    val w = p.collectFirst { case w: WindowExec => w }.getOrElse(fail(p.toString))
+    assert(!bound(w), w)
+    assert(p.collect { case f: FilterExec => f }.exists(bound), p)
+    // PromQL's left-open (t-R, t] per series, computed directly
+    val want = rows.filter(_._2 >= 70000L).map { case (sid, ts, _) =>
+      val in = rows.filter(r => r._1 == sid && r._2 > ts - 30000L &&
+        r._2 <= ts)
+      (sid, ts, in.map(_._3).sum, in.size.toLong)
+    }.sortBy(r => (r._1, r._2))
+    val got = out.collect().map(r => (r.getLong(0), r.getLong(1),
+      r.getDouble(3), r.getLong(4))).toSeq.sortBy(r => (r._1, r._2))
+    assert(got === want)
+  }
+
+  test("bound constants: NaN stays a literal, other long/double " +
+    "constants bind, and StaleNaN keeps its payload through a shuffle") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.functions._
+    import graft.functions.{Bits, BindParams, Param}
+    val df = spark.range(10).select((col("id") * 3L).as("a"),
+      when(col("id") > 4L, lit(Double.NaN)).otherwise(lit(2.5)).as("b"))
+    val exprs = BindParams(df.queryExecution.sparkPlan)
+      .flatMap(_.expressions).flatMap(_.collect { case e => e })
+    val nan = exprs.collect { case l @ Literal(d: Double, _) if d.isNaN => l }
+    assert(nan.nonEmpty, "NaN must stay a Literal")
+    assert(exprs.collect { case Param(v, _) => v }.toSet ===
+      Set[Any](3L, 4L, 2.5))
+    // through an exchange the rule binds StaleNaN's long bit pattern; the
+    // payload must survive codegen
+    val bits = spark.range(4).groupBy((col("id") % 2L).as("k"))
+      .agg(max(Bits.doubleBits(Bits.staleNaN)).as("b"))
+      .select("b").collect().map(_.getLong(0)).toSet
+    assert(bits === Set(Bits.StaleNaNBits))
+  }
 }
+
