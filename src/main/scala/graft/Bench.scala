@@ -55,6 +55,7 @@ object Bench {
     val calibFirst = calib()
 
     var results = Map.empty[String, Double]
+    var errors = Set.empty[String]
     for (pass <- 1 to passes; name <- names) {
       val fn = SparkEntry.queries(name)
       val t0 = System.nanoTime()
@@ -65,6 +66,7 @@ object Bench {
       val scope = graft.store.Stage.open()
       try { fn(spark, sfDir).count() } catch {
         case e: Throwable =>
+          errors += name
           // loud marker: a crashing query must not pass as a fast time
           // (correctness is gated separately by Verify; this keeps the
           // bench log self-honest)
@@ -79,21 +81,8 @@ object Bench {
 
     val calibLast = calib()
     val loadEnd = loadAvg
-    // 3-decimal seconds (1 ms resolution — well under the suite's run
-    // noise): r15/r16 both lost the driver's per-query comparison because
-    // the 143-query line at full double precision (~4.6 KB) overflowed the
-    // ~4 KB stdout tail the driver stores — the stored tail began
-    // mid-JSON and the parse failed (PERF_r16 per_query empty). At 3
-    // decimals the line is ~3.7 KB and fits with sbt's trailer.
-    def f3(d: Double): String = f"$d%.3f"
-    val qs = names.map(k => "\"" + k + "\":" + f3(results(k)))
-      .mkString("{", ",", "}")
-    val total = results.values.sum
-    val json =
-      s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$qs,"sf":"$sfDir"""" +
-        s""","calib_query":"$CalibQuery","calib_first_sec":${f3(calibFirst)}""" +
-        s""","calib_last_sec":${f3(calibLast)},"load_avg_start":${f3(loadStart)}""" +
-        s""","load_avg_end":${f3(loadEnd)}}"""
+    val json = jsonLine(names.map(k => k -> results(k)), errors.toSeq.sorted,
+      sfDir, CalibQuery, calibFirst, calibLast, loadStart, loadEnd)
     // persist to a file first: stdout tails get truncated (BENCH_r05 lost
     // its per-query dict that way); the file is the artifact of record
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH.json")
@@ -105,5 +94,27 @@ object Bench {
     spark.stop()
     println(json)
     System.out.flush()
+  }
+
+  /** The bench line. Seconds carry 3 decimals (1 ms resolution — well
+    * under the suite's run noise): at full double precision the
+    * 143-query line (~4.6 KB) overflowed a stored ~4 KB stdout tail, and
+    * r15/r16 lost the per-query comparison. At 3 decimals the line is
+    * ~3.7 KB and fits with sbt's trailer. `Locale.ROOT`, so a decimal comma never breaks the JSON.
+    * `errors` names every query that crashed in some pass: its time is
+    * that of a failure, not of an answer.
+    */
+  def jsonLine(queries: Seq[(String, Double)], errors: Seq[String],
+      sfDir: String, calibQuery: String, calibFirst: Double,
+      calibLast: Double, loadStart: Double, loadEnd: Double): String = {
+    def f3(d: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, d)
+    val qs = queries.map { case (k, v) => "\"" + k + "\":" + f3(v) }
+      .mkString("{", ",", "}")
+    val errs = errors.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val total = queries.map(_._2).sum
+    s"""{"metric":"total","value":${f3(total)},"unit":"sec","queries":$qs,"sf":"$sfDir"""" +
+      s""","errors":$errs,"calib_query":"$calibQuery","calib_first_sec":${f3(calibFirst)}""" +
+      s""","calib_last_sec":${f3(calibLast)},"load_avg_start":${f3(loadStart)}""" +
+      s""","load_avg_end":${f3(loadEnd)}}"""
   }
 }

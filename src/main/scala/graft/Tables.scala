@@ -116,8 +116,9 @@ object Tables {
 
   /** [[points]] with the scan-parallelism floor — for the ONE events
     * consumer whose scan-stage derivation dominates (e2e's wire
-    * collect_list partial aggregate ran 354 ms in one task on 32 cores,
-    * r17 JobProfile). The tsdb/promql grid families measured the spread
+    * collect_list partial aggregate ran 354 ms in one task on 32 cores
+    * in an r17 job profile; VERDICT.md records the magnitude as
+    * unverified). The tsdb/promql grid families measured the spread
     * as a ×1.4-2.4 LOSS (r16) because each of their several pts()
     * branches re-pays the exchange; e2e consumes points exactly once.
     */

@@ -154,8 +154,9 @@ final class HttpApi(spark: SparkSession,
   // the compacted head alone is a complete view of ([[readView]] tier 1).
   @volatile private var batchWallMs: Vector[Long] = Vector.empty
   // Hot-batch pin medium. `localCheckpoint` stores UNREPLICATED blocks
-  // on one executor; BlockWhere demonstrated that killing the holder
-  // makes the batch unreadable (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND) —
+  // on one executor; killing the holder makes the batch unreadable
+  // (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND, SCALE.md "Round-10: durable
+  // pipeline-boundary pins") —
   // and these rows were ACKNOWLEDGED to the remote-write client and
   // released from driver memory, so there is NO recompute path: on a
   // real cluster that is silent-durability loss waiting for a node
@@ -199,7 +200,8 @@ final class HttpApi(spark: SparkSession,
   // the TIME frontier of the latest spill (the wall-derived cutoff, see
   // `aggTo` in compactNow): everything below it is on disk, so it bounds
   // how far [[preAggregate]] may move the agg_5m watermark (0 = nothing
-  // spilled by this process: the watermark, 0 or later, stays put)
+  // spilled yet: the watermark, 0 or later, stays put). The restart
+  // sidecar carries it across restarts.
   @volatile private var spillTimeFrontier = 0L
   @volatile private var coldDirty = false
   // Partial (leveled) rewrite tracking — the reference's TWCS discipline
@@ -475,9 +477,11 @@ final class HttpApi(spark: SparkSession,
     * (it asserts "every file here is bucketed", so it must follow the
     * files — a crash in between leaves a plain-degraded generation the
     * next full rewrite converts). Legacy manifest-less tier → plain
-    * append, unchanged.
+    * append, unchanged, at `tasks` write tasks (0 = the session's
+    * shuffle parallelism).
     */
-  private def spillToCold(spill: DataFrame, path: String): Unit = {
+  private def spillToCold(spill: DataFrame, path: String,
+      tasks: Int): Unit = {
     import org.apache.spark.sql.SaveMode
     val S = graft.store.Store
     coldGenSpec match {
@@ -491,7 +495,8 @@ final class HttpApi(spark: SparkSession,
               spec, SaveMode.Append, tasks = spec.n)
             S.BucketSpec.write(path, spec)
           case _ =>
-            S.writePoints(spill, path, Seq("metric_id"), SaveMode.Append)
+            S.writePoints(spill, path, Seq("metric_id"), SaveMode.Append,
+              tasks)
         }
     }
   }
@@ -503,7 +508,9 @@ final class HttpApi(spark: SparkSession,
   // dies with the process either way). With it, restart is O(1); without
   // it (pre-r7 layouts) bootstrap falls back to the full-history scan —
   // at 100 TB that scan is 3 passes over the cold tier, which is why the
-  // sidecar exists.
+  // sidecar exists. The spill time frontier rides along; compaction
+  // writes the sidecar once more AFTER the spill commits, so the
+  // persisted frontier never runs ahead of the cold tier.
   private def metaPath: Option[java.nio.file.Path] =
     durablePath.map(p => java.nio.file.Paths.get(p + "_meta.json"))
   private def ttlDimPath: Option[String] = durablePath.map(_ + "_ttl")
@@ -511,7 +518,8 @@ final class HttpApi(spark: SparkSession,
   private def persistMeta(): Unit = metaPath.foreach { mp =>
     val names = labelNames.map(n => "\"" + PromJson.escape(n) + "\"")
     val json = s"""{"writeSeq":${synchronized(writeSeq)},""" +
-      s""""ttlSeen":$ttlSeen,"labelNames":[${names.mkString(",")}]}"""
+      s""""ttlSeen":$ttlSeen,"spillTimeFrontier":$spillTimeFrontier,""" +
+      s""""labelNames":[${names.mkString(",")}]}"""
     val tmp = mp.resolveSibling(mp.getFileName.toString + ".tmp")
     java.nio.file.Files.writeString(tmp, json)
     java.nio.file.Files.move(tmp, mp,
@@ -563,6 +571,9 @@ final class HttpApi(spark: SparkSession,
             (0 until ln.size()).map(ln.get(_).asText()).sorted
           writeSeq = seq
           ttlSeen = seen
+          // absent in sidecars written before the frontier was recorded
+          spillTimeFrontier =
+            Option(root.get("spillTimeFrontier")).fold(0L)(_.asLong())
           ttlDimPath.flatMap(completeDimDir).foreach(tp =>
             ttlDim = Some(spark.read.parquet(tp).localCheckpoint(true)))
           true
@@ -609,10 +620,11 @@ final class HttpApi(spark: SparkSession,
   // buffered in SERIES shape (labels + samples array), not flattened to
   // per-sample rows: all per-labels pin work — the driver map encode,
   // the regex validation, the canonical encode + xxhash64 — then runs
-  // once per series instead of once per sample (PinProfile measures the
-  // flat shape ~an-order-of-magnitude more per-point work at the soak's
+  // once per series instead of once per sample (the flat shape measured
+  // ~an-order-of-magnitude more per-point work at the soak's
   // 10-samples-per-series posts; the single-threaded flusher fold was
-  // the measured ingest ceiling, SCALE.md r16)
+  // the measured ingest ceiling, SCALE.md "Round-16 (cont.): the flusher
+  // ceiling breaks")
   private final class PendingPost(val series: Seq[PromSeries],
       val seq: Long, val ttlSec: Long, val minTs: Long,
       val tenant: String) {
@@ -1047,12 +1059,6 @@ final class HttpApi(spark: SparkSession,
     */
   def pendingBatches: Int = pinnedPending + queuedFlushes.get
 
-  /** Flush snapshots queued on the flusher but not yet pinned — probe
-    * observability: StreamLossProbe arms its executor kill on this
-    * going positive (a pin job actually in flight).
-    */
-  private[graft] def queuedFlushCount: Int = queuedFlushes.get
-
   /** Mid (delta-folded) batches between head and raw tail (tests/soak). */
   private[graft] def midCount: Int = midBatches
 
@@ -1190,9 +1196,10 @@ final class HttpApi(spark: SparkSession,
   /** The FULL fold. Callers must hold [[compactLock]] (the spill below
     * appends into the current cold generation); the hot-vector swap
     * itself serializes on [[foldLock]] so delta folds can't restructure
-    * the prefix mid-snapshot.
+    * the prefix mid-snapshot. `tasks` sizes the spill and pre-agg writes
+    * (0 = the session's shuffle parallelism).
     */
-  private def compactNow(): Unit = {
+  private def compactNow(tasks: Int = 0): Unit = {
     require(compactLock.isHeldByCurrentThread,
       "compactNow requires the cold lock (it spills)")
     val aggTo = foldLock.synchronized {
@@ -1323,7 +1330,7 @@ final class HttpApi(spark: SparkSession,
         if (spill.limit(1).count() == 0)
           (folded0, folded0Path, snapMin, Long.MinValue, Long.MinValue)
         else {
-          spillToCold(spill, path)
+          spillToCold(spill, path, tasks)
           val spilledMax =
             spill.agg(max(col("ts_ms"))).head().getLong(0)
           // TWCS bookkeeping: every day this spill may have appended
@@ -1385,11 +1392,17 @@ final class HttpApi(spark: SparkSession,
     dropNow.foreach(p => graft.store.Stage.drop(spark, p))
     aggTo
     }
-    // A5 at compaction: data behind the spill frontier is final (modulo
-    // explicit backfill repair) — extend agg_5m up to it, incrementally.
-    // OUTSIDE foldLock: pre-agg is durable-tier work (compactLock is
-    // held) and must not dam delta folds any more than compactCold may
-    if (aggTo != Long.MinValue) preAggregate(aggTo)
+    if (aggTo != Long.MinValue) {
+      // the spill has committed: only now may the sidecar carry its time
+      // frontier, which bounds a post-restart on-demand preAggregate
+      persistMeta()
+      // A5 at compaction: data behind the spill frontier is final
+      // (modulo explicit backfill repair) — extend agg_5m up to it,
+      // incrementally. OUTSIDE foldLock: pre-agg is durable-tier work
+      // (compactLock is held) and must not dam delta folds any more
+      // than compactCold may
+      preAggregateWith(aggTo, tasks)
+    }
   }
 
   /** The expiration sweep (reference `cassandra/index/index.go:2138-2291`
@@ -1459,23 +1472,15 @@ final class HttpApi(spark: SparkSession,
     // 10-17 s spike windows were its four non-stale drain reads, each
     // inside a long rewrite. 4x-finer write tasks bound the
     // head-of-line wait at a quarter of a task — the standard
-    // fair-scheduler lever (shrink task size, not pool weight). Scoped
-    // to this lock (upkeep serializes on compactLock; pins and reads
-    // never consult the knob).
-    val prevTasks = spark.conf.getOption("spark.graft.write.tasks")
-    spark.conf.set("spark.graft.write.tasks",
-      (spark.sparkContext.defaultParallelism * 4).toString)
-    try compactColdBody()
-    finally prevTasks match {
-      case Some(v) => spark.conf.set("spark.graft.write.tasks", v)
-      case None => spark.conf.unset("spark.graft.write.tasks")
-    }
+    // fair-scheduler lever (shrink task size, not pool weight). The
+    // count is passed to every write the rewrite reaches, never set on
+    // the session conf, which concurrent writers share.
+    compactColdBody(spark.sparkContext.defaultParallelism * 4)
   }
 
   /** Rewrite-scoped task-granularity control for the LWW aggregate: the
-    * r14 4×-finer knob only covered the rewrite's WRITE stage
-    * (repartitionForWrite reads `spark.graft.write.tasks`); the dedup
-    * aggregate still ran at `spark.sql.shuffle.partitions` fat tasks —
+    * r14 4×-finer task count only covered the rewrite's WRITE stage; the
+    * dedup aggregate still ran at `spark.sql.shuffle.partitions` fat tasks —
     * ~5-10 s each at a ~100 M-point tier — and FAIR assigns slots only
     * as tasks END, so a pin job stalled up to a whole agg-task duration,
     * the completeness stamps aged past the staleness budget, and the
@@ -1489,12 +1494,7 @@ final class HttpApi(spark: SparkSession,
     * NOT applied to read-side lwwDedup — reads keep their plan.
     */
   private def fineForUpkeep(df: DataFrame,
-      spec: Option[graft.store.Store.BucketSpec]): DataFrame = {
-    // same fallback chain as Store.repartitionForWrite, so the agg
-    // stage and the write stage agree on task count when the knob is
-    // unset (ADVICE r15)
-    val tasks = spark.conf.get("spark.graft.write.tasks",
-      spark.conf.get("spark.sql.shuffle.partitions", "200")).toInt
+      spec: Option[graft.store.Store.BucketSpec], tasks: Int): DataFrame =
     spec match {
       case Some(s) =>
         // bucketed rewrite: partition on the BUCKET columns only, at a
@@ -1510,13 +1510,12 @@ final class HttpApi(spark: SparkSession,
       case None =>
         df.repartition(tasks, col("metric_id"), col("ts_ms"))
     }
-  }
 
-  private def compactColdBody(): Unit = {
+  private def compactColdBody(tasks: Int): Unit = {
     durablePath.filter(_ => !coldWritesBlocked).foreach { p =>
       // fold + spill the hot side first, so no backfilled key lingers in
       // memory after the flag clears (locks are reentrant here)
-      compactNow()
+      compactNow(tasks)
       // snapshot the dirty-day set AFTER compactNow: its spill is the
       // last possible append into g<coldGen> before the flip (spills
       // serialize on compactLock, which we hold; delta folds never
@@ -1571,13 +1570,14 @@ final class HttpApi(spark: SparkSession,
               val buildTable = coldTableName(nextGen) + "_build"
               spark.sql(s"DROP TABLE IF EXISTS `$buildTable`")
               graft.store.Store.writeBucketedDays(
-                lwwDedup(fineForUpkeep(src, spec)), buildTable, dir, s,
+                lwwDedup(fineForUpkeep(src, spec, tasks)), buildTable, dir, s,
                 org.apache.spark.sql.SaveMode.Overwrite, tasks = 0)
               spark.sql(s"DROP TABLE IF EXISTS `$buildTable`")
               graft.store.Store.BucketSpec.write(dir, s)
             case None =>
               graft.store.Store.writePoints(
-                lwwDedup(fineForUpkeep(src, None)), dir, Seq("metric_id"))
+                lwwDedup(fineForUpkeep(src, None, tasks)), dir,
+                Seq("metric_id"), tasks = tasks)
           }
         dirty match {
           case Some(d) if d.isEmpty =>
@@ -1958,7 +1958,12 @@ final class HttpApi(spark: SparkSession,
     * tier, and a watermark over them would serve them from agg_5m as
     * empty. Returns the new watermark.
     */
-  def preAggregate(endMs: Long): Long = withColdLock {
+  def preAggregate(endMs: Long): Long = preAggregateWith(endMs, 0)
+
+  /** [[preAggregate]] writing at `tasks` tasks (0 = the session's
+    * shuffle parallelism).
+    */
+  private def preAggregateWith(endMs: Long, tasks: Int): Long = withColdLock {
     // background-upkeep pool, not the request lane (see deltaFoldNow):
     // the debug HTTP endpoint otherwise inherits the handler thread's
     // graft-reads tag, and under FAIR a forced re-aggregation would
@@ -1978,7 +1983,7 @@ final class HttpApi(spark: SparkSession,
         val slice = if (coldDirty) lwwDedup(bounded) else bounded
         if (slice.limit(1).count() > 0)
           graft.store.Store.repartitionForWrite(
-              aggSlice(slice), "month", Seq("metric_id"))
+              aggSlice(slice), "month", Seq("metric_id"), tasks)
             .write.partitionBy("month")
             .mode(org.apache.spark.sql.SaveMode.Append)
             .parquet(aggDataPath.get)

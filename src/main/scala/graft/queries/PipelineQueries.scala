@@ -130,9 +130,7 @@ object PipelineQueries {
   // repeated-chunk dedup: consecutive 12-token spans (the paragraph/line
   // analog for the whitespace-flat synthetic docs); kNN classification
   // votes over the brute-force top-5
-  // ChunkKeyProbe reproduces the pre-r16 text-keyed x16 arm and must
-  // chunk at the same width
-  private[graft] val ChunkTokens = 12
+  private val ChunkTokens = 12
   // exact-substring dedup (Lee et al. 2021): duplicated-run window
   // length in tokens — the paper uses 50 BPE tokens on web corpora;
   // 10 fits the short synthetic docs while keeping chance collisions
@@ -151,7 +149,8 @@ object PipelineQueries {
   // rerank, so recall@topK == P(true neighbor ∈ ADC top-nCand)
   private val PqRerankCand = 10
   // v11 probe width over the v3 index's 8 cells (same ratio as the
-  // RecallProbe production sizing: scan ~nProbe/K of the corpus)
+  // production sizing in SCALE.md "Round-11: the clustered-corpus
+  // column": scan ~nProbe/K of the corpus)
   private val IvfNProbe = 2
   // linear quality probe: 6 GD iterations at lr ½ (a power of two keeps
   // the weight update on exactly representable products)

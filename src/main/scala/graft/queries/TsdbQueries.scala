@@ -467,9 +467,10 @@ object TsdbQueries {
         .groupBy("user_id", "event_type")
         .agg(collect_list(struct(col("ts_ms"), col("value"),
           col("event_id"))).as("samples"))
-        // JobProfile r12: AQE's byte-based coalescing collapsed this
-        // small (few-MB) shuffle to ≤2 partitions, serializing the
-        // CPU-heavy per-series work below (LWW + protobuf + snappy and
+        // r12 job profile (SCALE.md "Round-12: e2e trim closed"): AQE's
+        // byte-based coalescing collapsed this small (few-MB) shuffle
+        // to ≤2 partitions, serializing the CPU-heavy per-series work
+        // below (LWW + protobuf + snappy and
         // then the decode/ingest tiers) onto ≤2 cores — ~0.8 s of the
         // slice's 3.1 s. An EXPLICIT partition count is exempt from AQE
         // coalescing: the tiny extra shuffle buys back the whole wire

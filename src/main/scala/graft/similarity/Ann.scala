@@ -839,7 +839,8 @@ object Ann {
     * queries × nCand embedding rows by id — the candidate list
     * broadcasts into the corpus scan, so full-precision vectors are
     * touched only for ~nCand rows per query. Short PQ codes are recall-
-    * weak as a FINAL ranking (RecallProbe: 0.05-0.36@10) but strong as
+    * weak as a FINAL ranking (0.05-0.36@10, SCALE.md "Round-11: the
+    * clustered-corpus column") but strong as
     * a candidate filter; the rerank restores exactness over the
     * shortlist.
     */

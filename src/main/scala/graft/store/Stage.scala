@@ -138,13 +138,9 @@ object Stage {
 
   private val globalScope = new PinScope
   private val scopeOf = new ThreadLocal[PinScope]
+  // pins mid-materialization (the write at [[pin]] started, not yet
+  // registered): [[clear]] warns when it races one
   private val inFlight = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** Pins currently mid-materialization (the write at [[pin]] started,
-    * not yet registered). Probe observability: LossProbe's during-pin
-    * window arms its executor kill on this going positive.
-    */
-  private[graft] def inFlightCount: Int = inFlight.get
 
   /** Open a pin scope on the CURRENT thread: subsequent [[pin]] calls
     * from this thread register to the returned scope until [[close]].

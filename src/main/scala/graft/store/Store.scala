@@ -57,14 +57,14 @@ object Store {
     * expression-only `repartition` is AQE-coalescible, which at test
     * volumes re-collapses everything into one task and hides the very
     * shape this exists to prevent. Task count defaults to the session's
-    * shuffle parallelism (`spark.graft.write.tasks` to override).
+    * shuffle parallelism; a caller that wants finer tasks passes
+    * `tasks` > 0.
     */
   def repartitionForWrite(df: DataFrame, partitionCol: String,
-      series: Seq[String]): DataFrame = {
-    val conf = df.sparkSession.conf
-    val tasks = conf.get("spark.graft.write.tasks",
-      conf.get("spark.sql.shuffle.partitions", "200")).toInt
-    df.repartition(tasks, col(partitionCol), splitKey(series, writeSplits(df)))
+      series: Seq[String], tasks: Int = 0): DataFrame = {
+    val n = if (tasks > 0) tasks
+      else df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt
+    df.repartition(n, col(partitionCol), splitKey(series, writeSplits(df)))
   }
 
   /** S8 — persist points date-partitioned, series-clustered. Append mode
@@ -73,10 +73,11 @@ object Store {
     * `__seq` LWW.
     */
   def writePoints(points: DataFrame, path: String,
-      series: Seq[String], mode: SaveMode = SaveMode.Overwrite): Unit =
+      series: Seq[String], mode: SaveMode = SaveMode.Overwrite,
+      tasks: Int = 0): Unit =
     repartitionForWrite(
       points.withColumn("day", to_date(timestamp_millis(col("ts_ms")))),
-      "day", series)
+      "day", series, tasks)
       .sortWithinPartitions((series.map(col) :+ col("ts_ms")): _*)
       .write.partitionBy("day").mode(mode).parquet(path)
 
@@ -545,7 +546,8 @@ object Store {
 
   /** Inverted-list balance of the current index root: max/median cell
     * size — the drift statistic a deployment gets FREE at write time
-    * (IvfChurnProbe: frozen-quantizer recall parts from the retrained
+    * (`IVF_CHURN_r13.json`, SCALE.md "Round-13: IVF lifecycle under
+    * churn": frozen-quantizer recall parts from the retrained
     * ceiling once this passes ~15-20; recall itself needs ground truth,
     * list sizes need one K-row aggregate). Folds the per-generation
     * `_counts` sidecars — delta-sized work; a root holding any legacy

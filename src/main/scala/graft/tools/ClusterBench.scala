@@ -1,9 +1,7 @@
 package graft.tools
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -21,7 +19,7 @@ import graft.{GraftSession, SparkEntry}
   *
   * Also the spill harness (VERDICT r11 missing #3): with small
   * `memMB`, shuffles/aggregations exceed executor memory and take
-  * Spark's spill path; a TaskEnd listener sums
+  * Spark's spill path; the shared [[ToolListener]] sums
   * `memoryBytesSpilled`/`diskBytesSpilled` per query, and `compare=1`
   * fingerprints each cluster result against the local-mode result
   * (order-independent sum+xor of xxhash64 over all columns) so the
@@ -100,17 +98,8 @@ object ClusterBench {
     val shuffleParts = sys.env.get("CB_SHUFFLE_PARTS")
       .map(_.toInt).getOrElse(totalCores)
 
-    val spillMem = new AtomicLong
-    val spillDisk = new AtomicLong
-    val listener = new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) {
-          spillMem.addAndGet(m.memoryBytesSpilled)
-          spillDisk.addAndGet(m.diskBytesSpilled)
-        }
-      }
-    }
+    val listener = new ToolListener
+    import listener.{spillDisk, spillMem}
 
     /** Per-query min-of-passes timing (pass 0 is untimed warmup), plus
       * the spill bytes and optional fingerprint of the LAST pass.

@@ -84,58 +84,10 @@ object SoakBench {
     // lets the read-side union grow ~86 deep between folds (r12 soak:
     // read p50 13.7 s); a 16-batch fold cadence keeps the union shallow
     // while the fold (one ~0.5 s background job) still amortizes
-    // per-pool job attribution: wall time vs summed executor task time
-    // separates "read jobs are slow" (CPU contention: wall ≈ taskSum /
-    // slots) from "read jobs are waiting" (queued: wall >> taskSum /
-    // slots). Pool comes from the job's submitted properties.
-    final class PoolStat {
-      val jobs = new AtomicLong; val wallMs = new AtomicLong
-      val taskMs = new AtomicLong
-    }
-    val poolStats =
-      new java.util.concurrent.ConcurrentHashMap[String, PoolStat]()
-    val slowJobs = new ConcurrentLinkedQueue[String]()
-    val jobStart = new java.util.concurrent.ConcurrentHashMap[
-      Int, (String, Long)]()
-    val jobTask = new java.util.concurrent.ConcurrentHashMap[
-      Int, AtomicLong]()
-    val stageJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          val pool = Option(e.properties)
-            .flatMap(p => Option(p.getProperty("spark.scheduler.pool")))
-            .getOrElse("default")
-          jobStart.put(e.jobId, (pool, e.time))
-          jobTask.put(e.jobId, new AtomicLong)
-          e.stageIds.foreach(s => stageJob.put(s, e.jobId))
-        }
-        override def onStageCompleted(
-            e: org.apache.spark.scheduler.SparkListenerStageCompleted)
-            : Unit =
-          for (j <- Option(stageJob.get(e.stageInfo.stageId));
-               t <- Option(jobTask.get(j)))
-            t.addAndGet(e.stageInfo.taskMetrics.executorRunTime)
-        override def onJobEnd(
-            e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-          // hour-scale hygiene: stage→job entries would otherwise
-          // accumulate for the whole run
-          stageJob.entrySet.removeIf(en => en.getValue == e.jobId)
-          for ((pool, t0) <- Option(jobStart.remove(e.jobId))) {
-            val wall = e.time - t0
-            val task = Option(jobTask.remove(e.jobId)).fold(0L)(_.get)
-            val st = poolStats.computeIfAbsent(pool, _ => new PoolStat)
-            st.jobs.incrementAndGet(); st.wallMs.addAndGet(wall)
-            st.taskMs.addAndGet(task)
-            if (wall > 1000) {
-              slowJobs.add(s"job=${e.jobId} pool=$pool wall=${wall}ms " +
-                s"task=${task}ms")
-              while (slowJobs.size > 200) slowJobs.poll() // bounded
-            }
-          }
-        }
-      })
+
+    // per-pool job attribution (graft-reads vs graft-writes vs upkeep)
+    val jobs = new ToolListener
+    spark.sparkContext.addSparkListener(jobs)
 
     // hour-scale configuration (VERDICT r13 #3): SB_DURABLE_PATH enables
     // the cold tier (folds spill points older than SB_HOT_RETAIN_SEC, so
@@ -453,12 +405,7 @@ object SoakBench {
       if (full.isEmpty) (0.0, 0.0, 0.0)
       else (full.min, full.max, full.sum / full.size)
 
-    import scala.jdk.CollectionConverters._
-    poolStats.asScala.toSeq.sortBy(_._1).foreach { case (pool, st) =>
-      println(f"[soak] pool=$pool jobs=${st.jobs.get} " +
-        f"wall=${st.wallMs.get / 1000.0}%.1fs task=${st.taskMs.get / 1000.0}%.1fs")
-    }
-    slowJobs.asScala.toSeq.takeRight(40).foreach(s => println(s"[soak] $s"))
+    jobs.report().foreach(l => println(s"[soak] $l"))
 
     api.stop()
     val json =

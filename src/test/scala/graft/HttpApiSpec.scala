@@ -2208,4 +2208,94 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
       SparkSession.setActiveSession(spark)
     }
   }
+
+  test("compactCold passes its 4x task count explicitly: the session conf " +
+    "is untouched and the rewrite and its pre-aggregation run finer tasks") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
+    val dir = java.nio.file.Files.createTempDirectory("graft_cold_tasks")
+      .resolve("cold").toString
+    // a bucket count that divides neither the session's shuffle
+    // partitions nor the 4x count, so every write's task count is its own
+    val buckets = 3
+    spark.conf.set("spark.graft.cold.buckets", buckets.toString)
+    val stageTasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    // conf keys that differ from the snapshot while the upkeep jobs run
+    val confDrift = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val confBefore =
+      new java.util.concurrent.atomic.AtomicReference(Map.empty[String, String])
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
+        stageTasks.add(e.stageInfo.numTasks)
+        val (now, before) = (spark.conf.getAll, confBefore.get)
+        (now.keySet ++ before.keySet)
+          .filter(k => now.get(k) != before.get(k))
+          .foreach(confDrift.add)
+      }
+    }
+    val apiCT = new HttpApi(spark, compactEvery = 1000000,
+      durablePath = Some(dir), hotRetainMs = 0L)
+    try {
+      (0 until 4).foreach(d => apiCT.write(Seq(PromSeries(
+        Map("__name__" -> "ct_metric", "job" -> "node"),
+        (0 until 5).map(i => (T0 + d * 86400000L + i * 60000L, d + i.toDouble)))),
+        "default"))
+      apiCT.drainFlushes()
+      confBefore.set(spark.conf.getAll)
+      spark.sparkContext.addSparkListener(listener)
+      // the first compactCold folds and spills (pre-aggregating behind
+      // the new frontier), then fully rewrites the fresh generation
+      apiCT.compactCold()
+      assert(spark.conf.getAll === confBefore.get)
+      val fine = spark.sparkContext.defaultParallelism * 4
+      val rewrite = (fine + buckets - 1) / buckets * buckets
+      val deadline = System.nanoTime() + 10L * 1000000000L
+      def seen = stageTasks.asScala.toSet
+      while (!Set(fine, rewrite).subsetOf(seen) && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      assert(seen.contains(rewrite), s"rewrite exchange: stages $seen")
+      assert(seen.contains(fine), s"pre-aggregation write: stages $seen")
+      assert(confDrift.isEmpty, s"conf changed during the rewrite: $confDrift")
+      assert(apiCT.source().get.points.count() === 20)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      apiCT.stop()
+      spark.conf.unset("spark.graft.cold.buckets")
+    }
+  }
+
+  test("preAggregate after a restart reaches the restored spill frontier, " +
+    "floored to 5 min, and no further") {
+    val root = java.nio.file.Files.createTempDirectory("graft_frontier")
+    val dir = root.resolve("cold").toString
+    val apiF = new HttpApi(spark, compactEvery = 1000000,
+      durablePath = Some(dir))
+    apiF.write(Seq(PromSeries(Map("__name__" -> "rf_metric", "job" -> "node"),
+      (0 until 12).map(i => (T0 + i * 300000L, 1.0)))), "default")
+    apiF.drainFlushes()
+    apiF.compact() // the 2024 samples are past the hot horizon: they spill
+    apiF.stop()
+    val meta = new com.fasterxml.jackson.databind.ObjectMapper().readTree(
+      java.nio.file.Files.readString(root.resolve("cold_meta.json")))
+    val frontier = meta.get("spillTimeFrontier").asLong()
+    val want = frontier - Math.floorMod(frontier, 300000L)
+    assert(frontier > T0 && apiF.preAggWatermark === want)
+    // a watermark that trails the frontier at restart (a crash between a
+    // spill and its pre-aggregation, or a lost agg tier)
+    deleteTree(root.resolve("cold_agg5m"))
+    val apiR = new HttpApi(spark, compactEvery = 1000000,
+      durablePath = Some(dir))
+    try {
+      assert(apiR.preAggWatermark === 0L)
+      assert(apiR.preAggregate(System.currentTimeMillis() + 365L * 86400000L)
+        === want)
+      assert(apiR.preAggWatermark === want)
+    } finally apiR.stop()
+  }
+
+  private def deleteTree(p: java.nio.file.Path): Unit = {
+    val s = java.nio.file.Files.walk(p)
+    try s.sorted(java.util.Comparator.reverseOrder())
+      .forEach(f => java.nio.file.Files.delete(f))
+    finally s.close()
+  }
 }

@@ -2,7 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Guards the repo against raw control bytes in source files.
+/** Guards the repo against raw control bytes in source files, and the
+  * tools against growing their own listeners back.
   *
   * Raw U+0000/U+0001 bytes in string/char literals make git classify the
   * file as BINARY — diffs, blame, and review silently break. This happened
@@ -32,5 +33,20 @@ class SourceHygieneSpec extends AnyFunSuite {
         " — use \\u-escapes in literals")
     }
     assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("only the shared ToolListener defines a SparkListener under tools/") {
+    val tools = new java.io.File("src/main/scala/graft/tools")
+    assert(tools.isDirectory, "run from the repo root")
+    // a subclass or an anonymous one, by simple or qualified name
+    val listener =
+      "\\b(extends|new|with)\\s+([\\w.]*\\.)?SparkListener(Interface)?\\b".r
+    val offenders = scalaSources(tools)
+      .filter(_.getName != "ToolListener.scala")
+      .filter(f => listener.findFirstIn(
+        new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")).isDefined)
+      .map(_.getPath)
+    assert(offenders.isEmpty,
+      s"tools must share ToolListener, not define their own: $offenders")
   }
 }
