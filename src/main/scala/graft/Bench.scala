@@ -1,8 +1,10 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
-/** Benchmark entry: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
-  * prints ONE JSON line {"metric":…,"queries":{…}}. Queries run in sorted
+/** Benchmark entry: runs every SparkEntry query on SPARK_GRAFT_SF_DIR,
+  * writes ONE JSON line {"metric":…,"queries":{…}} to BENCH.json
+  * (SPARK_GRAFT_BENCH_OUT) and prints it with per-family sums in place
+  * of the per-query map ([[Bench.summaryLine]]). Queries run in sorted
   * name order so timings are comparable across rounds. Set
   * SPARK_GRAFT_BENCH_PASSES=2 to run a second timed pass (the reported
   * number is the minimum per query — steady-state, warmup excluded).
@@ -92,15 +94,37 @@ object Bench {
     // stdout line (only sbt's own [success] trailer can follow it), then
     // flush explicitly — the driver parses the line from a bounded tail
     spark.stop()
-    println(json)
+    println(summaryLine(json, out))
     System.out.flush()
   }
 
-  /** The bench line. Seconds carry 3 decimals (1 ms resolution — well
-    * under the suite's run noise): at full double precision the
-    * 143-query line (~4.6 KB) overflowed a stored ~4 KB stdout tail, and
-    * r15/r16 lost the per-query comparison. At 3 decimals the line is
-    * ~3.7 KB and fits with sbt's trailer. `Locale.ROOT`, so a decimal comma never breaks the JSON.
+  /** The printed line: [[jsonLine]] with the per-query map replaced by
+    * per-family sums (keyed by the query name's letter prefix) and the
+    * name of the file that holds every query. 143 query names alone
+    * are ~2.9 KB, more than a 2,000-char stdout tail keeps; this line
+    * stays under 1.9 KB. Sums are exact decimals of the 3-decimal times.
+    */
+  def summaryLine(line: String, queriesFile: String): String = {
+    import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
+    import com.fasterxml.jackson.databind.node.ObjectNode
+    import scala.jdk.CollectionConverters._
+    val m = new ObjectMapper()
+      .configure(DeserializationFeature.USE_BIG_DECIMAL_FOR_FLOATS, true)
+    val root = m.readTree(line).asInstanceOf[ObjectNode]
+    val families = root.remove("queries").properties().asScala.toSeq
+      .groupMapReduce(e => "[a-z]+".r.findPrefixOf(e.getKey).getOrElse(e.getKey))(
+        _.getValue.decimalValue)(_.add(_))
+    val fams = root.putObject("families")
+    families.toSeq.sortBy(_._1).foreach { case (k, v) => fams.put(k, v) }
+    root.put("queries_file", queriesFile)
+    m.writeValueAsString(root)
+  }
+
+  /** The bench line of record, written to BENCH.json with every query.
+    * Seconds carry 3 decimals (1 ms resolution — well under the suite's
+    * run noise); at 143 queries the line is ~3.7 KB, so stdout gets
+    * [[summaryLine]] instead. `Locale.ROOT`, so a decimal comma never
+    * breaks the JSON.
     * `errors` names every query that crashed in some pass: its time is
     * that of a failure, not of an answer.
     */

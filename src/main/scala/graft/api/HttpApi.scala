@@ -438,15 +438,41 @@ final class HttpApi(spark: SparkSession,
   private def coldTableName(gen: Int): String =
     genTableName(durablePath.getOrElse(""), gen)
 
-  /** Bucket layout for NEW generations: `spark.graft.cold.buckets`
-    * buckets on metric_id (0 = legacy unbucketed). Size so one bucket
-    * is one comfortable task at the deployment's tier size (~16 Ki for
-    * ~6 GB each at 100 TB/yr); the local default suits local[32]. The
-    * count is frozen per generation in the manifest — changing the
-    * knob takes effect at the next FULL rewrite, never by mixing.
+  /** The bucket count `spark.graft.cold.buckets` fixes, when set. */
+  private def fixedBuckets: Option[Int] =
+    spark.conf.getOption("spark.graft.cold.buckets").map(_.toInt)
+
+  /** The bucket count a generation's data calls for. A bucketed scan
+    * runs one task per bucket however few days it touches (a read
+    * prunes to days), so the count follows the bytes of the LARGEST day
+    * partition: the next power of two ≥ ceil(dayBytes /
+    * `spark.sql.files.maxPartitionBytes`) — Spark's own per-scan-task
+    * size — at least 1 and at most `cap`. No measurement → `cap`.
+    *
+    * The cost lands on reads that keep the bucketed scan (a remote
+    * read's per-series group, the LWW dedup of a dirty cold-only read)
+    * over many days: k days put up to k targets in each task. PromQL
+    * queries plan their windows without it and split by file instead.
     */
-  private def confBucketSpec: Option[graft.store.Store.BucketSpec] = {
-    val n = spark.conf.get("spark.graft.cold.buckets", "32").toInt
+  private def sizedBucketCount(dayBytes: Option[Long], cap: Int): Int =
+    dayBytes.fold(cap) { b =>
+      val target = math.max(1L, spark.sessionState.conf.filesMaxPartitionBytes)
+      val want = if (b <= 0) 1L else (b - 1) / target + 1
+      if (want >= cap) cap
+      else math.min(cap.toLong, java.lang.Long.highestOneBit(2 * want - 1)).toInt
+    }
+
+  /** Bucket layout for a NEW generation, on metric_id (a count of 0 =
+    * legacy unbucketed). An explicitly set `spark.graft.cold.buckets`
+    * fixes the count; otherwise [[sizedBucketCount]] sizes it from
+    * `dayBytes`, the generation's largest day (an upper-bound estimate
+    * for a fresh tier's first spill, capped there at 32). The count is
+    * frozen per generation in the manifest — a new count takes effect
+    * at the next FULL rewrite, never by mixing.
+    */
+  private def confBucketSpec(dayBytes: Option[Long],
+      cap: Int = Int.MaxValue): Option[graft.store.Store.BucketSpec] = {
+    val n = fixedBuckets.getOrElse(sizedBucketCount(dayBytes, cap))
     if (n <= 0) None
     else Some(graft.store.Store.BucketSpec(Seq("metric_id"), n,
       Seq("metric_id", "ts_ms")))
@@ -476,9 +502,11 @@ final class HttpApi(spark: SparkSession,
     * spec; the manifest is written AFTER the first successful append
     * (it asserts "every file here is bucketed", so it must follow the
     * files — a crash in between leaves a plain-degraded generation the
-    * next full rewrite converts). Legacy manifest-less tier → plain
-    * append, unchanged, at `tasks` write tasks (0 = the session's
-    * shuffle parallelism).
+    * next full rewrite converts). Nothing is on disk yet, so the count
+    * is sized from the spill's plan estimate (an upper bound that runs
+    * no job), capped at 32 — 32 when there is no usable estimate.
+    * Legacy manifest-less tier → plain append, unchanged, at `tasks`
+    * write tasks (0 = the session's shuffle parallelism).
     */
   private def spillToCold(spill: DataFrame, path: String,
       tasks: Int): Unit = {
@@ -489,7 +517,10 @@ final class HttpApi(spark: SparkSession,
         S.writeBucketedDays(spill, coldTableName(coldGen), path, spec,
           SaveMode.Append, tasks = spec.n)
       case None =>
-        confBucketSpec match {
+        val estimate = scala.util.Try(
+          spill.queryExecution.optimizedPlan.stats.sizeInBytes).toOption
+          .filter(_ > 0).map(_.min(Long.MaxValue).toLong)
+        confBucketSpec(estimate, cap = 32) match {
           case Some(spec) if !isDir(path) =>
             S.writeBucketedDays(spill, coldTableName(coldGen), path,
               spec, SaveMode.Append, tasks = spec.n)
@@ -1552,13 +1583,32 @@ final class HttpApi(spark: SparkSession,
           System.err.println(f"[graft compactCold] $mode dirtyDays=" +
             f"$nDirty/${existing.size} gen=$coldGen " +
             f"took=${(System.nanoTime() - rw0) / 1e9}%.1fs")
-        // layout of the generation being rewritten vs the configured
-        // target: a partial rewrite hardlink-carries g<N>'s files into
-        // g<N+1>, so both must share ONE spec — a mismatch (knob
-        // change, legacy→bucketed migration) degrades to a full
-        // rewrite, which is also how the layout converts
+        // layout of the generation being rewritten vs the target: a
+        // partial rewrite hardlink-carries g<N>'s files into g<N+1>, so
+        // both must share ONE spec — a mismatch (knob change, legacy→
+        // bucketed migration, a sized count 4x off the current one)
+        // degrades to a full rewrite, which is also how the layout
+        // converts. Inside the 4x band the generation keeps its count,
+        // so a resize waits for the data to grow (or shrink) 4x and all
+        // the bytes ever rewritten to resize stay ≤ ~4/3 of the tier
         val curSpec = graft.store.Store.BucketSpec.read(curDir.toString)
-        val wantSpec = confBucketSpec
+        // bytes per day: a clean day's from the generation's sidecar, a
+        // day spilled into since the build (all of them when provenance
+        // is unknown) listed again. Lazy, so a skip lists nothing and a
+        // partial rewrite lists only its dirty days
+        lazy val daySizes: Map[String, Long] = {
+          val listed = dirty.getOrElse(existing).toSet
+          val recorded = readDayBytes(curDir)
+          existing.map(d => d -> recorded.get(d).filterNot(_ => listed(d))
+            .getOrElse(dayBytes(curDir.resolve(d)))).toMap
+        }
+        lazy val wantSpec =
+          (curSpec, confBucketSpec(Some(daySizes.values.maxOption
+              .getOrElse(0L)))) match {
+            case (Some(c), Some(s)) if fixedBuckets.isEmpty &&
+                s.n < 4L * c.n && 4L * s.n > c.n => curSpec
+            case (_, s) => s
+          }
         // build a generation dir under the staging discipline: bucketed
         // generations go through a throwaway catalog name (bucketBy
         // requires saveAsTable; the table is EXTERNAL, so dropping it
@@ -1612,6 +1662,8 @@ final class HttpApi(spark: SparkSession,
             existing.filterNot(d.contains).foreach { cd =>
               linkTree(curDir.resolve(cd), staging.resolve(cd))
             }
+            writeDayBytes(staging, daySizes -- d ++
+              d.map(x => x -> dayBytes(staging.resolve(x))))
             java.nio.file.Files.move(staging,
               java.nio.file.Paths.get(s"$p/g$nextGen"),
               java.nio.file.StandardCopyOption.ATOMIC_MOVE)
@@ -1622,8 +1674,9 @@ final class HttpApi(spark: SparkSession,
             // FULL rewrite: dirty-day provenance unknown (restart over
             // an existing tier, too-wide backfill), most days dirty
             // anyway (carry-forward buys nothing), or a layout change
-            // (legacy→bucketed, bucket-count knob) that must not mix
-            // with carried files. Stream the rewrite — NO checkpoint:
+            // (legacy→bucketed, bucket-count knob, a sized count 4x
+            // off) that must not mix with carried files. Stream the
+            // rewrite — NO checkpoint:
             // it reads g(N) and writes g(N+1) (different dirs, no
             // self-overwrite hazard) for exactly one consumer, so
             // pinning materialized the ENTIRE cold tier into
@@ -1638,6 +1691,10 @@ final class HttpApi(spark: SparkSession,
             val staging = java.nio.file.Paths.get(s"$p/_build_g$nextGen")
             deleteRecursively(staging)
             buildGen(c, staging.toString, wantSpec)
+            writeDayBytes(staging, java.nio.file.Files.list(staging)
+              .iterator().asScala.map(_.getFileName.toString)
+              .filter(_.startsWith("day="))
+              .map(x => x -> dayBytes(staging.resolve(x))).toMap)
             java.nio.file.Files.move(staging,
               java.nio.file.Paths.get(s"$p/g$nextGen"),
               java.nio.file.StandardCopyOption.ATOMIC_MOVE)
@@ -1648,6 +1705,44 @@ final class HttpApi(spark: SparkSession,
       }
     }
   }
+
+  /** Sidecar of a cold generation: its data bytes per `day=` directory
+    * as they stood when the generation was built, so sizing the next
+    * rewrite re-lists only the days spilled into since.
+    */
+  private val DayBytesFile = "_daybytes"
+
+  /** Day directories listed to size a rewrite, for tests. */
+  private[graft] val daysListed = new java.util.concurrent.atomic.AtomicLong
+
+  /** Data-file bytes of one day directory (Spark's hidden `.`/`_`
+    * names skipped, as its reads skip them).
+    */
+  private def dayBytes(dir: java.nio.file.Path): Long = {
+    daysListed.incrementAndGet()
+    val fs = java.nio.file.Files.list(dir)
+    try fs.iterator().asScala
+      .filter(f => !f.getFileName.toString.startsWith(".") &&
+        !f.getFileName.toString.startsWith("_"))
+      .map(java.nio.file.Files.size).sum
+    finally fs.close()
+  }
+
+  private def readDayBytes(gen: java.nio.file.Path): Map[String, Long] = {
+    val f = gen.resolve(DayBytesFile)
+    if (!java.nio.file.Files.isRegularFile(f)) Map.empty
+    else java.nio.file.Files.readString(f).linesIterator.flatMap { l =>
+      l.split('\t') match {
+        case Array(d, b) => b.toLongOption.map(d -> _)
+        case _ => None
+      }
+    }.toMap
+  }
+
+  private def writeDayBytes(gen: java.nio.file.Path,
+      sizes: Map[String, Long]): Unit =
+    java.nio.file.Files.writeString(gen.resolve(DayBytesFile),
+      sizes.toSeq.sorted.map { case (d, b) => s"$d\t$b\n" }.mkString)
 
   /** Publish cold generation `nextGen`: flip the read pointer, recompute
     * the overlap flag, reset dirty-day tracking, retire aged snapshots.
@@ -1937,7 +2032,8 @@ final class HttpApi(spark: SparkSession,
     * (metric_id, labels, bucket_ms, min, max, avg, count, __ttl_sec),
     * month-partitioned. The stats reuse the verified [[graft.tsdb
     * .Downsample]] kernel (StaleNaN/NaN semantics); labels ride a
-    * co-partitioned per-series dim join.
+    * co-partitioned per-series dim join. The output is exactly
+    * [[HttpApi.AggSchema]], the layout reads declare.
     */
   private def aggSlice(slice: DataFrame): DataFrame = {
     val stats = graft.tsdb.Downsample(slice, Seq(col("metric_id")),
@@ -1948,6 +2044,8 @@ final class HttpApi(spark: SparkSession,
     stats.join(dim, Seq("metric_id"))
       .withColumn("month", date_format(
         timestamp_millis(col("bucket_ms")), "yyyy-MM"))
+      .select(HttpApi.AggSchema.fields.toSeq.map(f =>
+        col(f.name).cast(f.dataType)): _*)
   }
 
   /** A5 incremental pre-aggregation over the COLD tier: downsample
@@ -2144,7 +2242,9 @@ final class HttpApi(spark: SparkSession,
     else {
       val fmt = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM")
         .withZone(java.time.ZoneOffset.UTC)
-      val agg0 = spark.read.parquet(aggDataPath.get)
+      // the declared layout spares the per-call inference job
+      val agg0 = spark.read.schema(HttpApi.AggSchema)
+        .parquet(aggDataPath.get)
       val monthPruned =
         if (fromMs == Long.MinValue || toMs == Long.MaxValue) agg0
         else agg0.where(col("month").between(
@@ -3324,6 +3424,16 @@ final class HttpApi(spark: SparkSession,
 }
 
 object HttpApi {
+
+  /** The agg_5m table's layout: what [[HttpApi.aggSlice]] writes, with
+    * `month` last as the string partition column. Reads declare it, so
+    * no schema-inference job runs per routed compile.
+    */
+  private[graft] val AggSchema: org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.StructType.fromDDL(
+      "metric_id BIGINT, bucket_ms BIGINT, min DOUBLE, max DOUBLE, " +
+        "avg DOUBLE, count BIGINT, labels MAP<STRING, STRING>, " +
+        "__ttl_sec BIGINT, month STRING")
 
   /** Deterministic plain-identifier alias for a UTF-8 label name. */
   private[graft] def utf8Alias(n: String): String =

@@ -94,9 +94,10 @@ object Store {
     * sf1000 the A1 downsample's 1 B-row shuffle spilled 97 GB on one
     * box — with this layout the shuffle does not exist, each of the
     * `nBuckets` read tasks folds only its own series, and the cost is
-    * one ingest-time shuffle paid ONCE instead of per query. At 100 TB
-    * the bucket count is sized so one bucket ≈ one comfortable task
-    * (e.g. 16 Ki buckets for ~6 GB each); all per-series operators
+    * one ingest-time shuffle paid ONCE instead of per query. The bucket
+    * count is sized so one bucket ≈ one scan task (the facade's cold
+    * tier sizes it from its largest day over
+    * `spark.sql.files.maxPartitionBytes`); all per-series operators
     * (downsample, rate windows, LWW dedup, sessionize) ride the same
     * layout free.
     *
@@ -192,9 +193,10 @@ object Store {
     * (partition + bucket id + sort cols, a per-task sort), never its
     * own exchange.
     *
-    * At 100 TB: size `spec.n` so one bucket is one comfortable task
-    * (~16 Ki buckets for ~6 GB each at 100 TB/yr); the bucket count is
-    * a per-generation constant, changed only through a full rewrite.
+    * `spec.n` is the caller's: the facade sizes it so one bucket of
+    * the largest day is about one `spark.sql.files.maxPartitionBytes`
+    * scan task; the bucket count is a per-generation constant, changed
+    * only through a full rewrite.
     */
   def writeBucketedDays(points: DataFrame, table: String, path: String,
       spec: BucketSpec, mode: SaveMode, tasks: Int): Unit = {

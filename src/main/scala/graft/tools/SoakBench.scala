@@ -54,14 +54,17 @@ object SoakBench {
     // (measured: the same head-only read is 0.44 s quiesced but 13-15 s
     // under 43k pts/s ingest with plain 1:1 FAIR — read jobs alternate
     // short stages with driver-side planning, so without a minShare the
-    // saturated write pool reclaims every slot at each stage boundary)
+    // saturated write pool reclaims every slot at each stage boundary).
+    // The share is half the run's slots (16 at local[32]), so it never
+    // exceeds the slots a small box has
+    val readShare = math.max(1, cpus.toInt / 2)
     val poolsXml = java.nio.file.Files.createTempFile("graft-pools", ".xml")
     java.nio.file.Files.write(poolsXml,
-      """<?xml version="1.0"?>
+      s"""<?xml version="1.0"?>
         |<allocations>
         |  <pool name="graft-reads">
         |    <schedulingMode>FIFO</schedulingMode>
-        |    <weight>8</weight><minShare>16</minShare>
+        |    <weight>8</weight><minShare>$readShare</minShare>
         |  </pool>
         |  <pool name="graft-writes">
         |    <schedulingMode>FIFO</schedulingMode>

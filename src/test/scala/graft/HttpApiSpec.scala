@@ -2292,6 +2292,335 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
     } finally apiR.stop()
   }
 
+  /** The bucket count frozen in cold generation `gen`'s manifest. */
+  private def bucketsOf(root: java.nio.file.Path, gen: Int): Int =
+    graft.store.Store.BucketSpec.read(root.resolve(s"g$gen").toString).get.n
+
+  /** Parquet file names per `day=` directory of cold generation `gen`. */
+  private def dayFiles(root: java.nio.file.Path,
+      gen: Int): Map[String, Set[String]] =
+    java.nio.file.Files.list(root.resolve(s"g$gen")).iterator().asScala
+      .filter(_.getFileName.toString.startsWith("day="))
+      .map(d => d.getFileName.toString ->
+        java.nio.file.Files.list(d).iterator().asScala
+          .map(_.getFileName.toString).filter(_.endsWith(".parquet")).toSet)
+      .toMap
+
+  /** Parquet bytes of the largest `day=` directory of generation `gen`. */
+  private def largestDayBytes(root: java.nio.file.Path, gen: Int): Long =
+    dayFiles(root, gen).map { case (d, fs) =>
+      fs.iterator.map(f => java.nio.file.Files.size(
+        root.resolve(s"g$gen").resolve(d).resolve(f))).sum
+    }.max
+
+  private def sizedSeries(name: String, d: Int, v: Double, n: Int) =
+    Seq(PromSeries(Map("__name__" -> name, "job" -> "sized"),
+      (0 until n).map(i => (T0 + d * 86400000L + i * 60000L, v + i))))
+
+  test("cold bucket count follows the data: a fresh small tier spills at " +
+    "one bucket, and the count survives a restart through its manifest") {
+    import org.apache.spark.sql.functions.col
+    val root = java.nio.file.Files.createTempDirectory("graft_bsize")
+      .resolve("cold")
+    val dir = root.toString
+    val apiS = new HttpApi(spark, compactEvery = 1000000,
+      durablePath = Some(dir), hotRetainMs = 0L)
+    (0 until 4).foreach(d =>
+      apiS.write(sizedSeries("bs", d, d * 10.0, 5), "default"))
+    apiS.drainFlushes()
+    apiS.compact() // the first spill creates g0, sized from its estimate
+    assert(bucketsOf(root, 0) === 1)
+    assert(dayFiles(root, 0).values.forall(_.size == 1), dayFiles(root, 0))
+    apiS.stop()
+    // restart: the catalog forgets the table, the manifest does not
+    spark.catalog.listTables().collect()
+      .filter(_.name.startsWith("graft_cold_"))
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `${t.name}`"))
+    val apiR = new HttpApi(spark, compactEvery = 1000000,
+      durablePath = Some(dir), hotRetainMs = 0L)
+    try {
+      val tbl = f"graft_cold_${dir.hashCode.toLong & 0xFFFFFFFFL}%08x_g0"
+      val meta = spark.sessionState.catalog.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier(tbl))
+      assert(meta.bucketSpec.map(_.numBuckets) === Some(1))
+      // a spill after the restart appends at the frozen count
+      apiR.write(sizedSeries("bs", 4, 40.0, 5), "default")
+      apiR.drainFlushes()
+      apiR.compact()
+      assert(bucketsOf(root, 0) === 1)
+      assert(dayFiles(root, 0).size === 5)
+      assert(dayFiles(root, 0).values.flatten.forall(_.matches(".*_00000\\..*")))
+      assert(apiR.source().get.points.where(col("__name__") === "bs")
+        .count() === 25)
+    } finally apiR.stop()
+  }
+
+  test("compactCold resizes the bucket count only past 4x: a forced full " +
+    "rewrite raises it, a partial rewrite inside the band keeps it and " +
+    "hardlinks its clean days, and answers are identical across both") {
+    import org.apache.spark.sql.functions.col
+    val root = java.nio.file.Files.createTempDirectory("graft_bresize")
+      .resolve("cold")
+    val apiZ = new HttpApi(spark, compactEvery = 1000000,
+      durablePath = Some(root.toString), hotRetainMs = 0L)
+    def answers(): Seq[(Long, Double)] = apiZ.source().get.points
+      .where(col("__name__") === "rz").select("ts_ms", "value").collect()
+      .map(r => (r.getLong(0), r.getDouble(1))).toSeq.sorted
+    def backfill(d: Int, v: Double): Unit = {
+      apiZ.write(sizedSeries("rz", d, v, 60), "default")
+      apiZ.drainFlushes()
+      apiZ.compact() // spills into the current generation, day d dirty
+    }
+    def dayDir(d: Int) = "day=" + java.time.Instant.ofEpochMilli(
+      T0 + d * 86400000L).atZone(java.time.ZoneOffset.UTC).toLocalDate
+    val key = "spark.sql.files.maxPartitionBytes"
+    try {
+      (0 until 6).foreach(d =>
+        apiZ.write(sizedSeries("rz", d, d * 100.0, 60), "default"))
+      apiZ.drainFlushes()
+      apiZ.compactCold() // spill at 1 bucket, then a full rewrite → g1
+      assert(bucketsOf(root, 1) === 1)
+      // one dirty day of 6 would rewrite partially, but a target a fifth
+      // of the largest day sizes the tier at 8 buckets, ≥ 4x its 1
+      backfill(2, 5000.0)
+      spark.conf.set(key, (largestDayBytes(root, 1) / 5).toString)
+      val before = answers()
+      apiZ.compactCold()
+      assert(bucketsOf(root, 2) === 8)
+      val (g1, g2) = (dayFiles(root, 1), dayFiles(root, 2))
+      g1.keySet.foreach(d => assert((g2(d) & g1(d)).isEmpty,
+        s"a resize must rewrite every day, but $d was carried"))
+      assert(answers() === before)
+      // a target that sizes the tier at 8-16 buckets is inside the band:
+      // the next one-day backfill rewrites partially at the frozen 8
+      backfill(4, 7000.0)
+      spark.conf.set(key, (largestDayBytes(root, 2) / 8).toString)
+      val before3 = answers()
+      apiZ.compactCold()
+      assert(bucketsOf(root, 3) === 8)
+      val g3 = dayFiles(root, 3)
+      val dn = dayDir(4)
+      assert((g3(dn) & g2(dn)).isEmpty && g3(dn).nonEmpty)
+      (g2.keySet - dn).foreach { d =>
+        assert(g3(d) === g2(d), s"clean day $d was rewritten")
+        g2(d).foreach { f =>
+          val ino = (g: Int) => java.nio.file.Files.getAttribute(
+            root.resolve(s"g$g/$d/$f"), "unix:ino")
+          assert(ino(2) === ino(3), s"$d/$f not hardlinked")
+        }
+      }
+      assert(answers() === before3)
+      assert(before3.count(_._2 >= 7000.0) === 60)
+    } finally {
+      spark.conf.unset(key)
+      apiZ.stop()
+    }
+  }
+
+  test("compactCold sizes a rewrite without listing clean days: a skip " +
+    "lists none, a partial rewrite lists only its dirty day, and each " +
+    "generation records its day bytes") {
+    val root = java.nio.file.Files.createTempDirectory("graft_blist")
+      .resolve("cold")
+    val apiL = new HttpApi(spark, compactEvery = 1000000,
+      durablePath = Some(root.toString), hotRetainMs = 0L)
+    def recorded(gen: Int): Map[String, Long] =
+      java.nio.file.Files.readAllLines(root.resolve(s"g$gen/_daybytes"))
+        .asScala.map(_.split('\t')).map(a => a(0) -> a(1).toLong).toMap
+    def actual(gen: Int): Map[String, Long] =
+      dayFiles(root, gen).map { case (d, fs) => d -> fs.iterator.map(f =>
+        java.nio.file.Files.size(root.resolve(s"g$gen/$d/$f"))).sum }
+    try {
+      (0 until 6).foreach(d =>
+        apiL.write(sizedSeries("ls", d, d * 100.0, 60), "default"))
+      apiL.drainFlushes()
+      apiL.compactCold() // spill into g0, then a full rewrite → g1
+      assert(recorded(1) === actual(1))
+      assert(recorded(1).size === 6)
+      val l0 = apiL.daysListed.get
+      apiL.compactCold() // nothing spilled since: a skip
+      assert(apiL.daysListed.get === l0, "a skip must list no day")
+      assert(!java.nio.file.Files.exists(root.resolve("g2")))
+      apiL.write(sizedSeries("ls", 3, 9000.0, 60), "default")
+      apiL.drainFlushes()
+      apiL.compact() // spills into g1's day 3
+      val l1 = apiL.daysListed.get
+      apiL.compactCold() // partial: day 3 sized before and after rewrite
+      assert(apiL.daysListed.get - l1 === 2,
+        "a partial rewrite must list its dirty day only")
+      assert(recorded(2) === actual(2))
+      assert(apiL.source().get.points.count() === 6 * 60)
+    } finally apiL.stop()
+  }
+
+  test("multi-day raw reads on a clean cold tier: a PromQL range query " +
+    "scans by file split whatever the bucket count, a remote read runs " +
+    "one scan task per bucket across all its days") {
+    import graft.api.{QueryService, RequestOptions}
+    import graft.promql.EvalParams
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    object Plans extends AdaptiveSparkPlanHelper
+    val days = 4
+    /** (bucketed?, tasks) of the cold scans of a range query and of a
+      * remote read, both over all `days` days of a fresh tier.
+      */
+    def coldScans(fixed: Option[String]): Seq[Seq[(Boolean, Int)]] = {
+      val root = java.nio.file.Files.createTempDirectory("graft_bspan")
+        .resolve("cold")
+      fixed.foreach(spark.conf.set("spark.graft.cold.buckets", _))
+      val apiM = new HttpApi(spark, compactEvery = 1000000,
+        durablePath = Some(root.toString), hotRetainMs = 0L)
+      def scans(df: DataFrame): Seq[(Boolean, Int)] = {
+        assert(df.count() > 0)
+        Plans.collect(df.queryExecution.executedPlan) {
+          case s: FileSourceScanExec
+              if s.relation.location.rootPaths.exists(_.toString
+                .contains(root.getParent.getFileName.toString)) =>
+            (s.bucketedScan, s.inputRDD.getNumPartitions)
+        }
+      }
+      try {
+        (0 until days).foreach(d => apiM.write(
+          sizedSeries("md", d, d * 100.0, 120) ++
+            sizedSeries("md2", d, d * 10.0, 120), "default"))
+        apiM.drainFlushes()
+        apiM.compactCold()
+        val end = T0 + days * 86400000L
+        val p = EvalParams(T0, end, 60000L)
+        val range = QueryService.queryRange("rate(md[5m])",
+          apiM.querySource("default", T0 - 300000L, end,
+            allowRoute = false).get, p,
+          RequestOptions(labelAliases = apiM.labelAliases))
+        val read = apiM.readSeriesFrame(Prompb.ReadQuery(T0, end,
+          Seq(MatchEq("job", "sized")))).get
+        Seq(scans(range), scans(read))
+      } finally {
+        spark.conf.unset("spark.graft.cold.buckets")
+        apiM.stop()
+      }
+    }
+    // four small days size the tier at 1 bucket. The range query's
+    // per-series windows do not keep the bucketed scan, so its tasks
+    // follow the files; the remote read's groupBy(metric_id) does, so
+    // all four days go through 1 task where a fixed 32 gives 32
+    val Seq(Seq((rb, rn)), Seq(remote)) = coldScans(None)
+    val Seq(Seq((fb, fn)), Seq(remote32)) = coldScans(Some("32"))
+    assert(!rb && !fb && rn === fn)
+    assert(remote === ((true, 1)))
+    assert(remote32 === ((true, 32)))
+  }
+
+  test("an explicitly set spark.graft.cold.buckets fixes the count at the " +
+    "first spill and at every rewrite, whatever the data sizes it at") {
+    val root = java.nio.file.Files.createTempDirectory("graft_bfixed")
+      .resolve("cold")
+    val apiX = new HttpApi(spark, compactEvery = 1000000,
+      durablePath = Some(root.toString), hotRetainMs = 0L)
+    spark.conf.set("spark.graft.cold.buckets", "3")
+    // a 64-byte target would size this tier at 32 buckets or more
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "64")
+    try {
+      (0 until 4).foreach(d =>
+        apiX.write(sizedSeries("bx", d, d * 10.0, 20), "default"))
+      apiX.drainFlushes()
+      apiX.compact()
+      assert(bucketsOf(root, 0) === 3)
+      apiX.compactCold()
+      assert(bucketsOf(root, 1) === 3)
+      assert(apiX.source().get.points.count() === 80)
+    } finally {
+      spark.conf.unset("spark.graft.cold.buckets")
+      spark.conf.unset("spark.sql.files.maxPartitionBytes")
+      apiX.stop()
+    }
+  }
+
+  test("compiling an agg_5m-routed query runs no Spark job: the declared " +
+    "agg_5m schema reads the rows inference reads, and routed min/max " +
+    "match the raw path") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import graft.api.{QueryService, RequestOptions}
+    import graft.promql.{EvalParams, Parser}
+    val dir = java.nio.file.Files.createTempDirectory("graft_route_jobs")
+      .resolve("cold").toString
+    val apiRJ = new HttpApi(spark, compactEvery = 1000000,
+      durablePath = Some(dir))
+    val phases = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p =>
+          Option(p.getProperty("graft.spec.phase"))).foreach(phases.add)
+    }
+    def tagged[A](phase: String)(f: => A): A = {
+      spark.sparkContext.setLocalProperty("graft.spec.phase", phase)
+      try f finally spark.sparkContext.setLocalProperty("graft.spec.phase", null)
+    }
+    try {
+      // two hours of 2024 history, one sample a minute alternating 0/1,
+      // so every 5-min bucket has min 0 and max 1
+      apiRJ.write(Seq(PromSeries(Map("__name__" -> "rj_metric",
+        "job" -> "node"), (0 until 120).map(i =>
+          (T0 + i * 60000L, (i % 2).toDouble)))), "default")
+      apiRJ.drainFlushes()
+      apiRJ.compact() // past the hot horizon: spills and pre-aggregates
+      assert(apiRJ.preAggWatermark > T0 + 7200000L)
+      // the table's own schema is the one reads now declare, and both
+      // reads see the same rows, so routed answers do not depend on it
+      val aggDir = java.nio.file.Files.list(
+        java.nio.file.Paths.get(dir + "_agg5m")).iterator().asScala
+        .find(_.getFileName.toString.matches("g\\d+")).get
+      def shape(s: org.apache.spark.sql.types.StructType) =
+        s.fields.map(f => f.name -> f.dataType.catalogString).toSeq
+      val inferred = spark.read.parquet(aggDir.toString)
+      val declared = spark.read.schema(HttpApi.AggSchema)
+        .parquet(aggDir.toString)
+      assert(shape(inferred.schema) === shape(HttpApi.AggSchema))
+      def sortedRows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(_.toSeq.toString).sorted.toSeq
+      assert(sortedRows(inferred).nonEmpty)
+      assert(sortedRows(declared) === sortedRows(inferred))
+      val p = EvalParams(T0 + 3600000L, T0 + 7200000L, 600000L)
+      def compile(q: String, route: Boolean) = {
+        val (mint, maxt) = QueryService.timeBounds(Parser.parse(q), p)
+        val src = apiRJ.querySource("default", mint, maxt, route).get
+        QueryService.queryRange(q, src, p,
+          RequestOptions(labelAliases = apiRJ.labelAliases))
+      }
+      val fns = Seq("max_over_time", "min_over_time", "avg_over_time")
+      spark.sparkContext.addSparkListener(listener)
+      val routed = tagged("compile")(
+        fns.map(f => compile(s"$f(rj_metric[10m])", route = true)))
+      // jobs reach the listener in submit order: once the sentinel's
+      // start is seen, every compile-time job would have been too
+      tagged("sentinel")(spark.range(1).count())
+      val deadline = System.nanoTime() + 10L * 1000000000L
+      while (!phases.contains("sentinel") && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(phases.contains("sentinel"))
+      assert(!phases.contains("compile"), s"compile ran jobs: $phases")
+      routed.foreach(df =>
+        assert(df.inputFiles.exists(_.contains("_agg5m")), df.inputFiles.toSeq))
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+        .map(r => (r.getAs[Long]("eval_ms"), r.getAs[Double]("value")))
+        .toSeq.sorted
+      // min and max agree with the raw path. avg_over_time is not
+      // compared: routed rows sit at their bucket START, so a routed
+      // window is offset from the raw one by up to a bucket (a known
+      // alignment fault, CHANGES.md FOUND), and raw would not match
+      val raw = fns.take(2).map(f =>
+        compile(s"$f(rj_metric[10m])", route = false))
+      assert(rows(routed(0)).map(_._2) === Seq.fill(7)(1.0))
+      assert(rows(routed(1)).map(_._2) === Seq.fill(7)(0.0))
+      routed.zip(raw).foreach { case (r, w) => assert(rows(r) === rows(w)) }
+      assert(rows(routed(2)).size === 7)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      apiRJ.stop()
+    }
+  }
+
   private def deleteTree(p: java.nio.file.Path): Unit = {
     val s = java.nio.file.Files.walk(p)
     try s.sorted(java.util.Comparator.reverseOrder())
