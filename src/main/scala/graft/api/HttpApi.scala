@@ -63,13 +63,14 @@ import graft.tsdb.{MatchEq, Matcher, Matchers, MutableMapping}
   * Storage: an APPEND-ONLY hot store (S10 — the reference's temporary
   * store appends batches per metric while background goroutines flush,
   * `redis/temporarystore/redis.go:156-220`, `batch/batch.go:368-503`).
-  * Each write pins ONLY its own batch (`localCheckpoint`), so per-write
-  * cost is O(batch) — including the p99: the every-`compactEvery`-batches
-  * fold runs on a BACKGROUND thread over a copy-on-write snapshot prefix
-  * and is swapped in atomically, so no write ever waits on it.
-  * Last-write-wins conflict resolution moves to the read side (the
-  * verified O2 dedup shape). The durable path at scale is
-  * `store.Store.writePoints` (S8).
+  * Each write pins ONLY its own batch (staged parquet, `store.Stage`), so
+  * per-write cost is O(batch) — including the p99: the
+  * every-`compactEvery`-batches fold runs on a BACKGROUND thread over a
+  * copy-on-write snapshot prefix and is swapped in atomically, so no
+  * write ever waits on it. Last-write-wins conflict resolution moves to
+  * the read side (the verified O2 dedup shape). The durable cold tier is
+  * day-partitioned and series-bucketed in every generation
+  * (`store.Store.writeBucketedDays`, S8).
   *
   * Remote read streams: when the client negotiates
   * `STREAMED_XOR_CHUNKS`, series are XOR-chunk-encoded on the EXECUTORS
@@ -113,7 +114,7 @@ final class HttpApi(spark: SparkSession,
   import Prompb.{ChunkMeta, PromSeries}
 
   // TWCS day classification (trackDirtyDays, the dirty-dir parse) is
-  // ZoneOffset.UTC-based, while Store.writePoints derives the `day`
+  // ZoneOffset.UTC-based, while Store.writeBucketedDays derives the `day`
   // partition via to_date(timestamp_millis(...)), which follows
   // spark.sql.session.timeZone — an embedding app constructing this
   // facade on a non-UTC session would classify a spilled-into
@@ -153,30 +154,19 @@ final class HttpApi(spark: SparkSession,
   // batchWallMs(0) is the stamp of the newest FOLDED batch — the instant
   // the compacted head alone is a complete view of ([[readView]] tier 1).
   @volatile private var batchWallMs: Vector[Long] = Vector.empty
-  // Hot-batch pin medium. `localCheckpoint` stores UNREPLICATED blocks
-  // on one executor; killing the holder makes the batch unreadable
-  // (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND, SCALE.md "Round-10: durable
-  // pipeline-boundary pins") —
-  // and these rows were ACKNOWLEDGED to the remote-write client and
-  // released from driver memory, so there is NO recompute path: on a
-  // real cluster that is silent-durability loss waiting for a node
-  // failure. When `graft.stage.dir` is set (the cluster-deployment
-  // signal, same as Stage's), hot batches therefore pin as staged
-  // parquet on shared storage instead — executor loss costs a re-read,
-  // never the data. Single-JVM facades (no stage.dir) keep the
-  // localCheckpoint fast path: driver and "executor" share a process,
-  // so the EXECUTOR-LOSS cliff does not exist there. The r13 hour soak
-  // found the cliff's in-process sibling, though: after ~20 min of
-  // sustained folds a long-lived JVM can lose checkpoint blocks
-  // (block-manager removal — no recompute path exists for a truncated
-  // lineage), failing reads AND the next fold. Hour-scale or durable
-  // deployments must set `graft.stage.dir`; the block-manager pin is a
-  // short-session fast path, and that boundary is now measured, not
-  // assumed (SCALE.md r13, SOAK_BENCH_hour_r13.json runs staged).
-  private val durableHot: Boolean =
-    spark.conf.getOption("graft.stage.dir").isDefined
+  // Hot-batch pin medium: every hot relation pins as staged parquet
+  // (`Stage.pinIn`), under `graft.stage.dir` when set (shared storage on
+  // a cluster), else under Stage's JVM-lifetime temp dir. These rows
+  // were ACKNOWLEDGED to the remote-write client and released from
+  // driver memory, so there is NO recompute path: a block-manager pin
+  // (`localCheckpoint`) loses them with the executor holding its
+  // unreplicated blocks (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND, SCALE.md
+  // "Round-10: durable pipeline-boundary pins"), and even in one JVM the
+  // r13 hour soak lost checkpoint blocks after ~20 min of sustained
+  // folds, failing reads AND the next fold (SCALE.md r13). A staged pin
+  // costs a re-read on executor loss, never the data.
   private val hotScope = graft.store.Stage.detachedScope()
-  // staged path per batches[i] (parallel vector; "" = localCheckpoint).
+  // staged path per batches[i] (parallel vector).
   // Superseded paths retire with ONE FULL-fold generation of grace so
   // in-flight readers finish their scans (the coldGen discipline).
   // Two lists (ADVICE r13): delta folds ACCUMULATE their retirees into
@@ -189,10 +179,17 @@ final class HttpApi(spark: SparkSession,
   @volatile private var retiredPrevGen: Vector[String] = Vector.empty
   @volatile private var retiredCurGen: Vector[String] = Vector.empty
 
-  /** Pin one hot relation on the configured medium. */
-  private def pinHot(df: DataFrame, tag: String): (DataFrame, String) =
-    if (durableHot) graft.store.Stage.pinIn(hotScope, df, tag)
-    else (df.localCheckpoint(true), "")
+  /** Pin one hot relation as staged parquet in this store's scope.
+    * `value` is staged as its raw bits: parquet canonicalizes every NaN
+    * it writes, which would turn a Prometheus staleness marker
+    * (StaleNaN) into an ordinary NaN sample.
+    */
+  private def pinHot(df: DataFrame, tag: String): (DataFrame, String) = {
+    import graft.functions.Bits
+    val (pinned, path) = graft.store.Stage.pinIn(hotScope,
+      df.withColumn("value", Bits.doubleBits(col("value"))), tag)
+    (pinned.withColumn("value", Bits.bitsToDouble(col("value"))), path)
+  }
   // monotone spill frontier + overlap tracking: a write whose oldest
   // sample falls behind an earlier spill MAY duplicate keys already on
   // disk; only then do reads pay the LWW dedup shuffle over the cold tier
@@ -234,13 +231,6 @@ final class HttpApi(spark: SparkSession,
   // generation the bootstrap restored from disk
   @volatile private var aggGen: Int = 0
   @volatile private var labelNames: Seq[String] = Nil
-  // expiry-dim schema memo (probed once per process): Some(true) = a
-  // pre-r8 dim without the `names` column — appends keep the legacy
-  // shape and the sweep falls back to the full-history name derivation;
-  // Some(false) = modern dim (or fresh), names ride each refresh row.
-  // No in-place upgrade: a torn Overwrite of the only copy of the dim
-  // would stall every subsequent fold (r8 review finding).
-  @volatile private var expiryDimLegacy: Option[Boolean] = None
   private var writeSeq = 0L
   @volatile private var ttlSeen = false // any write with a non-default TTL?
   // T9 dim: per-series max-merged TTL over COMPACTED history, pinned and
@@ -438,10 +428,6 @@ final class HttpApi(spark: SparkSession,
   private def coldTableName(gen: Int): String =
     genTableName(durablePath.getOrElse(""), gen)
 
-  /** The bucket count `spark.graft.cold.buckets` fixes, when set. */
-  private def fixedBuckets: Option[Int] =
-    spark.conf.getOption("spark.graft.cold.buckets").map(_.toInt)
-
   /** The bucket count a generation's data calls for. A bucketed scan
     * runs one task per bucket however few days it touches (a read
     * prunes to days), so the count follows the bytes of the LARGEST day
@@ -462,74 +448,62 @@ final class HttpApi(spark: SparkSession,
       else math.min(cap.toLong, java.lang.Long.highestOneBit(2 * want - 1)).toInt
     }
 
-  /** Bucket layout for a NEW generation, on metric_id (a count of 0 =
-    * legacy unbucketed). An explicitly set `spark.graft.cold.buckets`
-    * fixes the count; otherwise [[sizedBucketCount]] sizes it from
-    * `dayBytes`, the generation's largest day (an upper-bound estimate
-    * for a fresh tier's first spill, capped there at 32). The count is
-    * frozen per generation in the manifest — a new count takes effect
-    * at the next FULL rewrite, never by mixing.
+  /** Bucket layout for a NEW generation, on metric_id, with the count
+    * [[sizedBucketCount]] sizes from `dayBytes`, the generation's
+    * largest day (an upper-bound estimate for a fresh tier's first
+    * spill, capped there at 32). The count is frozen per generation in
+    * the manifest — a new count takes effect at the next FULL rewrite,
+    * never by mixing.
     */
   private def confBucketSpec(dayBytes: Option[Long],
-      cap: Int = Int.MaxValue): Option[graft.store.Store.BucketSpec] = {
-    val n = fixedBuckets.getOrElse(sizedBucketCount(dayBytes, cap))
-    if (n <= 0) None
-    else Some(graft.store.Store.BucketSpec(Seq("metric_id"), n,
-      Seq("metric_id", "ts_ms")))
-  }
+      cap: Int = Int.MaxValue): graft.store.Store.BucketSpec =
+    graft.store.Store.BucketSpec(Seq("metric_id"),
+      sizedBucketCount(dayBytes, cap), Seq("metric_id", "ts_ms"))
 
-  /** The CURRENT generation's on-disk layout manifest (None = legacy
-    * plain-parquet generation).
+  /** The CURRENT generation's on-disk layout manifest (None = a fresh
+    * tier: no generation written yet).
     */
   private def coldGenSpec: Option[graft.store.Store.BucketSpec] =
     coldPath.flatMap(graft.store.Store.BucketSpec.read)
 
   /** (Re-)register generation `gen`'s bucketed table from its
-    * manifest; None (no-op) for legacy generations. Called at
-    * bootstrap (restart recovery) and at each flip.
+    * manifest (dropped, not registered, while it holds no data files).
+    * Called at bootstrap (restart recovery) and at each flip.
     */
-  private def registerColdGen(gen: Int): Option[String] =
-    durablePath.flatMap { p =>
-      graft.store.Store.registerBucketedDayTable(spark,
-        coldTableName(gen), s"$p/g$gen").map(_ => coldTableName(gen))
-    }
+  private def registerColdGen(gen: Int): Unit =
+    durablePath.foreach(p => graft.store.Store.registerBucketedDayTable(
+      spark, coldTableName(gen), s"$p/g$gen"))
 
-  /** Spill append into the current cold generation. Bucketed tier →
-    * bucketed append through the generation's catalog table (the spec
-    * comes from the GENERATION's manifest, never the conf — mixing
-    * bucket counts inside one dir would corrupt the filename-derived
-    * bucket ids). Fresh tier → start bucketed under the configured
-    * spec; the manifest is written AFTER the first successful append
-    * (it asserts "every file here is bucketed", so it must follow the
-    * files — a crash in between leaves a plain-degraded generation the
-    * next full rewrite converts). Nothing is on disk yet, so the count
-    * is sized from the spill's plan estimate (an upper bound that runs
-    * no job), capped at 32 — 32 when there is no usable estimate.
-    * Legacy manifest-less tier → plain append, unchanged, at `tasks`
-    * write tasks (0 = the session's shuffle parallelism).
+  /** Spill append into the current cold generation: a bucketed append
+    * through the generation's catalog table, under the spec of the
+    * GENERATION's manifest (mixing bucket counts inside one dir would
+    * corrupt the filename-derived bucket ids). A fresh tier has no
+    * manifest yet: its spec is sized from the spill's plan estimate (an
+    * upper bound that runs no job), capped at 32 — 32 when there is no
+    * usable estimate — and the manifest is written BEFORE the first
+    * append, so every file that ever lands in the generation was
+    * written under it. A crash in between leaves a manifest-only
+    * generation, which the next spill appends into as usual. A
+    * generation without data files has no catalog table (there is no
+    * schema to register it from): the spill declares it first, as
+    * creating it through the write would clear the directory,
+    * manifest included.
     */
-  private def spillToCold(spill: DataFrame, path: String,
-      tasks: Int): Unit = {
-    import org.apache.spark.sql.SaveMode
+  private def spillToCold(spill: DataFrame, path: String): Unit = {
     val S = graft.store.Store
-    coldGenSpec match {
-      case Some(spec) =>
-        S.writeBucketedDays(spill, coldTableName(coldGen), path, spec,
-          SaveMode.Append, tasks = spec.n)
-      case None =>
-        val estimate = scala.util.Try(
-          spill.queryExecution.optimizedPlan.stats.sizeInBytes).toOption
-          .filter(_ > 0).map(_.min(Long.MaxValue).toLong)
-        confBucketSpec(estimate, cap = 32) match {
-          case Some(spec) if !isDir(path) =>
-            S.writeBucketedDays(spill, coldTableName(coldGen), path,
-              spec, SaveMode.Append, tasks = spec.n)
-            S.BucketSpec.write(path, spec)
-          case _ =>
-            S.writePoints(spill, path, Seq("metric_id"), SaveMode.Append,
-              tasks)
-        }
+    val table = coldTableName(coldGen)
+    val spec = coldGenSpec.getOrElse {
+      val estimate = scala.util.Try(
+        spill.queryExecution.optimizedPlan.stats.sizeInBytes).toOption
+        .filter(_ > 0).map(_.min(Long.MaxValue).toLong)
+      val fresh = confBucketSpec(estimate, cap = 32)
+      S.BucketSpec.write(path, fresh)
+      fresh
     }
+    if (!spark.catalog.tableExists(table))
+      S.createBucketedDayTable(spark, table, path, spec, spill.schema)
+    S.writeBucketedDays(spill, table, path, spec,
+      org.apache.spark.sql.SaveMode.Append, tasks = spec.n)
   }
 
   // restart metadata sidecar: (writeSeq, labelNames) as one tiny JSON,
@@ -583,6 +557,16 @@ final class HttpApi(spark: SparkSession,
     // restart: adopt the highest generation on disk
     durablePath.filter(isDir).map(maxGenIn).filter(_ >= 0)
       .foreach(coldGen = _)
+    // every generation this facade writes carries its bucket manifest
+    // from before its first data file; one without it was not written
+    // here, and a bucketed append into it would corrupt its bucket ids.
+    // A read that finds a schema has found data files
+    coldPath.foreach(g => require(
+      graft.store.Store.BucketSpec.read(g).isDefined || !isDir(g) ||
+        scala.util.Try(spark.read.parquet(g)).isFailure,
+      s"cold generation $g holds data files but no " +
+        s"${graft.store.Store.BucketSpec.ManifestName}: it was not " +
+        "written by this facade's bucketed layout"))
     // re-register the adopted generation's bucketed table from its
     // on-disk manifest — the bucket spec must survive the restart (the
     // in-memory catalog died with the previous process; without this,
@@ -1219,8 +1203,7 @@ final class HttpApi(spark: SparkSession,
       // delta retirees ACCUMULATE (deleted only by the full fold after
       // next, one full generation of grace — ADVICE r13); nothing drops
       // on the delta cadence
-      retiredCurGen = retiredCurGen ++
-        snapPaths.slice(prefixLen, snap.size).filter(_.nonEmpty)
+      retiredCurGen = retiredCurGen ++ snapPaths.slice(prefixLen, snap.size)
     }
   }
 
@@ -1295,45 +1278,13 @@ final class HttpApi(spark: SparkSession,
     // append after a crash-and-redo max-merges away; a missing one could
     // expire a live series.
     if (!blocked) expiryPath.foreach { ep =>
-      // schema probe, once per process: a pre-r8 dim (no `names` column)
-      // stays legacy forever — appends keep its shape and the sweep uses
-      // the full-history fallback — rather than risking a torn in-place
-      // Overwrite of the only copy. Failure discipline (ADVICE r9): a dir
-      // with no parquet part files (missing, or a crash during its very
-      // first append left only _temporary) is FRESH → modern; but a dir
-      // that HAS part files we nonetheless failed to read is a transient
-      // error — memoizing "modern" there would append mixed-schema rows
-      // into a possibly-legacy dim, so the memo stays None (re-probe next
-      // fold) and THIS fold skips the expiry append (a skipped refresh
-      // only delays expiry; a wrong-schema append corrupts the dim)
-      if (expiryDimLegacy.isEmpty) {
-        val hasParts = isDir(ep) && {
-          val d = new java.io.File(ep)
-          Option(d.listFiles()).exists(_.exists(f =>
-            f.isFile && f.getName.endsWith(".parquet")))
-        }
-        if (!hasParts) expiryDimLegacy = Some(false)
-        else scala.util.Try(
-          spark.read.parquet(ep).columns.contains("names")) match {
-          case scala.util.Success(hasNames) =>
-            expiryDimLegacy = Some(!hasNames)
-          case scala.util.Failure(_) => () // transient: retry next fold
-        }
-      }
-      expiryDimLegacy.foreach { legacy =>
-        val base = folded0.groupBy("metric_id")
-        val refreshed =
-          if (legacy)
-            base.agg((max(col("ts_ms")) + max(col("__ttl_sec")) * 1000L)
-              .as("expiration_ms"))
-          else
-            base.agg((max(col("ts_ms")) + max(col("__ttl_sec")) * 1000L)
-              .as("expiration_ms"),
-              // one series = one label map (metric_id is its hash), so any
-              // row's key set is THE key set
-              first(map_keys(col("labels"))).as("names"))
-        refreshed.write.mode(org.apache.spark.sql.SaveMode.Append).parquet(ep)
-      }
+      folded0.groupBy("metric_id")
+        .agg((max(col("ts_ms")) + max(col("__ttl_sec")) * 1000L)
+          .as("expiration_ms"),
+          // one series = one label map (metric_id is its hash), so any
+          // row's key set is THE key set
+          first(map_keys(col("labels"))).as("names"))
+        .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(ep)
     }
     // S8 tiering: points older than the hot horizon spill to the durable
     // day-partitioned parquet store (APPEND — late duplicates resolve
@@ -1361,7 +1312,7 @@ final class HttpApi(spark: SparkSession,
         if (spill.limit(1).count() == 0)
           (folded0, folded0Path, snapMin, Long.MinValue, Long.MinValue)
         else {
-          spillToCold(spill, path, tasks)
+          spillToCold(spill, path)
           val spilledMax =
             spill.agg(max(col("ts_ms"))).head().getLong(0)
           // TWCS bookkeeping: every day this spill may have appended
@@ -1414,9 +1365,8 @@ final class HttpApi(spark: SparkSession,
       // retirees (including delta-fold retirees accumulated since —
       // ADVICE r13) delete now, outside the lock
       val out = retiredPrevGen
-      retiredPrevGen = (retiredCurGen ++ (snapPaths :+
-        (if (foldedPath != folded0Path) folded0Path else "")))
-        .filter(_.nonEmpty)
+      retiredPrevGen = retiredCurGen ++ snapPaths ++
+        Option(folded0Path).filter(_ != foldedPath)
       retiredCurGen = Vector.empty
       out
     }
@@ -1453,31 +1403,18 @@ final class HttpApi(spark: SparkSession,
     withColdLock {
       expiryPath.filter(isDir).fold(0L) { ep =>
         import spark.implicits._
-        val hasNames = spark.read.parquet(ep).columns.contains("names")
-        val dropped = graft.store.Store.expireSeries(spark, ep, nowMs,
-          if (hasNames) Seq("names") else Seq.empty)
-        if (hasNames) {
-          val dimNames = spark.read.parquet(ep)
-            .select(explode(col("names")).as("n"))
-            .distinct().as[String].collect().toSeq
-          val hotNames = unionAll(synchronized(batches)) match {
-            case Some(h) =>
-              h.select(explode(map_keys(col("labels"))).as("n"))
-                .distinct().as[String].collect().toSeq
-            case None => Nil
-          }
-          labelNames = (dimNames ++ hotNames).distinct.sorted
-        } else {
-          // legacy dim without per-series names: the pre-r8 full-history
-          // derivation is the only correct source — dropping to hot-only
-          // names would erase every cold live series from the label APIs
-          labelNames = dedupedPoints() match {
-            case Some(d) => d
-              .select(explode(map_keys(col("labels"))).as("n"))
-              .distinct().as[String].collect().sorted.toSeq
-            case None => Nil
-          }
+        val dropped =
+          graft.store.Store.expireSeries(spark, ep, nowMs, Seq("names"))
+        val dimNames = spark.read.parquet(ep)
+          .select(explode(col("names")).as("n"))
+          .distinct().as[String].collect().toSeq
+        val hotNames = unionAll(synchronized(batches)) match {
+          case Some(h) =>
+            h.select(explode(map_keys(col("labels"))).as("n"))
+              .distinct().as[String].collect().toSeq
+          case None => Nil
         }
+        labelNames = (dimNames ++ hotNames).distinct.sorted
         dropped
       }
     }
@@ -1525,22 +1462,18 @@ final class HttpApi(spark: SparkSession,
     * NOT applied to read-side lwwDedup — reads keep their plan.
     */
   private def fineForUpkeep(df: DataFrame,
-      spec: Option[graft.store.Store.BucketSpec], tasks: Int): DataFrame =
-    spec match {
-      case Some(s) =>
-        // bucketed rewrite: partition on the BUCKET columns only, at a
-        // multiple of the bucket count, so (a) the dedup groupBy still
-        // rides this one exchange (HashPartitioning(metric_id)
-        // satisfies ClusteredDistribution(metric_id, ts_ms) — subset
-        // rule), (b) each write task holds exactly one bucket (hash
-        // mod kn ≡ hash mod n (mod n)) so files stay k per bucket-day,
-        // (c) tasks stay k× finer than one-task-per-bucket, keeping
-        // the FAIR head-of-line bound at a fraction of a bucket
-        val k = math.max(1, (tasks + s.n - 1) / s.n)
-        df.repartition(k * s.n, s.cols.map(col): _*)
-      case None =>
-        df.repartition(tasks, col("metric_id"), col("ts_ms"))
-    }
+      spec: graft.store.Store.BucketSpec, tasks: Int): DataFrame = {
+    // partition on the BUCKET columns only, at a multiple of the bucket
+    // count, so (a) the dedup groupBy still rides this one exchange
+    // (HashPartitioning(metric_id) satisfies
+    // ClusteredDistribution(metric_id, ts_ms) — subset rule), (b) each
+    // write task holds exactly one bucket (hash mod kn ≡ hash mod n
+    // (mod n)) so files stay k per bucket-day, (c) tasks stay k× finer
+    // than one-task-per-bucket, keeping the FAIR head-of-line bound at a
+    // fraction of a bucket
+    val k = math.max(1, (tasks + spec.n - 1) / spec.n)
+    df.repartition(k * spec.n, spec.cols.map(col): _*)
+  }
 
   private def compactColdBody(tasks: Int): Unit = {
     durablePath.filter(_ => !coldWritesBlocked).foreach { p =>
@@ -1585,10 +1518,9 @@ final class HttpApi(spark: SparkSession,
             f"took=${(System.nanoTime() - rw0) / 1e9}%.1fs")
         // layout of the generation being rewritten vs the target: a
         // partial rewrite hardlink-carries g<N>'s files into g<N+1>, so
-        // both must share ONE spec — a mismatch (knob change, legacy→
-        // bucketed migration, a sized count 4x off the current one)
-        // degrades to a full rewrite, which is also how the layout
-        // converts. Inside the 4x band the generation keeps its count,
+        // both must share ONE spec — a mismatch (a sized count 4x off
+        // the current one) degrades to a full rewrite, which is also how
+        // the count changes. Inside the 4x band the generation keeps its count,
         // so a resize waits for the data to grow (or shrink) 4x and all
         // the bytes ever rewritten to resize stay ≤ ~4/3 of the tier
         val curSpec = graft.store.Store.BucketSpec.read(curDir.toString)
@@ -1602,33 +1534,27 @@ final class HttpApi(spark: SparkSession,
           existing.map(d => d -> recorded.get(d).filterNot(_ => listed(d))
             .getOrElse(dayBytes(curDir.resolve(d)))).toMap
         }
-        lazy val wantSpec =
-          (curSpec, confBucketSpec(Some(daySizes.values.maxOption
-              .getOrElse(0L)))) match {
-            case (Some(c), Some(s)) if fixedBuckets.isEmpty &&
-                s.n < 4L * c.n && 4L * s.n > c.n => curSpec
-            case (_, s) => s
-          }
-        // build a generation dir under the staging discipline: bucketed
-        // generations go through a throwaway catalog name (bucketBy
-        // requires saveAsTable; the table is EXTERNAL, so dropping it
-        // keeps the files) plus the manifest, written AFTER the data
+        lazy val wantSpec = {
+          val sized =
+            confBucketSpec(Some(daySizes.values.maxOption.getOrElse(0L)))
+          curSpec.filter(c => sized.n < 4L * c.n && 4L * sized.n > c.n)
+            .getOrElse(sized)
+        }
+        // build a generation dir under the staging discipline: through a
+        // throwaway catalog name (bucketBy requires saveAsTable; the
+        // table is EXTERNAL, so dropping it keeps the files) plus the
+        // manifest — the staging dir is never adopted, and the rename
+        // publishes data and manifest together
         def buildGen(src: DataFrame, dir: String,
-            spec: Option[graft.store.Store.BucketSpec]): Unit =
-          spec match {
-            case Some(s) =>
-              val buildTable = coldTableName(nextGen) + "_build"
-              spark.sql(s"DROP TABLE IF EXISTS `$buildTable`")
-              graft.store.Store.writeBucketedDays(
-                lwwDedup(fineForUpkeep(src, spec, tasks)), buildTable, dir, s,
-                org.apache.spark.sql.SaveMode.Overwrite, tasks = 0)
-              spark.sql(s"DROP TABLE IF EXISTS `$buildTable`")
-              graft.store.Store.BucketSpec.write(dir, s)
-            case None =>
-              graft.store.Store.writePoints(
-                lwwDedup(fineForUpkeep(src, None, tasks)), dir,
-                Seq("metric_id"), tasks = tasks)
-          }
+            spec: graft.store.Store.BucketSpec): Unit = {
+          val buildTable = coldTableName(nextGen) + "_build"
+          spark.sql(s"DROP TABLE IF EXISTS `$buildTable`")
+          graft.store.Store.writeBucketedDays(
+            lwwDedup(fineForUpkeep(src, spec, tasks)), buildTable, dir, spec,
+            org.apache.spark.sql.SaveMode.Overwrite, tasks = 0)
+          spark.sql(s"DROP TABLE IF EXISTS `$buildTable`")
+          graft.store.Store.BucketSpec.write(dir, spec)
+        }
         dirty match {
           case Some(d) if d.isEmpty =>
             // no spill since the last flip: the tier is already deduped
@@ -1637,7 +1563,7 @@ final class HttpApi(spark: SparkSession,
             retireGenerations(p, coldGen)
             logRewrite("skip", 0)
           case Some(d) if d.size * 2 < existing.size &&
-              curSpec == wantSpec =>
+              curSpec.contains(wantSpec) =>
             // PARTIAL (leveled) rewrite: dedup only the spilled-into
             // days; every clean day is carried forward as hardlinks.
             // Cost is O(dirty days), so compaction duration stays FLAT
@@ -1651,14 +1577,14 @@ final class HttpApi(spark: SparkSession,
             // Bucket ids are filename-encoded, so rewritten dirty days
             // and hardlinked clean days compose into one consistent
             // bucketed generation (same spec on both sides, enforced
-            // by the curSpec == wantSpec guard above).
+            // by the curSpec guard above).
             val staging = java.nio.file.Paths.get(s"$p/_build_g$nextGen")
             deleteRecursively(staging)
             val slice = spark.read.parquet(curDir.toString)
               .where(col("day").isin(d.map(x =>
                 java.sql.Date.valueOf(x.stripPrefix("day="))): _*))
               .drop("day")
-            buildGen(slice, staging.toString, curSpec)
+            buildGen(slice, staging.toString, wantSpec)
             existing.filterNot(d.contains).foreach { cd =>
               linkTree(curDir.resolve(cd), staging.resolve(cd))
             }
@@ -1673,9 +1599,9 @@ final class HttpApi(spark: SparkSession,
           case _ =>
             // FULL rewrite: dirty-day provenance unknown (restart over
             // an existing tier, too-wide backfill), most days dirty
-            // anyway (carry-forward buys nothing), or a layout change
-            // (legacy→bucketed, bucket-count knob, a sized count 4x
-            // off) that must not mix with carried files. Stream the
+            // anyway (carry-forward buys nothing), or a bucket-count
+            // change (a sized count 4x off) that must not mix with
+            // carried files. Stream the
             // rewrite — NO checkpoint:
             // it reads g(N) and writes g(N+1) (different dirs, no
             // self-overwrite hazard) for exactly one consumer, so
@@ -1683,8 +1609,8 @@ final class HttpApi(spark: SparkSession,
             // block-manager memory for nothing, and those orphan
             // blocks lingered until the cleaner's periodic GC (default
             // 30 min) — the r13 soak's heap death curve tracked the
-            // compactCold cadence (r13). Bucketed target goes through
-            // the same staging + atomic-rename discipline (saveAsTable
+            // compactCold cadence (r13). The target goes through the
+            // same staging + atomic-rename discipline (saveAsTable
             // has no committer-level direct-to-final story for a dir a
             // crash could leave half-written with a _SUCCESS-free but
             // manifest-carrying state).
@@ -1804,7 +1730,7 @@ final class HttpApi(spark: SparkSession,
     // and file index; dropping day dirs on disk without telling the
     // catalog would leave readers planning over deleted files
     // (FAILED_READ_FILE) — re-register from the manifest, which relists
-    // the surviving partitions (no-op on legacy manifest-less tiers).
+    // the surviving partitions.
     // registerBucketedDayTable drops the stale table even when EVERY
     // day was retired (no files left to infer a schema from), so a
     // fully-aged generation degrades to "empty store", never to a
@@ -1825,12 +1751,12 @@ final class HttpApi(spark: SparkSession,
       .filter(isDir)
       .flatMap { p =>
         scala.util.Try {
-          // bucketed generations read through their catalog table so
+          // generations read through their catalog table so
           // per-series aggregations (downsample, rate windows, LWW
           // dedup — all keyed on metric_id ⊇ the bucket column) plan
-          // with NO Exchange straight off the scan; legacy generations
-          // (or a registration gap) fall back to the plain parquet
-          // read, which is correct but pays the shuffle
+          // with NO Exchange straight off the scan; a registration gap
+          // falls back to the plain parquet read, which is correct but
+          // pays the shuffle
           val name = coldTableName(coldGen)
           val df =
             if (spark.catalog.tableExists(name)) spark.table(name)
@@ -2220,7 +2146,7 @@ final class HttpApi(spark: SparkSession,
           case Some(t) if now - t >= grace =>
             deleteRecursively(g)
             // drop the retired generation's catalog entry with its dir
-            // (no-op for legacy/agg generations that never had one)
+            // (no-op for agg generations, which never have one)
             scala.util.Try(spark.sql("DROP TABLE IF EXISTS `" +
               genTableName(root,
                 g.getFileName.toString.drop(1).toInt) + "`"))
@@ -2364,14 +2290,11 @@ final class HttpApi(spark: SparkSession,
       serverPool = None
     }
     // reclaim this store's staged hot pins (retired AND live: the store
-    // is gone, so the hot tail's lifecycle ends here exactly as the
-    // localCheckpoint path's blocks end with the JVM — the durable tier
+    // is gone, so the hot tail's lifecycle ends here — the durable tier
     // holds everything the fold already spilled)
-    if (durableHot) {
-      synchronized { retiredPrevGen = Vector.empty
-        retiredCurGen = Vector.empty; batchPaths = Vector.empty }
-      graft.store.Stage.clearDetached(spark, hotScope)
-    }
+    synchronized { retiredPrevGen = Vector.empty
+      retiredCurGen = Vector.empty; batchPaths = Vector.empty }
+    graft.store.Stage.clearDetached(spark, hotScope)
   }
 
   private def handle(h: HttpExchange): Unit =

@@ -57,10 +57,12 @@ object Bits {
 
   def isStaleNaN(c: Column): Column = doubleBits(c) === lit(StaleNaNBits)
 
-  def normalNaN: Column =
-    ColumnShim.column(BitsToDouble(ColumnShim.expression(lit(NormalNaNBits))))
+  /** The double whose raw bits are `c` — payload-preserving. */
+  def bitsToDouble(c: Column): Column =
+    ColumnShim.column(BitsToDouble(ColumnShim.expression(c)))
+
+  def normalNaN: Column = bitsToDouble(lit(NormalNaNBits))
 
   /** StaleNaN as a Column — payload-preserving (see [[BitsToDouble]]). */
-  def staleNaN: Column =
-    ColumnShim.column(BitsToDouble(ColumnShim.expression(lit(StaleNaNBits))))
+  def staleNaN: Column = bitsToDouble(lit(StaleNaNBits))
 }

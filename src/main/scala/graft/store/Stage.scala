@@ -27,9 +27,10 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * the tf relations (x11/x15), chunk pairs (x16), the k-means
   * assignment (d9), the CC edge list and its initial labels (d7) —
   * while `localCheckpoint` remains the right tool for aggregate-small
-  * pins (per-round CC labels, dashboard-sized ingest batches) where
-  * re-running the job on executor loss costs less than replicating the
-  * pin.
+  * pins (per-round CC labels) where re-running the job on executor loss
+  * costs less than replicating the pin. Ingest batches are NOT such
+  * pins, however small: once acknowledged they have no job to re-run,
+  * so the HTTP facade stages every hot batch and fold ([[pinIn]]).
   */
 object Stage {
 

@@ -239,21 +239,32 @@ object Store {
       val schema = scala.util.Try(spark.read.parquet(genPath).schema)
       spark.sql(s"DROP TABLE IF EXISTS `$table`")
       schema.toOption.flatMap { sch =>
-      scala.util.Try {
-        val dataDdl = org.apache.spark.sql.types.StructType(
-          sch.filterNot(_.name == "day")).toDDL
-        spark.sql(
-          s"""CREATE TABLE `$table` ($dataDdl, day DATE) USING PARQUET
-             |PARTITIONED BY (day)
-             |CLUSTERED BY (${spec.cols.map(c => s"`$c`").mkString(", ")})
-             |SORTED BY (${spec.sortCols.map(c => s"`$c`").mkString(", ")})
-             |INTO ${spec.n} BUCKETS
-             |LOCATION '$genPath'""".stripMargin)
-        spark.sql(s"ALTER TABLE `$table` RECOVER PARTITIONS")
-        spec
-      }.toOption
+        scala.util.Try(createBucketedDayTable(spark, table, genPath, spec,
+          sch)).toOption.map(_ => spec)
       }
     }
+
+  /** Declare generation `genPath`'s bucketed day table under `spec`,
+    * with `schema`'s data columns, over whatever day dirs it holds — so
+    * a bucketed append into a generation with no data files yet inserts
+    * into this table instead of creating it, which would clear the
+    * directory and its manifest.
+    */
+  def createBucketedDayTable(spark: SparkSession, table: String,
+      genPath: String, spec: BucketSpec,
+      schema: org.apache.spark.sql.types.StructType): Unit = {
+    val dataDdl = org.apache.spark.sql.types.StructType(
+      schema.filterNot(_.name == "day")).toDDL
+    spark.sql(s"DROP TABLE IF EXISTS `$table`")
+    spark.sql(
+      s"""CREATE TABLE `$table` ($dataDdl, day DATE) USING PARQUET
+         |PARTITIONED BY (day)
+         |CLUSTERED BY (${spec.cols.map(c => s"`$c`").mkString(", ")})
+         |SORTED BY (${spec.sortCols.map(c => s"`$c`").mkString(", ")})
+         |INTO ${spec.n} BUCKETS
+         |LOCATION '$genPath'""".stripMargin)
+    spark.sql(s"ALTER TABLE `$table` RECOVER PARTITIONS")
+  }
 
   /** Read back with partition pruning for a time range. */
   def readPoints(spark: SparkSession, path: String,

@@ -100,7 +100,19 @@ object Ingest {
     * batch group-by — which is exactly what the correctness oracle checks.
     */
   def windowedCounts(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val static = spark.read.parquet(s"$dir/events.parquet")
+    // State-store partition count, scoped to THIS streaming query: the
+    // aggregation state is (window × event_type) — dimension-bounded at
+    // any ingest volume, and the state shuffle carries map-side-combined
+    // partials, not raw events — so core-count state partitions buy no
+    // parallelism and cost core-count state-store commits (+ provider
+    // files) per micro-batch: the dominant term of a small batch
+    // (measured r16/r17 at sf0.1: 32 → 4 partitions = 2.08 → 1.68 s).
+    // The query runs on a child session carrying that setting; a query
+    // fixes its conf at start, and the caller's session — shared with
+    // whatever else runs meanwhile — is never touched.
+    val child = org.apache.spark.sql.graftshim.SessionShim.cloneWith(spark,
+      "spark.sql.shuffle.partitions" -> "4")
+    val static = child.read.parquet(s"$dir/events.parquet")
     // The file-stream source lists a DIRECTORY. Driver testdata ships
     // events.parquet as a single FILE — expose it through a temp dir of
     // symlinks; a Spark-written dataset (ScaleGen's sf1) is already a
@@ -115,7 +127,7 @@ object Ingest {
           d.resolve("events.parquet"), src)
         Some(d)
       }
-    val stream = spark.readStream
+    val stream = child.readStream
       .schema(static.schema)
       .parquet(streamDir.map(_.toString).getOrElse(src.toString))
       .withColumn("ts_ms", graft.Tables.tsMs(static))
@@ -124,45 +136,29 @@ object Ingest {
       .withWatermark("ts_utc", "8 hours") // reference MaxPastDelay, aggregate.go:48
       .groupBy(window(col("ts_utc"), "5 minutes"), col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum("value"), 6).as("sum_value"))
-    // State-store partition count, scoped to THIS streaming query: the
-    // aggregation state is (window × event_type) — dimension-bounded at
-    // any ingest volume, and the state shuffle carries map-side-combined
-    // partials, not raw events — so core-count state partitions buy no
-    // parallelism and cost core-count state-store commits (+ provider
-    // files) per micro-batch: the dominant term of a small batch
-    // (measured r16/r17 at sf0.1: 32 → 4 partitions = 2.08 → 1.68 s).
-    // A streaming query CLONES the session at start, so setting the
-    // session conf around start() pins the query's state width without
-    // touching any other query; the session value is restored before the
-    // post-stream batch read below. Deployments with high-cardinality
-    // state keys size it via graft.stream.statePartitions.
-    val stateParts = spark.conf.getOption("graft.stream.statePartitions")
-      .getOrElse("4")
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", stateParts)
-    val q =
-      try {
-        val started = agg.writeStream
-          .outputMode("complete")
-          .format("memory")
-          .queryName(name)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        started.awaitTermination()
-        started
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    val q = agg.writeStream
+      .outputMode("complete")
+      .format("memory")
+      .queryName(name)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
     // Materialize and fully detach from streaming machinery: the memory
     // sink + state-store listeners otherwise keep degrading every later
     // batch query in the session (observed: 2.8s → 230s on a follow-up
     // 500-row projection).
-    val out = spark.table(name)
+    // The sink's view lives in the child session; the result is pinned
+    // in the CALLER's, so later queries over it plan with the caller's
+    // conf.
+    val sink = child.table(name)
       .select(
         unix_millis(col("window.start")).as("bucket_ms"),
         col("event_type"), col("n"), col("sum_value"))
+    val out = spark.createDataFrame(sink.rdd, sink.schema)
       .localCheckpoint(true)
-    spark.catalog.dropTempView(name)
+    child.catalog.dropTempView(name)
     q.stop() // release source/sink resources beyond termination
-    spark.streams.resetTerminated()
+    child.streams.resetTerminated()
     // unload state-store providers + their maintenance thread — the last
     // streaming residue that can tax later batch queries in the session
     org.apache.spark.sql.execution.streaming.state.StateStore.stop()

@@ -95,8 +95,8 @@ object SoakBench {
     // hour-scale configuration (VERDICT r13 #3): SB_DURABLE_PATH enables
     // the cold tier (folds spill points older than SB_HOT_RETAIN_SEC, so
     // hot memory is bounded over arbitrarily long runs); SB_STAGE_DIR
-    // switches hot pins to staged parquet (the durable-pin medium whose
-    // directory growth the timeline tracks)
+    // sets where the staged hot pins go (the directory whose growth the
+    // timeline tracks; unset, they go to a JVM-lifetime temp dir)
     val durablePath = sys.env.get("SB_DURABLE_PATH")
     val hotRetainSec = sys.env.getOrElse("SB_HOT_RETAIN_SEC", "600").toLong
     val stageDir = sys.env.get("SB_STAGE_DIR")

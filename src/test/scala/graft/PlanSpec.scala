@@ -151,6 +151,52 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("t1 streams on a child session: its state store runs 4 partitions " +
+    "while the caller's conf stays identical at every stage submitted, " +
+    "and the result is bound to the caller's session") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent,
+      SparkListenerStageSubmitted}
+    import org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent
+    import org.apache.spark.sql.streaming.StreamingQueryProgress
+    // a caller whose own shuffle width is not the state store's 4
+    val caller = spark.newSession()
+    caller.conf.set("spark.sql.shuffle.partitions", "7")
+    val before = caller.conf.getAll
+    val drift = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val stages = new java.util.concurrent.atomic.AtomicInteger
+    val progress =
+      new java.util.concurrent.ConcurrentLinkedQueue[StreamingQueryProgress]()
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = {
+        stages.incrementAndGet()
+        val now = caller.conf.getAll
+        (now.keySet ++ before.keySet)
+          .filter(k => now.get(k) != before.get(k)).foreach(drift.add)
+      }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case p: QueryProgressEvent => progress.add(p.progress)
+        case _ => ()
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val out = try {
+      val df = SparkEntry.queries("t1_stream_window")(caller, sfDir)
+      assert(df.count() > 0)
+      // listener events arrive asynchronously
+      val deadline = System.nanoTime() + 10L * 1000000000L
+      while ((progress.isEmpty || stages.get == 0) &&
+        System.nanoTime() < deadline) Thread.sleep(20)
+      df
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val last = progress.toArray(Array.empty[StreamingQueryProgress])
+      .filter(_.name == "t1_stream_window_sink").last
+    assert(last.stateOperators(0).numShufflePartitions === 4)
+    assert(stages.get > 0)
+    assert(drift.isEmpty, s"caller conf changed while t1 ran: $drift")
+    assert(caller.conf.getAll === before)
+    assert(out.sparkSession eq caller)
+  }
+
   test("sequence packing never plans a single-partition window") {
     import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
     val df = SparkEntry.queries("x8_sequence_pack")(spark, sfDir)

@@ -2,8 +2,10 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Guards the repo against raw control bytes in source files, and the
-  * tools against growing their own listeners back.
+/** Guards the repo against raw control bytes in source files, the
+  * tools against growing their own listeners back, and the engine
+  * against passing parameters through session conf or growing knobs
+  * unnoticed.
   *
   * Raw U+0000/U+0001 bytes in string/char literals make git classify the
   * file as BINARY — diffs, blame, and review silently break. This happened
@@ -48,5 +50,42 @@ class SourceHygieneSpec extends AnyFunSuite {
       .map(_.getPath)
     assert(offenders.isEmpty,
       s"tools must share ToolListener, not define their own: $offenders")
+  }
+
+  private def mainSources: Seq[java.io.File] = {
+    val main = new java.io.File("src/main")
+    assert(main.isDirectory, "run from the repo root")
+    scalaSources(main)
+  }
+
+  private def text(f: java.io.File): String =
+    new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+
+  test("no session conf is set or unset in src/main outside tools/") {
+    // the session is shared by concurrent requests and queries: a value
+    // set around one piece of work is seen by every other meanwhile, so
+    // work that needs a setting passes it explicitly or runs on a child
+    // session. Tools own the sessions they build.
+    val tools = new java.io.File("src/main/scala/graft/tools").getCanonicalPath
+    val mutation = "conf\\.(set|unset)\\(".r
+    val offenders = mainSources
+      .filterNot(_.getCanonicalPath.startsWith(tools))
+      .flatMap(f => text(f).linesIterator.zipWithIndex.collect {
+        case (l, i) if mutation.findFirstIn(l).isDefined =>
+          s"${f.getPath}:${i + 1}: ${l.trim}"
+      })
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("the graft conf keys src/main reads are exactly the allowlist") {
+    // a new knob is one more mechanism to keep working, so adding one
+    // means editing this list
+    val allowed = Set("graft.stage.dir", "spark.graft.gen.grace.ms",
+      "spark.graft.ivf.retrain.ratio", "spark.graft.write.splits")
+    val read =
+      "conf\\.(get|getOption|contains)\\(\\s*\"((spark\\.)?graft\\.[^\"]+)\"".r
+    val keys = mainSources.flatMap(f =>
+      read.findAllMatchIn(text(f)).map(_.group(2))).toSet
+    assert(keys === allowed)
   }
 }
