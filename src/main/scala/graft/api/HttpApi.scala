@@ -1080,6 +1080,11 @@ final class HttpApi(spark: SparkSession,
   /** Total pinned hot relations: head + mids + raw tail (tests/soak). */
   private[graft] def hotDepth: Int = batches.size
 
+  /** Staged hot pins the store still tracks for reclaim at [[stop]]:
+    * the live batches plus the retirees awaiting their grace (tests).
+    */
+  private[graft] def trackedPins: Int = hotScope.size
+
   /** PINNED batches since the last completed compaction — the compact
     * trigger counts only these (a queued-but-unpinned flush must not
     * start a fold that would miss it).
@@ -1370,7 +1375,7 @@ final class HttpApi(spark: SparkSession,
       retiredCurGen = Vector.empty
       out
     }
-    dropNow.foreach(p => graft.store.Stage.drop(spark, p))
+    dropNow.foreach(p => graft.store.Stage.drop(spark, hotScope, p))
     aggTo
     }
     if (aggTo != Long.MinValue) {

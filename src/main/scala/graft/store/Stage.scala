@@ -110,10 +110,13 @@ object Stage {
   def clearDetached(spark: SparkSession, scope: PinScope): Unit =
     drain(spark, scope.paths)
 
-  /** Delete ONE staged pin by path (retiring a superseded generation);
-    * no-op if the path was already cleared or never staged.
+  /** Delete ONE staged pin of `scope` by path (retiring a superseded
+    * generation) and stop tracking it there, so a long-lived owner's
+    * scope holds only its live pins; no-op if the path was already
+    * cleared or never staged.
     */
-  def drop(spark: SparkSession, path: String): Unit = {
+  def drop(spark: SparkSession, scope: PinScope, path: String): Unit = {
+    scope.paths.remove(path)
     val hp = new org.apache.hadoop.fs.Path(path)
     hp.getFileSystem(spark.sessionState.newHadoopConf()).delete(hp, true)
   }
@@ -129,6 +132,8 @@ object Stage {
   final class PinScope private[Stage] () {
     private[Stage] val paths =
       new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    /** Pins this scope still tracks (created, not yet dropped). */
+    private[graft] def size: Int = paths.size
     // close()/clear() must run on the thread that opened the scope —
     // the ThreadLocal can only be removed there. A cross-thread clear
     // would silently leave the opener's ThreadLocal set, making its

@@ -110,64 +110,65 @@ object Ingest {
     // The query runs on a child session carrying that setting; a query
     // fixes its conf at start, and the caller's session — shared with
     // whatever else runs meanwhile — is never touched.
-    val child = org.apache.spark.sql.graftshim.SessionShim.cloneWith(spark,
-      "spark.sql.shuffle.partitions" -> "4")
-    val static = child.read.parquet(s"$dir/events.parquet")
-    // The file-stream source lists a DIRECTORY. Driver testdata ships
-    // events.parquet as a single FILE — expose it through a temp dir of
-    // symlinks; a Spark-written dataset (ScaleGen's sf1) is already a
-    // directory and streams directly (the symlink-to-directory form
-    // would list ZERO files: the source does not recurse through it).
-    val src = java.nio.file.Paths.get(s"$dir/events.parquet")
-    val streamDir: Option[java.nio.file.Path] =
-      if (java.nio.file.Files.isDirectory(src)) None
-      else {
-        val d = java.nio.file.Files.createTempDirectory("graft_stream")
-        java.nio.file.Files.createSymbolicLink(
-          d.resolve("events.parquet"), src)
-        Some(d)
+    org.apache.spark.sql.graftshim.SessionShim.withChild(spark,
+        "spark.sql.shuffle.partitions" -> "4") { child =>
+      val static = child.read.parquet(s"$dir/events.parquet")
+      // The file-stream source lists a DIRECTORY. Driver testdata ships
+      // events.parquet as a single FILE — expose it through a temp dir of
+      // symlinks; a Spark-written dataset (ScaleGen's sf1) is already a
+      // directory and streams directly (the symlink-to-directory form
+      // would list ZERO files: the source does not recurse through it).
+      val src = java.nio.file.Paths.get(s"$dir/events.parquet")
+      val streamDir: Option[java.nio.file.Path] =
+        if (java.nio.file.Files.isDirectory(src)) None
+        else {
+          val d = java.nio.file.Files.createTempDirectory("graft_stream")
+          java.nio.file.Files.createSymbolicLink(
+            d.resolve("events.parquet"), src)
+          Some(d)
+        }
+      val stream = child.readStream
+        .schema(static.schema)
+        .parquet(streamDir.map(_.toString).getOrElse(src.toString))
+        .withColumn("ts_ms", graft.Tables.tsMs(static))
+        .withColumn("ts_utc", timestamp_millis(col("ts_ms")))
+      val agg = stream
+        .withWatermark("ts_utc", "8 hours") // reference MaxPastDelay, aggregate.go:48
+        .groupBy(window(col("ts_utc"), "5 minutes"), col("event_type"))
+        .agg(count(lit(1)).as("n"), round(sum("value"), 6).as("sum_value"))
+      val q = agg.writeStream
+        .outputMode("complete")
+        .format("memory")
+        .queryName(name)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      // Materialize and fully detach from streaming machinery: the memory
+      // sink + state-store listeners otherwise keep degrading every later
+      // batch query in the session (observed: 2.8s → 230s on a follow-up
+      // 500-row projection).
+      // The sink's view lives in the child session; the result is pinned
+      // in the CALLER's, so later queries over it plan with the caller's
+      // conf.
+      val sink = child.table(name)
+        .select(
+          unix_millis(col("window.start")).as("bucket_ms"),
+          col("event_type"), col("n"), col("sum_value"))
+      val out = spark.createDataFrame(sink.rdd, sink.schema)
+        .localCheckpoint(true)
+      child.catalog.dropTempView(name)
+      q.stop() // release source/sink resources beyond termination
+      child.streams.resetTerminated()
+      // unload state-store providers + their maintenance thread — the last
+      // streaming residue that can tax later batch queries in the session
+      org.apache.spark.sql.execution.streaming.state.StateStore.stop()
+      // the symlink dir (single-file sources only) was only needed while
+      // the source listed it
+      streamDir.foreach { d =>
+        java.nio.file.Files.deleteIfExists(d.resolve("events.parquet"))
+        java.nio.file.Files.deleteIfExists(d)
       }
-    val stream = child.readStream
-      .schema(static.schema)
-      .parquet(streamDir.map(_.toString).getOrElse(src.toString))
-      .withColumn("ts_ms", graft.Tables.tsMs(static))
-      .withColumn("ts_utc", timestamp_millis(col("ts_ms")))
-    val agg = stream
-      .withWatermark("ts_utc", "8 hours") // reference MaxPastDelay, aggregate.go:48
-      .groupBy(window(col("ts_utc"), "5 minutes"), col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum("value"), 6).as("sum_value"))
-    val q = agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // Materialize and fully detach from streaming machinery: the memory
-    // sink + state-store listeners otherwise keep degrading every later
-    // batch query in the session (observed: 2.8s → 230s on a follow-up
-    // 500-row projection).
-    // The sink's view lives in the child session; the result is pinned
-    // in the CALLER's, so later queries over it plan with the caller's
-    // conf.
-    val sink = child.table(name)
-      .select(
-        unix_millis(col("window.start")).as("bucket_ms"),
-        col("event_type"), col("n"), col("sum_value"))
-    val out = spark.createDataFrame(sink.rdd, sink.schema)
-      .localCheckpoint(true)
-    child.catalog.dropTempView(name)
-    q.stop() // release source/sink resources beyond termination
-    child.streams.resetTerminated()
-    // unload state-store providers + their maintenance thread — the last
-    // streaming residue that can tax later batch queries in the session
-    org.apache.spark.sql.execution.streaming.state.StateStore.stop()
-    // the symlink dir (single-file sources only) was only needed while
-    // the source listed it
-    streamDir.foreach { d =>
-      java.nio.file.Files.deleteIfExists(d.resolve("events.parquet"))
-      java.nio.file.Files.deleteIfExists(d)
+      out
     }
-    out
   }
 }

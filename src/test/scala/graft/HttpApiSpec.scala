@@ -1808,6 +1808,13 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
       api2.drainFlushes()
     }
     assert(api2.rawPoints.get.count() === 10)
+    // the scope tracks exactly the pins still on disk: a retiree leaves
+    // the scope when its files go, so a long-lived store's scope stays
+    // bounded by its live pins (a fold in flight may lag either side)
+    val settle = System.nanoTime() + 30L * 1000000000L
+    while (api2.trackedPins != staged().size && System.nanoTime() < settle)
+      Thread.sleep(50)
+    assert(api2.trackedPins === staged().size, staged())
     api2.stop()
     // stop() reclaims every staged pin of this store
     assert(staged().isEmpty, staged())
@@ -2222,12 +2229,16 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
     val root = java.nio.file.Files.createTempDirectory("graft_cold_tasks")
       .resolve("cold")
     val dir = root.toString
-    // a 16-byte scan-task target sizes the rewritten generation past the
-    // 4x count, so the bucket count divides neither the session's
-    // shuffle partitions nor the 4x count, and every write's task count
-    // is its own
-    val key = "spark.sql.files.maxPartitionBytes"
-    spark.conf.set(key, "16")
+    // a bucket count that divides neither the session's shuffle
+    // partitions nor the 4x count, so every write's task count is its
+    // own. Sizing yields only powers of two, so the count comes from a
+    // manifest-only g0 (the state a crash before a fresh tier's first
+    // append leaves): the spill appends under it, and the rewrite keeps
+    // it, since the sized count (1 for this data) is inside the 4x band
+    val buckets = 3
+    graft.store.Store.BucketSpec.write(root.resolve("g0").toString,
+      graft.store.Store.BucketSpec(Seq("metric_id"), buckets,
+        Seq("metric_id", "ts_ms")))
     val stageTasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
     // conf keys that differ from the snapshot while the upkeep jobs run
     val confDrift = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -2256,9 +2267,8 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
       // the new frontier), then fully rewrites the fresh generation
       apiCT.compactCold()
       assert(spark.conf.getAll === confBefore.get)
+      assert(bucketsOf(root, 1) === buckets)
       val fine = spark.sparkContext.defaultParallelism * 4
-      val buckets = bucketsOf(root, 1)
-      assert(fine % buckets != 0, s"$buckets buckets divide $fine tasks")
       val rewrite = (fine + buckets - 1) / buckets * buckets
       val deadline = System.nanoTime() + 10L * 1000000000L
       def seen = stageTasks.asScala.toSet
@@ -2271,7 +2281,6 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
     } finally {
       spark.sparkContext.removeSparkListener(listener)
       apiCT.stop()
-      spark.conf.unset(key)
     }
   }
 

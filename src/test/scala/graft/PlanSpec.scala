@@ -197,6 +197,32 @@ class PlanSpec extends SparkSpec {
     assert(out.sparkSession eq caller)
   }
 
+  test("repeated t1 runs reuse their child session: each run adds no " +
+    "streaming-query bus to the context's listener bus beyond the one " +
+    "of Spark's own per-query session clone") {
+    import scala.jdk.CollectionConverters._
+    // a session's first use of its stream manager registers that
+    // manager's query-listener bus on the context's shared bus for good
+    // (counted by reflection: the bus is private to Spark). Every
+    // streaming query runs on its own clone of the session it started
+    // on, which adds one per run; a child cloned per run would add a
+    // second
+    def streamBuses(): Int = {
+      val sc = spark.sparkContext
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("listeners").invoke(bus)
+        .asInstanceOf[java.util.List[AnyRef]].asScala
+        .count(_.getClass.getSimpleName == "StreamingQueryListenerBus")
+    }
+    def t1(): Long = SparkEntry.queries("t1_stream_window")(spark, sfDir).count()
+    val n = t1()
+    val before = streamBuses()
+    val runs = 3
+    (0 until runs).foreach(_ => assert(t1() === n))
+    val added = streamBuses() - before
+    assert(added <= runs, s"$added buses added by $runs runs")
+  }
+
   test("sequence packing never plans a single-partition window") {
     import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
     val df = SparkEntry.queries("x8_sequence_pack")(spark, sfDir)
