@@ -6,7 +6,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.CodegenShim
+import org.apache.spark.sql.graftshim.{CodegenShim, ListenerShim}
 
 import graft.promql.{EvalParams, FuncCall, LabelCall, Parser, PromSource,
   Selector}
@@ -230,6 +230,11 @@ final class HttpApi(spark: SparkSession,
   // declaration order, so a later `= 0` initializer would clobber the
   // generation the bootstrap restored from disk
   @volatile private var aggGen: Int = 0
+  // the agg_5m watermark (`fullyAggregatedAt`): loaded once here, then
+  // kept in step with every write of its file (preAggregateWith), so a
+  // routed read never reads the file
+  @volatile private var aggWatermark: Long =
+    aggPath.fold(0L)(graft.store.Store.readWatermark)
   @volatile private var labelNames: Seq[String] = Nil
   private var writeSeq = 0L
   @volatile private var ttlSeen = false // any write with a non-default TTL?
@@ -1646,11 +1651,16 @@ final class HttpApi(spark: SparkSession,
   /** Day directories listed to size a rewrite, for tests. */
   private[graft] val daysListed = new java.util.concurrent.atomic.AtomicLong
 
-  /** Data-file bytes of one day directory (Spark's hidden `.`/`_`
-    * names skipped, as its reads skip them).
-    */
+  /** [[dirBytes]] of one day directory, listed to size a rewrite. */
   private def dayBytes(dir: java.nio.file.Path): Long = {
     daysListed.incrementAndGet()
+    dirBytes(dir)
+  }
+
+  /** Data-file bytes of one directory (Spark's hidden `.`/`_` names
+    * skipped, as its reads skip them).
+    */
+  private def dirBytes(dir: java.nio.file.Path): Long = {
     val fs = java.nio.file.Files.list(dir)
     try fs.iterator().asScala
       .filter(f => !f.getFileName.toString.startsWith(".") &&
@@ -1781,14 +1791,31 @@ final class HttpApi(spark: SparkSession,
     * set one).
     */
   private def dedupedPoints(fromMs: Long = Long.MinValue,
-      toMs: Long = Long.MaxValue): Option[DataFrame] =
-    mergedDeduped(fromMs, toMs).map(applyTtl(_, batches))
+      toMs: Long = Long.MaxValue): Option[DataFrame] = {
+    val read = rawRead(fromMs, toMs)
+    val single = oneStage(read.bytes)
+    merge(read, single).map(applyTtl(_, batches, single))
+  }
 
   /** The merged hot ∪ cold LWW view WITHOUT the T9 filter (debug dumps
     * need to show expired-but-registered series too).
     */
   private def mergedDeduped(fromMs: Long = Long.MinValue,
       toMs: Long = Long.MaxValue): Option[DataFrame] = {
+    val read = rawRead(fromMs, toMs)
+    merge(read, oneStage(read.bytes))
+  }
+
+  /** One read's raw inputs: the current cold generation and the hot
+    * view, each bounded to [fromMs, toMs], whether the hot view is one
+    * compacted (already deduped) batch, and the bytes the inputs hold
+    * (None when unknown).
+    */
+  private final class RawRead(val cold: Option[DataFrame],
+      val hot: Option[DataFrame], val hotClean: Boolean,
+      val bytes: Option[Long])
+
+  private def rawRead(fromMs: Long, toMs: Long): RawRead = {
     // read-your-writes across the micro-batch buffer (or the cheapest
     // staleness-budgeted view when the request opted in)
     val (bs, hc) = readView()
@@ -1797,25 +1824,112 @@ final class HttpApi(spark: SparkSession,
     def bounded(df: DataFrame): DataFrame =
       if (fromMs == Long.MinValue && toMs == Long.MaxValue) df
       else df.where(col("ts_ms") >= fromMs && col("ts_ms") <= toMs)
+    val cold = coldPoints(fromMs, toMs)
+    val hotBytes = bs.map(indexedBytes(_))
+    new RawRead(cold.map(bounded), unionAll(bs).map(bounded),
+      bs.size == 1 && hc,
+      (cold.fold(Option(0L))(_ => coldBytes(fromMs, toMs)) +: hotBytes)
+        .foldLeft(Option(0L))((a, b) => a.zip(b).map(p => p._1 + p._2)))
+  }
+
+  /** Assemble a [[RawRead]] into the LWW view. `single` coalesces every
+    * input, and the union, to one partition ([[oneStage]]).
+    */
+  private def merge(read: RawRead, single: Boolean): Option[DataFrame] = {
+    def in(df: DataFrame): DataFrame = if (single) df.coalesce(1) else df
     // the dedup SHUFFLE is paid only where duplicate keys can exist: a
     // compacted single hot batch is clean, and the cold tier is clean
     // unless a backfill crossed the spill frontier (coldDirty) — for
     // append-mostly workloads reads are pure scans
     def hotDeduped(h: DataFrame): DataFrame =
-      if (bs.size == 1 && hc) h else lwwDedup(h)
-    val deduped =
-      (coldPoints(fromMs, toMs).map(bounded),
-        unionAll(bs).map(bounded)) match {
-        case (Some(c), Some(h)) =>
-          Some(if (coldDirty) lwwDedup(c.unionByName(h))
-          else c.unionByName(hotDeduped(h)))
-        case (Some(c), None) =>
-          Some(if (coldDirty) lwwDedup(c) else c)
-        case (None, Some(h)) => Some(hotDeduped(h))
-        case (None, None) => None
-      }
-    deduped
+      if (read.hotClean) h else lwwDedup(h)
+    (read.cold.map(in), read.hot.map(in)) match {
+      case (Some(c), Some(h)) =>
+        Some(if (coldDirty) lwwDedup(in(c.unionByName(h)))
+        else in(c.unionByName(hotDeduped(h))))
+      case (Some(c), None) =>
+        Some(if (coldDirty) lwwDedup(c) else c)
+      case (None, Some(h)) => Some(hotDeduped(h))
+      case (None, None) => None
+    }
   }
+
+  // read plans the one-stage gate sent to one partition, and in parallel
+  private val singlePlans = new java.util.concurrent.atomic.AtomicLong
+  private val parallelPlans = new java.util.concurrent.atomic.AtomicLong
+
+  /** The one-stage gate. A read whose inputs hold at most
+    * `spark.sql.adaptive.coalescePartitions.minPartitionSize` bytes (1 MB
+    * by default) is one AQE would coalesce to a single partition after
+    * every shuffle anyway, so it gets that partition up front: its
+    * inputs coalesce to one, every required distribution downstream is
+    * met by SinglePartition, and the read runs as one job with no
+    * exchange — a dashboard read's 3-5 stage boundaries cost more than
+    * its compute. Unknown bytes plan in parallel.
+    */
+  private def oneStage(bytes: Option[Long]): Boolean = {
+    val single = bytes.exists(_ <= spark.sessionState.conf.getConf(
+      org.apache.spark.sql.internal.SQLConf
+        .COALESCE_PARTITIONS_MIN_PARTITION_SIZE))
+    (if (single) singlePlans else parallelPlans).incrementAndGet()
+    single
+  }
+
+  /** Bytes of the files under `df`'s file scans whose directory name
+    * passes `keep`, read off the file index each scan built when its
+    * DataFrame was made (a hot pin's at pin time): no listing, no job.
+    * None when a leaf is not an indexed file scan.
+    */
+  private def indexedBytes(df: DataFrame,
+      keep: String => Boolean = _ => true): Option[Long] = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+      LogicalRelation, PartitioningAwareFileIndex}
+    df.queryExecution.analyzed.collectLeaves().map {
+      case l: LogicalRelation => l.relation match {
+        case r: HadoopFsRelation => r.location match {
+          case i: PartitioningAwareFileIndex => Some(i.allFiles().iterator
+            .filter(f => keep(f.getPath.getParent.getName))
+            .map(_.getLen).sum)
+          case _ => None
+        }
+        case _ => None
+      }
+      case _ => None
+    }.foldLeft(Option(0L))((a, b) => a.zip(b).map(p => p._1 + p._2))
+  }
+
+  /** Bytes of the current cold generation's day partitions that a read
+    * of [fromMs, toMs] scans (every day when either bound is open, as
+    * [[coldPoints]] prunes). A day the generation's `_daybytes` sidecar
+    * recorded, and no spill has appended into since, is taken from the
+    * sidecar; any other day is listed. None when the generation went
+    * away under the listing.
+    */
+  private def coldBytes(fromMs: Long, toMs: Long): Option[Long] =
+    coldPath.map(java.nio.file.Paths.get(_))
+      .filter(java.nio.file.Files.isDirectory(_)).fold(Option(0L)) { gen =>
+        def day(ms: Long) = java.time.Instant.ofEpochMilli(ms)
+          .atZone(java.time.ZoneOffset.UTC).toLocalDate
+        val open = fromMs == Long.MinValue || toMs == Long.MaxValue
+        val (lo, hi) = (day(fromMs), day(toMs))
+        val recorded = readDayBytes(gen)
+        val dirty = synchronized(dirtyColdDays)
+        scala.util.Try {
+          val ls = java.nio.file.Files.list(gen)
+          try ls.iterator().asScala.map(_.getFileName.toString)
+            .filter(_.startsWith("day=")).toSeq
+          finally ls.close()
+        }.toOption.flatMap { days =>
+          scala.util.Try(days.iterator.flatMap { n =>
+            val d = scala.util.Try(
+              java.time.LocalDate.parse(n.stripPrefix("day="))).toOption
+            if (!open && d.exists(x => x.isBefore(lo) || x.isAfter(hi))) None
+            else Some(recorded.get(n)
+              .filter(_ => d.exists(x => dirty.exists(!_.contains(x))))
+              .getOrElse(dirBytes(gen.resolve(n))))
+          }.sum).toOption
+        }
+      }
 
   /** T9 read filter: the per-series TTL is max-merged over the WHOLE
     * history (a bounded read must not shrink a series' TTL).
@@ -1837,7 +1951,8 @@ final class HttpApi(spark: SparkSession,
     * a shuffle join instead of a driver OOM). Absent row = default TTL =
     * survives.
     */
-  private def applyTtl(d: DataFrame, bs: Vector[DataFrame]): DataFrame =
+  private def applyTtl(d: DataFrame, bs: Vector[DataFrame],
+      single: Boolean): DataFrame =
     if (!ttlSeen) d
     else {
       val hotTtls = unionAll(bs)
@@ -1849,7 +1964,7 @@ final class HttpApi(spark: SparkSession,
         case (None, None) => None
       }
       dims.fold(d) { all =>
-        val ttls = all.groupBy("metric_id")
+        val ttls = (if (single) all.coalesce(1) else all).groupBy("metric_id")
           .agg(max(col("__ttl_sec")).as("__series_ttl"))
           .where(col("__series_ttl") =!= DefaultTtlSec)
         d.join(ttls, Seq("metric_id"), "left")
@@ -1956,8 +2071,7 @@ final class HttpApi(spark: SparkSession,
   /** `fullyAggregatedAt` — buckets ending at or before this are served
     * from the agg table; later data re-aggregates from raw at query time.
     */
-  def preAggWatermark: Long =
-    aggPath.fold(0L)(graft.store.Store.readWatermark)
+  def preAggWatermark: Long = aggWatermark
 
   /** Downsample a deduped point slice into the agg-table row shape:
     * (metric_id, labels, bucket_ms, min, max, avg, count, __ttl_sec),
@@ -1966,13 +2080,17 @@ final class HttpApi(spark: SparkSession,
     * co-partitioned per-series dim join. The output is exactly
     * [[HttpApi.AggSchema]], the layout reads declare.
     */
-  private def aggSlice(slice: DataFrame): DataFrame = {
+  private def aggSlice(slice: DataFrame,
+      single: Boolean = false): DataFrame = {
     val stats = graft.tsdb.Downsample(slice, Seq(col("metric_id")),
       col("ts_ms"), col("value"), PreAggResolutionMs)
     val dim = slice.groupBy("metric_id")
       .agg(max_by(col("labels"), col("__seq")).as("labels"),
         max(col("__ttl_sec")).as("__ttl_sec"))
-    stats.join(dim, Seq("metric_id"))
+    // a one-partition slice joins in place: a broadcast would cost its
+    // own job
+    stats.join(if (single) dim.hint("shuffle_hash") else dim,
+      Seq("metric_id"))
       .withColumn("month", date_format(
         timestamp_millis(col("bucket_ms")), "yyyy-MM"))
       .select(HttpApi.AggSchema.fields.toSeq.map(f =>
@@ -2001,7 +2119,7 @@ final class HttpApi(spark: SparkSession,
     spark.sparkContext.setLocalProperty("spark.scheduler.pool",
       "graft-upkeep")
     aggPath.fold(0L) { ap =>
-    val wm = graft.store.Store.readWatermark(ap)
+    val wm = aggWatermark
     val endAt = math.min(endMs, spillTimeFrontier)
     val end = endAt - math.floorMod(endAt, PreAggResolutionMs)
     if (end <= wm || coldWritesBlocked) wm
@@ -2017,6 +2135,7 @@ final class HttpApi(spark: SparkSession,
             .mode(org.apache.spark.sql.SaveMode.Append)
             .parquet(aggDataPath.get)
         graft.store.Store.writeWatermark(ap, end)
+        aggWatermark = end
         end
     }
   } }
@@ -2035,7 +2154,7 @@ final class HttpApi(spark: SparkSession,
       spark.sparkContext.setLocalProperty("spark.scheduler.pool",
         "graft-upkeep")
       aggPath.toSeq.flatMap { ap =>
-      val wm = graft.store.Store.readWatermark(ap)
+      val wm = aggWatermark
       val hi = math.min(toMs, wm) // beyond wm the raw tail serves anyway
       if (hi <= fromMs || coldWritesBlocked) Seq.empty
       else rebuildAggWindow(ap, fromMs, hi, wm)
@@ -2167,20 +2286,21 @@ final class HttpApi(spark: SparkSession,
     * no agg table exists yet (callers fall back to raw).
     */
   private def routedPoints(fromMs: Long, toMs: Long,
-      column: String): Option[DataFrame] = aggPath.flatMap { ap =>
-    val wm = graft.store.Store.readWatermark(ap)
+      column: String): Option[DataFrame] = aggPath.flatMap { _ =>
+    val wm = aggWatermark
     if (wm <= 0L || !aggDataPath.exists(isDir)) None
     else {
       val fmt = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM")
         .withZone(java.time.ZoneOffset.UTC)
+      val open = fromMs == Long.MinValue || toMs == Long.MaxValue
+      val (mLo, mHi) = (fmt.format(java.time.Instant.ofEpochMilli(fromMs)),
+        fmt.format(java.time.Instant.ofEpochMilli(toMs)))
       // the declared layout spares the per-call inference job
       val agg0 = spark.read.schema(HttpApi.AggSchema)
         .parquet(aggDataPath.get)
       val monthPruned =
-        if (fromMs == Long.MinValue || toMs == Long.MaxValue) agg0
-        else agg0.where(col("month").between(
-          fmt.format(java.time.Instant.ofEpochMilli(fromMs)),
-          fmt.format(java.time.Instant.ofEpochMilli(toMs))))
+        if (open) agg0
+        else agg0.where(col("month").between(mLo, mHi))
       // a bucket at b covers [b, b+res): keep overlaps with [from, to]
       val old = monthPruned
         .where(col("bucket_ms") + PreAggResolutionMs <= wm)
@@ -2189,17 +2309,26 @@ final class HttpApi(spark: SparkSession,
       // the raw tail only exists when the window reaches past the
       // watermark — a historical dashboard query (the common routed
       // shape) is a pure agg scan with no tail subplan at all
-      val tail =
+      val tailRead =
         if (math.max(fromMs, wm) > toMs) None
-        else dedupedPoints(math.max(fromMs, wm), toMs)
-          .map(d => aggSlice(d.where(col("ts_ms") >= wm)).drop("month"))
-      val routed = tail.fold(old.drop("month"))(t =>
-        old.drop("month").unionByName(t))
+        else Some(rawRead(math.max(fromMs, wm), toMs))
+      // one gate for the whole routed read: the agg months it scans
+      // plus the raw tail
+      val aggBytes = indexedBytes(agg0, d => open ||
+        !d.startsWith("month=") || (d.drop(6) >= mLo && d.drop(6) <= mHi))
+      val single = oneStage(tailRead.fold(aggBytes)(r =>
+        aggBytes.zip(r.bytes).map(p => p._1 + p._2)))
+      def in(df: DataFrame): DataFrame = if (single) df.coalesce(1) else df
       val bs = batches
+      val tail = tailRead.flatMap(merge(_, single))
+        .map(d => aggSlice(applyTtl(d, bs, single)
+          .where(col("ts_ms") >= wm), single).drop("month"))
+      val routed = tail.fold(in(old.drop("month")))(t =>
+        in(in(old.drop("month")).unionByName(t)))
       Some(applyTtl(
         routed.select(col("labels"), col("metric_id"),
           col("bucket_ms").as("ts_ms"), col(column).as("value"),
-          lit(0L).as("__seq"), col("__ttl_sec")), bs))
+          lit(0L).as("__seq"), col("__ttl_sec")), bs, single))
     }
   }
 
@@ -2734,34 +2863,57 @@ final class HttpApi(spark: SparkSession,
     // + analysis; exec = optimize + jobs + JSON serialization) — the
     // saturation diagnostics this was built on live in SCALE.md
     val tA = System.nanoTime()
-    pickSource(h, ast, step, mint, maxt) match {
+    val group = debugJobGroup(verbose)
+    try pickSource(h, ast, step, mint, maxt) match {
       case None => respond(h, 200,
         PromJson.success("""{"resultType":"matrix","result":[]}"""))
       case Some(src) =>
         val tB = System.nanoTime()
         val df = unalias(QueryService.queryRange(q, src, p,
           requestOptions(h)))
-        if (verbose) println(df.queryExecution.optimizedPlan.toString)
         val labels = df.columns.filterNot(Set("eval_ms", "value")).toSeq
         val tC = System.nanoTime()
         respond(h, 200, PromJson.matrix(df, labels))
         val tD = System.nanoTime()
+        group.foreach(printDebugPlan(_, df))
         if (tD - tA > 3e9) println(
           f"[graft slow-read] total=${(tD - tA) / 1e9}%.2fs " +
             f"source=${(tB - tA) / 1e9}%.2fs plan=${(tC - tB) / 1e9}%.2fs " +
             f"exec=${(tD - tC) / 1e9}%.2fs query=$q")
-    }
+    } finally group.foreach(_ => spark.sparkContext.clearJobGroup())
   }
 
   /** Per-request debug (reference `types/types.go:192-194`
     * `X-SquirrelDB-Query-Debug` / `-Query-Verbose-Debug`); the global
-    * toggle is the reference's `defaultDebugRequest`. Verbose also logs
-    * the compiled optimized plan.
+    * toggle is the reference's `defaultDebugRequest`. Verbose also logs,
+    * after the response, the final physical plan and the request's job
+    * count ([[printDebugPlan]]).
     */
   private def debugFlags(h: HttpExchange): (Boolean, Boolean) = {
     val verbose = headerFlag(h, "X-SquirrelDB-Query-Verbose-Debug")
     (debugQueries || verbose || headerFlag(h, "X-SquirrelDB-Query-Debug"),
       verbose)
+  }
+
+  /** A verbose request's job group: every job the request runs on this
+    * handler thread carries it until the caller clears it.
+    */
+  private def debugJobGroup(verbose: Boolean): Option[String] =
+    Option.when(verbose) {
+      val g = s"graft-debug-${java.util.UUID.randomUUID()}"
+      spark.sparkContext.setJobGroup(g, "verbose debug query")
+      g
+    }
+
+  /** Log the plan `df` ran — the final adaptive plan, which exists only
+    * once it has run — and the jobs its request's group started: one
+    * job and no exchange is the one-stage shape ([[oneStage]]).
+    */
+  private def printDebugPlan(group: String, df: DataFrame): Unit = {
+    scala.util.Try(ListenerShim.drain(spark.sparkContext))
+    val jobs = spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
+    println(s"[graft debug-query] jobs=$jobs final plan:\n" +
+      df.queryExecution.executedPlan)
   }
 
   private def handleQuery(h: HttpExchange): Unit = {
@@ -2773,13 +2925,14 @@ final class HttpApi(spark: SparkSession,
     val p = EvalParams(t, t, 1000L, lookbackMs)
     val ast = Parser.parse(q)
     val (mint, maxt) = QueryService.timeBounds(ast, p)
-    val (dbg, _) = debugFlags(h)
+    val (dbg, verbose) = debugFlags(h)
     if (dbg) {
       h.getResponseHeaders.set("X-SquirrelDB-Debug", "true")
       println(s"[graft debug-query] query query=$q time=$t " +
         s"bounds=[$mint,$maxt]")
     }
-    pickSource(h, ast, p.stepMs, mint, maxt) match {
+    val group = debugJobGroup(verbose)
+    try pickSource(h, ast, p.stepMs, mint, maxt) match {
       case None => respond(h, 200,
         PromJson.success("""{"resultType":"vector","result":[]}"""))
       case Some(src) =>
@@ -2798,7 +2951,8 @@ final class HttpApi(spark: SparkSession,
           case _ => None
         }
         respond(h, 200, PromJson.vector(df, labels, order))
-    }
+        group.foreach(printDebugPlan(_, df))
+    } finally group.foreach(_ => spark.sparkContext.clearJobGroup())
   }
 
   /** match[] selectors → matcher predicates over the label map. */
@@ -3048,7 +3202,12 @@ final class HttpApi(spark: SparkSession,
           staleHeadReadsTotal.get) +
         c("graft_codegen_compilations_total",
           "Generated-code compilations in this JVM (codegen cache misses)",
-          CodegenShim.compilations)
+          CodegenShim.compilations) +
+        "# HELP graft_read_plans_total Read plans by shape: single = " +
+        "inputs coalesced to one partition, parallel = not\n" +
+        "# TYPE graft_read_plans_total counter\n" +
+        s"""graft_read_plans_total{shape="single"} ${singlePlans.get}\n""" +
+        s"""graft_read_plans_total{shape="parallel"} ${parallelPlans.get}\n"""
     respondBytes(h, 200, body.getBytes(UTF_8),
       "text/plain; version=0.0.4")
   }

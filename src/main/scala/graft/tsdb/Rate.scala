@@ -35,17 +35,9 @@ object Rate {
       tsMs: String = "ts_ms",
       value: String = "value"): DataFrame = {
     val sCols = series.map(col)
-    val wSeries = Window.partitionBy(sCols: _*).orderBy(col(tsMs))
-    val withPrev = points
-      .withColumn("prev_val", lag(col(value), 1).over(wSeries))
-      .withColumn("prev_ts", lag(col(tsMs), 1).over(wSeries))
-      .withColumn("reset_corr",
-        if (counter)
-          when(col("prev_val").isNotNull && col(value) < col("prev_val"),
-            col("prev_val")).otherwise(lit(0.0))
-        else lit(0.0))
-    val inWindow =
-      RangeWindows.withEvalSteps(withPrev, startMs, endMs, stepMs, rangeMs, tsMs)
+    val inWindow = RangeWindows.withEvalSteps(
+      withPrev(points, sCols, counter, tsMs, value),
+      startMs, endMs, stepMs, rangeMs, tsMs)
     finishRate(inWindow, sCols, rangeMs, counter, tsMs, value)
   }
 
@@ -112,28 +104,42 @@ object Rate {
       tsMs: String = "ts_ms",
       value: String = "value"): DataFrame = {
     val sCols = series.map(col)
-    val wSeries = Window.partitionBy(sCols: _*).orderBy(col(tsMs))
-
-    // Per-sample reset correction: when a counter drops below its
-    // predecessor, the predecessor's value is the amount lost.
-    val withPrev = points
-      .withColumn("prev_val", lag(col(value), 1).over(wSeries))
-      .withColumn("prev_ts", lag(col(tsMs), 1).over(wSeries))
-      .withColumn("reset_corr",
-        if (counter)
-          when(col("prev_val").isNotNull && col(value) < col("prev_val"),
-            col("prev_val")).otherwise(lit(0.0))
-        else lit(0.0))
-
-    val inWindow = withPrev.join(
+    val inWindow = withPrev(points, sCols, counter, tsMs, value).join(
       broadcast(grid),
       col(tsMs) <= col("eval_ms") && col(tsMs) > col("eval_ms") - rangeMs)
     finishRate(inWindow, sCols, rangeMs, counter, tsMs, value)
   }
 
+  /** The per-series predecessor pass shared by [[overSteps]] and
+    * [[overGrid]]: `prev_val`/`prev_ts` (lag), `reset_corr` (when a
+    * counter drops below its predecessor, the predecessor's value is the
+    * amount lost) and `__rn`, the sample's rank within its series. All
+    * ride ONE window ordered on (ts, value): a tied timestamp then has a
+    * fixed predecessor, and `__rn` orders samples exactly as the
+    * struct(ts, value) comparison does, so [[finishRate]] can take the
+    * first and last values by `__rn` with no struct aggregate.
+    */
+  private def withPrev(
+      points: DataFrame,
+      sCols: Seq[Column],
+      counter: Boolean,
+      tsMs: String,
+      value: String): DataFrame = {
+    val w = Window.partitionBy(sCols: _*).orderBy(col(tsMs), col(value))
+    points
+      .withColumn("prev_val", lag(col(value), 1).over(w))
+      .withColumn("prev_ts", lag(col(tsMs), 1).over(w))
+      .withColumn("__rn", row_number().over(w))
+      .withColumn("reset_corr",
+        if (counter)
+          when(col("prev_val").isNotNull && col(value) < col("prev_val"),
+            col("prev_val")).otherwise(lit(0.0))
+        else lit(0.0))
+  }
+
   /** Shared tail: aggregate samples per (series, step) and apply the
-    * Prometheus extrapolation algorithm. `inWindow` must carry eval_ms,
-    * prev_ts and reset_corr columns.
+    * Prometheus extrapolation algorithm. `inWindow` must carry eval_ms
+    * and the [[withPrev]] columns.
     */
   private def finishRate(
       inWindow: DataFrame,
@@ -153,9 +159,11 @@ object Rate {
         count(col(value)).as("n_samples"),
         min(col(tsMs)).as("first_ts"),
         max(col(tsMs)).as("last_ts"),
-        // struct min/max: deterministic even under ts ties
-        min(struct(col(tsMs), col(value))).getField(value).as("first_val"),
-        max(struct(col(tsMs), col(value))).getField(value).as("last_val"),
+        // first/last in (ts, value) order, deterministic under ts ties:
+        // by rank rather than min/max of struct(ts, value), whose struct
+        // buffer forced a sort aggregate over the step-exploded rows
+        min_by(col(value), col("__rn")).as("first_val"),
+        max_by(col(value), col("__rn")).as("last_val"),
         // DECIMAL accumulation (the a6/w2 `sumV` discipline): a window
         // can hold many resets, and a plain double sum of their
         // prev_vals is partition-order dependent — at sf0.1 a 14-reset

@@ -2562,9 +2562,12 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
     object Plans extends AdaptiveSparkPlanHelper
     val days = 4
     val key = "spark.sql.files.maxPartitionBytes"
+    val minKey = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
     /** (bucketed?, tasks) of the cold scans of a range query and of a
       * remote read, both over all `days` days of a fresh tier laid out
       * under scan-task target `target` (the reads run at the default).
+      * The four days are far under the one-stage gate, so the reads run
+      * with a 1-byte minimum partition size: they plan in parallel.
       */
     def coldScans(target: Option[Long]): Seq[Seq[(Boolean, Int)]] = {
       val root = java.nio.file.Files.createTempDirectory("graft_bspan")
@@ -2588,6 +2591,7 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
         apiM.drainFlushes()
         apiM.compactCold()
         spark.conf.unset(key)
+        spark.conf.set(minKey, "1")
         val end = T0 + days * 86400000L
         val p = EvalParams(T0, end, 60000L)
         val range = QueryService.queryRange("rate(md[5m])",
@@ -2599,6 +2603,7 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
         Seq(scans(range), scans(read))
       } finally {
         spark.conf.unset(key)
+        spark.conf.unset(minKey)
         apiM.stop()
       }
     }
@@ -2696,6 +2701,164 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
       spark.sparkContext.removeSparkListener(listener)
       apiRJ.stop()
     }
+  }
+
+  /** A read-plan counter of `/metrics` on `p` (shape single|parallel). */
+  private def readPlans(p: Int, shape: String): Long = {
+    val key = s"""graft_read_plans_total{shape="$shape"} """
+    getOn(p, "/metrics").body().linesIterator.collectFirst {
+      case l if l.startsWith(key) => l.stripPrefix(key).toLong
+    }.getOrElse(fail(s"no $key line"))
+  }
+
+  test("dashboard-sized reads run as one stage: rate, series, label " +
+    "values, remote read and a routed read each run one job with no " +
+    "exchange, until minPartitionSize drops under the read's bytes") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.graftshim.{CodegenShim, ListenerShim}
+    object Plans extends AdaptiveSparkPlanHelper
+    val dir = java.nio.file.Files.createTempDirectory("graft_onestage")
+      .resolve("cold").toString
+    // four hours of history: the last stays hot, the three before spill
+    // into one cold day and pre-aggregate into agg_5m
+    val histEnd = T0 + 4 * 3600000L
+    val apiD = new HttpApi(spark, compactEvery = 1000000,
+      durablePath = Some(dir),
+      hotRetainMs = System.currentTimeMillis() - histEnd + 3600000L)
+    def counters(from: Long, until: Long) = (1 to 4).map(i => PromSeries(
+      Map("__name__" -> "dash_total", "instance" -> s"i$i", "job" -> "node"),
+      (from until until by 15000L).map(t => (t, (t - T0) / 1000.0 * i))))
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(p =>
+          p.getProperty("spark.scheduler.pool") == "graft-reads"))
+          jobs.incrementAndGet()
+    }
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.execution.SparkPlan]()
+    val qeListener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          d: Long): Unit = plans.add(qe.executedPlan)
+      def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    val key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    try {
+      apiD.write(counters(T0, histEnd - 600000L), "default")
+      apiD.drainFlushes()
+      apiD.compact() // spills the cold day and extends agg_5m
+      assert(apiD.preAggWatermark >= T0 + 3 * 3600000L - 300000L)
+      // a second batch makes the hot view two pins, so reads dedup it
+      apiD.write(counters(histEnd - 600000L, histEnd), "default")
+      apiD.drainFlushes()
+      assert(apiD.hotDepth === 2)
+      val portD = apiD.start(0)
+      spark.sparkContext.addSparkListener(listener)
+      spark.listenerManager.register(qeListener)
+      /** (jobs, shuffle exchanges in the final plans) of one request. */
+      def shape(req: => Int): (Int, Int) = {
+        ListenerShim.drain(spark.sparkContext)
+        jobs.set(0); plans.clear()
+        assert(req === 200)
+        ListenerShim.drain(spark.sparkContext)
+        (jobs.get, plans.asScala.toSeq.map(p =>
+          Plans.collect(p) { case x: ShuffleExchangeExec => x }.size).sum)
+      }
+      val (lo, hi) = ((histEnd - 7200000L) / 1000, histEnd / 1000)
+      def rate(shift: Int) = getOn(portD, s"/api/v1/query_range?query=${
+        enc("rate(dash_total[5m])")}&start=${lo + shift}&end=${
+        hi + shift}&step=60")
+      val remote = org.xerial.snappy.Snappy.compress(
+        Prompb.encodeReadRequest(Seq(Prompb.ReadQuery(lo * 1000, hi * 1000,
+          Seq(MatchEq("__name__", "dash_total")))),
+          Seq(Prompb.ResponseTypeStreamedXorChunks)))
+      val s0 = readPlans(portD, "single")
+      val p0 = readPlans(portD, "parallel")
+      val oneStage = Seq(
+        "rate" -> (() => {
+          val r = rate(0)
+          assert(matrixValues(r.body()).size === 4, r.body().take(300))
+          r.statusCode()
+        }),
+        "series" -> (() => getOn(portD, s"/api/v1/series?match[]=${
+          enc("dash_total")}&start=$lo&end=$hi").statusCode()),
+        "label values" -> (() => getOn(portD,
+          s"/api/v1/label/instance/values?start=$lo&end=$hi").statusCode()),
+        "remote read" -> (() => {
+          val r = client.send(HttpRequest.newBuilder(URI.create(
+            s"http://127.0.0.1:$portD/api/v1/read"))
+            .header("Content-Type", "application/x-protobuf")
+            .POST(HttpRequest.BodyPublishers.ofByteArray(remote)).build(),
+            HttpResponse.BodyHandlers.ofByteArray())
+          assert(Prompb.readChunkedFrames(r.body())
+            .flatMap(f => Prompb.decodeChunkedReadResponse(f)._2).size === 4)
+          r.statusCode()
+        }),
+        "routed avg" -> (() => getOn(portD, s"/api/v1/query_range?query=${
+          enc("avg_over_time(dash_total[10m])")}&start=$lo&end=$hi" +
+          "&step=300").statusCode()))
+      oneStage.foreach { case (kind, req) =>
+        val got = shape(req())
+        assert(got === ((1, 0)), s"$kind: (jobs, exchanges) in\n${
+          plans.asScala.mkString("\n")}")
+      }
+      assert(readPlans(portD, "single") >= s0 + oneStage.size)
+      assert(readPlans(portD, "parallel") === p0)
+      // the single-stage plan still binds its constants: a refresh moved
+      // one step compiles nothing new
+      rate(60)
+      val c0 = CodegenShim.compilations
+      assert(rate(120).statusCode() === 200)
+      assert(CodegenShim.compilations === c0)
+      // a minimum partition size under the read's bytes plans it parallel
+      spark.conf.set(key, "1")
+      val (pj, px) = shape(rate(0).statusCode())
+      assert(pj > 1 && px > 0, s"parallel rate: $pj jobs, $px exchanges")
+      assert(readPlans(portD, "parallel") > p0)
+    } finally {
+      spark.conf.unset(key)
+      spark.listenerManager.unregister(qeListener)
+      spark.sparkContext.removeSparkListener(listener)
+      apiD.stop()
+    }
+  }
+
+  test("a restarted facade routes from the persisted agg_5m watermark") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_wm_restart")
+      .resolve("cold").toString
+    val apiW = new HttpApi(spark, compactEvery = 1000000,
+      durablePath = Some(dir))
+    apiW.write(Seq(PromSeries(Map("__name__" -> "wm_metric", "job" -> "node"),
+      (0 until 24).map(i => (T0 + i * 300000L, 10.0 + i)))), "default")
+    apiW.drainFlushes()
+    apiW.compact() // past the hot horizon: spills and pre-aggregates
+    val wm = apiW.preAggWatermark
+    assert(wm > T0 + 24 * 300000L)
+    apiW.stop()
+    val apiR = new HttpApi(spark, compactEvery = 1000000,
+      durablePath = Some(dir))
+    val portR = apiR.start(0)
+    try {
+      assert(apiR.preAggWatermark === wm)
+      def routedTotal(): Long = getOn(portR, "/metrics").body()
+        .linesIterator.find(_.startsWith("graft_preagg_routed_total"))
+        .get.split(" ").last.toLong
+      def q(hdrs: Seq[(String, String)]) = getOn(portR,
+        s"/api/v1/query_range?query=${enc("wm_metric")}&start=${T0 / 1000}" +
+          s"&end=${(T0 + 23 * 300000L) / 1000}&step=600", hdrs)
+      val c0 = routedTotal()
+      val viaAgg = q(Nil)
+      assert(routedTotal() === c0 + 1, "the restored watermark must route")
+      val viaRaw = q(Seq("X-SquirrelDB-ForceRaw" -> "true"))
+      assert(viaAgg.statusCode() === 200 && viaRaw.statusCode() === 200)
+      assert(viaAgg.body() === viaRaw.body())
+      assert(matrixValues(viaAgg.body()).map(_.size) === Seq(12))
+    } finally apiR.stop()
   }
 
   private def deleteTree(p: java.nio.file.Path): Unit = {
