@@ -49,6 +49,16 @@ import graft.tsdb.{MatchEq, Matcher, Matchers, MutableMapping}
   * a minShare is what actually bounds read latency (measured: 0.44 s
   * quiesced, 13-15 s under 43k pts/s with 1:1 FAIR, see SCALE.md).
   *
+  * One-stage small reads: a read whose inputs hold at most Spark's
+  * minimum partition size (`spark.sql.adaptive.coalescePartitions.
+  * minPartitionSize`, 1 MB) coalesces them to one partition
+  * ([[oneStage]]), so a dashboard refresh runs as one job with no
+  * exchange. Its cost was stage latency, not compute: 3-5 jobs per
+  * request at 25-65 ms of replanning and codegen per stage boundary.
+  * Larger reads keep the parallel plan, and under ingest the read
+  * pool's minShare above is still what bounds them. `/metrics` counts
+  * both shapes (`graft_read_plans_total`).
+  *
   * Threads and the session: every thread the facade owns — the HTTP
   * handler pool, `facade-flusher` and `graft-hot-compact` (the folds and
   * the upkeep they run) — runs its whole life with `spark` as the active
@@ -1825,12 +1835,14 @@ final class HttpApi(spark: SparkSession,
       if (fromMs == Long.MinValue && toMs == Long.MaxValue) df
       else df.where(col("ts_ms") >= fromMs && col("ts_ms") <= toMs)
     val cold = coldPoints(fromMs, toMs)
-    val hotBytes = bs.map(indexedBytes(_))
     new RawRead(cold.map(bounded), unionAll(bs).map(bounded),
-      bs.size == 1 && hc,
-      (cold.fold(Option(0L))(_ => coldBytes(fromMs, toMs)) +: hotBytes)
-        .foldLeft(Option(0L))((a, b) => a.zip(b).map(p => p._1 + p._2)))
+      bs.size == 1 && hc, knownSum(
+        cold.map(_ => coldBytes(fromMs, toMs)) ++: bs.map(indexedBytes(_))))
   }
+
+  /** The sum of `parts`, None when any part is unknown. */
+  private def knownSum(parts: Seq[Option[Long]]): Option[Long] =
+    if (parts.forall(_.isDefined)) Some(parts.flatten.sum) else None
 
   /** Assemble a [[RawRead]] into the LWW view. `single` coalesces every
     * input, and the union, to one partition ([[oneStage]]).
@@ -1884,7 +1896,7 @@ final class HttpApi(spark: SparkSession,
       keep: String => Boolean = _ => true): Option[Long] = {
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
       LogicalRelation, PartitioningAwareFileIndex}
-    df.queryExecution.analyzed.collectLeaves().map {
+    knownSum(df.queryExecution.analyzed.collectLeaves().map {
       case l: LogicalRelation => l.relation match {
         case r: HadoopFsRelation => r.location match {
           case i: PartitioningAwareFileIndex => Some(i.allFiles().iterator
@@ -1895,7 +1907,7 @@ final class HttpApi(spark: SparkSession,
         case _ => None
       }
       case _ => None
-    }.foldLeft(Option(0L))((a, b) => a.zip(b).map(p => p._1 + p._2))
+    })
   }
 
   /** Bytes of the current cold generation's day partitions that a read
@@ -1912,23 +1924,22 @@ final class HttpApi(spark: SparkSession,
           .atZone(java.time.ZoneOffset.UTC).toLocalDate
         val open = fromMs == Long.MinValue || toMs == Long.MaxValue
         val (lo, hi) = (day(fromMs), day(toMs))
-        val recorded = readDayBytes(gen)
         val dirty = synchronized(dirtyColdDays)
         scala.util.Try {
+          val recorded = readDayBytes(gen)
           val ls = java.nio.file.Files.list(gen)
-          try ls.iterator().asScala.map(_.getFileName.toString)
-            .filter(_.startsWith("day=")).toSeq
+          val days = try ls.iterator().asScala.map(_.getFileName.toString)
+            .filter(_.startsWith("day=")).toList
           finally ls.close()
-        }.toOption.flatMap { days =>
-          scala.util.Try(days.iterator.flatMap { n =>
+          days.iterator.flatMap { n =>
             val d = scala.util.Try(
               java.time.LocalDate.parse(n.stripPrefix("day="))).toOption
             if (!open && d.exists(x => x.isBefore(lo) || x.isAfter(hi))) None
             else Some(recorded.get(n)
               .filter(_ => d.exists(x => dirty.exists(!_.contains(x))))
               .getOrElse(dirBytes(gen.resolve(n))))
-          }.sum).toOption
-        }
+          }.sum
+        }.toOption
       }
 
   /** T9 read filter: the per-series TTL is max-merged over the WHOLE
@@ -2316,8 +2327,7 @@ final class HttpApi(spark: SparkSession,
       // plus the raw tail
       val aggBytes = indexedBytes(agg0, d => open ||
         !d.startsWith("month=") || (d.drop(6) >= mLo && d.drop(6) <= mHi))
-      val single = oneStage(tailRead.fold(aggBytes)(r =>
-        aggBytes.zip(r.bytes).map(p => p._1 + p._2)))
+      val single = oneStage(knownSum(aggBytes +: tailRead.map(_.bytes).toSeq))
       def in(df: DataFrame): DataFrame = if (single) df.coalesce(1) else df
       val bs = batches
       val tail = tailRead.flatMap(merge(_, single))
@@ -2861,7 +2871,9 @@ final class HttpApi(spark: SparkSession,
     // slow-read phase log: a read that crosses 3 s prints where it went
     // (source = readView/drain + hot-union build; plan = eval plan build
     // + analysis; exec = optimize + jobs + JSON serialization) — the
-    // saturation diagnostics this was built on live in SCALE.md
+    // saturation diagnostics this was built on live in SCALE.md. A
+    // one-stage read spends exec in one job; the verbose debug header
+    // prints the plan and job count that ran
     val tA = System.nanoTime()
     val group = debugJobGroup(verbose)
     try pickSource(h, ast, step, mint, maxt) match {
