@@ -53,8 +53,8 @@ import graft.tsdb.{MatchEq, Matcher, Matchers, MutableMapping}
   * minimum partition size (`spark.sql.adaptive.coalescePartitions.
   * minPartitionSize`, 1 MB) coalesces them to one partition
   * ([[oneStage]]), so a dashboard refresh runs as one job with no
-  * exchange. Its cost was stage latency, not compute: 3-5 jobs per
-  * request at 25-65 ms of replanning and codegen per stage boundary.
+  * exchange: such a read costs stage latency, not compute, and each
+  * stage boundary of a parallel plan adds replanning and codegen.
   * Larger reads keep the parallel plan, and under ingest the read
   * pool's minShare above is still what bounds them. `/metrics` counts
   * both shapes (`graft_read_plans_total`).

@@ -159,9 +159,9 @@ object Rate {
         count(col(value)).as("n_samples"),
         min(col(tsMs)).as("first_ts"),
         max(col(tsMs)).as("last_ts"),
-        // first/last in (ts, value) order, deterministic under ts ties:
-        // by rank rather than min/max of struct(ts, value), whose struct
-        // buffer forced a sort aggregate over the step-exploded rows
+        // first/last in (ts, value) order, deterministic under ts ties,
+        // taken by rank: a min/max of struct(ts, value) buffers a struct,
+        // which only a sort aggregate over the step-exploded rows can
         min_by(col(value), col("__rn")).as("first_val"),
         max_by(col(value), col("__rn")).as("last_val"),
         // DECIMAL accumulation (the a6/w2 `sumV` discipline): a window
