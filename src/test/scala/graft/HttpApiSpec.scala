@@ -2809,6 +2809,12 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
       }
       assert(readPlans(portD, "single") >= s0 + oneStage.size)
       assert(readPlans(portD, "parallel") === p0)
+      // the verbose debug header (it prints the plan and job count that
+      // ran) leaves the answer as it is
+      assert(getOn(portD, s"/api/v1/query_range?query=${
+        enc("rate(dash_total[5m])")}&start=$lo&end=$hi&step=60",
+        Seq("X-SquirrelDB-Query-Verbose-Debug" -> "1")).body() ===
+        rate(0).body())
       // the single-stage plan still binds its constants: a refresh moved
       // one step compiles nothing new
       rate(60)
