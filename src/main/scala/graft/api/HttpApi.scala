@@ -4,390 +4,103 @@ import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.{CodegenShim, ListenerShim}
 
 import graft.promql.{EvalParams, FuncCall, LabelCall, Parser, PromSource,
   Selector}
-import graft.streaming.{Ingest, Otlp, Prompb, PrompbV2}
-import graft.tsdb.{MatchEq, Matcher, Matchers, MutableMapping}
+import graft.store.Tsdb
+import graft.streaming.{Otlp, Prompb, PrompbV2}
+import graft.tsdb.{MatchEq, Matcher, Matchers}
 
 /** The Prometheus HTTP API v1 facade — the reference's outward face
   * (`api/api.go:157-233` mounts `/api/v1/{query,query_range,series,labels,
   * label/<n>/values,read,write}` around the embedded Prometheus engine,
   * plus the `/mutable/{names,values}` CRUD at `api/api.go:230-233`).
-  * Every endpoint composes the already-verified pieces: prompb/OTLP wire
-  * decode → `Ingest.ingestLabeled` (S1) on write, and
-  * `QueryService.queryRange` (the §3.1 per-request chain) → `PromJson`
-  * serialization on read.
+  * Routing, header parsing, codecs and response framing over the storage
+  * engine [[store]] ([[graft.store.Tsdb]]); reads hand
+  * `QueryService.queryRange` (the §3.1 per-request chain) the store's
+  * source and serialize through `PromJson`.
   *
   * Request semantics mirror the reference's custom headers
   * (`types/types.go:172-189`): `X-SquirrelDB-Tenant` (F11),
   * `X-SquirrelDB-Forced-Matcher` (F10), `X-SquirrelDB-Max-Evaluated-Series`
   * (F13/W9), `X-SquirrelDB-Max-Evaluated-Points` (F14) and
   * `X-SquirrelDB-TTL` (T9, `api/remotestorage/remotestorage.go:103-114`),
-  * plus `X-SquirrelDB-Max-Staleness` (seconds) — a facade extension of
-  * the reference's T6 read-slack trade ([[readView]]): reads
-  * that tolerate bounded staleness skip the read-your-writes queue
-  * drain under write saturation.
+  * plus `X-SquirrelDB-Max-Staleness` (seconds), which [[handle]] parses
+  * once and passes to every read call as the store's `staleness` budget.
+  * Upkeep endpoints take no budget and are always strict.
   *
-  * Scheduler isolation: read queries are tagged into the `graft-reads`
-  * pool, pin jobs into `graft-writes`, and background upkeep (delta and
-  * full folds, the cold-generation rewrite, pre-agg) into
-  * `graft-upkeep` (r14: within a FIFO pool jobs run in submit order, so
-  * upkeep sharing the pin pool queued minutes of rewrite ahead of pins,
-  * aged the completeness stamps past the staleness budget, and turned
-  * reads into drains — all no-ops under default FIFO scheduling).
-  * An embedding app that serves dashboards DURING sustained ingest
-  * should build the session with `spark.scheduler.mode=FAIR` and an
-  * allocation file granting `graft-reads` a minShare (SoakBench writes
-  * the reference file: minShare 16, weight 8): a saturated write side
-  * floods the scheduler with short pin jobs, and because a read
-  * alternates short stages with driver-side planning, plain 1:1 FAIR
-  * hands every slot back to the write pool at each stage boundary —
-  * a minShare is what actually bounds read latency (measured: 0.44 s
+  * Scheduler isolation: reads run on the handler thread in the
+  * `graft-reads` pool (`facade-http` threads, from
+  * [[Tsdb.sessionThreads]]). An embedding app that serves dashboards
+  * DURING sustained ingest should build the session with
+  * `spark.scheduler.mode=FAIR` and an allocation file granting
+  * `graft-reads` a minShare (SoakBench writes the reference file:
+  * minShare 16, weight 8): a saturated write side floods the scheduler
+  * with short pin jobs, and plain 1:1 FAIR hands every slot back to the
+  * write pool at each stage boundary of a read (measured: 0.44 s
   * quiesced, 13-15 s under 43k pts/s with 1:1 FAIR, see SCALE.md).
-  *
-  * One-stage small reads: a read whose inputs hold at most Spark's
-  * minimum partition size (`spark.sql.adaptive.coalescePartitions.
-  * minPartitionSize`, 1 MB) coalesces them to one partition
-  * ([[oneStage]]), so a dashboard refresh runs as one job with no
-  * exchange: such a read costs stage latency, not compute, and each
-  * stage boundary of a parallel plan adds replanning and codegen.
-  * Larger reads keep the parallel plan, and under ingest the read
-  * pool's minShare above is still what bounds them. `/metrics` counts
-  * both shapes (`graft_read_plans_total`).
-  *
-  * Threads and the session: every thread the facade owns — the HTTP
-  * handler pool, `facade-flusher` and `graft-hot-compact` (the folds and
-  * the upkeep they run) — runs its whole life with `spark` as the active
-  * session. Code that reads `SQLConf.get` outside a Dataset action sees
-  * Spark's defaults on a thread with no active session, and the most
-  * expensive such reader is Spark's codegen cache, built once per JVM by
-  * the first compile: when that was a flusher pin, the cache got 100
-  * entries instead of the session's 5000 and dashboard refreshes
-  * recompiled their evicted classes. New facade threads must come from
-  * `sessionThreads`.
-  *
-  * Storage: an APPEND-ONLY hot store (S10 — the reference's temporary
-  * store appends batches per metric while background goroutines flush,
-  * `redis/temporarystore/redis.go:156-220`, `batch/batch.go:368-503`).
-  * Each write pins ONLY its own batch (staged parquet, `store.Stage`), so
-  * per-write cost is O(batch) — including the p99: the
-  * every-`compactEvery`-batches fold runs on a BACKGROUND thread over a
-  * copy-on-write snapshot prefix and is swapped in atomically, so no
-  * write ever waits on it. Last-write-wins conflict resolution moves to
-  * the read side (the verified O2 dedup shape). The durable cold tier is
-  * day-partitioned and series-bucketed in every generation
-  * (`store.Store.writeBucketedDays`, S8).
   *
   * Remote read streams: when the client negotiates
   * `STREAMED_XOR_CHUNKS`, series are XOR-chunk-encoded on the EXECUTORS
   * and the driver only frames `toLocalIterator` rows into the public
   * chunked protocol (1 MiB frames, like the reference's
-  * `remoteReadMaxBytesInFrame`, `api/api.go:58-61`) — no full-result
-  * driver materialization. The buffered SAMPLES variant also assembles
-  * its (protocol-mandated single) snappy blob incrementally from the
-  * iterator.
-  *
-  * Mutable labels (M1–M4): CRUD kept as an in-memory dimension (the
-  * Spark-side analogue is [[graft.tsdb.MutableProvider]]'s dim table);
-  * matcher rewrite rides `RequestOptions.mutable`, and the SOURCE is
-  * decorated with the reverse mapping — the analogue of the reference's
-  * `mutableMetricsSet` wrapper (`cassandra/mutable/index.go:93-122`),
-  * which decorates at the index layer so grouping by a mutable label
-  * works in PromQL.
+  * `remoteReadMaxBytesInFrame`, `api/api.go:58-61`); the buffered
+  * SAMPLES variant also assembles its snappy blob incrementally.
   */
 final class HttpApi(spark: SparkSession,
     tenantLabel: String = "__account_id",
     defaultTenant: String = "default",
     lookbackMs: Long = 300000L,
     compactEvery: Int = 64,
-    // write-cadence DELTA folds (r13): every `deltaFoldEvery` pins the
-    // raw tail collapses into one deduped "mid" batch — an LSM-style
-    // middle level between the compacted head and the raw pins, so a
-    // bounded-staleness read scans ≤ ~(compactEvery/deltaFoldEvery +
-    // deltaFoldEvery) relations instead of up to compactEvery. 0 = off.
     deltaFoldEvery: Int = 8,
     maxBytesInFrame: Int = 1 << 20, // reference api.go:60 (1 MiB)
-    durablePath: Option[String] = None, // S8 cold tier (parquet)
+    durablePath: Option[String] = None,
     hotRetainMs: Long = 2 * 3600000L,
-    // driver-side micro-batching (the reference's T1 batch semantics,
-    // `batch/batch.go:17-37`): posts buffer as LAZY plans and ONE batch
-    // pins per `flushEveryPosts` posts / `flushEveryRows` rows — lifting
-    // the job-scheduling floor off small posts. Any read flushes first
-    // (read-your-writes); 1 = pin every post (the pre-r7 behavior).
     flushEveryPosts: Int = 1,
     flushEveryRows: Long = 50000L) {
 
   import Prompb.{ChunkMeta, PromSeries}
 
-  // TWCS day classification (trackDirtyDays, the dirty-dir parse) is
-  // ZoneOffset.UTC-based, while Store.writeBucketedDays derives the `day`
-  // partition via to_date(timestamp_millis(...)), which follows
-  // spark.sql.session.timeZone — an embedding app constructing this
-  // facade on a non-UTC session would classify a spilled-into
-  // partition as clean and hardlink-carry un-deduped duplicates. Fail
-  // loudly at construction instead (ADVICE r15); GraftSession pins UTC.
-  require(durablePath.isEmpty ||
-    spark.conf.get("spark.sql.session.timeZone", "") == "UTC",
-    "durablePath requires spark.sql.session.timeZone=UTC: the TWCS " +
-      "partial-rewrite day classification is UTC-based and a non-UTC " +
-      "day partition derivation would silently carry duplicates")
+  /** The storage engine behind every endpoint. */
+  private[graft] val store = new Tsdb(spark, tenantLabel, defaultTenant,
+    compactEvery, deltaFoldEvery, durablePath, hotRetainMs,
+    flushEveryPosts, flushEveryRows)
 
-  /** "No TTL" sentinel: ~100 years in seconds. Finite so the per-series
-    * max-merge (T9: the LARGEST TTL any write supplied wins,
-    * `remotestorage.go:103-114`) is a plain `max`.
-    */
-  val DefaultTtlSec: Long = 3155760000L
+  // ---- engine calls the repository benchmark makes on the facade ----
 
+  def write(series: Seq[PromSeries], tenant: String,
+      ttlSec: Long = store.DefaultTtlSec): Long =
+    store.write(series, tenant, ttlSec)
+  private[graft] def drainFlushes(): Unit = store.drainFlushes()
+  def compact(): Unit = store.compact()
+  def source(tenant: String = defaultTenant, fromMs: Long = Long.MinValue,
+      toMs: Long = Long.MaxValue): Option[PromSource] =
+    store.source(tenant, fromMs, toMs)
+  private[graft] def querySource(tenant: String, mint: Long, maxt: Long,
+      allowRoute: Boolean): Option[PromSource] =
+    store.querySource(tenant, mint, maxt, allowRoute)
+  private[graft] def readSeriesFrame(q: Prompb.ReadQuery,
+      extra: Seq[Matcher] = Nil, forcePre: Boolean = false,
+      forceRaw: Boolean = false): Option[DataFrame] =
+    store.readSeriesFrame(q, extra, forcePre, forceRaw)
+  private[graft] def labelAliases: Map[String, String] = store.labelAliases
+  val PreAggResolutionMs: Long = store.PreAggResolutionMs
+  def pendingBatches: Int = store.pendingBatches
+  private[graft] def hotDepth: Int = store.hotDepth
+  private[graft] def midCount: Int = store.midCount
 
-  // hot store: append-only vector of per-write pinned batches, each
-  // (labels, metric_id, ts_ms, value, __seq, __ttl_sec). Element 0 may be
-  // a compacted fold (headCompacted) — compaction swaps a folded prefix
-  // COPY-ON-WRITE, so writes never wait on it (the reference's temp store
-  // appends while background goroutines flush, `batch/batch.go:368-503`).
-  @volatile private var batches: Vector[DataFrame] = Vector.empty
-  @volatile private var batchMins: Vector[Long] = Vector.empty // min ts_ms
-  @volatile private var headCompacted = false
-  // structural invariant: batches = [head?] ++ <midBatches mid folds> ++
-  // raw pin tail. Mids are produced by [[deltaFoldNow]]; the full fold
-  // collapses everything (head + mids + raws) and resets the count.
-  @volatile private var midBatches = 0
-  // pins since the last FULL fold — the compaction trigger. The vector
-  // length no longer measures it once delta folds shrink the tail.
-  @volatile private var pinsSinceFullFold = 0
-  // wall stamp per batch: every post acked at or before batchWallMs(i)
-  // is contained in batches(0..i) (FIFO flusher; the stamp is captured
-  // under `this` at flush-snapshot time). After a compaction swap,
-  // batchWallMs(0) is the stamp of the newest FOLDED batch — the instant
-  // the compacted head alone is a complete view of ([[readView]] tier 1).
-  @volatile private var batchWallMs: Vector[Long] = Vector.empty
-  // Hot-batch pin medium: every hot relation pins as staged parquet
-  // (`Stage.pinIn`), under `graft.stage.dir` when set (shared storage on
-  // a cluster), else under Stage's JVM-lifetime temp dir. These rows
-  // were ACKNOWLEDGED to the remote-write client and released from
-  // driver memory, so there is NO recompute path: a block-manager pin
-  // (`localCheckpoint`) loses them with the executor holding its
-  // unreplicated blocks (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND, SCALE.md
-  // "Round-10: durable pipeline-boundary pins"), and even in one JVM the
-  // r13 hour soak lost checkpoint blocks after ~20 min of sustained
-  // folds, failing reads AND the next fold (SCALE.md r13). A staged pin
-  // costs a re-read on executor loss, never the data.
-  private val hotScope = graft.store.Stage.detachedScope()
-  // staged path per batches[i] (parallel vector).
-  // Superseded paths retire with ONE FULL-fold generation of grace so
-  // in-flight readers finish their scans (the coldGen discipline).
-  // Two lists (ADVICE r13): delta folds ACCUMULATE their retirees into
-  // the current generation and drop NOTHING — a single list overwritten
-  // per fold shrank a slow reader's grace window from ~compactEvery
-  // pins to ~deltaFoldEvery (8×) once delta folds ran between fulls.
-  // Each FULL fold deletes the previous generation's list and promotes
-  // the current one, so every retiree survives ≥ one full generation.
-  @volatile private var batchPaths: Vector[String] = Vector.empty
-  @volatile private var retiredPrevGen: Vector[String] = Vector.empty
-  @volatile private var retiredCurGen: Vector[String] = Vector.empty
-
-  /** Pin one hot relation as staged parquet in this store's scope.
-    * `value` is staged as its raw bits: parquet canonicalizes every NaN
-    * it writes, which would turn a Prometheus staleness marker
-    * (StaleNaN) into an ordinary NaN sample.
-    */
-  private def pinHot(df: DataFrame, tag: String): (DataFrame, String) = {
-    import graft.functions.Bits
-    val (pinned, path) = graft.store.Stage.pinIn(hotScope,
-      df.withColumn("value", Bits.doubleBits(col("value"))), tag)
-    (pinned.withColumn("value", Bits.bitsToDouble(col("value"))), path)
-  }
-  // monotone spill frontier + overlap tracking: a write whose oldest
-  // sample falls behind an earlier spill MAY duplicate keys already on
-  // disk; only then do reads pay the LWW dedup shuffle over the cold tier
-  @volatile private var lastSpillCutoff = Long.MinValue
-  // the TIME frontier of the latest spill (the wall-derived cutoff, see
-  // `aggTo` in compactNow): everything below it is on disk, so it bounds
-  // how far [[preAggregate]] may move the agg_5m watermark (0 = nothing
-  // spilled yet: the watermark, 0 or later, stays put). The restart
-  // sidecar carries it across restarts.
-  @volatile private var spillTimeFrontier = 0L
-  @volatile private var coldDirty = false
-  // Partial (leveled) rewrite tracking — the reference's TWCS discipline
-  // (`cassandra/tsdb/tsdb.go:205-215`: time-window compaction never
-  // re-sorts closed windows). The LWW dedup key is (metric_id, ts_ms)
-  // and ts_ms determines the day partition, so duplicate keys are
-  // DAY-LOCAL: a generation rewrite only needs the day partitions some
-  // spill has appended into since the last rewrite — every other day is
-  // already deduped+clustered and is carried into the new generation at
-  // the file level (hardlink). Without this, the rewrite is O(tier) per
-  // cadence and its duration GROWS with the tier (r14 soak: generation 4
-  // ran ~12 min at ~90 M points against a 5-min cadence) — the one
-  // 100 TB scale-killer left in the facade. Some(set) = the exact
-  // dirty-day set since the last flip; None = provenance unknown (fresh
-  // process over an existing tier, or a backfill too wide to track) →
-  // the next compactCold performs one FULL rewrite and tracking resumes.
-  // Guarded by `synchronized` (the write-side state lock).
-  private var dirtyColdDays: Option[Set[java.time.LocalDate]] =
-    Some(Set.empty)
-  private val MaxTrackedDirtyDays = 4096
-  // cold-tier SNAPSHOT GENERATION: the data lives in `$durablePath/g<N>`
-  // and [[compactCold]] rewrites into g<N+1> then flips — never in place,
-  // so readers holding plans over the old generation keep scanning it
-  // (one retired generation is kept as the grace window; the soak spec
-  // proved in-place overwrite loses races against in-flight scans)
-  @volatile private var coldGen: Int = 0
-  // agg-table generation pointer — MUST be declared BEFORE the bootstrap
-  // `locally` block below: Scala runs constructor statements in
-  // declaration order, so a later `= 0` initializer would clobber the
-  // generation the bootstrap restored from disk
-  @volatile private var aggGen: Int = 0
-  // the agg_5m watermark (`fullyAggregatedAt`): loaded once here, then
-  // kept in step with every write of its file (preAggregateWith), so a
-  // routed read never reads the file
-  @volatile private var aggWatermark: Long =
-    aggPath.fold(0L)(graft.store.Store.readWatermark)
-  @volatile private var labelNames: Seq[String] = Nil
-  private var writeSeq = 0L
-  @volatile private var ttlSeen = false // any write with a non-default TTL?
-  // T9 dim: per-series max-merged TTL over COMPACTED history, pinned and
-  // tiny (only series whose effective TTL is non-default — a series with
-  // any default-TTL write max-merges back to the sentinel and drops out).
-  // Maintained incrementally at compaction; reads union the hot tail in,
-  // so no read ever rescans the full cold history for TTLs, and the join
-  // carries NO broadcast hint (AQE decides from runtime size).
-  @volatile private var ttlDim: Option[DataFrame] = None
   private var server: Option[HttpServer] = None
-  // /debug/index_block — the reference's BlockCassandraWrite pauses index
-  // writes to Cassandra during maintenance while ingest keeps flowing;
-  // the analogue blocks every durable-tier writer (spill, cold rewrite,
-  // pre-aggregation) while the hot store keeps accepting data
-  @volatile private var coldWritesBlocked = false
+  private var serverPool: Option[java.util.concurrent.ExecutorService] = None
   // /debug/toggle_debug_query — the reference's defaultDebugRequest logs
   // per-query details
   @volatile private var debugQueries = false
-  private val compacting = new java.util.concurrent.atomic.AtomicBoolean
-  // set by [[stop]]: no background fold starts after it
-  @volatile private var stopped = false
-  /** Threads for the facade's executors, each running its whole life with
-    * this facade's session active (the thread/session rule in the class
-    * doc).
-    */
-  private def sessionThreads(name: String,
-      daemon: Boolean = true): java.util.concurrent.ThreadFactory = r => {
-    val t = new Thread(() => {
-      SparkSession.setActiveSession(spark)
-      r.run()
-    }, name)
-    t.setDaemon(daemon)
-    t
-  }
-  private val compactExec = java.util.concurrent.Executors
-    .newSingleThreadExecutor(sessionThreads("graft-hot-compact"))
-
   // internal telemetry (the reference serves promhttp at /metrics,
-  // `api/api.go:210`)
-  private val writesTotal = new java.util.concurrent.atomic.AtomicLong
-  private val pointsWrittenTotal = new java.util.concurrent.atomic.AtomicLong
+  // `api/api.go:210`); the store keeps its own counters
   private val queriesTotal = new java.util.concurrent.atomic.AtomicLong
   private val readRequestsTotal = new java.util.concurrent.atomic.AtomicLong
-  private val preAggRoutedTotal = new java.util.concurrent.atomic.AtomicLong
-  private val staleReadsTotal = new java.util.concurrent.atomic.AtomicLong
-  private val staleHeadReadsTotal =
-    new java.util.concurrent.atomic.AtomicLong
-
-  // mutable-label dimension (M4): (tenant, name) -> real label name;
-  // (tenant, name, value) -> associated real values. Durable-backed when
-  // a durablePath is configured (the reference persists these in
-  // Cassandra, `cassandra/mutable/provider.go` — here the
-  // [[graft.tsdb.MutableProvider]] dim-table parquet).
-  @volatile private var mutableNames = Map.empty[(String, String), String]
-  @volatile private var mutableValues =
-    Map.empty[(String, String, String), Seq[String]]
-
-  private def mutablePath: Option[String] = durablePath.map(_ + "_mutable")
-  private def expiryPath: Option[String] = durablePath.map(_ + "_expiry")
-
-  private def isDir(p: String): Boolean =
-    java.nio.file.Files.isDirectory(java.nio.file.Paths.get(p))
-
-  /** Persist the CRUD maps as the MutableProvider dim shape — one row per
-    * association, names without values keep a blank row (significant for
-    * re-import, like the CSV dump). Called after every mutation (all
-    * mutation sites serialize on `this`); the dim is tenant-scoped and
-    * tiny by construction.
-    *
-    * Crash discipline (ADVICE r8): an in-place Overwrite could tear the
-    * dim and the old restore silently dropped it. The write now stages to
-    * `_stage`, keeps the live dir as `_old` across the swap, and restore
-    * trusts only a `_SUCCESS`-complete dir — preferring the live one,
-    * falling back to `_old` — so no crash point loses the definitions.
-    */
-  private def persistMutable(): Unit = mutablePath.foreach { mp =>
-    import spark.implicits._
-    val rows = mutableNames.toSeq.flatMap { case ((t, n), target) =>
-      val vals = mutableValues.toSeq.collect {
-        case ((t2, n2, v), assoc) if t2 == t && n2 == n =>
-          assoc.map(av => (t, n, target, v, av))
-      }.flatten
-      if (vals.isEmpty) Seq((t, n, target, "", "")) else vals
-    }
-    atomicOverwrite(
-      rows.toDF("tenant", "name", "target_name", "value", "associated_value")
-        .coalesce(1), mp)
-  }
-
-  /** Stage-then-rename parquet overwrite: writes to `<path>_stage`, keeps
-    * the live dir as `<path>_old` across the swap, promotes, then clears
-    * `_old` — no crash point leaves the ONLY copy torn. Restore sides
-    * trust a `_SUCCESS`-complete dir, preferring live over `_old`
-    * ([[completeDimDir]]).
-    */
-  private def atomicOverwrite(df: DataFrame, path: String): Unit = {
-    val stage = path + "_stage"
-    val old = path + "_old"
-    df.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(stage)
-    // clear _old only when the live dir exists to replace it: in the
-    // degraded state after an earlier crash (_old is the ONLY complete
-    // copy), deleting it before the stage→live promotion could lose the
-    // last restorable copy (r8 review finding)
-    if (isDir(path)) {
-      deleteRecursively(java.nio.file.Paths.get(old))
-      java.nio.file.Files.move(java.nio.file.Paths.get(path),
-        java.nio.file.Paths.get(old))
-    }
-    java.nio.file.Files.move(java.nio.file.Paths.get(stage),
-      java.nio.file.Paths.get(path))
-    deleteRecursively(java.nio.file.Paths.get(old))
-  }
-
-  /** The newest `_SUCCESS`-complete copy of a staged dim: the live dir if
-    * complete, else the `_old` kept across an interrupted promotion.
-    */
-  private def completeDimDir(path: String): Option[String] =
-    Seq(path, path + "_old").find(p => isDir(p) &&
-      java.nio.file.Files.exists(java.nio.file.Paths.get(p, "_SUCCESS")))
-
-  private def restoreMutable(): Unit =
-    mutablePath.foreach { mp =>
-      completeDimDir(mp).foreach { p =>
-        scala.util.Try(spark.read.parquet(p)
-          .select("tenant", "name", "target_name", "value",
-            "associated_value").collect()) match {
-          case scala.util.Success(rows) =>
-            mutableNames = rows.map(r =>
-              (r.getString(0), r.getString(1)) -> r.getString(2)).toMap
-            mutableValues = rows.toSeq
-              .filter(r => r.getString(3) != null && r.getString(3).nonEmpty &&
-                r.getString(4) != null && r.getString(4).nonEmpty)
-              .groupBy(r => (r.getString(0), r.getString(1), r.getString(3)))
-              .map { case (k, rs) => k -> rs.map(_.getString(4)).distinct }
-          case scala.util.Failure(e) =>
-            // a complete-looking dim that fails to read is an operator
-            // problem — say so instead of silently serving no rewrites
-            System.err.println(
-              s"[graft] WARNING: mutable-label dim at $p unreadable: $e")
-        }
-      }
-    }
 
   // /debug/ help text (reference api/api.go:439 debugHelpHandler)
   private val DebugHelp: String =
@@ -410,1945 +123,11 @@ final class HttpApi(spark: SparkSession,
       |/debug/mutable_import[?force]    replace mutable labels from CSV
       |""".stripMargin
 
-  // label names that cannot become DataFrame columns without colliding
-  // with the engine's own schema
-  private val Reserved =
-    Set("value", "ts_ms", "eval_ms", "labels", "metric_id", "__seq",
-      "__ttl_sec")
-
-  // restart bootstrap: a pre-existing durable tier restores the label
-  // names and the TTL flag (mutable-label definitions live outside the
-  // point store, as in the reference's Cassandra tables)
-  /** The CURRENT cold-tier generation directory, when configured. */
-  private def coldPath: Option[String] =
-    durablePath.map(p => s"$p/g$coldGen")
-
-  // ---- series-bucketed cold layout (S8 productized; SURVEY §4.1) ----
-  // The sf1000-proven bucketed discipline (Store.writeBucketedPoints:
-  // exchange-free per-series aggregation, zero spill at 1 B rows)
-  // composed with the TWCS day-partition + hardlink mechanism: every
-  // generation is day-partitioned AND metric_id-bucketed, described by
-  // its own _bucketspec.json manifest, registered as a catalog table so
-  // per-series reads ride HashPartitioning(metric_id) straight off the
-  // scan — across facade restarts (the manifest re-issues the DDL the
-  // in-memory catalog lost).
-
-  /** Catalog name of a generation's bucketed table under `root` —
-    * path-keyed so facades over different tiers in one session never
-    * collide, gen-keyed so the flip is a table switch.
-    */
-  private def genTableName(root: String, gen: Int): String =
-    f"graft_cold_${root.hashCode.toLong & 0xFFFFFFFFL}%08x_g$gen"
-
-  private def coldTableName(gen: Int): String =
-    genTableName(durablePath.getOrElse(""), gen)
-
-  /** The bucket count a generation's data calls for. A bucketed scan
-    * runs one task per bucket however few days it touches (a read
-    * prunes to days), so the count follows the bytes of the LARGEST day
-    * partition: the next power of two ≥ ceil(dayBytes /
-    * `spark.sql.files.maxPartitionBytes`) — Spark's own per-scan-task
-    * size — at least 1 and at most `cap`. No measurement → `cap`.
-    *
-    * The cost lands on reads that keep the bucketed scan (a remote
-    * read's per-series group, the LWW dedup of a dirty cold-only read)
-    * over many days: k days put up to k targets in each task. PromQL
-    * queries plan their windows without it and split by file instead.
-    */
-  private def sizedBucketCount(dayBytes: Option[Long], cap: Int): Int =
-    dayBytes.fold(cap) { b =>
-      val target = math.max(1L, spark.sessionState.conf.filesMaxPartitionBytes)
-      val want = if (b <= 0) 1L else (b - 1) / target + 1
-      if (want >= cap) cap
-      else math.min(cap.toLong, java.lang.Long.highestOneBit(2 * want - 1)).toInt
-    }
-
-  /** Bucket layout for a NEW generation, on metric_id, with the count
-    * [[sizedBucketCount]] sizes from `dayBytes`, the generation's
-    * largest day (an upper-bound estimate for a fresh tier's first
-    * spill, capped there at 32). The count is frozen per generation in
-    * the manifest — a new count takes effect at the next FULL rewrite,
-    * never by mixing.
-    */
-  private def confBucketSpec(dayBytes: Option[Long],
-      cap: Int = Int.MaxValue): graft.store.Store.BucketSpec =
-    graft.store.Store.BucketSpec(Seq("metric_id"),
-      sizedBucketCount(dayBytes, cap), Seq("metric_id", "ts_ms"))
-
-  /** The CURRENT generation's on-disk layout manifest (None = a fresh
-    * tier: no generation written yet).
-    */
-  private def coldGenSpec: Option[graft.store.Store.BucketSpec] =
-    coldPath.flatMap(graft.store.Store.BucketSpec.read)
-
-  /** (Re-)register generation `gen`'s bucketed table from its
-    * manifest (dropped, not registered, while it holds no data files).
-    * Called at bootstrap (restart recovery) and at each flip.
-    */
-  private def registerColdGen(gen: Int): Unit =
-    durablePath.foreach(p => graft.store.Store.registerBucketedDayTable(
-      spark, coldTableName(gen), s"$p/g$gen"))
-
-  /** Spill append into the current cold generation: a bucketed append
-    * through the generation's catalog table, under the spec of the
-    * GENERATION's manifest (mixing bucket counts inside one dir would
-    * corrupt the filename-derived bucket ids). A fresh tier has no
-    * manifest yet: its spec is sized from the spill's plan estimate (an
-    * upper bound that runs no job), capped at 32 — 32 when there is no
-    * usable estimate — and the manifest is written BEFORE the first
-    * append, so every file that ever lands in the generation was
-    * written under it. A crash in between leaves a manifest-only
-    * generation, which the next spill appends into as usual. A
-    * generation without data files has no catalog table (there is no
-    * schema to register it from): the spill declares it first, as
-    * creating it through the write would clear the directory,
-    * manifest included.
-    */
-  private def spillToCold(spill: DataFrame, path: String): Unit = {
-    val S = graft.store.Store
-    val table = coldTableName(coldGen)
-    val spec = coldGenSpec.getOrElse {
-      val estimate = scala.util.Try(
-        spill.queryExecution.optimizedPlan.stats.sizeInBytes).toOption
-        .filter(_ > 0).map(_.min(Long.MaxValue).toLong)
-      val fresh = confBucketSpec(estimate, cap = 32)
-      S.BucketSpec.write(path, fresh)
-      fresh
-    }
-    if (!spark.catalog.tableExists(table))
-      S.createBucketedDayTable(spark, table, path, spec, spill.schema)
-    S.writeBucketedDays(spill, table, path, spec,
-      org.apache.spark.sql.SaveMode.Append, tasks = spec.n)
-  }
-
-  // restart metadata sidecar: (writeSeq, labelNames) as one tiny JSON,
-  // plus the TTL dim as parquet — written at each compaction BEFORE the
-  // spill, so the persisted writeSeq always ≥ every __seq on the cold
-  // tier (a crash can over-claim, never under-rank; unspilled hot data
-  // dies with the process either way). With it, restart is O(1); without
-  // it (pre-r7 layouts) bootstrap falls back to the full-history scan —
-  // at 100 TB that scan is 3 passes over the cold tier, which is why the
-  // sidecar exists. The spill time frontier rides along; compaction
-  // writes the sidecar once more AFTER the spill commits, so the
-  // persisted frontier never runs ahead of the cold tier.
-  private def metaPath: Option[java.nio.file.Path] =
-    durablePath.map(p => java.nio.file.Paths.get(p + "_meta.json"))
-  private def ttlDimPath: Option[String] = durablePath.map(_ + "_ttl")
-
-  private def persistMeta(): Unit = metaPath.foreach { mp =>
-    val names = labelNames.map(n => "\"" + PromJson.escape(n) + "\"")
-    val json = s"""{"writeSeq":${synchronized(writeSeq)},""" +
-      s""""ttlSeen":$ttlSeen,"spillTimeFrontier":$spillTimeFrontier,""" +
-      s""""labelNames":[${names.mkString(",")}]}"""
-    val tmp = mp.resolveSibling(mp.getFileName.toString + ".tmp")
-    java.nio.file.Files.writeString(tmp, json)
-    java.nio.file.Files.move(tmp, mp,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  /** Highest COMPLETE `g<N>` snapshot generation under `p`, or -1 when
-    * none. Completeness = the Hadoop committer's `_SUCCESS` marker — a
-    * crash mid-generation-write leaves a torn directory that restart
-    * must skip in favor of the intact previous generation.
-    */
-  private def maxGenIn(p: String): Int = {
-    val s = java.nio.file.Files.list(java.nio.file.Paths.get(p))
-    try {
-      val gens = s.iterator()
-      var maxGen = -1
-      while (gens.hasNext) {
-        val d = gens.next()
-        val n = d.getFileName.toString
-        if (n.matches("g\\d+") &&
-          java.nio.file.Files.exists(d.resolve("_SUCCESS")))
-          maxGen = math.max(maxGen, n.drop(1).toInt)
-      }
-      maxGen
-    } finally s.close()
-  }
-
-  locally {
-    // restart: adopt the highest generation on disk
-    durablePath.filter(isDir).map(maxGenIn).filter(_ >= 0)
-      .foreach(coldGen = _)
-    // every generation this facade writes carries its bucket manifest
-    // from before its first data file; one without it was not written
-    // here, and a bucketed append into it would corrupt its bucket ids.
-    // A read that finds a schema has found data files
-    coldPath.foreach(g => require(
-      graft.store.Store.BucketSpec.read(g).isDefined || !isDir(g) ||
-        scala.util.Try(spark.read.parquet(g)).isFailure,
-      s"cold generation $g holds data files but no " +
-        s"${graft.store.Store.BucketSpec.ManifestName}: it was not " +
-        "written by this facade's bucketed layout"))
-    // re-register the adopted generation's bucketed table from its
-    // on-disk manifest — the bucket spec must survive the restart (the
-    // in-memory catalog died with the previous process; without this,
-    // every per-series cold read would silently replan the Exchange)
-    durablePath.filter(isDir).foreach(_ => registerColdGen(coldGen))
-    aggPath.filter(isDir).map(maxGenIn).filter(_ >= 0)
-      .foreach(aggGen = _)
-    val metaLoaded = metaPath
-      .filter(java.nio.file.Files.exists(_)).exists { mp =>
-        scala.util.Try {
-          val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-          val root = mapper.readTree(java.nio.file.Files.readString(mp))
-          val seq = root.get("writeSeq").asLong()
-          val seen = root.get("ttlSeen").asBoolean()
-          val ln = root.get("labelNames")
-          labelNames =
-            (0 until ln.size()).map(ln.get(_).asText()).sorted
-          writeSeq = seq
-          ttlSeen = seen
-          // absent in sidecars written before the frontier was recorded
-          spillTimeFrontier =
-            Option(root.get("spillTimeFrontier")).fold(0L)(_.asLong())
-          ttlDimPath.flatMap(completeDimDir).foreach(tp =>
-            ttlDim = Some(spark.read.parquet(tp).localCheckpoint(true)))
-          true
-        }.getOrElse(false)
-      }
-    coldPoints().foreach { c =>
-      // without the sidecar (pre-r7 layout or torn write): the one-time
-      // full-history fallback scan
-      if (!metaLoaded) {
-        import spark.implicits._
-        labelNames = c.select(explode(map_keys(col("labels"))).as("n"))
-          .distinct().as[String].collect().sorted.toSeq
-        writeSeq = c.agg(max(col("__seq"))).head()
-          .getLong(0) // new writes must outrank restored data
-      }
-      // the TTL dim must exist whenever TTLs are in play — recompute if
-      // the sidecar lacked it (an absent dim would silently un-expire
-      // every cold series)
-      if (!metaLoaded || (ttlSeen && ttlDim.isEmpty)) {
-        val dim = c.groupBy("metric_id")
-          .agg(max(col("__ttl_sec")).as("__ttl_sec"))
-          .where(col("__ttl_sec") =!= DefaultTtlSec)
-          .localCheckpoint(true)
-        if (dim.limit(1).count() > 0) {
-          ttlDim = Some(dim)
-          ttlSeen = true
-        }
-      }
-      coldDirty = true // spill overlap history unknown across restarts
-      // same for the dirty-day set: which days pre-restart spills
-      // appended into is unknowable, so the first compactCold of this
-      // process does one full rewrite, then partial tracking resumes
-      synchronized { dirtyColdDays = None }
-    }
-    restoreMutable()
-  }
-
-  // micro-batch buffer: validated RAW rows per post. Driver memory only —
-  // zero Spark work on the HTTP path; the single background flusher owns
-  // ALL plan building (one encode + one ingest plan per FLUSH, where the
-  // pre-r11 shape built one lazy ingest plan per POST and folded them
-  // with an N-way unionByName at flush — measured as the small-post
-  // throughput bound, ~per-POST driver work that no storage design needs)
-  // buffered in SERIES shape (labels + samples array), not flattened to
-  // per-sample rows: all per-labels pin work — the driver map encode,
-  // the regex validation, the canonical encode + xxhash64 — then runs
-  // once per series instead of once per sample (the flat shape measured
-  // ~an-order-of-magnitude more per-point work at the soak's
-  // 10-samples-per-series posts; the single-threaded flusher fold was
-  // the measured ingest ceiling, SCALE.md "Round-16 (cont.): the flusher
-  // ceiling breaks")
-  private final class PendingPost(val series: Seq[PromSeries],
-      val seq: Long, val ttlSec: Long, val minTs: Long,
-      val tenant: String) {
-    val rowCount: Long = series.iterator.map(_.samples.size.toLong).sum
-  }
-  private var pending: Vector[PendingPost] = Vector.empty
-  private var pendingRowCount = 0L
-  // single-flusher queue: pins happen in submission order OFF the HTTP
-  // threads, so concurrent posts never block on a Spark job; reads drain
-  // the queue ([[flushPending]]) for read-your-writes
-  private val flushExec = java.util.concurrent.Executors
-    .newSingleThreadExecutor(sessionThreads("facade-flusher"))
-  @volatile private var lastFlush: java.util.concurrent.Future[_] =
-    java.util.concurrent.CompletableFuture.completedFuture(null)
-  // flush snapshots submitted but not yet appended to `batches`
-  private val queuedFlushes = new java.util.concurrent.atomic.AtomicInteger(0)
-  // backpressure bound: a flusher lagging this many snapshots behind
-  // stalls the writer until a queue SLOT frees — bounded driver memory
-  // (transient overshoot is ≤ one snapshot per concurrent writer: each
-  // post appends, maybe submits, and only then waits for the slot)
-  private val MaxQueuedFlushes = 16
-  // bounded-staleness reads: every post acked at or before this wall
-  // instant is PINNED (visible in `batches`). Advanced by the flusher
-  // when a snapshot's append lands (all earlier posts are in that or an
-  // earlier snapshot — the flusher is single-threaded FIFO) and by
-  // [[readView]] when it observes the fully-quiesced state
-  // under the lock. A failed pin re-prepends its snapshot and does NOT
-  // advance this, so the bound stays conservative.
-  @volatile private var pinnedThroughWallMs: Long = System.currentTimeMillis()
-  // per-request read-staleness budget (ms), set from the
-  // X-SquirrelDB-Max-Staleness header by [[handle]] on the handler
-  // thread and removed in its finally; null = strict read-your-writes
-  private val readStalenessMs = new ThreadLocal[java.lang.Long]
-
-  /** S1 ingest, append-only: validated rows append to the raw micro-batch
-    * buffer; the background flusher pins buffered posts as ONE batch —
-    * O(buffered) work per flush; LWW conflict resolution happens at read
-    * ([[dedupedPoints]]) and at compaction.
-    *
-    * Returns the number of samples that pass validation and will be
-    * written — the count a PRW 2.0 response reports in
-    * `X-Prometheus-Remote-Write-Samples-Written`.
-    */
-  def write(series: Seq[PromSeries], tenant: String,
-      ttlSec: Long = DefaultTtlSec): Long = {
-    val nSamples = series.iterator.map(_.samples.size.toLong).sum
-    if (nSamples == 0) return 0L
-    writesTotal.incrementAndGet()
-    pointsWrittenTotal.addAndGet(nSamples)
-    // label-name union + oldest-sample probe in plain Scala over the
-    // request series (they are already on the driver; mirroring
-    // ingestLabeled's validation costs no extra Spark job per write).
-    // Validity is a LABELS predicate, so it is series-granular: every
-    // sample of a valid series counts toward the written-samples stat
-    val valid = series.filter(s =>
-      s.samples.nonEmpty
-        && s.labels.keysIterator.forall(Ingest.validNameStr)
-        && s.labels.get("__name__").exists(Ingest.validNameStr)
-        // null value = invalid, matching ingestLabeled: the Spark-side
-        // forall over map_values yields NULL for a null element and the
-        // where() drops the row — counting it here would over-report the
-        // written-samples stat
-        && s.labels.valuesIterator.forall(v =>
-          v != null && !v.exists(c => c <= 3.toChar)))
-    val batchNames = valid.iterator
-      .flatMap(_.labels.collect {
-        case (k, v) if v != null && v.nonEmpty && k != tenantLabel => k
-      }).toSeq.distinct :+ tenantLabel
-    val minTs =
-      if (valid.isEmpty) Long.MaxValue
-      else valid.iterator.flatMap(_.samples.iterator.map(_._1)).min
-    synchronized {
-      writeSeq += 1
-      if (ttlSec != DefaultTtlSec) ttlSeen = true
-      labelNames = (labelNames ++ batchNames).distinct.sorted
-      pending :+= new PendingPost(series, writeSeq, ttlSec, minTs, tenant)
-      pendingRowCount += nSamples
-      // group commit: the post-count threshold submits only when the
-      // flusher is IDLE — while a pin is in flight, posts keep buffering
-      // and the next flush adapts its size to the pin latency (the
-      // reference's batch deadline plays this role; a fixed post count
-      // queues pins faster than they materialize and the backpressure
-      // stall becomes the ingest bound). The ROW threshold submits
-      // unconditionally — it is the driver-memory bound.
-      if ((pending.size >= flushEveryPosts && queuedFlushes.get == 0) ||
-        pendingRowCount >= flushEveryRows) submitFlush()
-    }
-    // backpressure waits for a queue SLOT, not the whole queue: the old
-    // full drain (flushPending) parked every overloaded writer until the
-    // ENTIRE backlog pinned, then released them as a herd that refilled
-    // it instantly — measured at 16 flat-out writers as a 107 k → 40 k
-    // pts/s collapse with 2.7 s write p99 (SOAK_BENCH_pinseries_16w).
-    // A slot wait keeps the flusher saturated and releases writers one
-    // pin at a time; the driver-memory bound is unchanged (same queue
-    // cap — the waiting writer's own post is already buffered either
-    // way, and the group-commit chain in pinBatchImpl keeps submitting
-    // while writers wait).
-    while (queuedFlushes.get >= MaxQueuedFlushes) Thread.sleep(1)
-    valid.iterator.map(_.samples.size.toLong).sum
-  }
-
-  /** Posts buffered but not yet submitted to the flusher
-    * (tests/introspection).
-    */
-  def bufferedPosts: Int = synchronized(pending.size)
-
-  /** (budgeted reads served without a drain, of those served from the
-    * compacted head alone) — tier attribution for [[readView]], used by
-    * the soak harness to report how often each tier actually fired. */
-  def staleReadCounts: (Long, Long) =
-    (staleReadsTotal.get, staleHeadReadsTotal.get)
-
-  /** Snapshot the buffer and queue its pin on the flusher. Caller MUST
-    * hold `this`. Returns the future of the LAST submitted flush —
-    * the flusher is single-threaded, so its completion implies every
-    * earlier flush completed too.
-    */
-  private def submitFlush(): java.util.concurrent.Future[_] = {
-    if (pending.nonEmpty) {
-      val snap = pending
-      // caller holds `this`, so no post can be appending concurrently:
-      // every post acked before this instant is in `snap` or an earlier
-      // snapshot — when THIS pin lands, pinnedThroughWallMs may advance
-      // here (FIFO flusher ⇒ earlier snapshots landed first)
-      val snapWallMs = System.currentTimeMillis()
-      pending = Vector.empty
-      pendingRowCount = 0L
-      queuedFlushes.incrementAndGet()
-      lastFlush = flushExec.submit(new Runnable {
-        def run(): Unit = pinBatch(snap, snapWallMs)
-      })
-    }
-    lastFlush
-  }
-
-  /** Drain the flusher: every buffered post is pinned when this returns.
-    * Called from reads (read-your-writes), compaction, and stop; without
-    * reads, staleness is bounded by `flushEveryPosts`/`flushEveryRows`
-    * (buffered rows are driver memory either way — durability starts at
-    * the cold spill, exactly as before). NEVER call while holding `this`:
-    * the flusher needs the lock for its append and would deadlock.
-    */
-  private def flushPending(): Unit = {
-    val f = synchronized(submitFlush())
-    f.get()
-  }
-
-  /** Test hook: block until every queued flush has pinned (the count
-    * threshold submits asynchronously, so a spec asserting on
-    * [[pendingBatches]] right after a threshold write would race the
-    * flusher).
-    */
-  private[graft] def drainFlushes(): Unit = flushPending()
-
   /** The active session each facade executor's threads see, by thread
     * name (tests; the handler pool only once [[start]] ran).
     */
-  private[graft] def threadSessions(): Map[String, Option[SparkSession]] = {
-    val probe: java.util.concurrent.Callable[(String, Option[SparkSession])] =
-      () => Thread.currentThread.getName -> SparkSession.getActiveSession
-    (Seq(flushExec, compactExec) ++ serverPool)
-      .map(_.submit(probe).get()).toMap
-  }
-
-  /** The hot-batch view a read should scan, staleness-aware. Default
-    * (no header) is strict read-your-writes: drain the flush queue, then
-    * serve everything. A read carrying `X-SquirrelDB-Max-Staleness: S`
-    * (seconds) instead accepts any view that includes every sample
-    * acked ≥ S ago — and gets the CHEAPEST such view (freshness is the
-    * constraint, latency the objective; the same freshness/latency trade
-    * as the reference's T6 read-side slack — `batch/batch.go:72-74,
-    * 800-806` widens memory-store reads by `memoryOverreadMs` rather
-    * than forcing alignment):
-    *
-    *  1. the shortest batch PREFIX whose completeness stamp covers the
-    *     budget — with the head compacted every `compactEvery` pins and
-    *     the raw tail delta-folded every `deltaFoldEvery` pins (r13),
-    *     the typical hit is [head, a few mids]: bounded scan depth no
-    *     matter how hard the writers are pushing. (The r12 shape served
-    *     either the head ALONE or the FULL `compactEvery`-deep union;
-    *     its read p99 paid that deep union whenever the head stamp
-    *     missed the budget — the r12 soak measured 3.66 s p99 against a
-    *     248 ms p50 from exactly this cliff.)
-    *  2. the full pinned union, when even the newest batch stamp is too
-    *     old but [[pinnedThroughWallMs]] still covers the budget;
-    *  3. a budget-bounded drain ([[drainToBudget]], r16) — wait until
-    *     the oldest overdue snapshots pin, not until the whole backlog
-    *     does. The guarantee is real (every sample acked ≥ S ago is in
-    *     the served view) but a lapsed budget no longer pays for the
-    *     fresh tail: under a rewrite-window backlog the queue refills
-    *     while a full drain waits, and the r16 ceiling soak measured
-    *     those full drains at 50-160 s — most of it spent pinning data
-    *     the budget never asked for. Header-less reads still take the
-    *     strict whole-queue [[flushPending]] path.
-    */
-  private def readView(): (Vector[DataFrame], Boolean) = {
-    val budget = readStalenessMs.get
-    if (budget == null || budget.longValue <= 0) {
-      flushPending(); return (batches, headCompacted)
-    }
-    val (quiesced, bs, hc, walls, pinnedThrough) = synchronized {
-      val q = pending.isEmpty && queuedFlushes.get == 0
-      // fully quiesced under the lock ⇒ everything acked is pinned NOW
-      // (write() appends under `this`; queuedFlushes releases only after
-      // the snapshot's append or re-prepend)
-      if (q) pinnedThroughWallMs = System.currentTimeMillis()
-      // the stamp must be captured WITH the batch snapshot: a pin landing
-      // after this block advances pinnedThroughWallMs for the NEW
-      // `batches`, not for the `bs` captured here — checking the live
-      // volatile below would let tier 2 serve a snapshot missing rows
-      // acked longer ago than the budget (rows can sit in `pending` far
-      // longer than their snapshot's wall stamp suggests)
-      (q, batches, headCompacted, batchWallMs, pinnedThroughWallMs)
-    }
-    if (quiesced) return (bs, hc)
-    val now = System.currentTimeMillis()
-    // shortest PREFIX whose completeness stamp covers the budget:
-    // walls(i) stamps "every post acked at or before walls(i) is in
-    // batches[0..i]" (FIFO flusher), so any prefix is a consistent
-    // earlier view of the store and the stamps ascend — the first
-    // covering index is the cheapest adequate view. i == 0 with a
-    // compacted head is the original tier 1; with delta folds the
-    // typical hit is [head, a few mids], never the raw tail.
-    val i = walls.indexWhere(w => now - w <= budget.longValue)
-    if (i >= 0) {
-      staleReadsTotal.incrementAndGet()
-      if (i == 0 && hc) staleHeadReadsTotal.incrementAndGet()
-      (bs.take(i + 1), hc)
-    } else if (now - pinnedThrough <= budget.longValue) {
-      staleReadsTotal.incrementAndGet()
-      (bs, hc)
-    } else {
-      drainToBudget(budget.longValue)
-    }
-  }
-
-  /** Tier-3 drain, bounded by the staleness budget (r16): the flush
-    * queue is FIFO and the completeness stamps ascend, so coverage is
-    * restored the moment the oldest OVERDUE snapshots pin — not when
-    * the entire backlog does. The pre-r16 tier 3 called
-    * [[flushPending]] (wait for the LAST queued snapshot); under a
-    * rewrite-window backlog that makes the reader pay for the fresh
-    * tail too, and the tail keeps refilling while the drain waits —
-    * the r16 ceiling soak (8 writers at ~150 k pts/s offered, cold
-    * rewrites co-located) measured exactly those whole-queue drains as
-    * its 50-160 s read spikes. Waiting only to coverage serves the
-    * documented header contract ("any view that includes every sample
-    * acked ≥ S ago") at the cheapest point the contract admits.
-    *
-    * Each wait slice rides the in-flight flush future (`get` with a
-    * 50 ms timeout), so a pin failure surfaces to the reader exactly
-    * as `flushPending().get()` would, and a completed future triggers
-    * re-submission of whatever buffered since — the loop makes the
-    * same progress guarantee as repeated flushPending calls without
-    * ever waiting past the first covering stamp.
-    */
-  private def drainToBudget(budgetMs: Long): (Vector[DataFrame], Boolean) = {
-    // the freshness horizon is pinned at ENTRY — staleness is measured
-    // from request arrival, not from a moving "now": a re-evaluated
-    // horizon is a livelock under sustained refill (per-pin latency
-    // above the budget means no stamp is ever fresh enough when it
-    // lands), while the entry horizon is covered at latest by the
-    // snapshot this drain submits itself (its wall stamp IS the entry
-    // instant), so termination is one overdue-prefix drain, never the
-    // refilling tail
-    val horizon = System.currentTimeMillis() - budgetMs
-    var f = synchronized(submitFlush())
-    while (true) {
-      val (quiesced, bs, hc, walls, pinnedThrough) = synchronized {
-        val q = pending.isEmpty && queuedFlushes.get == 0
-        if (q) pinnedThroughWallMs = System.currentTimeMillis()
-        (q, batches, headCompacted, batchWallMs, pinnedThroughWallMs)
-      }
-      if (quiesced) return (bs, hc)
-      // first covering index: walls ascend, so batches[0..i] contain
-      // every post acked at or before walls(i) >= horizon
-      val i = walls.indexWhere(_ >= horizon)
-      if (i >= 0) return (bs.take(i + 1), hc)
-      if (pinnedThrough >= horizon) return (bs, hc)
-      if (f == null || f.isDone) f = synchronized(submitFlush())
-      if (f == null) Thread.sleep(1) // not quiesced ⇒ transiently racing
-      else
-        try f.get(50, java.util.concurrent.TimeUnit.MILLISECONDS)
-        catch { case _: java.util.concurrent.TimeoutException => () }
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
-  /** Pin one flush snapshot as ONE batch — runs on the flusher thread.
-    * One encoder pass + one ingest plan for the whole snapshot; only the
-    * batch append takes the write lock (the Spark job itself runs
-    * unlocked, so posts keep appending while a pin materializes).
-    */
-  private def pinBatch(
-      snap: Vector[PendingPost], snapWallMs: Long): Unit = {
-    // Failure safety: the rows in `snap` were already acknowledged 200 to
-    // the writing client, so a pin failure must NOT drop them. On any
-    // throw, re-prepend the snapshot to `pending` (the next flush — or
-    // the read-side drain — re-pins it) and ALWAYS release the
-    // queuedFlushes slot, or the MaxQueuedFlushes backpressure threshold
-    // would be consumed forever. The exception still propagates through
-    // the Future so `flushPending().get()` surfaces it to the caller
-    // that forced the drain.
-    // the write-side pool: under FAIR mode the pin stream shares task
-    // slots with concurrent reads instead of starving them (see handle())
-    spark.sparkContext.setLocalProperty("spark.scheduler.pool",
-      "graft-writes")
-    var pinned = false
-    try pinBatchImpl(snap, onPinned = () => {
-      pinned = true
-      // onPinned runs under `this` right after the batch append: the
-      // snapshot's rows are now readable, so the staleness bound moves
-      pinnedThroughWallMs = math.max(pinnedThroughWallMs, snapWallMs)
-      batchWallMs :+= snapWallMs
-    })
-    finally {
-      // re-prepend BEFORE releasing the slot: a staleness-bounded read's
-      // quiesce check (pending.isEmpty && queuedFlushes == 0) must never
-      // observe a failed snapshot's rows in neither place — holding the
-      // slot until the rows are back in `pending` keeps the transient
-      // error on the "not yet quiesced" side, matching the overcount
-      // discipline documented at the submit site
-      if (!pinned) synchronized {
-        pending = snap ++ pending
-        pendingRowCount += snap.iterator.map(_.rowCount).sum
-      }
-      queuedFlushes.decrementAndGet()
-    }
-  }
-
-  private def pinBatchImpl(
-      snap: Vector[PendingPost], onPinned: () => Unit): Unit = {
-    import spark.implicits._
-    // one driver row per SERIES, samples riding as a (ts_ms, value)
-    // array: [[Ingest.ingestLabeled]] only touches `labels`, so the
-    // validation regexes and the canonical-encode + xxhash64 run once
-    // per series; the explode to sample rows happens AFTER, inside the
-    // same codegen stage (the pre-r16 flat shape paid all label work
-    // per SAMPLE — at the soak's 10-samples-per-series posts that was
-    // the single-threaded flusher's measured ingest ceiling)
-    val perSeries = snap.flatMap(p => p.series.map(s =>
-      (s.labels, s.samples, p.seq, p.ttlSec, p.tenant)))
-    val nSamples = snap.iterator.map(_.rowCount).sum
-    val df = perSeries.toDF(
-      "labels", "samples", "__seq", "__ttl_sec", "__tenant")
-    // per-post tenants ride the rows; ingestLabeled stamps the label from
-    // a column-less constant, so group by tenant value (facades serve ONE
-    // tenant label name — the per-row tenant VALUE is what varies)
-    val byTenant = perSeries.iterator.map(_._5).toSet
-    val ingested = byTenant.iterator.map { t =>
-      Ingest.ingestLabeled(df.where(col("__tenant") === t), tenantLabel, t)
-    }.reduce(_.unionByName(_))
-    // dashboard-sized flushes pin as ONE block: a LocalRelation inherits
-    // the session's default parallelism, and a 32-task job per flush is
-    // pure scheduling overhead for a few thousand rows (measured: the
-    // per-flush floor, not the encode, bounds small-post ingest). One
-    // partition per ~flushEveryRows keeps giant backfill flushes parallel.
-    val parts = math.max(1L, nSamples / flushEveryRows).toInt
-    val (batch, path) = pinHot(ingested
-      .select(col("labels"), explode(col("samples")).as("__s"),
-        col("metric_id"), col("__seq"), col("__ttl_sec"))
-      .select(col("labels"), col("__s._1").as("ts_ms"),
-        col("__s._2").as("value"), col("metric_id"), col("__seq"),
-        col("__ttl_sec"))
-      .coalesce(parts), "hot-batch")
-    val minTs = snap.map(_.minTs).min
-    synchronized {
-      batches :+= batch
-      batchMins :+= minTs
-      batchPaths :+= path
-      onPinned()
-      // group-commit chaining: posts that buffered past the threshold
-      // while THIS pin materialized get their flush now — without it
-      // they would wait for the next write or read. (queuedFlushes is
-      // released by the caller's finally AFTER this block, so the chained
-      // flush transiently sees an extra count — harmless: pendingBatches
-      // only overcounts toward "not yet quiesced".)
-      if (pending.size >= flushEveryPosts ||
-        pendingRowCount >= flushEveryRows) submitFlush()
-      if (minTs < lastSpillCutoff) coldDirty = true
-      pinsSinceFullFold += 1
-      // bounded union depth, OFF the write path: the fold runs in the
-      // background over a snapshot prefix, swapped in copy-on-write
-      maybeScheduleCompact()
-    }
-  }
-
-  /** Schedule a background fold when the append depth crosses the
-    * threshold — and RE-CHECK after each fold completes: batches
-    * appended while a fold was running would otherwise wait for the
-    * next write to cross the threshold again (a batch could sit
-    * unfolded and unspilled indefinitely on an idle store).
-    */
-  private def maybeScheduleCompact(): Unit = {
-    val fullWanted = pinsSinceFullFold >= compactEvery
-    // a full fold needs the COLD lock (it spills into the current cold
-    // generation); while compactCold's minutes-long rewrite (or a
-    // pre-agg / expiry sweep) holds it, the full DEMOTES to a delta
-    // fold so the raw pin tail stays bounded — the r13 hour soak proved
-    // every read-p99 spike window was exactly this dam (SCALE.md r13).
-    // pinsSinceFullFold is untouched by the delta path, so the full
-    // trigger stays armed and fires when the lock frees (withColdLock
-    // re-checks on release).
-    val full = fullWanted && !compactLock.isLocked
-    val delta = deltaFoldEvery > 0 && rawTailLen >= deltaFoldEvery
-    if ((full || delta) && compacting.compareAndSet(false, true)) {
-      // checked AFTER claiming the flag: once stop() has set `stopped`
-      // and seen the flag clear, no fold can start behind its back
-      if (stopped) compacting.set(false)
-      else compactExec.execute { () =>
-        try {
-          if (pinsSinceFullFold >= compactEvery && compactLock.tryLock())
-            try compactNow() finally compactLock.unlock()
-          else if (deltaFoldEvery > 0) deltaFoldNow()
-        }
-        finally compacting.set(false)
-        maybeScheduleCompact()
-      }
-    }
-  }
-
-  /** Raw (unfolded) pins at the tail of the batch vector. */
-  private def rawTailLen: Int = {
-    val (b, hc, mids) = (batches, headCompacted, midBatches)
-    b.size - (if (hc && b.nonEmpty) 1 else 0) - mids
-  }
-
-  /** Batches appended since the last completed compaction, INCLUDING
-    * flush snapshots queued on the flusher but not yet pinned — so
-    * "pendingBatches == 0" still means fully quiesced (pinned AND
-    * folded), exactly what restart/spill tests and operators poll for.
-    */
-  def pendingBatches: Int = pinnedPending + queuedFlushes.get
-
-  /** Mid (delta-folded) batches between head and raw tail (tests/soak). */
-  private[graft] def midCount: Int = midBatches
-
-  /** Total pinned hot relations: head + mids + raw tail (tests/soak). */
-  private[graft] def hotDepth: Int = batches.size
-
-  /** Staged hot pins the store still tracks for reclaim at [[stop]]:
-    * the live batches plus the retirees awaiting their grace (tests).
-    */
-  private[graft] def trackedPins: Int = hotScope.size
-
-  /** PINNED batches since the last completed compaction — the compact
-    * trigger counts only these (a queued-but-unpinned flush must not
-    * start a fold that would miss it).
-    */
-  private def pinnedPending: Int = {
-    val (b, hc) = (batches, headCompacted)
-    b.size - (if (hc && b.nonEmpty) 1 else 0)
-  }
-
-  /** The raw appended store (tests/introspection): a union of pinned
-    * batches between compactions — never an aggregate.
-    */
-  def rawPoints: Option[DataFrame] = {
-    flushPending()
-    unionAll(batches)
-  }
-
-  private def unionAll(bs: Vector[DataFrame]): Option[DataFrame] =
-    bs.reduceOption(_.unionByName(_))
-
-  /** The LWW dedup shape shared by reads and compaction: later writes win
-    * per (series, ts); ties break on value (O2 semantics,
-    * `types/metric.go:71-95`).
-    */
-  private def lwwDedup(df: DataFrame): DataFrame =
-    df.groupBy("metric_id", "ts_ms")
-      .agg(
-        max_by(col("labels"), col("__seq")).as("labels"),
-        max_by(col("value"), struct(col("__seq"), col("value"))).as("value"),
-        max(col("__seq")).as("__seq"),
-        max(col("__ttl_sec")).as("__ttl_sec"))
-
-  /** Fold the accumulated batches into one deduped, pinned batch.
-    * Copy-on-write: the Spark job runs over a SNAPSHOT prefix outside the
-    * write lock; the swap keeps any batches appended meanwhile (their
-    * higher `__seq` still wins read-side LWW). Synchronous — the write
-    * path schedules it on `compactExec` instead of calling it inline.
-    */
-  def compact(): Unit = {
-    flushPending()
-    withColdLock(compactNow())
-  }
-
-  // COLD-tier lock: everything that touches the durable store — the
-  // full fold's spill (it appends into the current cold generation),
-  // compactCold's generation rewrite, pre-aggregation, the expiry
-  // sweep — serializes here, WITHOUT blocking writes (which append
-  // under `this`-lock only) and, as of r14, WITHOUT blocking delta
-  // folds: the r13 hour soak proved every read-p99 spike window (6-12 s)
-  // was compactCold's minutes-long rewrite holding this lock while the
-  // raw pin tail climbed to depth 22-30 (SCALE.md r13). Reentrant so
-  // compactCold → compactNow → preAggregate compose. Lock order is
-  // always compactLock → foldLock, never the reverse.
-  private val compactLock = new java.util.concurrent.locks.ReentrantLock
-  private def withColdLock[A](f: => A): A = {
-    compactLock.lock()
-    try f finally {
-      compactLock.unlock()
-      // a full fold that demoted to delta while this op held the lock
-      // left its trigger armed — re-check now instead of waiting for
-      // the next write (an idle store could otherwise sit unfolded)
-      maybeScheduleCompact()
-    }
-  }
-  // HOT-vector restructure lock (r14): delta and full folds serialize
-  // their snapshot/prefix-swap arithmetic here — one fold at a time —
-  // while the cold tier stays independently lockable, so a delta fold
-  // can bound the read-side union depth DURING a cold rewrite.
-  private val foldLock = new Object
-
-  /** Write-cadence DELTA fold (the r13 read-tail fix): collapse the raw
-    * pin tail into ONE deduped "mid" batch. Folding a CONTIGUOUS run of
-    * batches preserves read-side LWW exactly — per-(series, ts) argmax
-    * over (__seq, value) is associative, the same property the full
-    * fold's prefix swap already relies on. No spill, no TTL/expiry dim
-    * upkeep, no pre-agg — all durable-tier work stays on the full
-    * fold's `compactEvery` cadence; this fold exists purely to bound a
-    * bounded-staleness read's union depth (p99 was paying a
-    * `compactEvery`-deep scan whenever the head stamp missed the
-    * budget). Cost per fold is O(deltaFoldEvery pins), off the read
-    * path, on the write-side scheduler pool.
-    */
-  private def deltaFoldNow(): Unit = foldLock.synchronized {
-    // upkeep pool, NOT graft-writes: within a FIFO pool jobs run in
-    // submit order, so any restructure job submitted ahead of a pin
-    // stalls that pin for the restructure's whole runtime — and a pin
-    // stall ages the completeness stamps past the staleness budget,
-    // which cascades into read-side drains that wait on the same dammed
-    // pins (the r14 hour soak measured exactly this: its 13-33 s read
-    // spikes were precisely its 7 non-stale drain reads, each during a
-    // cold compaction). Pins are ack-backed latency work; folds,
-    // spills, rewrites and pre-agg are background upkeep — they get
-    // their own pool so the pin lane is never queued behind them.
-    spark.sparkContext.setLocalProperty("spark.scheduler.pool",
-      "graft-upkeep")
-    val (snap, snapMins, snapWalls, snapPaths, prefixLen) = synchronized {
-      ((batches, batchMins, batchWallMs, batchPaths,
-        (if (headCompacted && batches.nonEmpty) 1 else 0) + midBatches))
-    }
-    val raw = snap.drop(prefixLen)
-    if (raw.size < 2) return
-    val (folded, foldedPath) =
-      pinHot(lwwDedup(unionAll(raw).get), "hot-midfold")
-    synchronized {
-      // the prefix [0, prefixLen) is stable (folds serialize on
-      // foldLock) and appends only extend the tail, so the
-      // take/drop arithmetic below cannot misalign
-      batches = batches.take(prefixLen) ++
-        (folded +: batches.drop(snap.size))
-      batchMins = batchMins.take(prefixLen) ++
-        (snapMins.slice(prefixLen, snap.size).min +:
-          batchMins.drop(snap.size))
-      batchPaths = batchPaths.take(prefixLen) ++
-        (foldedPath +: batchPaths.drop(snap.size))
-      // the mid's completeness stamp = its newest member's (the prefix
-      // through this mid contains every post acked at or before it)
-      batchWallMs = batchWallMs.take(prefixLen) ++
-        (snapWalls.slice(prefixLen, snap.size).foldLeft(0L)(math.max) +:
-          batchWallMs.drop(snap.size))
-      midBatches += 1
-      // delta retirees ACCUMULATE (deleted only by the full fold after
-      // next, one full generation of grace — ADVICE r13); nothing drops
-      // on the delta cadence
-      retiredCurGen = retiredCurGen ++ snapPaths.slice(prefixLen, snap.size)
-    }
-  }
-
-  /** The FULL fold. Callers must hold [[compactLock]] (the spill below
-    * appends into the current cold generation); the hot-vector swap
-    * itself serializes on [[foldLock]] so delta folds can't restructure
-    * the prefix mid-snapshot. `tasks` sizes the spill and pre-agg writes
-    * (0 = the session's shuffle parallelism).
-    */
-  private def compactNow(tasks: Int = 0): Unit = {
-    require(compactLock.isHeldByCurrentThread,
-      "compactNow requires the cold lock (it spills)")
-    val aggTo = foldLock.synchronized {
-    // background-upkeep pool, not the pin lane (see deltaFoldNow)
-    spark.sparkContext.setLocalProperty("spark.scheduler.pool",
-      "graft-upkeep")
-    // (batches, batchMins) snapshot under the write lock — a concurrent
-    // write could otherwise publish the new vector before its mins entry
-    val (snap, snapMins, snapWalls) =
-      synchronized((batches, batchMins, batchWallMs))
-    // snapshot the block flag ONCE: re-reading the volatile at each gate
-    // lets a concurrent block+unblock skip the sidecar yet still spill —
-    // reintroducing the stale-sidecar hazard the ordering below fixes
-    val blocked = coldWritesBlocked
-    // an already-compacted head is only skippable when it has nothing to
-    // spill — data ages past the horizon (or a lifted write block leaves
-    // aged data behind), and the fold below is what tiers it out
-    val spillable = coldPath.nonEmpty && !blocked &&
-      snapMins.nonEmpty &&
-      snapMins.min < System.currentTimeMillis() - hotRetainMs
-    if (snap.isEmpty || (snap.size == 1 && headCompacted && !spillable))
-      return
-    val snapMin = snapMins.min
-    val (folded0, folded0Path) =
-      pinHot(lwwDedup(unionAll(snap).get), "hot-fold")
-    // T9 dim upkeep: fold the snapshot's per-series TTLs into the pinned
-    // dim BEFORE the swap (spilled rows leave memory here, so this is the
-    // last cheap look at them). Series that max-merge back to the default
-    // sentinel drop out of the dim.
-    val newDim = if (!ttlSeen) None else {
-      val delta = unionAll(snap).get
-        .groupBy("metric_id").agg(max(col("__ttl_sec")).as("__ttl_sec"))
-      val merged = ttlDim.fold(delta)(_.unionByName(delta))
-        .groupBy("metric_id").agg(max(col("__ttl_sec")).as("__ttl_sec"))
-        .where(col("__ttl_sec") =!= DefaultTtlSec)
-      Some(merged.localCheckpoint(true))
-    }
-    // restart sidecars land BEFORE the spill (ADVICE r8): the persisted
-    // writeSeq is monotonically ≥ any __seq about to reach the cold tier
-    // and the merged TTL dim already covers the spilling rows, so a crash
-    // between sidecar and spill leaves only an over-claiming sidecar
-    // (harmless — new writes still outrank everything on disk). The old
-    // after-spill order left a window where a crash kept a STALE sidecar:
-    // restart would restore a writeSeq lower than seqs already spilled
-    // (post-restart rewrites silently losing read-side LWW) and TTLs
-    // first seen in that window never reached the persisted dim.
-    if (!blocked) {
-      // stage-then-rename, same discipline as the mutable dim (ADVICE
-      // r8): an in-place Overwrite could tear the only on-disk TTL copy —
-      // the full-history bootstrap fallback would mask it, but only at
-      // the cost of a cold rescan on the next restart
-      newDim.foreach(d => ttlDimPath.foreach(tp => atomicOverwrite(d, tp)))
-      persistMeta()
-    }
-    // series-expiry refresh (the reference refreshes each written series'
-    // expiration day, `cassandra/index/index.go:1516-1531`): each fold
-    // APPENDS per-series (max ts + ttl, label names) refresh rows —
-    // appends ARE the refresh, [[sweepExpiredSeries]] compacts them out
-    // of band. The names ride along so the sweep re-derives the live
-    // label-name list from this per-series dim instead of re-exploding
-    // the whole cold tier. Same before-spill discipline: a duplicate
-    // append after a crash-and-redo max-merges away; a missing one could
-    // expire a live series.
-    if (!blocked) expiryPath.foreach { ep =>
-      folded0.groupBy("metric_id")
-        .agg((max(col("ts_ms")) + max(col("__ttl_sec")) * 1000L)
-          .as("expiration_ms"),
-          // one series = one label map (metric_id is its hash), so any
-          // row's key set is THE key set
-          first(map_keys(col("labels"))).as("names"))
-        .write.mode(org.apache.spark.sql.SaveMode.Append).parquet(ep)
-    }
-    // S8 tiering: points older than the hot horizon spill to the durable
-    // day-partitioned parquet store (APPEND — late duplicates resolve
-    // read-side by __seq); the spill lands BEFORE the swap so a write
-    // failure loses nothing
-    // two DIFFERENT frontiers come out of a spill and must not be
-    // conflated (r13): `aggTo` is a TIME frontier — data at/below the
-    // wall-derived cutoff is final-modulo-repair, the reference's
-    // fullyAggregatedAt semantics, and may legitimately run ahead of
-    // the data; `overlapTo` is a DATA frontier — the max key actually
-    // on disk + 1. Using the time frontier for overlap detection made
-    // every workload whose event time lags the wall clock (backfill /
-    // replay streams; the r13 soak's synthetic clock) permanently
-    // coldDirty: EVERY write landed "behind" the frontier, so every
-    // read paid a global LWW shuffle over hot ∪ cold (measured: read
-    // exec 2 s → 49 s as the cold tier grew, then heap death). A write
-    // can only duplicate a disk key if it reaches at or below the max
-    // spilled ts; the max runs over the pinned fold, one cheap pass.
-    val (folded, foldedPath, foldedMin, aggTo, overlapTo) = coldPath match {
-      case Some(_) if blocked =>
-        (folded0, folded0Path, snapMin, Long.MinValue, Long.MinValue)
-      case Some(path) =>
-        val cutoff = System.currentTimeMillis() - hotRetainMs
-        val spill = folded0.where(col("ts_ms") < cutoff)
-        if (spill.limit(1).count() == 0)
-          (folded0, folded0Path, snapMin, Long.MinValue, Long.MinValue)
-        else {
-          spillToCold(spill, path)
-          val spilledMax =
-            spill.agg(max(col("ts_ms"))).head().getLong(0)
-          // TWCS bookkeeping: every day this spill may have appended
-          // into becomes dirty for the next generation rewrite. The
-          // range form [snapMin, spilledMax] is conservative (snapMin
-          // IS the spill's min — the kept side is all >= cutoff) and
-          // costs no extra job; a backfill too wide to track falls
-          // back to None → one full rewrite
-          synchronized {
-            dirtyColdDays = trackDirtyDays(dirtyColdDays,
-              snapMin, spilledMax)
-          }
-          val (trimmed, tp) =
-            pinHot(folded0.where(col("ts_ms") >= cutoff), "hot-fold")
-          (trimmed, tp, cutoff, cutoff, spilledMax + 1)
-        }
-      case None => (folded0, folded0Path, snapMin, Long.MinValue, Long.MinValue)
-    }
-    val dropNow = synchronized {
-      val tailMins = batchMins.drop(snap.size)
-      if (overlapTo != Long.MinValue) {
-        // keys below the PREVIOUS frontier may already be on disk, and
-        // batches appended DURING the fold may now sit below the new one
-        if (snapMin < lastSpillCutoff) coldDirty = true
-        if (tailMins.exists(_ < overlapTo)) coldDirty = true
-        // monotone: a later fold can spill a LOWER max (backfill data
-        // below an earlier spill's keys) — the frontier keeps covering
-        // everything ever written to disk
-        lastSpillCutoff = math.max(lastSpillCutoff, overlapTo)
-        spillTimeFrontier = math.max(spillTimeFrontier, aggTo)
-      }
-      newDim.foreach(d => ttlDim = Some(d))
-      val snapPaths = batchPaths.take(snap.size)
-      batches = folded +: batches.drop(snap.size)
-      batchMins = foldedMin +: tailMins
-      batchPaths = foldedPath +: batchPaths.drop(snap.size)
-      // the fold's view-completeness stamp: the newest folded batch's
-      // (max for the restart-less empty-stamp edge, where a pre-stamp
-      // head carries 0 — monotonicity keeps tier 1 conservative)
-      batchWallMs = snapWalls.take(snap.size)
-        .foldLeft(0L)(math.max) +: batchWallMs.drop(snap.size)
-      headCompacted = true
-      // everything folded — mids included; pins appended DURING the
-      // fold (the remaining raw tail) count toward the next full fold
-      midBatches = 0
-      pinsSinceFullFold = batches.size - 1
-      // retire superseded staged pins with ONE FULL-fold generation of
-      // grace (readers holding plans over the old batches finish their
-      // scans — the coldGen discipline); the PREVIOUS generation's
-      // retirees (including delta-fold retirees accumulated since —
-      // ADVICE r13) delete now, outside the lock
-      val out = retiredPrevGen
-      retiredPrevGen = retiredCurGen ++ snapPaths ++
-        Option(folded0Path).filter(_ != foldedPath)
-      retiredCurGen = Vector.empty
-      out
-    }
-    dropNow.foreach(p => graft.store.Stage.drop(spark, hotScope, p))
-    aggTo
-    }
-    if (aggTo != Long.MinValue) {
-      // the spill has committed: only now may the sidecar carry its time
-      // frontier, which bounds a post-restart on-demand preAggregate
-      persistMeta()
-      // A5 at compaction: data behind the spill frontier is final
-      // (modulo explicit backfill repair) — extend agg_5m up to it,
-      // incrementally. OUTSIDE foldLock: pre-agg is durable-tier work
-      // (compactLock is held) and must not dam delta folds any more
-      // than compactCold may
-      preAggregateWith(aggTo, tasks)
-    }
-  }
-
-  /** The expiration sweep (reference `cassandra/index/index.go:2138-2291`
-    * runs it as a background purge): compact the expiry dim to per-series
-    * max expiration, drop entries whose refreshed expiration passed, and
-    * re-derive the label-name list so expired series fall out of the
-    * label APIs. Returns dropped count.
-    *
-    * Cost discipline (judge r7 Wrong #3): the names come from the
-    * per-series expiry dim (each refresh row carries its series' label
-    * names) unioned with the small in-memory hot tier — O(live series),
-    * NEVER a scan of the cold point history, which at 100 TB would be
-    * three orders more I/O than the dim the sweep just compacted.
-    */
-  def sweepExpiredSeries(
-      nowMs: Long = System.currentTimeMillis()): Long =
-    withColdLock {
-      expiryPath.filter(isDir).fold(0L) { ep =>
-        import spark.implicits._
-        val dropped =
-          graft.store.Store.expireSeries(spark, ep, nowMs, Seq("names"))
-        val dimNames = spark.read.parquet(ep)
-          .select(explode(col("names")).as("n"))
-          .distinct().as[String].collect().toSeq
-        val hotNames = unionAll(synchronized(batches)) match {
-          case Some(h) =>
-            h.select(explode(map_keys(col("labels"))).as("n"))
-              .distinct().as[String].collect().toSeq
-          case None => Nil
-        }
-        labelNames = (dimNames ++ hotNames).distinct.sorted
-        dropped
-      }
-    }
-
-  /** Out-of-band cold-tier compaction: rewrite the durable store deduped
-    * into the NEXT snapshot generation, then flip (clears the overlap
-    * flag so reads go back to pure scans). Readers holding plans over
-    * the previous generation keep scanning it — one retired generation
-    * stays on disk as the grace window, the one before it is removed.
-    */
-  def compactCold(): Unit = withColdLock {
-    // the generation rewrite is the longest upkeep job in the facade —
-    // minutes at scale — and it must never queue ahead of a pin in a
-    // shared FIFO pool (see deltaFoldNow)
-    spark.sparkContext.setLocalProperty("spark.scheduler.pool",
-      "graft-upkeep")
-    // FINE-GRAINED upkeep tasks: pool isolation schedules at TASK
-    // granularity — FAIR shares assign slots only when a task ends, so
-    // a rewrite cut into `cpus` giant tasks (each minutes long at a
-    // ~100M-point tier) still blocks every pin and read stage for one
-    // whole task duration once its tasks hold the slots. The r14
-    // pool-split soak measured exactly that remainder: its four
-    // 10-17 s spike windows were its four non-stale drain reads, each
-    // inside a long rewrite. 4x-finer write tasks bound the
-    // head-of-line wait at a quarter of a task — the standard
-    // fair-scheduler lever (shrink task size, not pool weight). The
-    // count is passed to every write the rewrite reaches, never set on
-    // the session conf, which concurrent writers share.
-    compactColdBody(spark.sparkContext.defaultParallelism * 4)
-  }
-
-  /** Rewrite-scoped task-granularity control for the LWW aggregate: the
-    * r14 4×-finer task count only covered the rewrite's WRITE stage; the
-    * dedup aggregate still ran at `spark.sql.shuffle.partitions` fat tasks —
-    * ~5-10 s each at a ~100 M-point tier — and FAIR assigns slots only
-    * as tasks END, so a pin job stalled up to a whole agg-task duration,
-    * the completeness stamps aged past the staleness budget, and the
-    * reader fell back to a drain (the residual spike windows the r14
-    * soak left and the r15 soak reproduced). Pre-partitioning on the
-    * dedup keys at the same 4×-finer count makes the aggregate ride
-    * this partitioning (HashPartitioning(keys) satisfies the groupBy's
-    * clustering requirement — no second exchange; the lost map-side
-    * combine is immaterial: rewrite inputs are mostly-unique keys), so
-    * head-of-line is bounded at a quarter-task on the agg stage too.
-    * NOT applied to read-side lwwDedup — reads keep their plan.
-    */
-  private def fineForUpkeep(df: DataFrame,
-      spec: graft.store.Store.BucketSpec, tasks: Int): DataFrame = {
-    // partition on the BUCKET columns only, at a multiple of the bucket
-    // count, so (a) the dedup groupBy still rides this one exchange
-    // (HashPartitioning(metric_id) satisfies
-    // ClusteredDistribution(metric_id, ts_ms) — subset rule), (b) each
-    // write task holds exactly one bucket (hash mod kn ≡ hash mod n
-    // (mod n)) so files stay k per bucket-day, (c) tasks stay k× finer
-    // than one-task-per-bucket, keeping the FAIR head-of-line bound at a
-    // fraction of a bucket
-    val k = math.max(1, (tasks + spec.n - 1) / spec.n)
-    df.repartition(k * spec.n, spec.cols.map(col): _*)
-  }
-
-  private def compactColdBody(tasks: Int): Unit = {
-    durablePath.filter(_ => !coldWritesBlocked).foreach { p =>
-      // fold + spill the hot side first, so no backfilled key lingers in
-      // memory after the flag clears (locks are reentrant here)
-      compactNow(tasks)
-      // snapshot the dirty-day set AFTER compactNow: its spill is the
-      // last possible append into g<coldGen> before the flip (spills
-      // serialize on compactLock, which we hold; delta folds never
-      // spill), so the snapshot is complete — clearing happens only
-      // after a successful flip, so a failed rewrite loses nothing
-      val tracked = synchronized(dirtyColdDays)
-      // sweep stale partial-rewrite staging dirs (a crash mid-build
-      // leaves one; it is never adopted — no g prefix — but should not
-      // leak disk across generation numbers)
-      locally {
-        val root = java.nio.file.Paths.get(p)
-        if (java.nio.file.Files.isDirectory(root))
-          java.nio.file.Files.list(root).iterator().asScala
-            .filter(_.getFileName.toString.startsWith("_build_g"))
-            .foreach(deleteRecursively)
-      }
-      coldPoints().foreach { c =>
-        val nextGen = coldGen + 1
-        val curDir = java.nio.file.Paths.get(s"$p/g$coldGen")
-        val existing: Seq[String] =
-          if (!java.nio.file.Files.isDirectory(curDir)) Seq.empty
-          else java.nio.file.Files.list(curDir).iterator().asScala
-            .map(_.getFileName.toString)
-            .filter(_.startsWith("day=")).toSeq
-        // LocalDate.toString is yyyy-MM-dd — the partition dir suffix;
-        // an unparseable dir (can't happen for ts_ms-derived days, but
-        // defensive) counts as clean and is carried forward verbatim
-        val dirty = tracked.map(s =>
-          existing.filter(d => scala.util.Try(
-            java.time.LocalDate.parse(d.stripPrefix("day=")))
-            .toOption.exists(s.contains)))
-        val rw0 = System.nanoTime()
-        def logRewrite(mode: String, nDirty: Int): Unit =
-          System.err.println(f"[graft compactCold] $mode dirtyDays=" +
-            f"$nDirty/${existing.size} gen=$coldGen " +
-            f"took=${(System.nanoTime() - rw0) / 1e9}%.1fs")
-        // layout of the generation being rewritten vs the target: a
-        // partial rewrite hardlink-carries g<N>'s files into g<N+1>, so
-        // both must share ONE spec — a mismatch (a sized count 4x off
-        // the current one) degrades to a full rewrite, which is also how
-        // the count changes. Inside the 4x band the generation keeps its count,
-        // so a resize waits for the data to grow (or shrink) 4x and all
-        // the bytes ever rewritten to resize stay ≤ ~4/3 of the tier
-        val curSpec = graft.store.Store.BucketSpec.read(curDir.toString)
-        // bytes per day: a clean day's from the generation's sidecar, a
-        // day spilled into since the build (all of them when provenance
-        // is unknown) listed again. Lazy, so a skip lists nothing and a
-        // partial rewrite lists only its dirty days
-        lazy val daySizes: Map[String, Long] = {
-          val listed = dirty.getOrElse(existing).toSet
-          val recorded = readDayBytes(curDir)
-          existing.map(d => d -> recorded.get(d).filterNot(_ => listed(d))
-            .getOrElse(dayBytes(curDir.resolve(d)))).toMap
-        }
-        lazy val wantSpec = {
-          val sized =
-            confBucketSpec(Some(daySizes.values.maxOption.getOrElse(0L)))
-          curSpec.filter(c => sized.n < 4L * c.n && 4L * sized.n > c.n)
-            .getOrElse(sized)
-        }
-        // build a generation dir under the staging discipline: through a
-        // throwaway catalog name (bucketBy requires saveAsTable; the
-        // table is EXTERNAL, so dropping it keeps the files) plus the
-        // manifest — the staging dir is never adopted, and the rename
-        // publishes data and manifest together
-        def buildGen(src: DataFrame, dir: String,
-            spec: graft.store.Store.BucketSpec): Unit = {
-          val buildTable = coldTableName(nextGen) + "_build"
-          spark.sql(s"DROP TABLE IF EXISTS `$buildTable`")
-          graft.store.Store.writeBucketedDays(
-            lwwDedup(fineForUpkeep(src, spec, tasks)), buildTable, dir, spec,
-            org.apache.spark.sql.SaveMode.Overwrite, tasks = 0)
-          spark.sql(s"DROP TABLE IF EXISTS `$buildTable`")
-          graft.store.Store.BucketSpec.write(dir, spec)
-        }
-        dirty match {
-          case Some(d) if d.isEmpty =>
-            // no spill since the last flip: the tier is already deduped
-            // and clustered — rewriting it would be pure waste. Keep
-            // aging out retired generations on the cadence.
-            retireGenerations(p, coldGen)
-            logRewrite("skip", 0)
-          case Some(d) if d.size * 2 < existing.size &&
-              curSpec.contains(wantSpec) =>
-            // PARTIAL (leveled) rewrite: dedup only the spilled-into
-            // days; every clean day is carried forward as hardlinks.
-            // Cost is O(dirty days), so compaction duration stays FLAT
-            // as the tier grows — at a 100 TB tier the cadence rewrite
-            // touches only the ingest frontier (typically 1-2 days),
-            // not the whole history. Built in a staging dir maxGenIn
-            // can never adopt (no `g` prefix); the atomic rename to
-            // g<N+1> is the commit point, so a crash at ANY step
-            // leaves either the intact g<N> alone or a complete
-            // g<N+1> — never a generation missing its clean days.
-            // Bucket ids are filename-encoded, so rewritten dirty days
-            // and hardlinked clean days compose into one consistent
-            // bucketed generation (same spec on both sides, enforced
-            // by the curSpec guard above).
-            val staging = java.nio.file.Paths.get(s"$p/_build_g$nextGen")
-            deleteRecursively(staging)
-            val slice = spark.read.parquet(curDir.toString)
-              .where(col("day").isin(d.map(x =>
-                java.sql.Date.valueOf(x.stripPrefix("day="))): _*))
-              .drop("day")
-            buildGen(slice, staging.toString, wantSpec)
-            existing.filterNot(d.contains).foreach { cd =>
-              linkTree(curDir.resolve(cd), staging.resolve(cd))
-            }
-            writeDayBytes(staging, daySizes -- d ++
-              d.map(x => x -> dayBytes(staging.resolve(x))))
-            java.nio.file.Files.move(staging,
-              java.nio.file.Paths.get(s"$p/g$nextGen"),
-              java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-            registerColdGen(nextGen)
-            finishColdFlip(p, nextGen)
-            logRewrite("partial", d.size)
-          case _ =>
-            // FULL rewrite: dirty-day provenance unknown (restart over
-            // an existing tier, too-wide backfill), most days dirty
-            // anyway (carry-forward buys nothing), or a bucket-count
-            // change (a sized count 4x off) that must not mix with
-            // carried files. Stream the
-            // rewrite — NO checkpoint:
-            // it reads g(N) and writes g(N+1) (different dirs, no
-            // self-overwrite hazard) for exactly one consumer, so
-            // pinning materialized the ENTIRE cold tier into
-            // block-manager memory for nothing, and those orphan
-            // blocks lingered until the cleaner's periodic GC (default
-            // 30 min) — the r13 soak's heap death curve tracked the
-            // compactCold cadence (r13). The target goes through the
-            // same staging + atomic-rename discipline (saveAsTable
-            // has no committer-level direct-to-final story for a dir a
-            // crash could leave half-written with a _SUCCESS-free but
-            // manifest-carrying state).
-            val staging = java.nio.file.Paths.get(s"$p/_build_g$nextGen")
-            deleteRecursively(staging)
-            buildGen(c, staging.toString, wantSpec)
-            writeDayBytes(staging, java.nio.file.Files.list(staging)
-              .iterator().asScala.map(_.getFileName.toString)
-              .filter(_.startsWith("day="))
-              .map(x => x -> dayBytes(staging.resolve(x))).toMap)
-            java.nio.file.Files.move(staging,
-              java.nio.file.Paths.get(s"$p/g$nextGen"),
-              java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-            registerColdGen(nextGen)
-            finishColdFlip(p, nextGen)
-            logRewrite("full", tracked.map(_.size).getOrElse(-1))
-        }
-      }
-    }
-  }
-
-  /** Sidecar of a cold generation: its data bytes per `day=` directory
-    * as they stood when the generation was built, so sizing the next
-    * rewrite re-lists only the days spilled into since.
-    */
-  private val DayBytesFile = "_daybytes"
-
-  /** Day directories listed to size a rewrite, for tests. */
-  private[graft] val daysListed = new java.util.concurrent.atomic.AtomicLong
-
-  /** [[dirBytes]] of one day directory, listed to size a rewrite. */
-  private def dayBytes(dir: java.nio.file.Path): Long = {
-    daysListed.incrementAndGet()
-    dirBytes(dir)
-  }
-
-  /** Data-file bytes of one directory (Spark's hidden `.`/`_` names
-    * skipped, as its reads skip them).
-    */
-  private def dirBytes(dir: java.nio.file.Path): Long = {
-    val fs = java.nio.file.Files.list(dir)
-    try fs.iterator().asScala
-      .filter(f => !f.getFileName.toString.startsWith(".") &&
-        !f.getFileName.toString.startsWith("_"))
-      .map(java.nio.file.Files.size).sum
-    finally fs.close()
-  }
-
-  private def readDayBytes(gen: java.nio.file.Path): Map[String, Long] = {
-    val f = gen.resolve(DayBytesFile)
-    if (!java.nio.file.Files.isRegularFile(f)) Map.empty
-    else java.nio.file.Files.readString(f).linesIterator.flatMap { l =>
-      l.split('\t') match {
-        case Array(d, b) => b.toLongOption.map(d -> _)
-        case _ => None
-      }
-    }.toMap
-  }
-
-  private def writeDayBytes(gen: java.nio.file.Path,
-      sizes: Map[String, Long]): Unit =
-    java.nio.file.Files.writeString(gen.resolve(DayBytesFile),
-      sizes.toSeq.sorted.map { case (d, b) => s"$d\t$b\n" }.mkString)
-
-  /** Publish cold generation `nextGen`: flip the read pointer, recompute
-    * the overlap flag, reset dirty-day tracking, retire aged snapshots.
-    */
-  private def finishColdFlip(p: String, nextGen: Int): Unit = {
-    coldGen = nextGen // flip: new reads plan against the new snapshot
-    // NOT a blind `coldDirty = false`: with delta folds running
-    // concurrently (r14) — and even before, with writes never
-    // blocked here — a pin appended DURING the rewrite can land
-    // behind the spill frontier; clearing unconditionally would
-    // lose its overlap flag and reads would skip the LWW dedup a
-    // duplicated key needs. Recompute from the hot mins under the
-    // write lock (a concurrent append either shows in batchMins or
-    // sets the flag itself afterwards — no lost update).
-    synchronized {
-      coldDirty = batchMins.exists(_ < lastSpillCutoff)
-      // the new generation is fully deduped: tracking restarts empty
-      // (no spill can have raced this — compactLock is held)
-      dirtyColdDays = Some(Set.empty)
-    }
-    retireGenerations(p, nextGen)
-  }
-
-  /** Fold the day range [fromMs, toMs] into the dirty-day set; a range
-    * too wide to track degrades to None (→ one full rewrite).
-    */
-  private def trackDirtyDays(cur: Option[Set[java.time.LocalDate]],
-      fromMs: Long, toMs: Long): Option[Set[java.time.LocalDate]] =
-    cur.flatMap { s =>
-      val lo = java.time.Instant.ofEpochMilli(fromMs)
-        .atZone(java.time.ZoneOffset.UTC).toLocalDate
-      val hi = java.time.Instant.ofEpochMilli(toMs)
-        .atZone(java.time.ZoneOffset.UTC).toLocalDate
-      val n = java.time.temporal.ChronoUnit.DAYS.between(lo, hi) + 1
-      if (n <= 0 || n + s.size > MaxTrackedDirtyDays) None
-      else Some(s ++ Iterator.iterate(lo)(_.plusDays(1)).take(n.toInt))
-    }
-
-  private implicit class IterAsScala[A](it: java.util.Iterator[A]) {
-    def asScala: Iterator[A] = new Iterator[A] {
-      def hasNext: Boolean = it.hasNext
-      def next(): A = it.next()
-    }
-  }
-
-  /** T9 at the cold tier: drop whole day partitions strictly older than
-    * the cutoff — a metadata-only delete, no rewrite (the analogue of
-    * Cassandra's TTL'd SSTables aging out). Returns the dropped
-    * partition names.
-    */
-  def applyColdRetention(cutoffMs: Long): Seq[String] = withColdLock {
-    // under the cold lock like every other durable-store mutation: an
-    // unlocked delete raced the background fold/compaction's IN-FLIGHT
-    // read tasks over the same generation (FAILED_READ_FILE under load —
-    // caught by the retention spec running concurrently with a busy box)
-    val dropped = coldPath.toSeq.flatMap(p =>
-      graft.store.Store.applyRetention(p, cutoffMs))
-    // a bucketed generation's catalog table caches its partition list
-    // and file index; dropping day dirs on disk without telling the
-    // catalog would leave readers planning over deleted files
-    // (FAILED_READ_FILE) — re-register from the manifest, which relists
-    // the surviving partitions.
-    // registerBucketedDayTable drops the stale table even when EVERY
-    // day was retired (no files left to infer a schema from), so a
-    // fully-aged generation degrades to "empty store", never to a
-    // catalog still planning the deleted files
-    if (dropped.nonEmpty) registerColdGen(coldGen)
-    dropped
-  }
-
-  /** The durable cold tier, when configured and non-empty. Finite time
-    * bounds become a `day` predicate so parquet PARTITION PRUNING kicks
-    * in before the row-group ts stats do (the bulk-export path must not
-    * scan the whole history for a bounded read). Retention can leave the
-    * directory without any partition — treated as empty.
-    */
-  private def coldPoints(fromMs: Long = Long.MinValue,
-      toMs: Long = Long.MaxValue): Option[DataFrame] =
-    coldPath
-      .filter(isDir)
-      .flatMap { p =>
-        scala.util.Try {
-          // generations read through their catalog table so
-          // per-series aggregations (downsample, rate windows, LWW
-          // dedup — all keyed on metric_id ⊇ the bucket column) plan
-          // with NO Exchange straight off the scan; a registration gap
-          // falls back to the plain parquet read, which is correct but
-          // pays the shuffle
-          val name = coldTableName(coldGen)
-          val df =
-            if (spark.catalog.tableExists(name)) spark.table(name)
-            else spark.read.parquet(p)
-          val pruned =
-            if (fromMs == Long.MinValue || toMs == Long.MaxValue) df
-            else df.where(col("day").between(
-              to_date(timestamp_millis(lit(fromMs))),
-              to_date(timestamp_millis(lit(toMs)))))
-          pruned.drop("day")
-        }.toOption
-      }
-
-  /** Read view: LWW-deduped (skipped when already compacted) with T9
-    * retention — a series' TTL is the max any write supplied; the tiny
-    * per-series TTL dim broadcasts (skipped entirely when no write ever
-    * set one).
-    */
-  private def dedupedPoints(fromMs: Long = Long.MinValue,
-      toMs: Long = Long.MaxValue): Option[DataFrame] = {
-    val read = rawRead(fromMs, toMs)
-    val single = oneStage(read.bytes)
-    merge(read, single).map(applyTtl(_, batches, single))
-  }
-
-  /** The merged hot ∪ cold LWW view WITHOUT the T9 filter (debug dumps
-    * need to show expired-but-registered series too).
-    */
-  private def mergedDeduped(fromMs: Long = Long.MinValue,
-      toMs: Long = Long.MaxValue): Option[DataFrame] = {
-    val read = rawRead(fromMs, toMs)
-    merge(read, oneStage(read.bytes))
-  }
-
-  /** One read's raw inputs: the current cold generation and the hot
-    * view, each bounded to [fromMs, toMs], whether the hot view is one
-    * compacted (already deduped) batch, and the bytes the inputs hold
-    * (None when unknown).
-    */
-  private final class RawRead(val cold: Option[DataFrame],
-      val hot: Option[DataFrame], val hotClean: Boolean,
-      val bytes: Option[Long])
-
-  private def rawRead(fromMs: Long, toMs: Long): RawRead = {
-    // read-your-writes across the micro-batch buffer (or the cheapest
-    // staleness-budgeted view when the request opted in)
-    val (bs, hc) = readView()
-    // time bounds apply BELOW the dedup aggregate (ts_ms is a grouping
-    // key, so this is where the scan-level pruning comes from)
-    def bounded(df: DataFrame): DataFrame =
-      if (fromMs == Long.MinValue && toMs == Long.MaxValue) df
-      else df.where(col("ts_ms") >= fromMs && col("ts_ms") <= toMs)
-    val cold = coldPoints(fromMs, toMs)
-    new RawRead(cold.map(bounded), unionAll(bs).map(bounded),
-      bs.size == 1 && hc, knownSum(
-        cold.map(_ => coldBytes(fromMs, toMs)) ++: bs.map(indexedBytes(_))))
-  }
-
-  /** The sum of `parts`, None when any part is unknown. */
-  private def knownSum(parts: Seq[Option[Long]]): Option[Long] =
-    if (parts.forall(_.isDefined)) Some(parts.flatten.sum) else None
-
-  /** Assemble a [[RawRead]] into the LWW view. `single` coalesces every
-    * input, and the union, to one partition ([[oneStage]]).
-    */
-  private def merge(read: RawRead, single: Boolean): Option[DataFrame] = {
-    def in(df: DataFrame): DataFrame = if (single) df.coalesce(1) else df
-    // the dedup SHUFFLE is paid only where duplicate keys can exist: a
-    // compacted single hot batch is clean, and the cold tier is clean
-    // unless a backfill crossed the spill frontier (coldDirty) — for
-    // append-mostly workloads reads are pure scans
-    def hotDeduped(h: DataFrame): DataFrame =
-      if (read.hotClean) h else lwwDedup(h)
-    (read.cold.map(in), read.hot.map(in)) match {
-      case (Some(c), Some(h)) =>
-        Some(if (coldDirty) lwwDedup(in(c.unionByName(h)))
-        else in(c.unionByName(hotDeduped(h))))
-      case (Some(c), None) =>
-        Some(if (coldDirty) lwwDedup(c) else c)
-      case (None, Some(h)) => Some(hotDeduped(h))
-      case (None, None) => None
-    }
-  }
-
-  // read plans the one-stage gate sent to one partition, and in parallel
-  private val singlePlans = new java.util.concurrent.atomic.AtomicLong
-  private val parallelPlans = new java.util.concurrent.atomic.AtomicLong
-
-  /** The one-stage gate. A read whose inputs hold at most
-    * `spark.sql.adaptive.coalescePartitions.minPartitionSize` bytes (1 MB
-    * by default) is one AQE would coalesce to a single partition after
-    * every shuffle anyway, so it gets that partition up front: its
-    * inputs coalesce to one, every required distribution downstream is
-    * met by SinglePartition, and the read runs as one job with no
-    * exchange — a dashboard read's 3-5 stage boundaries cost more than
-    * its compute. Unknown bytes plan in parallel.
-    */
-  private def oneStage(bytes: Option[Long]): Boolean = {
-    val single = bytes.exists(_ <= spark.sessionState.conf.getConf(
-      org.apache.spark.sql.internal.SQLConf
-        .COALESCE_PARTITIONS_MIN_PARTITION_SIZE))
-    (if (single) singlePlans else parallelPlans).incrementAndGet()
-    single
-  }
-
-  /** Bytes of the files under `df`'s file scans whose directory name
-    * passes `keep`, read off the file index each scan built when its
-    * DataFrame was made (a hot pin's at pin time): no listing, no job.
-    * None when a leaf is not an indexed file scan.
-    */
-  private def indexedBytes(df: DataFrame,
-      keep: String => Boolean = _ => true): Option[Long] = {
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
-      LogicalRelation, PartitioningAwareFileIndex}
-    knownSum(df.queryExecution.analyzed.collectLeaves().map {
-      case l: LogicalRelation => l.relation match {
-        case r: HadoopFsRelation => r.location match {
-          case i: PartitioningAwareFileIndex => Some(i.allFiles().iterator
-            .filter(f => keep(f.getPath.getParent.getName))
-            .map(_.getLen).sum)
-          case _ => None
-        }
-        case _ => None
-      }
-      case _ => None
-    })
-  }
-
-  /** Bytes of the current cold generation's day partitions that a read
-    * of [fromMs, toMs] scans (every day when either bound is open, as
-    * [[coldPoints]] prunes). A day the generation's `_daybytes` sidecar
-    * recorded, and no spill has appended into since, is taken from the
-    * sidecar; any other day is listed. None when the generation went
-    * away under the listing.
-    */
-  private def coldBytes(fromMs: Long, toMs: Long): Option[Long] =
-    coldPath.map(java.nio.file.Paths.get(_))
-      .filter(java.nio.file.Files.isDirectory(_)).fold(Option(0L)) { gen =>
-        def day(ms: Long) = java.time.Instant.ofEpochMilli(ms)
-          .atZone(java.time.ZoneOffset.UTC).toLocalDate
-        val open = fromMs == Long.MinValue || toMs == Long.MaxValue
-        val (lo, hi) = (day(fromMs), day(toMs))
-        val dirty = synchronized(dirtyColdDays)
-        scala.util.Try {
-          val recorded = readDayBytes(gen)
-          val ls = java.nio.file.Files.list(gen)
-          val days = try ls.iterator().asScala.map(_.getFileName.toString)
-            .filter(_.startsWith("day=")).toList
-          finally ls.close()
-          days.iterator.flatMap { n =>
-            val d = scala.util.Try(
-              java.time.LocalDate.parse(n.stripPrefix("day="))).toOption
-            if (!open && d.exists(x => x.isBefore(lo) || x.isAfter(hi))) None
-            else Some(recorded.get(n)
-              .filter(_ => d.exists(x => dirty.exists(!_.contains(x))))
-              .getOrElse(dirBytes(gen.resolve(n))))
-          }.sum
-        }.toOption
-      }
-
-  /** T9 read filter: the per-series TTL is max-merged over the WHOLE
-    * history (a bounded read must not shrink a series' TTL).
-    *
-    * Expiry is computed from the SAMPLE timestamp (`ts + ttl > now`), not
-    * the write time — intentional: the reference hands the TTL to
-    * Cassandra per insert (write-time decay), but a set-oriented store
-    * has no per-cell clock, and sample-time decay is the semantics the
-    * `t9_ttl_expiry` oracle pins. Consequence: backfilling data older
-    * than its own TTL is a no-op unless a later write max-merges a
-    * larger TTL (which the reference's per-series max rule provides,
-    * `api/remotestorage/remotestorage.go:103-114`).
-    *
-    * History =
-    * the pinned compacted dim ∪ the hot tail's (metric_id, ttl) pairs —
-    * never a cold-tier rescan. Left join with NO broadcast hint: the dim
-    * holds only non-default-TTL series (tiny in practice; AQE broadcasts
-    * it from runtime size, and a pathological 10⁸-series dim degrades to
-    * a shuffle join instead of a driver OOM). Absent row = default TTL =
-    * survives.
-    */
-  private def applyTtl(d: DataFrame, bs: Vector[DataFrame],
-      single: Boolean): DataFrame =
-    if (!ttlSeen) d
-    else {
-      val hotTtls = unionAll(bs)
-        .map(_.select(col("metric_id"), col("__ttl_sec")))
-      val dims = (ttlDim, hotTtls) match {
-        case (Some(t), Some(ht)) => Some(t.unionByName(ht))
-        case (Some(t), None) => Some(t)
-        case (None, Some(ht)) => Some(ht)
-        case (None, None) => None
-      }
-      dims.fold(d) { all =>
-        val ttls = (if (single) all.coalesce(1) else all).groupBy("metric_id")
-          .agg(max(col("__ttl_sec")).as("__series_ttl"))
-          .where(col("__series_ttl") =!= DefaultTtlSec)
-        d.join(ttls, Seq("metric_id"), "left")
-          .where(col("__series_ttl").isNull ||
-            col("ts_ms") + col("__series_ttl") * 1000L >
-              lit(System.currentTimeMillis()))
-          .drop("__series_ttl")
-      }
-    }
-
-  // ---- mutable labels (M1-M4) ----
-
-  private def mappingsFor(tenant: String): Seq[MutableMapping] =
-    mutableNames.collect { case ((t, n), target) if t == tenant =>
-      MutableMapping(t, n, target,
-        mutableValues.collect {
-          case ((t2, n2, v), assoc) if t2 == tenant && n2 == n => v -> assoc
-        }.toMap)
-    }.toSeq.sortBy(_.name)
-
-  /** Reverse decoration: the mutable value whose associated real values
-    * contain this row's real value (first in sorted order on ties) — the
-    * `mutableMetricsSet` label-add (`cassandra/mutable/index.go:93-122`).
-    */
-  private def decorationCol(m: MutableMapping,
-      target: Column): Column =
-    m.values.toSeq.sortBy(_._1).foldRight(lit(null).cast("string"): Column) {
-      case ((mv, real), acc) => when(target.isin(real: _*), lit(mv))
-        .otherwise(acc)
-    }
-
-  /** The multi-metric PromSource over the hot store: every stored label —
-    * including `__name__` — becomes a real identity column, and the
-    * tenant's mutable labels become decorated columns so matching AND
-    * grouping on them work (reference decorates at the index layer).
-    */
-  def source(tenant: String = defaultTenant,
-      fromMs: Long = Long.MinValue,
-      toMs: Long = Long.MaxValue): Option[PromSource] =
-    dedupedPoints(fromMs, toMs).map(sourceFrom(_, tenant))
-
-  private val LegacyName = "^[a-zA-Z_][a-zA-Z0-9_]*$"
-
-  /** UTF-8-only label name → its deterministic sanitized identity-column
-    * alias (a plain identifier, so every `col(...)` in the compiler stays
-    * safe). The facade renames back before serialization.
-    */
-  private[graft] def labelAliases: Map[String, String] =
-    labelNames.filterNot(Reserved)
-      .filterNot(_.matches(LegacyName))
-      .map(n => n -> HttpApi.utf8Alias(n)).toMap
-
-  private def sourceFrom(df0: DataFrame, tenant: String): PromSource = {
-      // legacy-charset names become columns under their own name; UTF-8
-      // names (accepted since the reference's UTF8Validation) become
-      // SANITIZED alias columns so they join the PromQL identity set —
-      // grouping by them works after the AST rewrite, and two series
-      // differing only in a UTF-8 label stay distinct in results
-      val names = labelNames.filterNot(Reserved)
-        .filter(_.matches(LegacyName))
-      val aliases = labelAliases
-      val withLegacy = names.foldLeft(df0)((d, n) =>
-        d.withColumn(n, element_at(col("labels"), n)))
-      val withLabels = aliases.foldLeft(withLegacy) { case (d, (n, a)) =>
-        d.withColumn(a, element_at(col("labels"), n))
-      }
-      val mappings = mappingsFor(tenant)
-        .filterNot(m => names.contains(m.name) || Reserved(m.name))
-      // a mapping whose associated real label has no stored column yet
-      // decorates to null instead of failing analysis (the column appears
-      // once data with that label arrives)
-      val decorated = mappings.foldLeft(withLabels)((d, m) =>
-        d.withColumn(m.name, decorationCol(m,
-          if (names.contains(m.targetName)) col(m.targetName)
-          else lit(null).cast("string"))))
-      val all = names ++ mappings.map(_.name) ++ aliases.values.toSeq
-      // the raw label map rides along (it never joins the identity set,
-      // and grid evaluation projects it away) so QUOTED UTF-8 matchers —
-      // {"läbel.x"="v"} — can still filter on anything
-      val df = decorated.drop("metric_id", "__seq", "__ttl_sec")
-      PromSource(df, all, {
-        case n if all.contains(n) => col(n)
-        case n if aliases.contains(n) => col(aliases(n))
-        case n => element_at(col("labels"), n)
-      })
-  }
-
-  // ---- A4: pre-aggregated routing (reference cassandra/tsdb/read.go:
-  // 57-72,111-134,229-237) ----
-
-  /** 5-min pre-agg resolution (`cassandra/tsdb/tsdb.go:41`). */
-  val PreAggResolutionMs: Long = graft.tsdb.Downsample.DefaultResolutionMs
-
-  // agg-table snapshot generation (same isolation as the cold tier): the
-  // ROOT holds the watermark; the data lives in g<N> (`aggGen`, declared
-  // above the bootstrap block). Incremental runs APPEND to the current
-  // generation (append never breaks an in-flight reader); the forced
-  // REBUILD writes g<N+1> — unchanged months carried forward — and
-  // flips, so routed readers never race a file overwrite
-
-  private def aggPath: Option[String] = durablePath.map(_ + "_agg5m")
-  private def aggDataPath: Option[String] = aggPath.map(p => s"$p/g$aggGen")
-
-  /** `fullyAggregatedAt` — buckets ending at or before this are served
-    * from the agg table; later data re-aggregates from raw at query time.
-    */
-  def preAggWatermark: Long = aggWatermark
-
-  /** Downsample a deduped point slice into the agg-table row shape:
-    * (metric_id, labels, bucket_ms, min, max, avg, count, __ttl_sec),
-    * month-partitioned. The stats reuse the verified [[graft.tsdb
-    * .Downsample]] kernel (StaleNaN/NaN semantics); labels ride a
-    * co-partitioned per-series dim join. The output is exactly
-    * [[HttpApi.AggSchema]], the layout reads declare.
-    */
-  private def aggSlice(slice: DataFrame,
-      single: Boolean = false): DataFrame = {
-    val stats = graft.tsdb.Downsample(slice, Seq(col("metric_id")),
-      col("ts_ms"), col("value"), PreAggResolutionMs)
-    val dim = slice.groupBy("metric_id")
-      .agg(max_by(col("labels"), col("__seq")).as("labels"),
-        max(col("__ttl_sec")).as("__ttl_sec"))
-    // a one-partition slice joins in place: a broadcast would cost its
-    // own job
-    stats.join(if (single) dim.hint("shuffle_hash") else dim,
-      Seq("metric_id"))
-      .withColumn("month", date_format(
-        timestamp_millis(col("bucket_ms")), "yyyy-MM"))
-      .select(HttpApi.AggSchema.fields.toSeq.map(f =>
-        col(f.name).cast(f.dataType)): _*)
-  }
-
-  /** A5 incremental pre-aggregation over the COLD tier: downsample
-    * [watermark, endMs) into agg_5m and advance the watermark — run from
-    * compaction after each spill (the spill frontier is exactly the
-    * "data below this is final" boundary) or on demand. `endMs` is
-    * clamped to that frontier: buckets past it may still sit in the hot
-    * tier, and a watermark over them would serve them from agg_5m as
-    * empty. Returns the new watermark.
-    */
-  def preAggregate(endMs: Long): Long = preAggregateWith(endMs, 0)
-
-  /** [[preAggregate]] writing at `tasks` tasks (0 = the session's
-    * shuffle parallelism).
-    */
-  private def preAggregateWith(endMs: Long, tasks: Int): Long = withColdLock {
-    // background-upkeep pool, not the request lane (see deltaFoldNow):
-    // the debug HTTP endpoint otherwise inherits the handler thread's
-    // graft-reads tag, and under FAIR a forced re-aggregation would
-    // compete with — and dam — dashboard reads in the read pool. Each
-    // request re-tags its pool at dispatch, so no restore is needed.
-    spark.sparkContext.setLocalProperty("spark.scheduler.pool",
-      "graft-upkeep")
-    aggPath.fold(0L) { ap =>
-    val wm = aggWatermark
-    val endAt = math.min(endMs, spillTimeFrontier)
-    val end = endAt - math.floorMod(endAt, PreAggResolutionMs)
-    if (end <= wm || coldWritesBlocked) wm
-    else coldPoints(wm, end - 1) match {
-      case None => wm
-      case Some(c) =>
-        val bounded = c.where(col("ts_ms") >= wm && col("ts_ms") < end)
-        val slice = if (coldDirty) lwwDedup(bounded) else bounded
-        if (slice.limit(1).count() > 0)
-          graft.store.Store.repartitionForWrite(
-              aggSlice(slice), "month", Seq("metric_id"), tasks)
-            .write.partitionBy("month")
-            .mode(org.apache.spark.sql.SaveMode.Append)
-            .parquet(aggDataPath.get)
-        graft.store.Store.writeWatermark(ap, end)
-        aggWatermark = end
-        end
-    }
-  } }
-
-  /** Forced re-aggregation (`/debug/preaggregate?from&to`, reference
-    * `api/api.go:225` → `cassandra/tsdb/aggregate.go:173-304`): recompute
-    * the agg rows for a PAST window after late backfill. Whole covered
-    * months rebuild from the merged hot ∪ cold view (so un-spilled
-    * backfill counts too) and land via DYNAMIC partition overwrite — the
-    * watermark is untouched, exactly like the reference's debug endpoint.
-    * Returns the rebuilt month partitions.
-    */
-  def forcePreAggregate(fromMs: Long, toMs: Long): Seq[String] =
-    withColdLock {
-      // upkeep pool, same reasoning as preAggregate above
-      spark.sparkContext.setLocalProperty("spark.scheduler.pool",
-        "graft-upkeep")
-      aggPath.toSeq.flatMap { ap =>
-      val wm = aggWatermark
-      val hi = math.min(toMs, wm) // beyond wm the raw tail serves anyway
-      if (hi <= fromMs || coldWritesBlocked) Seq.empty
-      else rebuildAggWindow(ap, fromMs, hi, wm)
-    } }
-
-  private def rebuildAggWindow(ap: String, fromMs: Long, hi: Long,
-      wm: Long): Seq[String] = {
-      val utc = java.time.ZoneOffset.UTC
-      val mStart = java.time.Instant.ofEpochMilli(fromMs).atZone(utc)
-        .toLocalDate.withDayOfMonth(1)
-      val mEnd = java.time.Instant.ofEpochMilli(hi - 1).atZone(utc)
-        .toLocalDate.withDayOfMonth(1).plusMonths(1)
-      val loMs = mStart.atStartOfDay(utc).toInstant.toEpochMilli
-      val hiMs = math.min(
-        mEnd.atStartOfDay(utc).toInstant.toEpochMilli, wm)
-      dedupedPoints(loMs, hiMs - 1).toSeq.flatMap { d =>
-        val slice = d.where(col("ts_ms") >= loMs && col("ts_ms") < hiMs)
-        val months = Iterator.iterate(mStart)(_.plusMonths(1))
-          .takeWhile(_.isBefore(mEnd))
-          .map(_.format(java.time.format.DateTimeFormatter
-            .ofPattern("yyyy-MM"))).toSeq
-        // generational rebuild, SCOPED to the repaired window: Spark
-        // recomputes only the covered months; every untouched month=
-        // directory is carried into g<N+1> at the FILE level (hardlink,
-        // copy fallback) — at 100 TB the agg table is ~300 GB and a
-        // one-month repair must not re-read and re-write all of it
-        // (judge r7 Wrong #2). The build happens in a staging dir that
-        // `maxGenIn` can never adopt; the rename to g<N+1> is the atomic
-        // commit point, so a crash mid-carry-forward leaves only the
-        // intact g<N> (same torn-write discipline as the cold tier).
-        val rebuilt = aggSlice(slice)
-        val staging = java.nio.file.Paths.get(s"$ap/_build")
-        deleteRecursively(staging)
-        graft.store.Store.repartitionForWrite(
-            rebuilt, "month", Seq("metric_id"))
-          .write.partitionBy("month")
-          .mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(staging.toString)
-        aggDataPath.map(java.nio.file.Paths.get(_)).filter(
-            java.nio.file.Files.isDirectory(_)).foreach { cur =>
-          val keepDirs = java.nio.file.Files.list(cur).iterator().asScala
-            .filter { m =>
-              val n = m.getFileName.toString
-              n.startsWith("month=") &&
-                !months.contains(n.stripPrefix("month="))
-            }.toSeq
-          keepDirs.foreach(m =>
-            linkTree(m, staging.resolve(m.getFileName.toString)))
-        }
-        val nextGen = aggGen + 1
-        // a torn g<N+1> can predate this code (the old rebuild wrote the
-        // generation directly and could crash mid-write; bootstrap skips
-        // it for lack of _SUCCESS but leaves the directory) — clear it or
-        // the staging move throws FileAlreadyExists forever
-        deleteRecursively(java.nio.file.Paths.get(s"$ap/g$nextGen"))
-        java.nio.file.Files.move(staging,
-          java.nio.file.Paths.get(s"$ap/g$nextGen"))
-        aggGen = nextGen
-        retireGenerations(ap, nextGen)
-        months
-      }
-  }
-
-  /** Carry a partition directory into a new generation without moving
-    * data: hardlink each file (O(metadata); the link keeps bytes alive
-    * after the old generation retires), falling back to a copy where the
-    * filesystem refuses links.
-    */
-  private def linkTree(src: java.nio.file.Path,
-      dst: java.nio.file.Path): Unit = {
-    java.nio.file.Files.createDirectories(dst)
-    java.nio.file.Files.list(src).iterator().asScala.foreach { f =>
-      val t = dst.resolve(f.getFileName.toString)
-      if (java.nio.file.Files.isDirectory(f)) linkTree(f, t)
-      else scala.util.Try(java.nio.file.Files.createLink(t, f)).getOrElse {
-        java.nio.file.Files.copy(f, t,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING); t
-      }
-    }
-  }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p))
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq
-        .reverse.foreach(java.nio.file.Files.delete)
-
-  /** Age-based generation retirement (ADVICE r7): deleting g<N-1> on the
-    * NEXT flip strands a reader whose plan is two flips old — back-to-back
-    * `forcePreAggregate`/`compactCold` calls can retire-and-delete within
-    * one slow scan. Instead each flip stamps every non-current complete
-    * generation with a `_retired` marker (idempotent; the stamp is the
-    * RETIREMENT time, not the write time) and only generations retired
-    * longer than the grace window (`spark.graft.gen.grace.ms`, default
-    * 10 min ≈ the longest plausible query) are deleted.
-    */
-  private def retireGenerations(root: String, current: Int): Unit = {
-    val grace = spark.conf.get("spark.graft.gen.grace.ms",
-      (10 * 60 * 1000L).toString).toLong
-    val now = System.currentTimeMillis()
-    val dir = java.nio.file.Paths.get(root)
-    if (!java.nio.file.Files.isDirectory(dir)) return
-    java.nio.file.Files.list(dir).iterator().asScala
-      .filter(_.getFileName.toString.matches("g\\d+"))
-      .filter(_.getFileName.toString.drop(1).toInt != current)
-      .foreach { g =>
-        val marker = g.resolve("_retired")
-        val stamp = scala.util.Try(
-          java.nio.file.Files.readString(marker).trim.toLong).toOption
-        stamp match {
-          case None =>
-            scala.util.Try(
-              java.nio.file.Files.writeString(marker, now.toString))
-          case Some(t) if now - t >= grace =>
-            deleteRecursively(g)
-            // drop the retired generation's catalog entry with its dir
-            // (no-op for agg generations, which never have one)
-            scala.util.Try(spark.sql("DROP TABLE IF EXISTS `" +
-              genTableName(root,
-                g.getFileName.toString.drop(1).toInt) + "`"))
-          case _ => () // inside the grace window: leave it
-        }
-      }
-  }
-
-  /** The routed point view (A2/A4): agg rows for buckets fully below the
-    * watermark — month-pruned, the chosen column as `value`, bucket start
-    * as `ts_ms` — unioned with the raw tail re-aggregated at query time
-    * (`read.go:229-237`), so rates don't jump at the boundary. None when
-    * no agg table exists yet (callers fall back to raw).
-    */
-  private def routedPoints(fromMs: Long, toMs: Long,
-      column: String): Option[DataFrame] = aggPath.flatMap { _ =>
-    val wm = aggWatermark
-    if (wm <= 0L || !aggDataPath.exists(isDir)) None
-    else {
-      val fmt = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM")
-        .withZone(java.time.ZoneOffset.UTC)
-      val open = fromMs == Long.MinValue || toMs == Long.MaxValue
-      val (mLo, mHi) = (fmt.format(java.time.Instant.ofEpochMilli(fromMs)),
-        fmt.format(java.time.Instant.ofEpochMilli(toMs)))
-      // the declared layout spares the per-call inference job
-      val agg0 = spark.read.schema(HttpApi.AggSchema)
-        .parquet(aggDataPath.get)
-      val monthPruned =
-        if (open) agg0
-        else agg0.where(col("month").between(mLo, mHi))
-      // a bucket at b covers [b, b+res): keep overlaps with [from, to]
-      val old = monthPruned
-        .where(col("bucket_ms") + PreAggResolutionMs <= wm)
-        .where(col("bucket_ms") + PreAggResolutionMs > fromMs &&
-          col("bucket_ms") <= toMs)
-      // the raw tail only exists when the window reaches past the
-      // watermark — a historical dashboard query (the common routed
-      // shape) is a pure agg scan with no tail subplan at all
-      val tailRead =
-        if (math.max(fromMs, wm) > toMs) None
-        else Some(rawRead(math.max(fromMs, wm), toMs))
-      // one gate for the whole routed read: the agg months it scans
-      // plus the raw tail
-      val aggBytes = indexedBytes(agg0, d => open ||
-        !d.startsWith("month=") || (d.drop(6) >= mLo && d.drop(6) <= mHi))
-      val single = oneStage(knownSum(aggBytes +: tailRead.map(_.bytes).toSeq))
-      def in(df: DataFrame): DataFrame = if (single) df.coalesce(1) else df
-      val bs = batches
-      val tail = tailRead.flatMap(merge(_, single))
-        .map(d => aggSlice(applyTtl(d, bs, single)
-          .where(col("ts_ms") >= wm), single).drop("month"))
-      val routed = tail.fold(in(old.drop("month")))(t =>
-        in(in(old.drop("month")).unionByName(t)))
-      Some(applyTtl(
-        routed.select(col("labels"), col("metric_id"),
-          col("bucket_ms").as("ts_ms"), col(column).as("value"),
-          lit(0L).as("__seq"), col("__ttl_sec")), bs, single))
-    }
-  }
-
-  /** The pre-aggregated PromSource, when the agg table can serve the
-    * requested column — same label columns + mutable decoration as the
-    * raw source.
-    */
-  private[graft] def routedSource(tenant: String, fromMs: Long, toMs: Long,
-      column: String): Option[PromSource] =
-    routedPoints(fromMs, toMs, column).map(sourceFrom(_, tenant))
+  private[graft] def threadSessions(): Map[String, Option[SparkSession]] =
+    store.threadSessions() ++ serverPool.map(_.submit(Tsdb.sessionProbe).get())
 
   private def tenantOf(h: HttpExchange): String =
     Option(h.getRequestHeaders.getFirst("X-SquirrelDB-Tenant"))
@@ -2372,7 +151,7 @@ final class HttpApi(spark: SparkSession,
     RequestOptions(
       tenantLabel = header("X-SquirrelDB-Tenant").map(t => (tenantLabel, t)),
       forced = forced.toSeq,
-      mutable = mappingsFor(tenantOf(h)),
+      mutable = store.mappingsFor(tenantOf(h)),
       maxSeries = header("X-SquirrelDB-Max-Evaluated-Series").map(_.toLong),
       maxPoints = header("X-SquirrelDB-Max-Evaluated-Points").map(_.toLong),
       labelAliases = labelAliases)
@@ -2391,25 +170,20 @@ final class HttpApi(spark: SparkSession,
   /** Bind and start; `port` 0 picks an ephemeral port. Returns the bound
     * port.
     */
-  private var serverPool: Option[java.util.concurrent.ExecutorService] = None
-
   def start(port: Int = 0): Int = synchronized {
     val s = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
-    s.createContext("/api/v1/", handle _)
-    s.createContext("/mutable/", handle _)
-    s.createContext("/debug/", handle _)
-    s.createContext("/ready", handle _)
-    s.createContext("/metrics", handle _)
+    Seq("/api/v1/", "/mutable/", "/debug/", "/ready", "/metrics")
+      .foreach(s.createContext(_, handle _))
     // one thread per in-flight request (the Go reference's
     // goroutine-per-connection shape): a FIXED pool convoys — when the
-    // write side hits the MaxQueuedFlushes backpressure, every pool
+    // write side hits the store's flush-queue backpressure, every pool
     // thread can be a BLOCKED write and reads queue at the HTTP layer
     // for the whole backpressure stall (measured: read p50 12.4 s under
     // 4 saturating writers on a 4-thread pool, with the handler itself
     // accounting for <4 s — see SCALE.md). Admission stays bounded:
     // writes still block their own thread at the backpressure gate.
     val pool = java.util.concurrent.Executors.newCachedThreadPool(
-      sessionThreads("facade-http", daemon = false))
+      Tsdb.sessionThreads(spark, "facade-http", daemon = false))
     s.setExecutor(pool)
     s.start()
     server = Some(s)
@@ -2418,13 +192,6 @@ final class HttpApi(spark: SparkSession,
   }
 
   def stop(): Unit = {
-    // drain OUTSIDE the monitor: flushPending blocks on the flusher,
-    // which needs `this` for its batch append
-    flushPending()
-    // then the background fold: one still in flight would pin (and
-    // spill) after the scope clear below, leaking its staged fold
-    stopped = true
-    while (compacting.get) Thread.sleep(5)
     synchronized {
       server.foreach(_.stop(0))
       server = None
@@ -2433,46 +200,46 @@ final class HttpApi(spark: SparkSession,
       serverPool.foreach(_.shutdown())
       serverPool = None
     }
-    // reclaim this store's staged hot pins (retired AND live: the store
-    // is gone, so the hot tail's lifecycle ends here — the durable tier
-    // holds everything the fold already spilled)
-    synchronized { retiredPrevGen = Vector.empty
-      retiredCurGen = Vector.empty; batchPaths = Vector.empty }
-    graft.store.Stage.clearDetached(spark, hotScope)
+    store.stop()
   }
+
+  private def text(h: HttpExchange, s: String): Unit =
+    respondBytes(h, 200, s.getBytes(UTF_8), "text/plain")
 
   private def handle(h: HttpExchange): Unit =
     try {
       // scheduler-pool isolation: read queries run on this handler
-      // thread, pins/folds on the flusher/compactor threads — tagging
-      // them into separate pools means that under `spark.scheduler.mode=
-      // FAIR` (set by the embedding app at session build; a no-op under
-      // default FIFO) a dashboard read gets task slots IMMEDIATELY
-      // instead of queueing behind the continuous stream of pin jobs a
-      // saturated write side submits (measured: the same head-only read
-      // is ~4.7 s quiesced vs ~13 s behind a FIFO pin queue)
+      // thread, pins/folds on the store's threads — tagging them into
+      // separate pools means that under `spark.scheduler.mode=FAIR` (set
+      // by the embedding app at session build; a no-op under default
+      // FIFO) a dashboard read gets task slots IMMEDIATELY instead of
+      // queueing behind the continuous stream of pin jobs a saturated
+      // write side submits (measured: the same head-only read is ~4.7 s
+      // quiesced vs ~13 s behind a FIFO pin queue)
       spark.sparkContext.setLocalProperty("spark.scheduler.pool",
         "graft-reads")
-      // bounded-staleness opt-in rides a header so it covers EVERY read
-      // endpoint (query, query_range, series, labels, remote read) without
-      // threading a parameter through each handler; the ThreadLocal is
-      // safe because every read builds and consumes its frames
-      // synchronously on this handler thread ([[readView]] runs
-      // eagerly at frame-build time, not at lazy plan execution)
-      Option(h.getRequestHeaders.getFirst("X-SquirrelDB-Max-Staleness"))
-        .foreach(s => readStalenessMs.set((s.trim.toDouble * 1000).toLong))
+      // the bounded-staleness opt-in rides a header so it covers EVERY
+      // read endpoint (query, query_range, series, labels, remote read,
+      // the index dumps); each read call gets it explicitly
+      val st = Option(h.getRequestHeaders.getFirst("X-SquirrelDB-Max-Staleness"))
+        .map(s => (s.trim.toDouble * 1000).toLong)
       val path = h.getRequestURI.getPath
       (h.getRequestMethod, path) match {
         case (_, "/api/v1/write") => handleWrite(h)
         case (_, "/api/v1/otlp/v1/metrics") => handleOtlpWrite(h)
-        case (_, "/api/v1/read") => handleRead(h)
-        case (_, "/api/v1/query_range") => handleQueryRange(h)
-        case (_, "/api/v1/query") => handleQuery(h)
-        case (_, "/api/v1/series") => handleSeries(h)
-        case (_, "/api/v1/labels") => handleLabels(h)
+        case (_, "/api/v1/read") => handleRead(h, st)
+        case (_, "/api/v1/query_range") => handleQueryRange(h, st)
+        case (_, "/api/v1/query") => handleQuery(h, st)
+        case (_, "/api/v1/series") => handleSeries(h, st)
+        case (_, "/api/v1/labels") =>
+          val (sels, from, to) = labelQuery(h)
+          respond(h, 200, PromJson.strings(store.labelNamesFor(tenantOf(h),
+            from, to, sels, headerMatchers(h), st)))
         case (_, p) if p.startsWith("/api/v1/label/") && p.endsWith("/values") =>
-          handleLabelValues(h,
-            p.stripPrefix("/api/v1/label/").stripSuffix("/values"))
+          val (sels, from, to) = labelQuery(h)
+          respond(h, 200, PromJson.strings(store.labelValues(tenantOf(h),
+            p.stripPrefix("/api/v1/label/").stripSuffix("/values"),
+            from, to, sels, headerMatchers(h), st)))
         case (_, "/api/v1/format_query") =>
           val formatted = graft.promql.Printer.print(
             Parser.parse(required(params(h), "query")))
@@ -2500,34 +267,33 @@ final class HttpApi(spark: SparkSession,
           respond(h, 200, PromJson.success("{}"))
         case (_, "/api/v1/query_exemplars") =>
           respond(h, 200, PromJson.success("[]"))
-        case (_, "/api/v1/status/tsdb") => handleStatusTsdb(h)
-        case (_, "/ready") =>
-          respondBytes(h, 200, "SquirrelDB-compatible API ready\n"
-            .getBytes(UTF_8), "text/plain")
+        case (_, "/api/v1/status/tsdb") => handleStatusTsdb(h, st)
+        case (_, "/ready") => text(h, "SquirrelDB-compatible API ready\n")
         case (_, "/metrics") => handleMetrics(h)
-        case (_, "/debug/index_dump") => handleIndexDump(h, None)
+        // `/debug/index_dump` (+ `_by_labels` with `query=<selector>`) —
+        // reference `api/api.go:214,218`
+        case (_, "/debug/index_dump") =>
+          streamDump(h, store.seriesIndex(Long.MinValue, Long.MaxValue,
+            lit(true), ttlFiltered = true, st))
         case (_, "/debug/index_dump_by_labels") =>
-          handleIndexDump(h,
-            params(h).get("query").flatMap(_.headOption))
+          val where = params(h).get("query").flatMap(_.headOption).fold(lit(true))(
+            sel => Matchers.all(Tsdb.labelCol, selectorMatchers(sel)))
+          streamDump(h, store.seriesIndex(Long.MinValue, Long.MaxValue,
+            where, ttlFiltered = true, st))
         case (_, "/debug/index_dump_by_expiration") =>
-          handleDumpByExpiration(h, required(params(h), "date"))
+          handleDumpByExpiration(h, required(params(h), "date"), st)
         case (_, "/debug/index_dump_by_shard") =>
-          handleDumpByShard(h, required(params(h), "shard_time"))
-        case (_, "/debug/index_dump_by_posting") =>
-          handleDumpByPosting(h)
+          handleDumpByShard(h, required(params(h), "shard_time"), st)
+        case (_, "/debug/index_dump_by_posting") => handleDumpByPosting(h, st)
         case (_, "/debug/index_block") =>
-          coldWritesBlocked = true
-          respondBytes(h, 200, "Write to durable tier blocked\n"
-            .getBytes(UTF_8), "text/plain")
+          store.blockColdWrites(true)
+          text(h, "Write to durable tier blocked\n")
         case (_, "/debug/index_unblock") =>
-          coldWritesBlocked = false
-          respondBytes(h, 200, "Write to durable tier unblocked\n"
-            .getBytes(UTF_8), "text/plain")
+          store.blockColdWrites(false)
+          text(h, "Write to durable tier unblocked\n")
         case (_, "/debug/toggle_debug_query") =>
           debugQueries = !debugQueries
-          respondBytes(h, 200,
-            s"defaultDebugRequest is now $debugQueries\n".getBytes(UTF_8),
-            "text/plain")
+          text(h, s"defaultDebugRequest is now $debugQueries\n")
         // the reference exposes Go pprof (`api/api.go:228`); the JVM
         // analogue is a full thread dump + memory summary — what an
         // operator reaches for when the facade looks wedged
@@ -2542,30 +308,30 @@ final class HttpApi(spark: SparkSession,
               s"state=${ti.getThreadState}\n"
             ti.getStackTrace.foreach(f => sb ++= s"\tat $f\n")
           }
-          respondBytes(h, 200, sb.toString.getBytes(UTF_8), "text/plain")
-        case (_, "/debug/") | (_, "/debug") =>
-          respondBytes(h, 200, DebugHelp.getBytes(UTF_8), "text/plain")
+          text(h, sb.toString)
+        case (_, "/debug/") | (_, "/debug") => text(h, DebugHelp)
         case (_, "/debug/flush") =>
-          compact()
-          respondBytes(h, 200,
-            "Flushed hot batches (compacted append-only store)\n"
-              .getBytes(UTF_8), "text/plain")
+          store.compact()
+          text(h, "Flushed hot batches (compacted append-only store)\n")
         case (_, "/debug/preaggregate") =>
           val ps = params(h)
-          val months = forcePreAggregate(
+          val months = store.forcePreAggregate(
             parseTime(required(ps, "from")), parseTime(required(ps, "to")))
-          respondBytes(h, 200,
-            s"Re-aggregated ${months.size} month partition(s): ${
-              months.mkString(", ")}\n".getBytes(UTF_8), "text/plain")
-        case (_, "/debug/index_info") => handleIndexInfo(h)
-        case (_, "/debug/index_verify") => handleIndexVerify(h)
+          text(h, s"Re-aggregated ${months.size} month partition(s): ${
+            months.mkString(", ")}\n")
+        // `/debug/index_info` (reference `api/api.go:213`): store counts
+        case (_, "/debug/index_info") =>
+          respond(h, 200, store.indexInfo
+            .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}"))
+        case (_, "/debug/index_verify") => handleIndexVerify(h, st)
         case (_, "/debug/expire_series") =>
           val now = params(h).get("now").flatMap(_.headOption)
             .map(parseTime).getOrElse(System.currentTimeMillis())
-          respondBytes(h, 200,
-            s"Expired ${sweepExpiredSeries(now)} series\n".getBytes(UTF_8),
-            "text/plain")
-        case ("GET", "/debug/mutable_dump") => handleMutableDump(h)
+          text(h, s"Expired ${store.sweepExpiredSeries(now)} series\n")
+        // `/debug/mutable_dump` CSV (reference `api/api.go:226`)
+        case ("GET", "/debug/mutable_dump") =>
+          respondBytes(h, 200, store.mutableRows.map(_.productIterator
+            .mkString("", ",", "\n")).mkString.getBytes(UTF_8), "text/csv")
         case ("POST", "/debug/mutable_import") => handleMutableImport(h)
         case ("POST", "/mutable/names") => handleMutableNames(h, delete = false)
         case ("DELETE", "/mutable/names") => handleMutableNames(h, delete = true)
@@ -2579,10 +345,11 @@ final class HttpApi(spark: SparkSession,
         try respond(h, 422, PromJson.error("execution",
           Option(e.getMessage).getOrElse(e.getClass.getSimpleName)))
         catch { case _: Exception => () }
-    } finally {
-      readStalenessMs.remove()
-      h.close()
-    }
+    } finally h.close()
+
+  private def ttlOf(h: HttpExchange): Long =
+    Option(h.getRequestHeaders.getFirst("X-SquirrelDB-TTL"))
+      .filter(_.nonEmpty).map(_.toLong).getOrElse(store.DefaultTtlSec)
 
   /** PRW write (S1). v2 responses carry the 2.0 written-stats headers
     * (the reference serves them via the upstream write handler,
@@ -2596,8 +363,6 @@ final class HttpApi(spark: SparkSession,
   private def handleWrite(h: HttpExchange): Unit = {
     val body = h.getRequestBody.readAllBytes()
     val ct = Option(h.getRequestHeaders.getFirst("Content-Type")).getOrElse("")
-    val ttl = Option(h.getRequestHeaders.getFirst("X-SquirrelDB-TTL"))
-      .filter(_.nonEmpty).map(_.toLong).getOrElse(DefaultTtlSec)
     if (ct.contains("io.prometheus.write.v2.Request")) {
       val dec = PrompbV2.decodeSnappyWithStats(body)
       def setStats(samples: Long, histograms: Long, exemplars: Long): Unit = {
@@ -2614,12 +379,12 @@ final class HttpApi(spark: SparkSession,
           s"native histograms are not supported (${dec.histograms} " +
             "histogram sample(s) in request)"))
       } else {
-        val written = write(dec.series, tenantOf(h), ttl)
+        val written = store.write(dec.series, tenantOf(h), ttlOf(h))
         setStats(written, 0L, 0L)
         respondBytes(h, 204, Array.emptyByteArray, "application/json")
       }
     } else {
-      write(Prompb.decodeSnappy(body), tenantOf(h), ttl)
+      store.write(Prompb.decodeSnappy(body), tenantOf(h), ttlOf(h))
       respondBytes(h, 204, Array.emptyByteArray, "application/json")
     }
   }
@@ -2630,9 +395,7 @@ final class HttpApi(spark: SparkSession,
     */
   private def handleOtlpWrite(h: HttpExchange): Unit = {
     val body = h.getRequestBody.readAllBytes()
-    val ttl = Option(h.getRequestHeaders.getFirst("X-SquirrelDB-TTL"))
-      .filter(_.nonEmpty).map(_.toLong).getOrElse(DefaultTtlSec)
-    write(Otlp.decodeExportRequest(body), tenantOf(h), ttl)
+    store.write(Otlp.decodeExportRequest(body), tenantOf(h), ttlOf(h))
     respondBytes(h, 204, Array.emptyByteArray, "application/json")
   }
 
@@ -2649,46 +412,18 @@ final class HttpApi(spark: SparkSession,
     opts.tenantLabel.map { case (l, v) => MatchEq(l, v) }.toSeq ++ opts.forced
   }
 
-  /** Per-query matched series: LWW-deduped rows grouped per series with
-    * time-sorted samples, metric_id-ordered for a deterministic stream.
-    *
-    * A4 applies to remote read too: the reference routes every select
-    * from the ReadHints the client sends with it
-    * (`api/promql/queryable.go:372` copies `hints.Step`/`hints.Func`
-    * into the request; `cassandra/tsdb/read.go:61` reads aggregated
-    * data when `StepMs ≥` the 5-min resolution, with the counter-safe
-    * column for the hinted function). Force headers override both ways.
-    */
-  private[graft] def readSeriesFrame(q: Prompb.ReadQuery,
-      extra: Seq[Matcher] = Nil, forcePre: Boolean = false,
-      forceRaw: Boolean = false): Option[DataFrame] = {
-    val routed =
-      if (forceRaw || (!forcePre && q.stepMs < PreAggResolutionMs)) None
-      else routedPoints(q.startMs, q.endMs,
-        graft.tsdb.PreAgg.columnFor(q.func))
-    routed.foreach(_ => preAggRoutedTotal.incrementAndGet())
-    routed.orElse(dedupedPoints(q.startMs, q.endMs)).map { df =>
-      val resolve: String => Column = n => element_at(col("labels"), n)
-      val ms = extra ++ q.matchers
-      df.where(if (ms.isEmpty) lit(true) else Matchers.all(resolve, ms))
-        .groupBy("metric_id")
-        .agg(max_by(col("labels"), col("__seq")).as("labels"),
-          sort_array(collect_list(
-            struct(col("ts_ms"), col("value")))).as("samples"))
-        .orderBy("metric_id")
-    }
-  }
-
-  private def handleRead(h: HttpExchange): Unit = {
+  private def handleRead(h: HttpExchange, st: Option[Long]): Unit = {
     readRequestsTotal.incrementAndGet()
     val req = Prompb.decodeReadRequestFull(
       org.xerial.snappy.Snappy.uncompress(h.getRequestBody.readAllBytes()))
     val extra = headerMatchers(h)
     val fp = headerFlag(h, "X-SquirrelDB-ForcePreAggregated")
     val fr = headerFlag(h, "X-SquirrelDB-ForceRaw")
+    val frames = req.queries.map(q => () =>
+      store.readSeriesFrame(q, extra, fp, fr, st))
     if (req.acceptedResponseTypes.contains(Prompb.ResponseTypeStreamedXorChunks))
-      handleReadStreamed(h, req.queries, extra, fp, fr)
-    else handleReadSamples(h, req.queries, extra, fp, fr)
+      handleReadStreamed(h, frames)
+    else handleReadSamples(h, frames)
   }
 
   /** Buffered SAMPLES response (the protocol is one snappy blob — same as
@@ -2697,12 +432,11 @@ final class HttpApi(spark: SparkSession,
     * never the collected row set.
     */
   private def handleReadSamples(h: HttpExchange,
-      queries: Seq[Prompb.ReadQuery], extra: Seq[Matcher] = Nil,
-      forcePre: Boolean = false, forceRaw: Boolean = false): Unit = {
+      frames: Seq[() => Option[DataFrame]]): Unit = {
     val out = new java.io.ByteArrayOutputStream()
-    queries.foreach { q =>
+    frames.foreach { frame =>
       val qr = new java.io.ByteArrayOutputStream()
-      readSeriesFrame(q, extra, forcePre, forceRaw).foreach { df =>
+      frame().foreach { df =>
         val it = df.toLocalIterator()
         while (it.hasNext) {
           Prompb.appendMessage(qr, 1, Prompb.encodeTimeSeries(rowSeries(it.next())))
@@ -2721,13 +455,12 @@ final class HttpApi(spark: SparkSession,
     * driver-sized buffer.
     */
   private def handleReadStreamed(h: HttpExchange,
-      queries: Seq[Prompb.ReadQuery], extra: Seq[Matcher] = Nil,
-      forcePre: Boolean = false, forceRaw: Boolean = false): Unit = {
+      frames: Seq[() => Option[DataFrame]]): Unit = {
     h.getResponseHeaders.set("Content-Type", Prompb.StreamedChunksContentType)
     h.sendResponseHeaders(200, 0) // chunked transfer
     val os = h.getResponseBody
-    queries.zipWithIndex.foreach { case (q, qi) =>
-      readSeriesFrame(q, extra, forcePre, forceRaw).foreach { df =>
+    frames.zipWithIndex.foreach { case (frameOf, qi) =>
+      frameOf().foreach { df =>
         val it = df
           .withColumn("chunks", HttpApi.xorChunksUdf(
             col("samples.ts_ms"), col("samples.value")))
@@ -2802,56 +535,27 @@ final class HttpApi(spark: SparkSession,
     * the forced headers from `types/types.go:180-186`; `cassandra/tsdb/
     * read.go:57-72` serves any query with step ≥ the agg resolution from
     * pre-aggregated data): ForceRaw wins, ForcePreAggregated routes
-    * regardless of step, otherwise step ≥ 5 min routes.
-    *
-    * Routing is PER SELECTOR (the reference passes each Select's own
-    * function hint, `queryable.go:367-373` → `read.go:594-613`): the raw
-    * source carries a [[PromSource.routeFor]] hook that maps each
-    * selector's innermost enclosing function to its counter-safe agg
-    * column, so `max_over_time(a)/min_over_time(b)` reads agg_5m twice
-    * (max and min columns) instead of falling back to a raw scan.
+    * regardless of step, otherwise step ≥ 5 min routes — per selector,
+    * through the store's query source.
     */
   private def pickSource(h: HttpExchange, ast: graft.promql.Expr,
-      stepMs: Long, mint: Long, maxt: Long): Option[PromSource] = {
+      stepMs: Long, mint: Long, maxt: Long,
+      st: Option[Long]): Option[PromSource] = {
     val forceRaw = headerFlag(h, "X-SquirrelDB-ForceRaw")
     val forcePre = headerFlag(h, "X-SquirrelDB-ForcePreAggregated")
     val routeOk = !forceRaw && (forcePre || stepMs >= PreAggResolutionMs)
     val tenant = tenantOf(h)
-    querySource(tenant, mint, maxt, routeOk).orElse {
+    store.querySource(tenant, mint, maxt, routeOk, st).orElse {
       // raw tier empty (e.g. fully aged out by retention) but the agg
       // table can still serve: route the whole AST through one column
       if (!routeOk) None
       else QueryService.preAggColumn(ast)
-        .flatMap(c => routedSource(tenant, mint, maxt, c))
-        .map { s => preAggRoutedTotal.incrementAndGet(); s }
+        .flatMap(c => store.routedSource(tenant, mint, maxt, c, st))
+        .map { s => store.preAggRoutedTotal.incrementAndGet(); s }
     }
   }
 
-  /** The PromQL query source: the raw multi-metric source, with the
-    * per-selector routing hook attached when `allowRoute`.
-    */
-  private[graft] def querySource(tenant: String, mint: Long, maxt: Long,
-      allowRoute: Boolean): Option[PromSource] = {
-    val raw = source(tenant, mint, maxt)
-    if (!allowRoute) raw
-    else raw.map { base =>
-      // memoize per column — one agg-table read per distinct column, and
-      // the routed-queries counter moves once per request
-      val cache =
-        scala.collection.mutable.Map.empty[String, Option[DataFrame]]
-      val counted = new java.util.concurrent.atomic.AtomicBoolean(false)
-      base.copy(routeFor = { fnOpt =>
-        val c = graft.tsdb.PreAgg.columnFor(fnOpt.getOrElse("avg"))
-        val r = cache.synchronized { cache.getOrElseUpdate(c,
-          routedSource(tenant, mint, maxt, c).map(_.points)) }
-        if (r.isDefined && counted.compareAndSet(false, true))
-          preAggRoutedTotal.incrementAndGet()
-        r
-      })
-    }
-  }
-
-  private def handleQueryRange(h: HttpExchange): Unit = {
+  private def handleQueryRange(h: HttpExchange, st: Option[Long]): Unit = {
     queriesTotal.incrementAndGet()
     val ps = params(h)
     val q = required(ps, "query")
@@ -2869,14 +573,14 @@ final class HttpApi(spark: SparkSession,
         s"end=$end step=$step bounds=[$mint,$maxt]")
     }
     // slow-read phase log: a read that crosses 3 s prints where it went
-    // (source = readView/drain + hot-union build; plan = eval plan build
-    // + analysis; exec = optimize + jobs + JSON serialization) — the
-    // saturation diagnostics this was built on live in SCALE.md. A
-    // one-stage read spends exec in one job; the verbose debug header
-    // prints the plan and job count that ran
+    // (source = the store's read view/drain + hot-union build; plan =
+    // eval plan build + analysis; exec = optimize + jobs + JSON
+    // serialization) — the saturation diagnostics this was built on live
+    // in SCALE.md. A one-stage read spends exec in one job; the verbose
+    // debug header prints the plan and job count that ran
     val tA = System.nanoTime()
     val group = debugJobGroup(verbose)
-    try pickSource(h, ast, step, mint, maxt) match {
+    try pickSource(h, ast, step, mint, maxt, st) match {
       case None => respond(h, 200,
         PromJson.success("""{"resultType":"matrix","result":[]}"""))
       case Some(src) =>
@@ -2919,7 +623,7 @@ final class HttpApi(spark: SparkSession,
 
   /** Log the plan `df` ran — the final adaptive plan, which exists only
     * once it has run — and the jobs its request's group started: one
-    * job and no exchange is the one-stage shape ([[oneStage]]).
+    * job and no exchange is the store's one-stage read shape.
     */
   private def printDebugPlan(group: String, df: DataFrame): Unit = {
     scala.util.Try(ListenerShim.drain(spark.sparkContext))
@@ -2928,7 +632,7 @@ final class HttpApi(spark: SparkSession,
       df.queryExecution.executedPlan)
   }
 
-  private def handleQuery(h: HttpExchange): Unit = {
+  private def handleQuery(h: HttpExchange, st: Option[Long]): Unit = {
     queriesTotal.incrementAndGet()
     val ps = params(h)
     val q = required(ps, "query")
@@ -2944,7 +648,7 @@ final class HttpApi(spark: SparkSession,
         s"bounds=[$mint,$maxt]")
     }
     val group = debugJobGroup(verbose)
-    try pickSource(h, ast, p.stepMs, mint, maxt) match {
+    try pickSource(h, ast, p.stepMs, mint, maxt, st) match {
       case None => respond(h, 200,
         PromJson.success("""{"resultType":"vector","result":[]}"""))
       case Some(src) =>
@@ -2976,60 +680,29 @@ final class HttpApi(spark: SparkSession,
         s"match[] must be a series selector, got $other")
     }
 
-  private def timeBounds(ps: Map[String, Seq[String]]): (Long, Long) = (
-    ps.get("start").flatMap(_.headOption).map(parseTime).getOrElse(Long.MinValue),
-    ps.get("end").flatMap(_.headOption).map(parseTime).getOrElse(Long.MaxValue))
-
-  /** Points restricted by optional match[] + start/end (the filtering the
-    * reference's label APIs do via matcher+shard intersection,
-    * `cassandra/index/index.go:1265-1325`).
+  /** The label and series APIs' restriction: the match[] selectors (a
+    * series matching any of them) and the optional start/end.
     */
-  private def matchedPoints(ps: Map[String, Seq[String]],
-      extra: Seq[Matcher] = Nil): Option[DataFrame] = {
-    val sels = ps.getOrElse("match[]", Seq.empty)
-    val (startMs, endMs) = timeBounds(ps)
-    dedupedPoints(startMs, endMs).map { df =>
-      val resolve: String => Column = n => element_at(col("labels"), n)
-      val matched =
-        if (sels.isEmpty) df
-        else df.where(sels.map(s => Matchers.all(resolve, selectorMatchers(s)))
-          .reduce(_ || _))
-      if (extra.isEmpty) matched
-      else matched.where(Matchers.all(resolve, extra))
-    }
+  private def labelQuery(h: HttpExchange): (Seq[Seq[Matcher]], Long, Long) = {
+    val ps = params(h)
+    def bound(n: String, open: Long) =
+      ps.get(n).flatMap(_.headOption).map(parseTime).getOrElse(open)
+    (ps.getOrElse("match[]", Seq.empty).map(selectorMatchers),
+      bound("start", Long.MinValue), bound("end", Long.MaxValue))
   }
 
-  private def handleSeries(h: HttpExchange): Unit = {
-    val ps = params(h)
-    if (ps.getOrElse("match[]", Seq.empty).isEmpty)
+  private def handleSeries(h: HttpExchange, st: Option[Long]): Unit = {
+    val (sels, from, to) = labelQuery(h)
+    if (sels.isEmpty)
       return respond(h, 400, PromJson.error("bad_data",
         "no match[] parameter provided"))
-    val mappings = mappingsFor(tenantOf(h))
-    matchedPoints(ps, headerMatchers(h)) match {
+    store.seriesLabels(tenantOf(h), from, to, sels, headerMatchers(h), st) match {
       case None => respond(h, 200, PromJson.success("[]"))
-      case Some(df) =>
-        // decorate each series' label map with its mutable labels (M2)
-        val decorated = mappings.foldLeft(
-          df.groupBy("metric_id")
-            .agg(max_by(col("labels"), col("__seq")).as("labels"))) {
-          (d, m) =>
-            val mv = decorationCol(m, element_at(col("labels"), m.targetName))
-            d.withColumn("labels", when(mv.isNotNull,
-              map_concat(col("labels"), map(lit(m.name), mv)))
-              .otherwise(col("labels")))
-        }
-        // set-ops can't key on MAP columns — dedup + order on the
-        // canonical label encoding IN THE PLAN (the JSON body is
-        // inherently driver-sized, but peak memory stays one row via
-        // toLocalIterator, like the other streamed endpoints)
-        val distinctSorted = decorated
-          .withColumn("__k",
-            graft.tsdb.SeriesDim.canonicalMap(col("labels")))
-          .dropDuplicates("__k")
-          .orderBy("__k")
-          .select("labels")
+      case Some(series) =>
+        // the JSON body is inherently driver-sized, but peak memory stays
+        // one row via toLocalIterator, like the other streamed endpoints
         val sb = new StringBuilder("""{"status":"success","data":[""")
-        val it = distinctSorted.toLocalIterator()
+        val it = series.toLocalIterator()
         var first = true
         while (it.hasNext) {
           if (!first) sb.append(',')
@@ -3042,150 +715,30 @@ final class HttpApi(spark: SparkSession,
     }
   }
 
-  /** Label names: physical names on matching series (all stored names
-    * when unfiltered) plus the tenant's mutable names (M3,
-    * `cassandra/mutable/index.go:127-185`).
-    */
   /** /api/v1/status/tsdb — the upstream TSDB-status payload (Grafana's
-    * TSDB page): head stats plus the four top-10 cardinality tables,
-    * computed from the live deduped view. The per-table aggregates run
-    * over the DISTINCT-series relation (dimension-sized by definition),
-    * so everything after the one dedup pass is tiny; this is a status
-    * endpoint, priced like the debug index dumps, not the query path.
-    * `chunkCount` maps to the sample count — the closest analogue in a
-    * store without head chunks. Top-10 ties break by name for a
-    * deterministic payload.
+    * TSDB page), priced like the debug index dumps, not the query path.
     */
-  private def handleStatusTsdb(h: HttpExchange): Unit = {
-    def entries(rows: Seq[(String, Long)]): String =
-      rows.map { case (n, v) =>
-        s"""{"name":"${PromJson.escape(n)}","value":$v}"""
-      }.mkString("[", ",", "]")
-    val empty = """{"headStats":{"numSeries":0,"numLabelPairs":0,""" +
-      """"chunkCount":0,"minTime":0,"maxTime":0},""" +
-      """"seriesCountByMetricName":[],"labelValueCountByLabelName":[],""" +
-      """"memoryInBytesByLabelName":[],"seriesCountByLabelValuePair":[]}"""
-    dedupedPoints() match {
-      case None => respond(h, 200, PromJson.success(empty))
-      case Some(df) =>
-        import spark.implicits._
-        val stats = df.agg(min("ts_ms"), max("ts_ms"), count(lit(1))).head()
-        if (stats.isNullAt(0)) { respond(h, 200, PromJson.success(empty)); return }
-        val (minT, maxT, nPts) =
-          (stats.getLong(0), stats.getLong(1), stats.getLong(2))
-        // MAP columns can't feed distinct(); the canonical series id can
-        // (labels are constant per metric_id by construction)
-        val dist = df.groupBy("metric_id")
-          .agg(first(col("labels")).as("labels"))
-        val pairs = dist
-          .select(explode(col("labels")).as(Seq("k", "v")))
-          .localCheckpoint(true) // four aggregates read it, one pass each
-        val numSeries = dist.count()
-        val numPairs = pairs.distinct().count()
-        def top10(d: DataFrame): Seq[(String, Long)] = d
-          .orderBy(col("value").desc, col("name").asc).limit(10)
-          .as[(String, Long)].collect().toSeq
-        val byMetric = top10(dist
-          .select(element_at(col("labels"), "__name__").as("name"))
-          .where(col("name").isNotNull)
-          .groupBy("name").agg(count(lit(1)).as("value")))
-        val valuesByName = top10(pairs.groupBy(col("k").as("name"))
-          .agg(countDistinct(col("v")).as("value")))
-        val bytesByName = top10(pairs.groupBy(col("k").as("name"))
-          .agg(sum(length(col("v"))).as("value")))
-        val byPair = top10(pairs
-          .select(concat(col("k"), lit("="), col("v")).as("name"))
-          .groupBy("name").agg(count(lit(1)).as("value")))
-        respond(h, 200, PromJson.success(
-          s"""{"headStats":{"numSeries":$numSeries,""" +
-            s""""numLabelPairs":$numPairs,"chunkCount":$nPts,""" +
-            s""""minTime":$minT,"maxTime":$maxT},""" +
-            s""""seriesCountByMetricName":${entries(byMetric)},""" +
-            s""""labelValueCountByLabelName":${entries(valuesByName)},""" +
-            s""""memoryInBytesByLabelName":${entries(bytesByName)},""" +
-            s""""seriesCountByLabelValuePair":${entries(byPair)}}"""))
-    }
-  }
-
-  private def handleLabels(h: HttpExchange): Unit = {
-    import spark.implicits._
-    val ps = params(h)
-    val extra = headerMatchers(h)
-    val mutables = mutableNames.keysIterator
-      .collect { case (t, n) if t == tenantOf(h) => n }.toSeq
-    val physical =
-      if (!ps.contains("match[]") && !ps.contains("start") &&
-        !ps.contains("end") && extra.isEmpty) labelNames
-      else matchedPoints(ps, extra).fold(Seq.empty[String]) { df =>
-        df.select(explode(map_keys(col("labels"))).as("n")).distinct()
-          .as[String].collect().toSeq
-      }
-    respond(h, 200, PromJson.strings((physical ++ mutables).distinct))
-  }
-
-  /** Label values: a mutable name lists its configured values (reference
-    * skips matcher checks there, `mutable/index.go:127-150`); physical
-    * names scan matching series in the requested range.
-    */
-  private def handleLabelValues(h: HttpExchange, name: String): Unit = {
-    import spark.implicits._
-    val tenant = tenantOf(h)
-    if (mutableNames.contains((tenant, name))) {
-      val vals = mutableValues.keysIterator
-        .collect { case (t, n, v) if t == tenant && n == name => v }.toSeq
-      return respond(h, 200, PromJson.strings(vals.distinct))
-    }
-    matchedPoints(params(h), headerMatchers(h)) match {
-      case None => respond(h, 200, PromJson.success("[]"))
-      case Some(df) =>
-        val values = df
-          .select(element_at(col("labels"), name).as("v"))
-          .where(col("v").isNotNull && col("v") =!= "")
-          .distinct().as[String].collect().toSeq
-        respond(h, 200, PromJson.strings(values))
-    }
+  private def handleStatusTsdb(h: HttpExchange, st: Option[Long]): Unit = {
+    def obj(fields: Seq[(String, String)]): String =
+      fields.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+    val (head, tables) = store.tsdbStatus(st)
+    respond(h, 200, PromJson.success(obj(
+      ("headStats" -> obj(head.map { case (k, v) => k -> v.toString })) +:
+        tables.map { case (k, rows) => k -> rows.map { case (n, v) =>
+          s"""{"name":"${PromJson.escape(n)}","value":$v}"""
+        }.mkString("[", ",", "]") })))
   }
 
   /** `/debug/index_verify` (reference `api/api.go:216` →
-    * `cassandra/index/verify.go`): hot-store identity invariants — every
-    * stored row's metric_id must re-derive from its label map (canonical
-    * round-trip), and no id may serve two label sets.
+    * `cassandra/index/verify.go`): 200 when every invariant count the
+    * store reports is zero, 500 otherwise; `?strict` adds the
+    * expired-but-registered count.
     */
-  private def handleIndexVerify(h: HttpExchange): Unit = {
-    val (badIds, collisions) = dedupedPoints() match {
-      case None => (0L, 0L)
-      case Some(df) =>
-        val bad = df.where(col("metric_id") =!=
-          xxhash64(graft.tsdb.SeriesDim.canonicalMap(col("labels")))).count()
-        val coll = df
-          .groupBy("metric_id")
-          .agg(countDistinct(
-            graft.tsdb.SeriesDim.canonicalMap(col("labels"))).as("n"))
-          .where(col("n") > 1).count()
-        (bad, coll)
-    }
-    // strict expiration (reference `WithStrictExpiration`, an opt-in):
-    // registered series whose refreshed expiration already passed — zero
-    // after a [[sweepExpiredSeries]]. Computed (and reported) ONLY under
-    // ?strict: the dim scan + lock acquisition has no business on a
-    // routine liveness poll.
-    val strict = params(h).contains("strict")
-    val expiredRegistered =
-      if (!strict) 0L
-      else withColdLock {
-        expiryPath.filter(isDir).fold(0L) { ep =>
-          spark.read.parquet(ep).groupBy("metric_id")
-            .agg(max(col("expiration_ms")).as("__e"))
-            .where(col("__e") <= System.currentTimeMillis()).count()
-        }
-      }
-    val healthy = badIds == 0 && collisions == 0 &&
-      (!strict || expiredRegistered == 0)
-    respond(h, if (healthy) 200 else 500,
-      s"""{"healthy":$healthy,"badIds":$badIds,""" +
-        s""""idCollisions":$collisions""" +
-        (if (strict) s""","expiredRegistered":$expiredRegistered}"""
-        else "}"))
+  private def handleIndexVerify(h: HttpExchange, st: Option[Long]): Unit = {
+    val counts = store.indexVerify(params(h).contains("strict"), st)
+    val healthy = counts.forall(_._2 == 0)
+    respond(h, if (healthy) 200 else 500, (s""""healthy":$healthy""" +:
+      counts.map { case (k, v) => s""""$k":$v""" }).mkString("{", ",", "}"))
   }
 
   /** `/metrics` — internal telemetry in the Prometheus text exposition
@@ -3196,117 +749,84 @@ final class HttpApi(spark: SparkSession,
       s"# HELP $name $help\n# TYPE $name counter\n$name $v\n"
     val body =
       c("graft_writes_total", "Write requests accepted",
-        writesTotal.get) +
+        store.writesTotal.get) +
         c("graft_points_written_total", "Samples ingested",
-          pointsWrittenTotal.get) +
+          store.pointsWrittenTotal.get) +
         c("graft_queries_total", "PromQL query/query_range requests",
           queriesTotal.get) +
         c("graft_read_requests_total", "Remote-read requests",
           readRequestsTotal.get) +
         c("graft_preagg_routed_total",
           "Queries served from pre-aggregated data",
-          preAggRoutedTotal.get) +
+          store.preAggRoutedTotal.get) +
         c("graft_stale_reads_total",
           "Reads served from pinned state under a staleness budget",
-          staleReadsTotal.get) +
+          store.staleReadsTotal.get) +
         c("graft_stale_head_reads_total",
           "Budgeted reads served from the compacted head alone",
-          staleHeadReadsTotal.get) +
+          store.staleHeadReadsTotal.get) +
         c("graft_codegen_compilations_total",
           "Generated-code compilations in this JVM (codegen cache misses)",
           CodegenShim.compilations) +
         "# HELP graft_read_plans_total Read plans by shape: single = " +
         "inputs coalesced to one partition, parallel = not\n" +
         "# TYPE graft_read_plans_total counter\n" +
-        s"""graft_read_plans_total{shape="single"} ${singlePlans.get}\n""" +
-        s"""graft_read_plans_total{shape="parallel"} ${parallelPlans.get}\n"""
+        s"""graft_read_plans_total{shape="single"} ${store.singlePlans.get}\n""" +
+        s"""graft_read_plans_total{shape="parallel"} ${store.parallelPlans.get}\n"""
     respondBytes(h, 200, body.getBytes(UTF_8),
       "text/plain; version=0.0.4")
   }
 
-  /** `/debug/index_dump` (+ `_by_labels` with `query=<selector>`) —
-    * reference `api/api.go:214,218`: one `metric_id labels…` line per
-    * series, streamed via `toLocalIterator`.
-    */
-  private def handleIndexDump(h: HttpExchange,
-      selector: Option[String]): Unit = {
-    val df0 = dedupedPoints() match {
-      case None =>
-        return respondBytes(h, 200, Array.emptyByteArray, "text/plain")
-      case Some(df) => df
-    }
-    val resolve: Column => String => Column =
-      labels => n => element_at(labels, n)
-    val filtered = selector.fold(df0)(sel => df0.where(
-      Matchers.all(resolve(col("labels")), selectorMatchers(sel))))
-    streamDump(h, filtered
-      .groupBy("metric_id")
-      .agg(max_by(col("labels"), col("__seq")).as("labels"))
-      .orderBy("metric_id"))
-  }
-
   /** Shared dump streamer: one `metric_id labels… [extra]` line per
-    * series row, via `toLocalIterator`.
+    * series row, via `toLocalIterator` (an empty body when the store
+    * holds nothing).
     */
-  private def streamDump(h: HttpExchange, series: DataFrame,
-      extraCol: Option[String] = None): Unit = {
-    h.getResponseHeaders.set("Content-Type", "text/plain")
-    h.sendResponseHeaders(200, 0)
-    val os = h.getResponseBody
-    val it = series.toLocalIterator()
-    while (it.hasNext) {
-      val r = it.next()
-      val lbls = Option(r.getAs[Map[String, String]]("labels"))
-        .getOrElse(Map.empty).toSeq.sorted
-        .map { case (k, v) => s"""$k="$v"""" }.mkString("{", ",", "}")
-      val extra = extraCol.fold("")(c => " " + r.getAs[Any](c))
-      os.write(s"${r.getAs[Long]("metric_id")} $lbls$extra\n".getBytes(UTF_8))
-    }
-    os.close()
+  private def streamDump(h: HttpExchange, series: Option[DataFrame],
+      extraCol: Option[String] = None): Unit = series match {
+    case None => respondBytes(h, 200, Array.emptyByteArray, "text/plain")
+    case Some(df) =>
+      h.getResponseHeaders.set("Content-Type", "text/plain")
+      h.sendResponseHeaders(200, 0)
+      val os = h.getResponseBody
+      val it = df.toLocalIterator()
+      while (it.hasNext) {
+        val r = it.next()
+        val lbls = Option(r.getAs[Map[String, String]]("labels"))
+          .getOrElse(Map.empty).toSeq.sorted
+          .map { case (k, v) => s"""$k="$v"""" }.mkString("{", ",", "}")
+        val extra = extraCol.fold("")(c => " " + r.getAs[Any](c))
+        os.write(s"${r.getAs[Long]("metric_id")} $lbls$extra\n".getBytes(UTF_8))
+      }
+      os.close()
   }
 
   /** `/debug/index_dump_by_expiration?date=YYYY-MM-DD` (reference
     * `api/api.go:711-739` → `DumpByExpirationDate`): series whose
-    * refreshed expiration falls on that UTC day, labels joined from the
-    * (un-TTL-filtered) store so expired series still print.
+    * refreshed expiration falls on that UTC day.
     */
-  private def handleDumpByExpiration(h: HttpExchange, date: String): Unit =
-    expiryPath.filter(isDir) match {
+  private def handleDumpByExpiration(h: HttpExchange, date: String,
+      st: Option[Long]): Unit =
+    store.seriesExpiringOn(java.time.LocalDate.parse(date), st) match {
       case None => respond(h, 501, PromJson.error("unavailable",
         "no expiry dim (configure durablePath)"))
-      case Some(ep) =>
-        val day = java.sql.Date.valueOf(java.time.LocalDate.parse(date))
-        val dim = withColdLock {
-          spark.read.parquet(ep).groupBy("metric_id")
-            .agg(max(col("expiration_ms")).as("expiration_ms"))
-            .localCheckpoint(true) // pin: the dump outlives the lock
-        }
-        val onDay = dim.where(
-          to_date(timestamp_millis(col("expiration_ms"))) === lit(day))
-        val series = mergedDeduped()
-          .map(_.groupBy("metric_id")
-            .agg(max_by(col("labels"), col("__seq")).as("labels")))
-          .fold(onDay.withColumn("labels",
-            map().cast("map<string,string>")))(ld =>
-            onDay.join(ld, Seq("metric_id"), "left"))
-        streamDump(h, series.orderBy("metric_id"), Some("expiration_ms"))
+      case some => streamDump(h, some, Some("expiration_ms"))
     }
+
+  private def dayMs(date: String): (Long, Long) = {
+    val lo = java.time.LocalDate.parse(date)
+      .atStartOfDay(java.time.ZoneOffset.UTC).toInstant.toEpochMilli
+    (lo, lo + 86400000L - 1)
+  }
 
   /** `/debug/index_dump_by_shard?shard_time=YYYY-MM-DD` (reference
     * `api/api.go:741-769` → `DumpByShard`): the reference's index shards
     * postings by time block; the layout analogue is the day partition —
     * series with any point on that UTC day.
     */
-  private def handleDumpByShard(h: HttpExchange, date: String): Unit = {
-    val lo = java.time.LocalDate.parse(date)
-      .atStartOfDay(java.time.ZoneOffset.UTC).toInstant.toEpochMilli
-    mergedDeduped(lo, lo + 86400000L - 1) match {
-      case None => respondBytes(h, 200, Array.emptyByteArray, "text/plain")
-      case Some(df) => streamDump(h, df
-        .groupBy("metric_id")
-        .agg(max_by(col("labels"), col("__seq")).as("labels"))
-        .orderBy("metric_id"))
-    }
+  private def handleDumpByShard(h: HttpExchange, date: String,
+      st: Option[Long]): Unit = {
+    val (lo, hi) = dayMs(date)
+    streamDump(h, store.seriesIndex(lo, hi, lit(true), ttlFiltered = false, st))
   }
 
   /** `/debug/index_dump_by_posting?name=&value=[&shard_time=]` (reference
@@ -3314,72 +834,21 @@ final class HttpApi(spark: SparkSession,
     * label `name` present (any value) or equal to `value`, optionally
     * restricted to a day shard.
     */
-  private def handleDumpByPosting(h: HttpExchange): Unit = {
+  private def handleDumpByPosting(h: HttpExchange, st: Option[Long]): Unit = {
     val ps = params(h)
-    val name = required(ps, "name")
-    val value = ps.get("value").flatMap(_.headOption)
-    val (lo, hi) = ps.get("shard_time").flatMap(_.headOption) match {
-      case Some(d) =>
-        val l = java.time.LocalDate.parse(d)
-          .atStartOfDay(java.time.ZoneOffset.UTC).toInstant.toEpochMilli
-        (l, l + 86400000L - 1)
-      case None => (Long.MinValue, Long.MaxValue)
-    }
-    mergedDeduped(lo, hi) match {
-      case None => respondBytes(h, 200, Array.emptyByteArray, "text/plain")
-      case Some(df) =>
-        val v = element_at(col("labels"), name)
-        val cond = value.fold(v.isNotNull && v =!= "")(x => v === x)
-        streamDump(h, df.where(cond)
-          .groupBy("metric_id")
-          .agg(max_by(col("labels"), col("__seq")).as("labels"))
-          .orderBy("metric_id"))
-    }
-  }
-
-  /** `/debug/index_info` (reference `api/api.go:213` → index info dump):
-    * store-level counts for operators.
-    */
-  private def handleIndexInfo(h: HttpExchange): Unit = {
-    val (nPoints, nSeries) = rawPoints match {
-      case None => (0L, 0L)
-      case Some(df) =>
-        (df.count(), df.select("metric_id").distinct().count())
-    }
-    respond(h, 200, s"""{"points":$nPoints,"series":$nSeries,""" +
-      s""""labelNames":${labelNames.size},""" +
-      s""""pendingBatches":$pendingBatches,""" +
-      s""""mutableNames":${mutableNames.size}}""")
-  }
-
-  /** `/debug/mutable_dump` CSV (reference `api/api.go:226` →
-    * `cassandra/mutable/provider.go:423-487`): one row per association —
-    * tenant,name,associated_name,value,associated_value; names without
-    * values still print one row (significant for re-import).
-    */
-  private def handleMutableDump(h: HttpExchange): Unit = {
-    val sb = new StringBuilder
-    mutableNames.toSeq.sortBy(k => (k._1._1, k._1._2)).foreach {
-      case ((tenant, name), assocName) =>
-        val values = mutableValues.toSeq.collect {
-          case ((t, n, v), assoc) if t == tenant && n == name => (v, assoc)
-        }.sortBy(_._1)
-        if (values.isEmpty)
-          sb.append(s"$tenant,$name,$assocName,,\n")
-        else values.foreach { case (v, assoc) =>
-          if (assoc.isEmpty) sb.append(s"$tenant,$name,$assocName,$v,\n")
-          else assoc.foreach(av =>
-            sb.append(s"$tenant,$name,$assocName,$v,$av\n"))
-        }
-    }
-    respondBytes(h, 200, sb.result().getBytes(UTF_8), "text/csv")
+    val v = Tsdb.labelCol(required(ps, "name"))
+    val cond = ps.get("value").flatMap(_.headOption)
+      .fold(v.isNotNull && v =!= "")(x => v === x)
+    val (lo, hi) = ps.get("shard_time").flatMap(_.headOption).map(dayMs)
+      .getOrElse((Long.MinValue, Long.MaxValue))
+    streamDump(h, store.seriesIndex(lo, hi, cond, ttlFiltered = false, st))
   }
 
   /** `/debug/mutable_import` (reference `api/api.go:640-656`): replace ALL
     * mutable labels with the posted CSV; a dry-run without `?force`
     * (values with commas/quotes are out of scope — label values).
     */
-  private def handleMutableImport(h: HttpExchange): Unit = synchronized {
+  private def handleMutableImport(h: HttpExchange): Unit = {
     val force = Option(h.getRequestURI.getRawQuery).exists(
       _.split("&").contains("force"))
     val body = new String(h.getRequestBody.readAllBytes(), UTF_8)
@@ -3393,17 +862,12 @@ final class HttpApi(spark: SparkSession,
     val values = rows.filter(f => f(3).nonEmpty && f(4).nonEmpty)
       .groupBy(f => (f(0), f(1), f(3)))
       .map { case (k, fs) => k -> fs.map(_(4)).distinct }
-    if (force) {
-      mutableNames = names
-      mutableValues = values
-      persistMutable()
-    }
-    val msg = s"Would import ${names.size} mutable names and " +
+    if (force) store.replaceMutable(names, values)
+    text(h, s"Would import ${names.size} mutable names and " +
       s"${values.size} value mappings (replacing all existing)\n" +
       (if (force) "Import applied\n"
       else "To apply change, add \"force\" parameter " +
-        "(e.g. /debug/mutable_import?force)\n")
-    respondBytes(h, 200, msg.getBytes(UTF_8), "text/plain")
+        "(e.g. /debug/mutable_import?force)\n"))
   }
 
   // ---- mutable-label CRUD (reference api/api.go:954-1080) ----
@@ -3426,40 +890,30 @@ final class HttpApi(spark: SparkSession,
   /** POST: `[{"tenant","name","associated_name"}]`; DELETE:
     * `[{"tenant","name"}]` — mirrors `mutable.LabelWithName`/`LabelKey`.
     */
-  private def handleMutableNames(h: HttpExchange, delete: Boolean): Unit =
-    synchronized {
-      jsonArray(h).foreach { n =>
-        val key = (field(n, "tenant"), field(n, "name"))
-        if (delete) {
-          mutableNames -= key
-          mutableValues = mutableValues.filter { case ((t, nm, _), _) =>
-            (t, nm) != key }
-        } else mutableNames += key -> field(n, "associated_name")
-      }
-      persistMutable()
-      respondBytes(h, 200, "ok".getBytes(UTF_8), "text/plain")
-    }
+  private def handleMutableNames(h: HttpExchange, delete: Boolean): Unit = {
+    store.updateMutableNames(jsonArray(h).map { n =>
+      (field(n, "tenant"), field(n, "name")) ->
+        Option.when(!delete)(field(n, "associated_name"))
+    })
+    text(h, "ok")
+  }
 
   /** POST: `[{"tenant","name","value","associated_values":[…]}]`; DELETE:
     * `[{"tenant","name","value"}]` — mirrors
     * `mutable.LabelWithValues`/`Label`.
     */
-  private def handleMutableValues(h: HttpExchange, delete: Boolean): Unit =
-    synchronized {
-      jsonArray(h).foreach { n =>
-        val key = (field(n, "tenant"), field(n, "name"), field(n, "value"))
-        if (delete) mutableValues -= key
-        else {
+  private def handleMutableValues(h: HttpExchange, delete: Boolean): Unit = {
+    store.updateMutableValues(jsonArray(h).map { n =>
+      (field(n, "tenant"), field(n, "name"), field(n, "value")) ->
+        Option.when(!delete) {
           val av = n.get("associated_values")
           require(av != null && av.isArray && av.size() > 0,
             "missing or empty field 'associated_values'")
-          mutableValues += key ->
-            (0 until av.size()).map(av.get(_).asText).toSeq
+          (0 until av.size()).map(av.get(_).asText).toSeq
         }
-      }
-      persistMutable()
-      respondBytes(h, 200, "ok".getBytes(UTF_8), "text/plain")
-    }
+    })
+    text(h, "ok")
+  }
 
   // ---- request parsing ----
 
@@ -3523,22 +977,6 @@ final class HttpApi(spark: SparkSession,
 }
 
 object HttpApi {
-
-  /** The agg_5m table's layout: what [[HttpApi.aggSlice]] writes, with
-    * `month` last as the string partition column. Reads declare it, so
-    * no schema-inference job runs per routed compile.
-    */
-  private[graft] val AggSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType.fromDDL(
-      "metric_id BIGINT, bucket_ms BIGINT, min DOUBLE, max DOUBLE, " +
-        "avg DOUBLE, count BIGINT, labels MAP<STRING, STRING>, " +
-        "__ttl_sec BIGINT, month STRING")
-
-  /** Deterministic plain-identifier alias for a UTF-8 label name. */
-  private[graft] def utf8Alias(n: String): String =
-    "__u8_" + java.security.MessageDigest.getInstance("MD5")
-      .digest(n.getBytes("UTF-8")).take(8)
-      .map(b => f"${b & 0xff}%02x").mkString
 
   /** Executor-side XOR chunk encoding: sorted (ts, value) samples →
     * ≤120-sample chunkenc-layout chunks with their time bounds. A

@@ -1,7 +1,7 @@
 package graft.store
 
 import java.nio.file.{Files, Path}
-import java.util.{Comparator, UUID}
+import java.util.UUID
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
@@ -59,11 +59,7 @@ object Stage {
     spark.conf.getOption("graft.stage.dir").getOrElse(synchronized {
       defaultBase.getOrElse {
         val d = Files.createTempDirectory("graft-stage-")
-        sys.addShutdownHook {
-          if (Files.isDirectory(d))
-            Files.walk(d).sorted(Comparator.reverseOrder[Path]())
-              .forEach(p => Files.deleteIfExists(p))
-        }
+        sys.addShutdownHook(Store.deleteRecursively(d))
         defaultBase = Some(d)
         d
       }.toString

@@ -1,6 +1,8 @@
 package graft.store
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -312,10 +314,7 @@ object Store {
           p.getFileName.toString.stripPrefix("day="))
         d.isBefore(cutoffDay)
       }.toSeq
-    dropped.foreach { p =>
-      Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(Files.delete)
-    }
+    dropped.foreach(deleteRecursively)
     dropped.map(_.getFileName.toString)
   }
 
@@ -380,13 +379,6 @@ object Store {
       .distinct()
       .withColumn("metric_id",
         xxhash64(graft.tsdb.SeriesDim.canonical(labelCols)))
-
-  private implicit class IterAsScala[A](it: java.util.Iterator[A]) {
-    def asScala: Iterator[A] = new Iterator[A] {
-      def hasNext: Boolean = it.hasNext
-      def next(): A = it.next()
-    }
-  }
 
   /** J2 — series get-or-create (reference `cassandra/index/index.go:
     * 1366-1538` under a global lock): new label-sets are appended with
@@ -471,9 +463,7 @@ object Store {
           if (n.startsWith("." + dstPath.getFileName + ".tmp") &&
               Files.isDirectory(p) &&
               Files.getLastModifiedTime(p).toMillis < staleMs)
-            scala.util.Try(Files.walk(p)
-              .sorted(java.util.Comparator.reverseOrder())
-              .forEach(f => Files.delete(f)))
+            scala.util.Try(deleteRecursively(p))
         }
     }
     val tmpPath = dstPath.resolveSibling("." + dstPath.getFileName +
@@ -494,9 +484,7 @@ object Store {
       // loser's temp dir is deleted so it can't be mistaken for state.
       case _: java.nio.file.FileAlreadyExistsException |
           _: java.nio.file.DirectoryNotEmptyException =>
-        scala.util.Try(Files.walk(tmpPath)
-          .sorted(java.util.Comparator.reverseOrder())
-          .forEach(f => Files.delete(f)))
+        scala.util.Try(deleteRecursively(tmpPath))
         false
     }
   }
@@ -741,14 +729,60 @@ object Store {
     val total = effective.count()
     val kept = live.count()
     // compact: rewrite the dim as the live set only (out-of-band job —
-    // the write path never rewrites)
-    val tmp = dimPath + "_compact"
-    live.write.mode(SaveMode.Overwrite).parquet(tmp)
-    val target = Paths.get(dimPath)
-    Files.walk(target).iterator().asScala.toSeq.reverse.foreach(Files.delete)
-    Files.move(Paths.get(tmp), target)
+    // the write path never rewrites), crash-safe: an interrupted swap
+    // leaves a complete `_old` for [[recoverOverwrite]]
+    atomicOverwrite(live, dimPath)
     total - kept
   }
+
+  /** Delete `p` and everything under it; no-op when absent. */
+  def deleteRecursively(p: Path): Unit =
+    if (Files.exists(p)) {
+      val walk = Files.walk(p)
+      try walk.iterator().asScala.toList.reverse.foreach(Files.deleteIfExists)
+      finally walk.close()
+    }
+
+  /** Stage-then-rename parquet overwrite: writes to `<path>_stage`, keeps
+    * the live dir as `<path>_old` across the swap, promotes, then clears
+    * `_old` — no crash point leaves the ONLY copy torn. Restore sides
+    * trust a `_SUCCESS`-complete dir, preferring live over `_old`
+    * ([[completeDimDir]]); a dir that others append to must
+    * [[recoverOverwrite]] before its first append.
+    */
+  def atomicOverwrite(df: DataFrame, path: String): Unit = {
+    val (live, stage, old) =
+      (Paths.get(path), Paths.get(path + "_stage"), Paths.get(path + "_old"))
+    df.write.mode(SaveMode.Overwrite).parquet(stage.toString)
+    // clear _old only when the live dir exists to replace it: in the
+    // degraded state after an earlier crash (_old is the ONLY complete
+    // copy), deleting it before the stage→live promotion could lose the
+    // last restorable copy (r8 review finding)
+    if (Files.isDirectory(live)) {
+      deleteRecursively(old)
+      Files.move(live, old)
+    }
+    Files.move(stage, live)
+    deleteRecursively(old)
+  }
+
+  /** The newest `_SUCCESS`-complete copy of an [[atomicOverwrite]] dir:
+    * the live dir if complete, else the `_old` kept across an
+    * interrupted promotion.
+    */
+  def completeDimDir(path: String): Option[String] =
+    Seq(path, path + "_old").find(p => Files.isDirectory(Paths.get(p)) &&
+      Files.exists(Paths.get(p, "_SUCCESS")))
+
+  /** Undo an [[atomicOverwrite]] interrupted between moving the live dir
+    * aside and promoting its stage: with no live dir and a complete
+    * `_old`, rename `_old` back. The overwrite itself is then simply
+    * redone by its next run.
+    */
+  def recoverOverwrite(path: String): Unit =
+    if (!Files.isDirectory(Paths.get(path)) &&
+      completeDimDir(path).contains(path + "_old"))
+      Files.move(Paths.get(path + "_old"), Paths.get(path))
 
   /** The `fullyAggregatedAt` control value, kept beside the agg table. */
   def readWatermark(aggPath: String): Long = {

@@ -323,7 +323,7 @@ object SoakBench {
           System.nanoTime() - lastColdCompact >=
             coldCompactEverySec * 1000000000L) {
           lastColdCompact = System.nanoTime()
-          scala.util.Try(api.compactCold())
+          scala.util.Try(api.store.compactCold())
         }
         if (System.nanoTime() - lastSample >= sampleSec * 1000000000L) {
           lastSample = System.nanoTime()
@@ -384,7 +384,7 @@ object SoakBench {
     // later read through the exact path): how many budgeted reads were
     // served without a drain at all, and of those how many from the
     // compacted head alone (constant scan depth)
-    val (staleReads, staleHeadReads) = api.staleReadCounts
+    val (staleReads, staleHeadReads) = api.store.staleReadCounts
 
     // final correctness: drain and count — every acknowledged point
     // must be stored exactly once (unique (series, ts) by construction).
@@ -393,7 +393,7 @@ object SoakBench {
     val readBackN =
       if (durablePath.isDefined)
         api.source().map(_.points.count()).getOrElse(0L)
-      else api.rawPoints.map(_.count()).getOrElse(0L)
+      else api.store.rawPoints.map(_.count()).getOrElse(0L)
     val countOk = readBackN == acked.get
 
     def pct(q: ConcurrentLinkedQueue[Double], p: Double): Double = {

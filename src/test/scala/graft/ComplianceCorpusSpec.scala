@@ -246,9 +246,9 @@ class ComplianceCorpusSpec extends SparkSpec {
       api.write(mem ++ cpus ++ cpu ++ disk ++ batch ++ inter ++ hist,
         "default")
       val deadline = System.nanoTime() + 120L * 1000000000L
-      while ((api.pendingBatches > 0 || api.preAggWatermark == 0L) &&
+      while ((api.pendingBatches > 0 || api.store.preAggWatermark == 0L) &&
         System.nanoTime() < deadline) Thread.sleep(50)
-      assert(api.preAggWatermark > ts(nb - 1),
+      assert(api.store.preAggWatermark > ts(nb - 1),
         "the agg table must cover the whole fixture")
       val pp = EvalParams(T0 + 1800000L, T0 + 5400000L, 600000L)
       val tMid = T0 + 3600000L // on the grid

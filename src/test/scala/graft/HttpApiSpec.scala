@@ -259,7 +259,7 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
     assert(api2.pendingBatches === 2)
     // the STORED plan is a union of pinned batches — proof no write ran a
     // global groupBy (the old per-write O(total) rebuild)
-    val stored = api2.rawPoints.get
+    val stored = api2.store.rawPoints.get
     assert(stored.queryExecution.analyzed.collect {
       case a: Aggregate => a }.isEmpty, "write path must not aggregate")
     // read side resolves LWW: the second write's values win
@@ -275,7 +275,7 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
     while (api2.pendingBatches > 0 && System.nanoTime() < deadline)
       Thread.sleep(50)
     assert(api2.pendingBatches === 0)
-    val compacted = api2.rawPoints.get
+    val compacted = api2.store.rawPoints.get
     assert(compacted.count() ===
       compacted.select("metric_id", "ts_ms").distinct().count())
     // and the LWW winner survived compaction
@@ -321,7 +321,7 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
     apiDF.compact()
     assert(apiDF.midCount === 0)
     assert(apiDF.pendingBatches === 0)
-    val folded = apiDF.rawPoints.get
+    val folded = apiDF.store.rawPoints.get
     assert(folded.count() ===
       folded.select("metric_id", "ts_ms").distinct().count())
     val v2 = apiDF.source().get.points
@@ -623,7 +623,7 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
     // fixture timestamps (2024) are far beyond the hot horizon → all 20
     // samples are on disk, none left in memory
     assert(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(dir)))
-    assert(api3.rawPoints.get.count() === 0)
+    assert(api3.store.rawPoints.get.count() === 0)
     // reads still see the full history through the cold tier
     val src = api3.source().get
     assert(src.points.where(col("__name__") === "dm").count() === 20)
@@ -683,7 +683,7 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
       .select("value").collect().map(_.getDouble(0))
     assert(v.toSeq === Seq(50.0))
     // out-of-band cold compaction dedups the tier and clears the flag
-    api6.compactCold()
+    api6.store.compactCold()
     assert(aggs(api6) === 0)
     val v2 = api6.source().get.points
       .where(col("__name__") === "cm" && col("ts_ms") === T0)
@@ -826,7 +826,7 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
     while (api7.pendingBatches > 0 && System.nanoTime() < deadline)
       Thread.sleep(50)
     // everything spilled to the T0 day partition; retire it
-    val dropped = api7.applyColdRetention(T9 + 86400000L)
+    val dropped = api7.store.applyColdRetention(T9 + 86400000L)
     assert(dropped.nonEmpty, "expected a dropped day partition")
     // the facade keeps serving (empty store, not an error)
     assert(api7.source().forall(
@@ -934,7 +934,7 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
     apiMb.write(Seq(series("mb", "a", i => 50.0 + i)), "default") // LWW rewrite
     apiMb.write(Seq(series("mb", "b", i => 2.0)), "default")
     // three posts buffered: ZERO pinned batches, zero Spark jobs so far
-    assert(apiMb.bufferedPosts === 3)
+    assert(apiMb.store.bufferedPosts === 3)
     assert(apiMb.pendingBatches === 0)
     // a read flushes the buffer (read-your-writes) as ONE batch, and the
     // LATER post wins per (series, ts) even inside the shared batch
@@ -943,14 +943,14 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
         col("ts_ms") === T0)
       .select("value").collect().map(_.getDouble(0))
     assert(v.toSeq === Seq(50.0))
-    assert(apiMb.bufferedPosts === 0)
+    assert(apiMb.store.bufferedPosts === 0)
     assert(apiMb.pendingBatches === 1)
     // the fourth post would have flushed by count
     apiMb.write(Seq(series("mb", "c", i => 3.0)), "default")
-    assert(apiMb.bufferedPosts === 1)
+    assert(apiMb.store.bufferedPosts === 1)
     for (i <- 0 until 3)
       apiMb.write(Seq(series("mb", s"d$i", j => 4.0)), "default")
-    assert(apiMb.bufferedPosts === 0) // count threshold submitted
+    assert(apiMb.store.bufferedPosts === 0) // count threshold submitted
     apiMb.drainFlushes() // the pin itself is async (single flusher)
     assert(apiMb.pendingBatches === 2)
     assert(apiMb.source().get.points
@@ -1076,14 +1076,14 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
       apiPA.write(Seq(s5("a", i => 10.0 + i), s5("b", i => 100.0 - i)),
         "default")
       var deadline = System.nanoTime() + 30L * 1000000000L
-      while ((apiPA.pendingBatches > 0 || apiPA.preAggWatermark == 0L) &&
+      while ((apiPA.pendingBatches > 0 || apiPA.store.preAggWatermark == 0L) &&
         System.nanoTime() < deadline) Thread.sleep(50)
       // compaction spilled and extended agg_5m to the spill frontier
-      assert(apiPA.preAggWatermark > T0 + n * 300000L)
+      assert(apiPA.store.preAggWatermark > T0 + n * 300000L)
       // the routed source reads the agg table, not the raw cold tier —
       // with MONTH partition pruning reaching the scan (a year-long
       // dashboard must not list every month's files)
-      val routed = apiPA.routedSource("default", T0, T0 + n * 300000L,
+      val routed = apiPA.store.routedSource("default", T0, T0 + n * 300000L,
         "avg").get
       val rplan = routed.points.queryExecution.executedPlan.toString
       assert(rplan.contains("_agg5m"), "routed source must scan the agg table")
@@ -1134,7 +1134,7 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
         Map("__name__" -> "rh_m", "instance" -> "a", "job" -> "node"),
         (0 until n).map(i => (T0 + i * 300000L, 5.0 + i)))), "default")
       var deadline = System.nanoTime() + 30L * 1000000000L
-      while ((apiRH.pendingBatches > 0 || apiRH.preAggWatermark == 0L) &&
+      while ((apiRH.pendingBatches > 0 || apiRH.store.preAggWatermark == 0L) &&
         System.nanoTime() < deadline) Thread.sleep(50)
       def counter(): Long = client.send(HttpRequest.newBuilder(URI.create(
         s"http://127.0.0.1:$portRH/metrics")).GET().build(),
@@ -1213,7 +1213,7 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
       apiPS.write(Seq(mk("ps_a", i => 10.0 + i), mk("ps_b", i => 100.0 - i)),
         "default")
       val deadline = System.nanoTime() + 30L * 1000000000L
-      while ((apiPS.pendingBatches > 0 || apiPS.preAggWatermark == 0L) &&
+      while ((apiPS.pendingBatches > 0 || apiPS.store.preAggWatermark == 0L) &&
         System.nanoTime() < deadline) Thread.sleep(50)
       // the per-selector source compiles the mixed binop into a plan where
       // BOTH selectors scan the agg table — max column for one, min for
@@ -1275,9 +1275,9 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
         (0 until n).map(i => (T0 + i * 300000L, f(i))))
       apiFB.write(Seq(s5(_ => 1.0)), "default")
       var deadline = System.nanoTime() + 30L * 1000000000L
-      while ((apiFB.pendingBatches > 0 || apiFB.preAggWatermark == 0L) &&
+      while ((apiFB.pendingBatches > 0 || apiFB.store.preAggWatermark == 0L) &&
         System.nanoTime() < deadline) Thread.sleep(50)
-      val wm0 = apiFB.preAggWatermark
+      val wm0 = apiFB.store.preAggWatermark
       // late backfill REWRITES the window (LWW); spills below the frontier
       apiFB.write(Seq(s5(_ => 100.0)), "default")
       deadline = System.nanoTime() + 30L * 1000000000L
@@ -1302,13 +1302,13 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
       assert(r.body().contains("2024-01"), r.body())
       val fresh = q()
       assert(fresh.contains(""""100""""), fresh.take(300))
-      assert(apiFB.preAggWatermark === wm0 ||
-        apiFB.preAggWatermark >= wm0) // never rolled back
+      assert(apiFB.store.preAggWatermark === wm0 ||
+        apiFB.store.preAggWatermark >= wm0) // never rolled back
       // a RESTARTED facade adopts the rebuilt agg generation — not the
       // retired pre-repair one (initializer order once clobbered this:
       // the generation pointer must be declared before the bootstrap)
       val apiFB2 = new HttpApi(spark, durablePath = Some(dir))
-      val vals = apiFB2.routedSource("default", T0, T0 + n * 300000L, "avg")
+      val vals = apiFB2.store.routedSource("default", T0, T0 + n * 300000L, "avg")
         .get.points.select("value").collect().map(_.getDouble(0)).toSet
       assert(vals === Set(100.0),
         s"restart must serve the repaired generation, got $vals")
@@ -1329,7 +1329,7 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
         (0 until 12).map(i => (base + i * 300000L, v)))
       apiSR.write(Seq(s6(T0, 1.0), s6(febT, 2.0)), "default")
       val deadline = System.nanoTime() + 30L * 1000000000L
-      while ((apiSR.pendingBatches > 0 || apiSR.preAggWatermark == 0L) &&
+      while ((apiSR.pendingBatches > 0 || apiSR.store.preAggWatermark == 0L) &&
         System.nanoTime() < deadline) Thread.sleep(50)
       val aggRoot = java.nio.file.Paths.get(dir + "_agg5m")
       def gens(): Seq[Int] = java.nio.file.Files.list(aggRoot).iterator()
@@ -1388,7 +1388,7 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
       apiM1.write(Seq(
         series("md_load", "i1", i => 1.0 + i),
         series("md_load", "i2", i => 10.0 + i)), "default",
-        ttlSec = apiM1.DefaultTtlSec)
+        ttlSec = apiM1.store.DefaultTtlSec)
       def postM1(path: String, body: String) = {
         val b = HttpRequest.newBuilder(
           URI.create(s"http://127.0.0.1:$portM1$path"))
@@ -1482,7 +1482,7 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
       }
       spark.listenerManager.register(listener)
       try {
-        assert(apiEx.sweepExpiredSeries(System.currentTimeMillis()) === 0L)
+        assert(apiEx.store.sweepExpiredSeries(System.currentTimeMillis()) === 0L)
         // the execution-listener bus is async: wait for events to land
         val until = System.nanoTime() + 10L * 1000000000L
         while (plans.isEmpty && System.nanoTime() < until) Thread.sleep(50)
@@ -1536,11 +1536,11 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
               T0 + samples * 500L, Seq(MatchEq("job", "soak"))))
               .foreach(_.count())
             // routed reads race the agg table's generational rebuilds
-            apiS.routedSource("default", T0, T0 + samples * 500L, "avg")
+            apiS.store.routedSource("default", T0, T0 + samples * 500L, "avg")
               .foreach(_.points.count())
-            if (k == 0 && i == 3) apiS.compactCold() // mid-churn rewrite
+            if (k == 0 && i == 3) apiS.store.compactCold() // mid-churn rewrite
             if (k == 1 && i >= 2) // repeated re-agg flips generations
-              apiS.forcePreAggregate(T0, T0 + samples * 500L)
+              apiS.store.forcePreAggregate(T0, T0 + samples * 500L)
           }
         } catch { case t: Throwable => errs.add(t) }
       })
@@ -1600,11 +1600,11 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
       assert(getD("/debug/index_block").body().contains("blocked"))
       apiD.write(Seq(series("dbg_b", "i2", i => 2.0)), "default")
       apiD.compact()
-      assert(apiD.rawPoints.get.count() > 0,
+      assert(apiD.store.rawPoints.get.count() > 0,
         "blocked spill must keep data hot")
       assert(getD("/debug/index_unblock").body().contains("unblocked"))
       apiD.compact()
-      assert(apiD.rawPoints.get.count() === 0, "unblock resumes the spill")
+      assert(apiD.store.rawPoints.get.count() === 0, "unblock resumes the spill")
       // toggle_debug_query flips the flag and marks responses
       assert(getD("/debug/toggle_debug_query").body().contains("true"))
       val dq = getD(s"/api/v1/query?query=${enc("dbg_b")}&time=${T9 / 1000}")
@@ -1797,7 +1797,7 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
     val afterFold = staged()
     assert(afterFold.exists(_.startsWith("hot-fold-")), afterFold)
     // the store still reads every point through the staged pins
-    val n = api2.rawPoints.get.count()
+    val n = api2.store.rawPoints.get.count()
     assert(n === 4, s"expected 4 points, got $n")
     // two more folds retire the earlier generation: strictly fewer
     // staged dirs than the all-generations high-water mark
@@ -1807,14 +1807,14 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
         Seq((T0 + i * 60000L, i.toDouble)))), "default")
       api2.drainFlushes()
     }
-    assert(api2.rawPoints.get.count() === 10)
+    assert(api2.store.rawPoints.get.count() === 10)
     // the scope tracks exactly the pins still on disk: a retiree leaves
     // the scope when its files go, so a long-lived store's scope stays
     // bounded by its live pins (a fold in flight may lag either side)
     val settle = System.nanoTime() + 30L * 1000000000L
-    while (api2.trackedPins != staged().size && System.nanoTime() < settle)
+    while (api2.store.trackedPins != staged().size && System.nanoTime() < settle)
       Thread.sleep(50)
-    assert(api2.trackedPins === staged().size, staged())
+    assert(api2.store.trackedPins === staged().size, staged())
     api2.stop()
     // stop() reclaims every staged pin of this store
     assert(staged().isEmpty, staged())
@@ -1837,28 +1837,28 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
     apiBS.write(Seq(series("bs", "a", i => 1.0)), "default")
     apiBS.drainFlushes()
     apiBS.write(Seq(series("bs", "b", i => 2.0)), "default")
-    assert(apiBS.bufferedPosts === 1)
+    assert(apiBS.store.bufferedPosts === 1)
     // a wide budget serves the pinned view only — the buffer is untouched
     val stale = getBS("X-SquirrelDB-Max-Staleness" -> "3600")
     assert(stale.contains(""""instance":"a""""))
     assert(!stale.contains(""""instance":"b""""), stale)
-    assert(apiBS.bufferedPosts === 1) // drain skipped
+    assert(apiBS.store.bufferedPosts === 1) // drain skipped
     // the default read keeps strict read-your-writes: drains, sees both
     val strict = getBS()
     assert(strict.contains(""""instance":"a""""))
     assert(strict.contains(""""instance":"b""""))
-    assert(apiBS.bufferedPosts === 0)
+    assert(apiBS.store.bufferedPosts === 0)
     // quiesced store: a budgeted read is exact (fast path, still no drain)
     val quiesced = getBS("X-SquirrelDB-Max-Staleness" -> "3600")
     assert(quiesced.contains(""""instance":"b""""))
     // a LAPSED budget forces the drain — the guarantee is "everything
     // older than S is visible", not "never drain"
     apiBS.write(Seq(series("bs", "c", i => 3.0)), "default")
-    assert(apiBS.bufferedPosts === 1)
+    assert(apiBS.store.bufferedPosts === 1)
     Thread.sleep(80) // pinned state is now older than the 20 ms budget
     val lapsed = getBS("X-SquirrelDB-Max-Staleness" -> "0.02")
     assert(lapsed.contains(""""instance":"c""""))
-    assert(apiBS.bufferedPosts === 0)
+    assert(apiBS.store.bufferedPosts === 0)
     apiBS.stop()
   }
 
@@ -1880,7 +1880,7 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
     api3.write(Seq(series("bd", "old", i => 1.0)), "default")
     api3.drainFlushes()
     api3.write(Seq(series("bd", "fresh", i => 2.0)), "default")
-    assert(api3.bufferedPosts === 1)
+    assert(api3.store.bufferedPosts === 1)
     Thread.sleep(60) // every pinned stamp is now older than the budget
     val r3 = get3("X-SquirrelDB-Max-Staleness" -> "0.02")
     // the drain's own submit stamps the covering snapshot, so the served
@@ -1938,7 +1938,7 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
     api2.write(Seq(series("bs2", "b", i => 2.0)), "default")
     api2.drainFlushes()
     api2.write(Seq(series("bs2", "c", i => 3.0)), "default")
-    assert(api2.bufferedPosts === 1)
+    assert(api2.store.bufferedPosts === 1)
     // a wide budget with a FRESH fold serves the head alone: the pinned
     // tail (b) is newer than the fold stamp, so the bound does not
     // require it — the read scans ONE relation regardless of tail depth
@@ -1946,7 +1946,7 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
     assert(headOnly.contains(""""instance":"a""""))
     assert(!headOnly.contains(""""instance":"b""""), headOnly)
     assert(!headOnly.contains(""""instance":"c""""), headOnly)
-    assert(api2.bufferedPosts === 1) // drain skipped
+    assert(api2.store.bufferedPosts === 1) // drain skipped
     // strict read: drains and sees all three
     val strict = get2()
     assert(strict.contains(""""instance":"a"""") &&
@@ -1974,7 +1974,7 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
       (0 until 5).map(i => (T0 + d * day + i * 60000L, v + i))))
     (0 until 12).foreach(d => apiT.write(daySeries(d, d * 100.0), "default"))
     apiT.drainFlushes()
-    apiT.compactCold() // 12 fresh dirty days of 12 → FULL rewrite → g1
+    apiT.store.compactCold() // 12 fresh dirty days of 12 → FULL rewrite → g1
     def files(gen: Int): Map[String, Set[String]] = {
       val g = root.resolve(s"g$gen")
       assert(java.nio.file.Files.isDirectory(g), s"missing g$gen")
@@ -1993,7 +1993,7 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
       .atZone(java.time.ZoneOffset.UTC).toLocalDate
     apiT.write(daySeries(3, 9999.0), "default")
     apiT.drainFlushes()
-    apiT.compactCold() // 1 dirty of 12 → PARTIAL rewrite → g2
+    apiT.store.compactCold() // 1 dirty of 12 → PARTIAL rewrite → g2
     val g2 = files(2)
     assert(g2.size === 12)
     val dn = s"day=$dirtyDay"
@@ -2019,7 +2019,7 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
       .select("value").collect().map(_.getDouble(0))
     assert(v3.toSeq === Seq(9999.0))
     // a cadence with NO spill since the flip skips the rewrite entirely
-    apiT.compactCold()
+    apiT.store.compactCold()
     assert(!java.nio.file.Files.exists(root.resolve("g3")),
       "spill-free cadence must not produce a new generation")
     // restart: dirty-day provenance is unknown → next compactCold does
@@ -2028,7 +2028,7 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
       durablePath = Some(dir), hotRetainMs = 0L)
     apiR.write(daySeries(5, 7777.0), "default")
     apiR.drainFlushes()
-    apiR.compactCold()
+    apiR.store.compactCold()
     val g3 = files(3)
     assert(g3.size === 12)
     g1.keySet.foreach(d => assert((g3(d) & files(2)(d)).isEmpty,
@@ -2064,7 +2064,7 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
       .filter(_.endsWith(".parquet")).toSeq
     assert(spilled.nonEmpty && spilled.forall(_.matches(".*_\\d{5}\\..*")),
       spilled.take(3).toString)
-    apiB.compactCold() // full rewrite → g1, bucketed + registered
+    apiB.store.compactCold() // full rewrite → g1, bucketed + registered
     assert(manifest(1).isDefined)
     val tbl1 = f"graft_cold_${dir.hashCode.toLong & 0xFFFFFFFFL}%08x_g1"
     assert(spark.catalog.tableExists(tbl1), "flip must register the table")
@@ -2097,10 +2097,10 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
     // partial rewrite keeps the manifest and the carried bucket files
     apiR.write(daySeries(2, 5555.0), "default")
     apiR.drainFlushes()
-    apiR.compactCold() // restart wiped provenance → full; then partial
+    apiR.store.compactCold() // restart wiped provenance → full; then partial
     apiR.write(daySeries(3, 6666.0), "default")
     apiR.drainFlushes()
-    apiR.compactCold()
+    apiR.store.compactCold()
     val gen = (2 to 3).filter(g =>
       java.nio.file.Files.isDirectory(root.resolve(s"g$g"))).max
     assert(manifest(gen).isDefined, "rewrites must carry the manifest")
@@ -2141,13 +2141,13 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
         "instance" -> "a", "job" -> "node"), ts.map(t => (t, 1.0)))),
         "default")
       val deadline = System.nanoTime() + 30L * 1000000000L
-      while ((apiPC.pendingBatches > 0 || apiPC.preAggWatermark == 0L) &&
+      while ((apiPC.pendingBatches > 0 || apiPC.store.preAggWatermark == 0L) &&
         System.nanoTime() < deadline) Thread.sleep(50)
-      val wm0 = apiPC.preAggWatermark
+      val wm0 = apiPC.store.preAggWatermark
       assert(wm0 > T0 && wm0 <= hotStart, s"watermark $wm0")
       // the hazard: an end far past the spill frontier
-      assert(apiPC.preAggregate(hotStart + 365L * 86400000L) === wm0)
-      assert(apiPC.preAggWatermark === wm0)
+      assert(apiPC.store.preAggregate(hotStart + 365L * 86400000L) === wm0)
+      assert(apiPC.store.preAggWatermark === wm0)
       // steps every 10 min over the hot hour: routed (step >= 5 min) and
       // raw answers both hold every step
       def q(hdrs: Seq[(String, String)]) = getOn(portPC,
@@ -2265,7 +2265,7 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
       spark.sparkContext.addSparkListener(listener)
       // the first compactCold folds and spills (pre-aggregating behind
       // the new frontier), then fully rewrites the fresh generation
-      apiCT.compactCold()
+      apiCT.store.compactCold()
       assert(spark.conf.getAll === confBefore.get)
       assert(bucketsOf(root, 1) === buckets)
       val fine = spark.sparkContext.defaultParallelism * 4
@@ -2299,17 +2299,17 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
       java.nio.file.Files.readString(root.resolve("cold_meta.json")))
     val frontier = meta.get("spillTimeFrontier").asLong()
     val want = frontier - Math.floorMod(frontier, 300000L)
-    assert(frontier > T0 && apiF.preAggWatermark === want)
+    assert(frontier > T0 && apiF.store.preAggWatermark === want)
     // a watermark that trails the frontier at restart (a crash between a
     // spill and its pre-aggregation, or a lost agg tier)
     deleteTree(root.resolve("cold_agg5m"))
     val apiR = new HttpApi(spark, compactEvery = 1000000,
       durablePath = Some(dir))
     try {
-      assert(apiR.preAggWatermark === 0L)
-      assert(apiR.preAggregate(System.currentTimeMillis() + 365L * 86400000L)
+      assert(apiR.store.preAggWatermark === 0L)
+      assert(apiR.store.preAggregate(System.currentTimeMillis() + 365L * 86400000L)
         === want)
-      assert(apiR.preAggWatermark === want)
+      assert(apiR.store.preAggWatermark === want)
     } finally apiR.stop()
   }
 
@@ -2442,7 +2442,7 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
     val apiP = new HttpApi(spark)
     val pins = try {
       apiP.write(Seq(series("pin_m", "a", i => i.toDouble)), "default")
-      val raw = apiP.rawPoints.get
+      val raw = apiP.store.rawPoints.get
       assert(raw.count() === 10)
       Plans.collect(raw.queryExecution.executedPlan) {
         case s: FileSourceScanExec => s.relation.location.rootPaths
@@ -2476,14 +2476,14 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
       (0 until 6).foreach(d =>
         apiZ.write(sizedSeries("rz", d, d * 100.0, 60), "default"))
       apiZ.drainFlushes()
-      apiZ.compactCold() // spill at 1 bucket, then a full rewrite → g1
+      apiZ.store.compactCold() // spill at 1 bucket, then a full rewrite → g1
       assert(bucketsOf(root, 1) === 1)
       // one dirty day of 6 would rewrite partially, but a target a fifth
       // of the largest day sizes the tier at 8 buckets, ≥ 4x its 1
       backfill(2, 5000.0)
       spark.conf.set(key, (largestDayBytes(root, 1) / 5).toString)
       val before = answers()
-      apiZ.compactCold()
+      apiZ.store.compactCold()
       assert(bucketsOf(root, 2) === 8)
       val (g1, g2) = (dayFiles(root, 1), dayFiles(root, 2))
       g1.keySet.foreach(d => assert((g2(d) & g1(d)).isEmpty,
@@ -2494,7 +2494,7 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
       backfill(4, 7000.0)
       spark.conf.set(key, (largestDayBytes(root, 2) / 8).toString)
       val before3 = answers()
-      apiZ.compactCold()
+      apiZ.store.compactCold()
       assert(bucketsOf(root, 3) === 8)
       val g3 = dayFiles(root, 3)
       val dn = dayDir(4)
@@ -2532,19 +2532,19 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
       (0 until 6).foreach(d =>
         apiL.write(sizedSeries("ls", d, d * 100.0, 60), "default"))
       apiL.drainFlushes()
-      apiL.compactCold() // spill into g0, then a full rewrite → g1
+      apiL.store.compactCold() // spill into g0, then a full rewrite → g1
       assert(recorded(1) === actual(1))
       assert(recorded(1).size === 6)
-      val l0 = apiL.daysListed.get
-      apiL.compactCold() // nothing spilled since: a skip
-      assert(apiL.daysListed.get === l0, "a skip must list no day")
+      val l0 = apiL.store.daysListed.get
+      apiL.store.compactCold() // nothing spilled since: a skip
+      assert(apiL.store.daysListed.get === l0, "a skip must list no day")
       assert(!java.nio.file.Files.exists(root.resolve("g2")))
       apiL.write(sizedSeries("ls", 3, 9000.0, 60), "default")
       apiL.drainFlushes()
       apiL.compact() // spills into g1's day 3
-      val l1 = apiL.daysListed.get
-      apiL.compactCold() // partial: day 3 sized before and after rewrite
-      assert(apiL.daysListed.get - l1 === 2,
+      val l1 = apiL.store.daysListed.get
+      apiL.store.compactCold() // partial: day 3 sized before and after rewrite
+      assert(apiL.store.daysListed.get - l1 === 2,
         "a partial rewrite must list its dirty day only")
       assert(recorded(2) === actual(2))
       assert(apiL.source().get.points.count() === 6 * 60)
@@ -2589,7 +2589,7 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
           sizedSeries("md", d, d * 100.0, 120) ++
             sizedSeries("md2", d, d * 10.0, 120), "default"))
         apiM.drainFlushes()
-        apiM.compactCold()
+        apiM.store.compactCold()
         spark.conf.unset(key)
         spark.conf.set(minKey, "1")
         val end = T0 + days * 86400000L
@@ -2647,7 +2647,7 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
           (T0 + i * 60000L, (i % 2).toDouble)))), "default")
       apiRJ.drainFlushes()
       apiRJ.compact() // past the hot horizon: spills and pre-aggregates
-      assert(apiRJ.preAggWatermark > T0 + 7200000L)
+      assert(apiRJ.store.preAggWatermark > T0 + 7200000L)
       // the table's own schema is the one reads now declare, and both
       // reads see the same rows, so routed answers do not depend on it
       val aggDir = java.nio.file.Files.list(
@@ -2656,9 +2656,9 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
       def shape(s: org.apache.spark.sql.types.StructType) =
         s.fields.map(f => f.name -> f.dataType.catalogString).toSeq
       val inferred = spark.read.parquet(aggDir.toString)
-      val declared = spark.read.schema(HttpApi.AggSchema)
+      val declared = spark.read.schema(graft.store.Tsdb.AggSchema)
         .parquet(aggDir.toString)
-      assert(shape(inferred.schema) === shape(HttpApi.AggSchema))
+      assert(shape(inferred.schema) === shape(graft.store.Tsdb.AggSchema))
       def sortedRows(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(_.toSeq.toString).sorted.toSeq
       assert(sortedRows(inferred).nonEmpty)
@@ -2752,7 +2752,7 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
       apiD.write(counters(T0, histEnd - 600000L), "default")
       apiD.drainFlushes()
       apiD.compact() // spills the cold day and extends agg_5m
-      assert(apiD.preAggWatermark >= T0 + 3 * 3600000L - 300000L)
+      assert(apiD.store.preAggWatermark >= T0 + 3 * 3600000L - 300000L)
       // a second batch makes the hot view two pins, so reads dedup it
       apiD.write(counters(histEnd - 600000L, histEnd), "default")
       apiD.drainFlushes()
@@ -2843,14 +2843,14 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
       (0 until 24).map(i => (T0 + i * 300000L, 10.0 + i)))), "default")
     apiW.drainFlushes()
     apiW.compact() // past the hot horizon: spills and pre-aggregates
-    val wm = apiW.preAggWatermark
+    val wm = apiW.store.preAggWatermark
     assert(wm > T0 + 24 * 300000L)
     apiW.stop()
     val apiR = new HttpApi(spark, compactEvery = 1000000,
       durablePath = Some(dir))
     val portR = apiR.start(0)
     try {
-      assert(apiR.preAggWatermark === wm)
+      assert(apiR.store.preAggWatermark === wm)
       def routedTotal(): Long = getOn(portR, "/metrics").body()
         .linesIterator.find(_.startsWith("graft_preagg_routed_total"))
         .get.split(" ").last.toLong
@@ -2865,6 +2865,73 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
       assert(viaAgg.body() === viaRaw.body())
       assert(matrixValues(viaAgg.body()).map(_.size) === Seq(12))
     } finally apiR.stop()
+  }
+
+  test("upkeep never reads a stale view: /debug/preaggregate under a " +
+    "staleness header rebuilds from every acknowledged post, buffered " +
+    "backfill included") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_upkeep_strict")
+      .resolve("cold").toString
+    // nothing auto-flushes: a post stays buffered until a drain
+    val apiUp = new HttpApi(spark, flushEveryPosts = 100,
+      durablePath = Some(dir))
+    val portUp = apiUp.start(0)
+    try {
+      val n = 12
+      def s5(v: Double) = PromSeries(
+        Map("__name__" -> "up_metric", "instance" -> "a", "job" -> "node"),
+        (0 until n).map(i => (T0 + i * 300000L, v)))
+      apiUp.write(Seq(s5(1.0)), "default")
+      apiUp.compact() // spills the 2024 window and pre-aggregates past it
+      assert(apiUp.store.preAggWatermark > T0 + n * 300000L)
+      // an acknowledged backfill into the aggregated window, still buffered
+      apiUp.write(Seq(s5(100.0)), "default")
+      assert(apiUp.store.bufferedPosts === 1)
+      val r = getOn(portUp, s"/debug/preaggregate?from=${T0 / 1000}" +
+        s"&to=${(T0 + n * 300000L) / 1000}",
+        Seq("X-SquirrelDB-Max-Staleness" -> "3600"))
+      assert(r.statusCode() === 200, r.body())
+      val vals = apiUp.store.routedSource("default", T0, T0 + n * 300000L,
+        "avg").get.points.select("value").collect().map(_.getDouble(0)).toSet
+      assert(vals === Set(100.0),
+        s"the rebuild must include the buffered backfill, got $vals")
+    } finally apiUp.stop()
+  }
+
+  test("an expiry sweep interrupted between moving the live dim aside and " +
+    "promoting its rewrite recovers at restart: label APIs keep the live " +
+    "series and drop the expired ones") {
+    import java.nio.file.{Files, Paths}
+    val dir = Files.createTempDirectory("graft_expiry_crash")
+      .resolve("cold").toString
+    val api1 = new HttpApi(spark, compactEvery = 1000000,
+      durablePath = Some(dir))
+    try {
+      // a 60 s TTL on 2024 samples: expired long before "now"
+      api1.write(Seq(PromSeries(
+        Map("__name__" -> "xc_dead", "deadlabel" -> "x", "job" -> "node"),
+        (0 until 5).map(i => (T0 + i * 60000L, 1.0)))), "default",
+        ttlSec = 60L)
+      api1.write(Seq(PromSeries(
+        Map("__name__" -> "xc_live", "livelabel" -> "y", "job" -> "node"),
+        (0 until 5).map(i => (T0 + i * 60000L, 2.0)))), "default")
+      api1.compact() // appends both series' expiry rows
+    } finally api1.stop()
+    // the crash state: the live dim moved to `_old`, no promoted rewrite
+    Files.move(Paths.get(dir + "_expiry"), Paths.get(dir + "_expiry_old"))
+    val api2 = new HttpApi(spark, compactEvery = 1000000,
+      durablePath = Some(dir))
+    val port2 = api2.start(0)
+    try {
+      // a fold after the restart appends to the live dim
+      api2.write(Seq(series("xc_new", "c", _ => 3.0)), "default")
+      api2.compact()
+      assert(api2.store.sweepExpiredSeries() === 1L)
+      val labels = getOn(port2, "/api/v1/labels").body()
+      assert(labels.contains(""""livelabel""""), labels)
+      assert(labels.contains(""""instance""""), labels)
+      assert(!labels.contains(""""deadlabel""""), labels)
+    } finally api2.stop()
   }
 
   private def deleteTree(p: java.nio.file.Path): Unit = {

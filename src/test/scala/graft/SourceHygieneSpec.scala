@@ -3,9 +3,10 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Guards the repo against raw control bytes in source files, the
-  * tools against growing their own listeners back, and the engine
+  * tools against growing their own listeners back, the engine
   * against passing parameters through session conf or growing knobs
-  * unnoticed.
+  * unnoticed, and the storage engine against folding back into the
+  * HTTP facade.
   *
   * Raw U+0000/U+0001 bytes in string/char literals make git classify the
   * file as BINARY — diffs, blame, and review silently break. This happened
@@ -74,6 +75,30 @@ class SourceHygieneSpec extends AnyFunSuite {
         case (l, i) if mutation.findFirstIn(l).isDefined =>
           s"${f.getPath}:${i + 1}: ${l.trim}"
       })
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  /** The lines of `files` whose code (not a comment line) names `pkg`. */
+  private def codeNaming(pkg: String, files: Seq[java.io.File]): Seq[String] = {
+    val use = ("\\b" + java.util.regex.Pattern.quote(pkg) + "\\b").r
+    files.flatMap(f => text(f).linesIterator.zipWithIndex.collect {
+      case (l, i) if use.findFirstIn(l).isDefined && !l.trim.startsWith("*") &&
+          !l.trim.startsWith("/") =>
+        s"${f.getPath}:${i + 1}: ${l.trim}"
+    })
+  }
+
+  test("only the HTTP facade under graft/api uses the JDK HTTP server") {
+    val api = new java.io.File("src/main/scala/graft/api").getCanonicalPath
+    val offenders = codeNaming("com.sun.net.httpserver",
+      mainSources.filterNot(_.getCanonicalPath.startsWith(api)))
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("the storage engine under graft/store does not reach into graft.api") {
+    val store = new java.io.File("src/main/scala/graft/store")
+    assert(store.isDirectory, "run from the repo root")
+    val offenders = codeNaming("graft.api", scalaSources(store))
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
