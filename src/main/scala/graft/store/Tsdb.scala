@@ -41,6 +41,21 @@ import graft.tsdb.{Matcher, Matchers, MutableMapping}
   * completeness stamps past the staleness budget, and turned reads into
   * drains); callers tag their read threads.
   *
+  * Views: everything a read sees — the hot vector, the cold and agg_5m
+  * relations, the spill frontiers, the label names, the TTL state and
+  * the mutable-label maps — is one immutable [[Tsdb.View]], published
+  * through the single `view` reference. Every transition (pin, delta
+  * fold, full fold, cold flip, retention, agg_5m append and rebuild,
+  * expiry sweep, label-name growth, mutable-label CRUD) builds the next
+  * View from the current one and publishes it once, under `this`
+  * ([[publish]]); a full fold publishes its spill and its hot swap
+  * together. Every read captures one View ([[readView]]) and derives
+  * everything from it. The cold and agg_5m relations carry file sets
+  * listed when their View was published ([[frozenCold]], [[frozenAgg]]),
+  * so no read lists a directory, and no read can see a spill's files
+  * beside the hot rows they came from. Write-path buffers and upkeep
+  * bookkeeping stay fields of their own, guarded by `this`.
+  *
   * One-stage small reads: a read whose inputs hold at most Spark's
   * minimum partition size (`spark.sql.adaptive.coalescePartitions.
   * minPartitionSize`, 1 MB) coalesces them to one partition
@@ -105,33 +120,26 @@ final class Tsdb(spark: SparkSession,
     */
   val DefaultTtlSec: Long = 3155760000L
 
-  // the hot store, oldest first: [head?] ++ mids ++ raw pin tail (see
-  // [[HotBatch]]). Pins append under `this`; each fold swaps its folded
-  // run in ONCE under `this`, copy-on-write, so writes never wait on a
-  // fold (the reference's temp store appends while background
-  // goroutines flush, `batch/batch.go:368-503`).
-  @volatile private var hot: Vector[HotBatch] = Vector.empty
+  // the read state (see "Views" above). Its hot vector, oldest first, is
+  // [head?] ++ mids ++ raw pin tail ([[HotBatch]]): pins append, and
+  // each fold swaps its folded run in once, copy-on-write, so writes
+  // never wait on a fold (the reference's temp store appends while
+  // background goroutines flush, `batch/batch.go:368-503`)
+  @volatile private var view: View = View.Empty
   // pins since the last FULL fold — the compaction trigger. The vector
   // length no longer measures it once delta folds shrink the tail.
   @volatile private var pinsSinceFullFold = 0
-  // Hot-batch pin medium: staged parquet (`Stage.pinIn`, under
-  // `graft.stage.dir` when set). These rows were ACKNOWLEDGED and left
-  // driver memory, so there is NO recompute path: a `localCheckpoint`
-  // pin loses them with its executor's unreplicated blocks, and the r13
-  // hour soak lost such blocks in one JVM (SCALE.md r10, r13). A staged
-  // pin costs a re-read on executor loss, never the data.
+  // Hot pins are staged parquet (`Stage.pinIn`, under `graft.stage.dir`
+  // when set): acknowledged rows have no recompute path, and a
+  // `localCheckpoint` pin loses them with its executor (SCALE.md r13).
   private val hotScope = Stage.detachedScope()
   // Superseded staged paths retire with ONE FULL-fold generation of
-  // grace so in-flight readers finish their scans (the coldGen
-  // discipline). Two lists (ADVICE r13): delta folds ACCUMULATE their
-  // retirees into the current generation and drop NOTHING — a single
-  // list overwritten per fold shrank a slow reader's grace window from
-  // ~compactEvery pins to ~deltaFoldEvery (8×) once delta folds ran
-  // between fulls. Each FULL fold deletes the previous generation's list
-  // and promotes the current one, so every retiree survives ≥ one full
-  // generation.
-  @volatile private var retiredPrevGen: Vector[String] = Vector.empty
-  @volatile private var retiredCurGen: Vector[String] = Vector.empty
+  // grace so in-flight readers finish their scans: delta folds add
+  // their retirees to the current list and drop nothing; each full fold
+  // deletes the previous list and promotes the current one (ADVICE
+  // r13). Guarded by `this`.
+  private var retiredPrevGen: Vector[String] = Vector.empty
+  private var retiredCurGen: Vector[String] = Vector.empty
 
   /** Pin one hot relation as staged parquet in this store's scope.
     * `value` is staged as its raw bits: parquet canonicalizes every NaN
@@ -142,61 +150,18 @@ final class Tsdb(spark: SparkSession,
     val (pinned, path) = Stage.pinIn(hotScope, encodeValue(df), tag)
     (decodeValue(pinned), path)
   }
-  // monotone spill frontier + overlap tracking: a write whose oldest
-  // sample falls behind an earlier spill MAY duplicate keys already on
-  // disk; only then do reads pay the LWW dedup shuffle over the cold tier
-  @volatile private var lastSpillCutoff = Long.MinValue
-  // the TIME frontier of the latest spill (the wall-derived cutoff, see
-  // `aggTo` in compactNow): everything below it is on disk, so it bounds
-  // how far [[preAggregate]] may move the agg_5m watermark (0 = nothing
-  // spilled yet: the watermark, 0 or later, stays put). The restart
-  // sidecar carries it across restarts.
-  @volatile private var spillTimeFrontier = 0L
-  @volatile private var coldDirty = false
   // Partial (leveled) rewrite tracking — the reference's TWCS discipline
-  // (`cassandra/tsdb/tsdb.go:205-215`: time-window compaction never
-  // re-sorts closed windows). The LWW dedup key is (metric_id, ts_ms)
-  // and ts_ms determines the day partition, so duplicate keys are
-  // DAY-LOCAL: a generation rewrite only needs the day partitions some
-  // spill has appended into since the last rewrite — every other day is
-  // already deduped+clustered and is carried into the new generation at
-  // the file level (hardlink). Without this, the rewrite is O(tier) per
-  // cadence and its duration GROWS with the tier (r14 soak: generation 4
-  // ran ~12 min at ~90 M points against a 5-min cadence) — the one
-  // 100 TB scale-killer left in the facade. Some(set) = the exact
-  // dirty-day set since the last flip; None = provenance unknown (fresh
-  // process over an existing tier, or a backfill too wide to track) →
-  // the next compactCold performs one FULL rewrite and tracking resumes.
-  // Guarded by `synchronized` (the write-side state lock).
+  // (`cassandra/tsdb/tsdb.go:205-215`). ts_ms determines the day
+  // partition, so duplicate keys are DAY-LOCAL: a generation rewrite
+  // dedups only the days some spill appended into since the last flip
+  // and hardlinks the rest (a full rewrite per cadence grew with the
+  // tier, r14 soak). Some(set) = the exact dirty-day set; None =
+  // provenance unknown (restart, or a backfill too wide to track) → the
+  // next compactCold rewrites fully. Guarded by `this`.
   private var dirtyColdDays: Option[Set[java.time.LocalDate]] =
     Some(Set.empty)
   private val MaxTrackedDirtyDays = 4096
-  // cold-tier SNAPSHOT GENERATION: the data lives in `$durablePath/g<N>`
-  // and [[compactCold]] rewrites into g<N+1> then flips — never in place,
-  // so readers holding plans over the old generation keep scanning it
-  // (one retired generation is kept as the grace window; the soak spec
-  // proved in-place overwrite loses races against in-flight scans)
-  @volatile private var coldGen: Int = 0
-  // agg-table generation pointer — MUST be declared BEFORE the bootstrap
-  // `locally` block below: Scala runs constructor statements in
-  // declaration order, so a later `= 0` initializer would clobber the
-  // generation the bootstrap restored from disk
-  @volatile private var aggGen: Int = 0
-  // the agg_5m watermark (`fullyAggregatedAt`): loaded once here, then
-  // kept in step with every write of its file (preAggregateWith), so a
-  // routed read never reads the file
-  @volatile private var aggWatermark: Long =
-    aggPath.fold(0L)(Store.readWatermark)
-  @volatile private var labelNames: Seq[String] = Nil
   private var writeSeq = 0L
-  @volatile private var ttlSeen = false // any write with a non-default TTL?
-  // T9 dim: per-series max-merged TTL over COMPACTED history, pinned and
-  // tiny (only series whose effective TTL is non-default — a series with
-  // any default-TTL write max-merges back to the sentinel and drops out).
-  // Maintained incrementally at compaction; reads union the hot tail in,
-  // so no read ever rescans the full cold history for TTLs, and the join
-  // carries NO broadcast hint (AQE decides from runtime size).
-  @volatile private var ttlDim: Option[DataFrame] = None
   // the reference's BlockCassandraWrite pauses index writes to Cassandra
   // during maintenance while ingest keeps flowing; the analogue blocks
   // every durable-tier writer (spill, cold rewrite, pre-aggregation)
@@ -218,15 +183,6 @@ final class Tsdb(spark: SparkSession,
   private[graft] val singlePlans = new AtomicLong
   private[graft] val parallelPlans = new AtomicLong
 
-  // mutable-label dimension (M4): (tenant, name) -> real label name;
-  // (tenant, name, value) -> associated real values. Durable-backed when
-  // a durablePath is configured (the reference persists these in
-  // Cassandra, `cassandra/mutable/provider.go` — here the
-  // [[graft.tsdb.MutableProvider]] dim-table parquet).
-  @volatile private var mutableNames = Map.empty[(String, String), String]
-  @volatile private var mutableValues =
-    Map.empty[(String, String, String), Seq[String]]
-
   private def mutablePath: Option[String] = durablePath.map(_ + "_mutable")
   private def expiryPath: Option[String] = durablePath.map(_ + "_expiry")
 
@@ -242,33 +198,33 @@ final class Tsdb(spark: SparkSession,
     * `_SUCCESS`-complete dir ([[Store.completeDimDir]]), so no crash point
     * loses the definitions.
     */
-  private def persistMutable(): Unit = mutablePath.foreach { mp =>
+  private def persistMutable(v: View): Unit = mutablePath.foreach { mp =>
     import spark.implicits._
-    Store.atomicOverwrite(mutableRows
+    Store.atomicOverwrite(mutableRows(v)
       .toDF("tenant", "name", "target_name", "value", "associated_value")
       .coalesce(1), mp)
   }
 
-  private def restoreMutable(): Unit =
-    mutablePath.foreach { mp =>
-      Store.completeDimDir(mp).foreach { p =>
-        scala.util.Try(spark.read.parquet(p)
-          .select("tenant", "name", "target_name", "value",
-            "associated_value").collect()) match {
-          case scala.util.Success(rows) =>
-            mutableNames = rows.map(r =>
-              (r.getString(0), r.getString(1)) -> r.getString(2)).toMap
+  /** `v` with the persisted mutable-label maps, when a dim is on disk. */
+  private def restoreMutable(v: View): View =
+    mutablePath.flatMap(Store.completeDimDir).fold(v) { p =>
+      scala.util.Try(spark.read.parquet(p)
+        .select("tenant", "name", "target_name", "value",
+          "associated_value").collect()) match {
+        case scala.util.Success(rows) =>
+          v.copy(mutableNames = rows.map(r =>
+              (r.getString(0), r.getString(1)) -> r.getString(2)).toMap,
             mutableValues = rows.toSeq
               .filter(r => r.getString(3) != null && r.getString(3).nonEmpty &&
                 r.getString(4) != null && r.getString(4).nonEmpty)
               .groupBy(r => (r.getString(0), r.getString(1), r.getString(3)))
-              .map { case (k, rs) => k -> rs.map(_.getString(4)).distinct }
-          case scala.util.Failure(e) =>
-            // a complete-looking dim that fails to read is an operator
-            // problem — say so instead of silently serving no rewrites
-            System.err.println(
-              s"[graft] WARNING: mutable-label dim at $p unreadable: $e")
-        }
+              .map { case (k, rs) => k -> rs.map(_.getString(4)).distinct })
+        case scala.util.Failure(e) =>
+          // a complete-looking dim that fails to read is an operator
+          // problem — say so instead of silently serving no rewrites
+          System.err.println(
+            s"[graft] WARNING: mutable-label dim at $p unreadable: $e")
+          v
       }
     }
 
@@ -280,19 +236,15 @@ final class Tsdb(spark: SparkSession,
 
   /** The CURRENT cold-tier generation directory, when configured. */
   private def coldPath: Option[String] =
-    durablePath.map(p => s"$p/g$coldGen")
+    durablePath.map(p => s"$p/g${view.coldGen}")
 
   // ---- series-bucketed cold layout (S8 productized; SURVEY §4.1) ----
-  // The sf1000-proven bucketed discipline (Store.writeBucketedPoints:
-  // exchange-free per-series aggregation, zero spill at 1 B rows)
-  // composed with the TWCS day-partition + hardlink mechanism: every
-  // generation is day-partitioned AND metric_id-bucketed, described by
-  // its own _bucketspec.json manifest, registered as a catalog table so
-  // per-series reads ride HashPartitioning(metric_id) straight off the
-  // scan — across restarts (the manifest re-issues the DDL the
-  // in-memory catalog lost). `value` is stored as its raw bits
-  // (BIGINT): parquet canonicalizes NaNs, and a StaleNaN marker must
-  // come back bit for bit ([[coldPoints]] decodes).
+  // Every generation is day-partitioned AND metric_id-bucketed,
+  // described by its own _bucketspec.json manifest and registered as a
+  // catalog table, so per-series reads ride HashPartitioning(metric_id)
+  // straight off the scan, across restarts too (the manifest re-issues
+  // the DDL). `value` is stored as its raw bits (BIGINT): parquet
+  // canonicalizes NaNs ([[coldPoints]] decodes).
 
   /** Catalog name of a generation's bucketed table under `root` —
     * path-keyed so stores over different tiers in one session never
@@ -336,12 +288,6 @@ final class Tsdb(spark: SparkSession,
     Store.BucketSpec(Seq("metric_id"),
       sizedBucketCount(dayBytes, cap), Seq("metric_id", "ts_ms"))
 
-  /** The CURRENT generation's on-disk layout manifest (None = a fresh
-    * tier: no generation written yet).
-    */
-  private def coldGenSpec: Option[Store.BucketSpec] =
-    coldPath.flatMap(Store.BucketSpec.read)
-
   /** (Re-)register generation `gen`'s bucketed table from its
     * manifest (dropped, not registered, while it holds no data files).
     * Called at bootstrap (restart recovery) and at each flip.
@@ -350,24 +296,75 @@ final class Tsdb(spark: SparkSession,
     durablePath.foreach(p => Store.registerBucketedDayTable(
       spark, coldTableName(gen), s"$p/g$gen"))
 
+  /** Generation `gen`'s bucketed table with its file set listed now,
+    * once, for a View (None while the generation has no table). A
+    * catalog table lists its partitions' files whenever a read is
+    * planned, which can be after that read captured its hot batches —
+    * so its leaf is swapped for an in-memory index over the catalog's
+    * partitions, keeping the relation's bucket spec (the bucketed scan
+    * is unchanged). Day dirs `relist` rejects keep `prev`'s listing;
+    * the rest are listed.
+    */
+  private def frozenCold(gen: Int, prev: Option[DataFrame],
+      relist: String => Boolean): Option[DataFrame] = {
+    import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+    import org.apache.spark.sql.execution.datasources.{FileStatusCache,
+      HadoopFsRelation, InMemoryFileIndex, LogicalRelation, PartitionPath,
+      PartitionSpec}
+    val name = coldTableName(gen)
+    Option.when(spark.catalog.tableExists(name)) {
+      val known = prev.toSeq.flatMap(leafFiles(_).flatten.flatten)
+        .groupBy(_.getPath.getParent).filter(d => !relist(d._1.getName))
+      // the index asks this cache before it lists a partition
+      val seeded = new FileStatusCache {
+        override def getLeafFiles(p: HPath) = known.get(p).map(_.toArray)
+        override def putLeafFiles(p: HPath, fs: Array[FileStatus]): Unit = ()
+        override def invalidateAll(): Unit = ()
+      }
+      val state = spark.sessionState
+      val hadoopConf = state.newHadoopConf()
+      org.apache.spark.sql.graftshim.DatasetShim.ofRows(spark,
+        spark.table(name).queryExecution.analyzed.transformUp {
+          case l @ LogicalRelation(r: HadoopFsRelation, _, Some(t), _, _) =>
+            val parts = state.catalog.listPartitions(t.identifier).map { p =>
+              val path = new HPath(p.location)
+              PartitionPath(p.toRow(r.partitionSchema,
+                state.conf.sessionLocalTimeZone),
+                path.getFileSystem(hadoopConf).makeQualified(path))
+            }
+            l.copy(relation = r.copy(location = new InMemoryFileIndex(spark,
+              parts.map(_.path), Map.empty, Some(r.partitionSchema), seeded,
+              Some(PartitionSpec(r.partitionSchema, parts))))(r.sparkSession))
+        })
+    }
+  }
+
+  /** The agg_5m generation `gen` with its files listed now, once, for a
+    * View (None while it has no directory). The declared layout spares
+    * a schema-inference job.
+    */
+  private def frozenAgg(gen: Int): Option[DataFrame] =
+    aggPath.map(p => s"$p/g$gen").filter(isDir)
+      .map(spark.read.schema(AggSchema).parquet(_))
+
+  /** Build the next View from the current one and publish it. */
+  private def publish(next: View => View): View = synchronized {
+    view = next(view)
+    view
+  }
+
   /** Spill append into the current cold generation: a bucketed append
-    * through the generation's catalog table, under the spec of the
-    * GENERATION's manifest (mixing bucket counts inside one dir would
-    * corrupt the filename-derived bucket ids). A fresh tier has no
-    * manifest yet: its spec is sized from the spill's plan estimate (an
-    * upper bound that runs no job), capped at 32 — 32 when there is no
-    * usable estimate — and the manifest is written BEFORE the first
-    * append, so every file that ever lands in the generation was
-    * written under it. A crash in between leaves a manifest-only
-    * generation, which the next spill appends into as usual. A
-    * generation without data files has no catalog table (there is no
-    * schema to register it from): the spill declares it first, as
-    * creating it through the write would clear the directory,
-    * manifest included.
+    * through its catalog table, under the spec of its manifest (mixed
+    * bucket counts in one dir would corrupt the filename-derived bucket
+    * ids). A fresh tier's spec is sized from the spill's plan estimate,
+    * capped at 32, and its manifest is written BEFORE the first append.
+    * A generation without data files has no catalog table: the spill
+    * declares it first, as creating it through the write would clear
+    * the directory, manifest included.
     */
   private def spillToCold(spill: DataFrame, path: String): Unit = {
-    val table = coldTableName(coldGen)
-    val spec = coldGenSpec.getOrElse {
+    val table = coldTableName(view.coldGen)
+    val spec = Store.BucketSpec.read(path).getOrElse {
       val estimate = scala.util.Try(
         spill.queryExecution.optimizedPlan.stats.sizeInBytes).toOption
         .filter(_ > 0).map(_.min(Long.MaxValue).toLong)
@@ -382,16 +379,12 @@ final class Tsdb(spark: SparkSession,
       tasks = spec.n)
   }
 
-  // restart metadata sidecar: (writeSeq, labelNames) as one tiny JSON,
-  // plus the TTL dim as parquet — written at each compaction BEFORE the
-  // spill, so the persisted writeSeq always ≥ every __seq on the cold
-  // tier (a crash can over-claim, never under-rank; unspilled hot data
-  // dies with the process either way). With it, restart is O(1); without
-  // it (pre-r7 layouts) bootstrap falls back to the full-history scan —
-  // at 100 TB that scan is 3 passes over the cold tier, which is why the
-  // sidecar exists. The spill time frontier rides along; compaction
-  // writes the sidecar once more AFTER the spill commits, so the
-  // persisted frontier never runs ahead of the cold tier.
+  // restart metadata sidecar: (writeSeq, ttlSeen, labelNames, the spill
+  // time frontier) as one tiny JSON, plus the TTL dim as parquet, so a
+  // restart is O(1) instead of a full-history scan. Written at each
+  // compaction BEFORE the spill (the persisted writeSeq is ≥ every __seq
+  // on the cold tier: a crash can over-claim, never under-rank) and once
+  // more AFTER it, so the frontier never runs ahead of the cold tier.
   private def metaPath: Option[Path] =
     durablePath.map(p => Paths.get(p + "_meta.json"))
   private def ttlDimPath: Option[String] = durablePath.map(_ + "_ttl")
@@ -399,11 +392,12 @@ final class Tsdb(spark: SparkSession,
   private def persistMeta(): Unit = metaPath.foreach { mp =>
     val root = new com.fasterxml.jackson.databind.ObjectMapper()
       .createObjectNode()
-    root.put("writeSeq", synchronized(writeSeq))
-    root.put("ttlSeen", ttlSeen)
-    root.put("spillTimeFrontier", spillTimeFrontier)
+    val (seq, v) = synchronized((writeSeq, view))
+    root.put("writeSeq", seq)
+    root.put("ttlSeen", v.ttlSeen)
+    root.put("spillTimeFrontier", v.spillTimeFrontier)
     val names = root.putArray("labelNames")
-    labelNames.foreach(names.add)
+    v.labelNames.foreach(names.add)
     val tmp = mp.resolveSibling(mp.getFileName.toString + ".tmp")
     Files.writeString(tmp, root.toString)
     Files.move(tmp, mp, java.nio.file.StandardCopyOption.REPLACE_EXISTING,
@@ -426,14 +420,14 @@ final class Tsdb(spark: SparkSession,
   // point store, as in the reference's Cassandra tables)
   locally {
     // restart: adopt the highest generation on disk
-    durablePath.filter(isDir).map(maxGenIn).filter(_ >= 0)
-      .foreach(coldGen = _)
+    val coldGen = durablePath.filter(isDir).map(maxGenIn).filter(_ >= 0)
+      .getOrElse(0)
     // every generation this store writes carries its bucket manifest
     // from before its first data file and stores `value` as raw bits;
     // one without either was not written here — a bucketed append into
     // it would corrupt its bucket ids, and its doubles would decode as
     // garbage. A read that finds a schema has found data files
-    coldPath.filter(isDir).foreach { g =>
+    durablePath.map(p => s"$p/g$coldGen").filter(isDir).foreach { g =>
       val schema = scala.util.Try(spark.read.parquet(g).schema).toOption
       require(Store.BucketSpec.read(g).isDefined || schema.isEmpty,
         s"cold generation $g holds data files but no " +
@@ -449,12 +443,16 @@ final class Tsdb(spark: SparkSession,
     // in-memory catalog died with the previous process; without this,
     // every per-series cold read would silently replan the Exchange)
     durablePath.filter(isDir).foreach(_ => registerColdGen(coldGen))
-    aggPath.filter(isDir).map(maxGenIn).filter(_ >= 0)
-      .foreach(aggGen = _)
+    val aggGen = aggPath.filter(isDir).map(maxGenIn).filter(_ >= 0)
+      .getOrElse(0)
     // an expiry sweep interrupted between moving the live dim aside and
     // promoting its rewrite: restore the kept copy before any fold
     // appends a fresh, nearly empty live dim over the gap
     expiryPath.foreach(Store.recoverOverwrite)
+    var v = View.Empty.copy(coldGen = coldGen,
+      cold = frozenCold(coldGen, None, _ => true), aggGen = aggGen,
+      agg = frozenAgg(aggGen),
+      aggWatermark = aggPath.fold(0L)(Store.readWatermark))
     val metaLoaded = metaPath.filter(Files.exists(_)).exists { mp =>
       scala.util.Try {
         val root = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -462,47 +460,47 @@ final class Tsdb(spark: SparkSession,
         val seq = root.get("writeSeq").asLong()
         val seen = root.get("ttlSeen").asBoolean()
         val ln = root.get("labelNames")
-        labelNames = (0 until ln.size()).map(ln.get(_).asText()).sorted
+        v = v.copy(
+          labelNames = (0 until ln.size()).map(ln.get(_).asText()).sorted,
+          ttlSeen = seen,
+          // absent in sidecars written before the frontier was recorded
+          spillTimeFrontier =
+            Option(root.get("spillTimeFrontier")).fold(0L)(_.asLong()),
+          ttlDim = ttlDimPath.flatMap(Store.completeDimDir).map(tp =>
+            spark.read.parquet(tp).localCheckpoint(true)))
         writeSeq = seq
-        ttlSeen = seen
-        // absent in sidecars written before the frontier was recorded
-        spillTimeFrontier =
-          Option(root.get("spillTimeFrontier")).fold(0L)(_.asLong())
-        ttlDimPath.flatMap(Store.completeDimDir).foreach(tp =>
-          ttlDim = Some(spark.read.parquet(tp).localCheckpoint(true)))
         true
       }.getOrElse(false)
     }
-    coldPoints().foreach { c =>
+    coldPoints(v).foreach { c =>
       // without the sidecar (pre-r7 layout or torn write): the one-time
       // full-history fallback scan
       if (!metaLoaded) {
         import spark.implicits._
-        labelNames = c.select(explode(map_keys(col("labels"))).as("n"))
-          .distinct().as[String].collect().sorted.toSeq
+        v = v.copy(labelNames = c.select(explode(map_keys(col("labels")))
+          .as("n")).distinct().as[String].collect().sorted.toSeq)
         writeSeq = c.agg(max(col("__seq"))).head()
           .getLong(0) // new writes must outrank restored data
       }
       // the TTL dim must exist whenever TTLs are in play — recompute if
       // the sidecar lacked it (an absent dim would silently un-expire
       // every cold series)
-      if (!metaLoaded || (ttlSeen && ttlDim.isEmpty)) {
+      if (!metaLoaded || (v.ttlSeen && v.ttlDim.isEmpty)) {
         val dim = c.groupBy("metric_id")
           .agg(max(col("__ttl_sec")).as("__ttl_sec"))
           .where(col("__ttl_sec") =!= DefaultTtlSec)
           .localCheckpoint(true)
-        if (dim.limit(1).count() > 0) {
-          ttlDim = Some(dim)
-          ttlSeen = true
-        }
+        if (dim.limit(1).count() > 0)
+          v = v.copy(ttlDim = Some(dim), ttlSeen = true)
       }
-      coldDirty = true // spill overlap history unknown across restarts
+      // spill overlap history unknown across restarts
+      v = v.copy(coldDirty = true)
       // same for the dirty-day set: which days pre-restart spills
       // appended into is unknowable, so the first compactCold of this
       // process does one full rewrite, then partial tracking resumes
       synchronized { dirtyColdDays = None }
     }
-    restoreMutable()
+    view = restoreMutable(v)
   }
 
   // micro-batch buffer: validated posts in SERIES shape (labels +
@@ -524,9 +522,9 @@ final class Tsdb(spark: SparkSession,
   // strict reads drain the queue ([[flushPending]]) for read-your-writes
   private val flushExec = java.util.concurrent.Executors
     .newSingleThreadExecutor(sessionThreads(spark, "facade-flusher"))
-  @volatile private var lastFlush: java.util.concurrent.Future[_] =
+  private var lastFlush: java.util.concurrent.Future[_] =
     java.util.concurrent.CompletableFuture.completedFuture(null)
-  // flush snapshots submitted but not yet appended to `hot`
+  // flush snapshots submitted but not yet appended to the hot batches
   private val queuedFlushes = new AtomicInteger(0)
   // backpressure bound: a flusher lagging this many snapshots behind
   // stalls the writer until a queue SLOT frees — bounded driver memory
@@ -534,13 +532,11 @@ final class Tsdb(spark: SparkSession,
   // post appends, maybe submits, and only then waits for the slot)
   private val MaxQueuedFlushes = 16
   // bounded-staleness reads: every post acked at or before this wall
-  // instant is PINNED (visible in `hot`). Advanced by the flusher
-  // when a snapshot's append lands (all earlier posts are in that or an
-  // earlier snapshot — the flusher is single-threaded FIFO) and by
-  // [[readView]] when it observes the fully-quiesced state
-  // under the lock. A failed pin re-prepends its snapshot and does NOT
-  // advance this, so the bound stays conservative.
-  @volatile private var pinnedThroughWallMs: Long = System.currentTimeMillis()
+  // instant is in the View's hot batches. Advanced by the flusher when
+  // a snapshot's append lands (FIFO: earlier posts landed first) and by
+  // [[capture]] on a quiesced store; a failed pin does NOT advance it.
+  // Guarded by `this`, and read only together with the View it describes.
+  private var pinnedThroughWallMs: Long = System.currentTimeMillis()
 
   /** S1 ingest, append-only: validated rows append to the raw micro-batch
     * buffer; the background flusher pins buffered posts as ONE batch —
@@ -581,8 +577,12 @@ final class Tsdb(spark: SparkSession,
       else valid.iterator.flatMap(_.samples.iterator.map(_._1)).min
     synchronized {
       writeSeq += 1
-      if (ttlSec != DefaultTtlSec) ttlSeen = true
-      labelNames = (labelNames ++ batchNames).distinct.sorted
+      // a new View only when the write adds a label name or the first TTL
+      val v = view
+      if (!batchNames.forall(v.labelNames.contains) ||
+          (ttlSec != DefaultTtlSec && !v.ttlSeen))
+        publish(_.copy(ttlSeen = v.ttlSeen || ttlSec != DefaultTtlSec,
+          labelNames = (v.labelNames ++ batchNames).distinct.sorted))
       pending :+= new PendingPost(series, writeSeq, ttlSec, minTs, tenant)
       pendingRowCount += nSamples
       // group commit: the post-count threshold submits only when the
@@ -595,16 +595,10 @@ final class Tsdb(spark: SparkSession,
       if ((pending.size >= flushEveryPosts && queuedFlushes.get == 0) ||
         pendingRowCount >= flushEveryRows) submitFlush()
     }
-    // backpressure waits for a queue SLOT, not the whole queue: the old
-    // full drain (flushPending) parked every overloaded writer until the
-    // ENTIRE backlog pinned, then released them as a herd that refilled
-    // it instantly — measured at 16 flat-out writers as a 107 k → 40 k
-    // pts/s collapse with 2.7 s write p99 (SOAK_BENCH_pinseries_16w).
-    // A slot wait keeps the flusher saturated and releases writers one
-    // pin at a time; the driver-memory bound is unchanged (same queue
-    // cap — the waiting writer's own post is already buffered either
-    // way, and the group-commit chain in pinBatch keeps submitting
-    // while writers wait).
+    // backpressure waits for a queue SLOT, not the whole queue: a full
+    // drain released overloaded writers as a herd that refilled it at
+    // once (SOAK_BENCH_pinseries_16w: 107 k → 40 k pts/s). A slot wait
+    // keeps the flusher saturated, under the same driver-memory bound.
     while (queuedFlushes.get >= MaxQueuedFlushes) Thread.sleep(1)
     valid.iterator.map(_.samples.size.toLong).sum
   }
@@ -679,108 +673,80 @@ final class Tsdb(spark: SparkSession,
     * `memoryOverreadMs` rather than forcing alignment):
     *
     *  1. the shortest batch PREFIX whose completeness stamp covers the
-    *     budget — with the head compacted every `compactEvery` pins and
-    *     the raw tail delta-folded every `deltaFoldEvery` pins (r13),
-    *     the typical hit is [head, a few mids]: bounded scan depth no
-    *     matter how hard the writers are pushing. (The r12 shape served
-    *     either the head ALONE or the FULL `compactEvery`-deep union;
-    *     its read p99 paid that deep union whenever the head stamp
-    *     missed the budget — the r12 soak measured 3.66 s p99 against a
-    *     248 ms p50 from exactly this cliff.)
+    *     budget — with delta folds the typical hit is [head, a few
+    *     mids]: bounded scan depth however hard the writers push;
     *  2. the full pinned union, when even the newest batch stamp is too
     *     old but [[pinnedThroughWallMs]] still covers the budget;
-    *  3. a budget-bounded drain ([[drainToBudget]], r16) — wait until
-    *     the oldest overdue snapshots pin, not until the whole backlog
-    *     does. The guarantee is real (every sample acked ≥ S ago is in
-    *     the served view) but a lapsed budget no longer pays for the
-    *     fresh tail: under a rewrite-window backlog the queue refills
-    *     while a full drain waits, and the r16 ceiling soak measured
-    *     those full drains at 50-160 s — most of it spent pinning data
-    *     the budget never asked for. Strict reads still take the
-    *     whole-queue [[flushPending]] path.
+    *  3. a budget-bounded drain ([[drainToBudget]]) — wait until the
+    *     oldest overdue snapshots pin, not the whole backlog. Strict
+    *     reads take the whole-queue [[flushPending]] path.
+    *
+    * The View returned is the one the read serves: its hot vector is the
+    * chosen prefix, and everything else comes from the same publish.
     */
-  private def readView(staleness: Option[Long]): Vector[HotBatch] = {
+  private def readView(staleness: Option[Long]): View = {
     val budget = staleness.filter(_ > 0) match {
       case Some(b) => b
-      case None => flushPending(); return hot
+      case None => flushPending(); return view
     }
-    val (quiesced, view, pinnedThrough) = synchronized {
-      val q = pending.isEmpty && queuedFlushes.get == 0
-      // fully quiesced under the lock ⇒ everything acked is pinned NOW
-      // (write() appends under `this`; queuedFlushes releases only after
-      // the snapshot's append or re-prepend)
-      if (q) pinnedThroughWallMs = System.currentTimeMillis()
-      // the stamp must be captured WITH the batch snapshot: a pin landing
-      // after this block advances pinnedThroughWallMs for the NEW
-      // `hot`, not for the `view` captured here — checking the live
-      // volatile below would let tier 2 serve a snapshot missing rows
-      // acked longer ago than the budget (rows can sit in `pending` far
-      // longer than their snapshot's wall stamp suggests)
-      (q, hot, pinnedThroughWallMs)
-    }
-    if (quiesced) return view
+    val (quiesced, v, pinnedThrough) = capture()
+    if (quiesced) return v
     val now = System.currentTimeMillis()
     // shortest PREFIX whose completeness stamp covers the budget: a
     // batch's wallMs stamps "every post acked at or before it is in the
     // prefix through it" (FIFO flusher), so any prefix is a consistent
-    // earlier view of the store and the stamps ascend — the first
-    // covering index is the cheapest adequate view. i == 0 with a
-    // compacted head is the original tier 1; with delta folds the
-    // typical hit is [head, a few mids], never the raw tail.
-    val i = view.indexWhere(b => now - b.wallMs <= budget)
+    // earlier view of the store and the first covering index is the
+    // cheapest adequate one
+    val i = v.hot.indexWhere(b => now - b.wallMs <= budget)
     if (i >= 0) {
       staleReadsTotal.incrementAndGet()
-      if (i == 0 && view.head.level == Head)
+      if (i == 0 && v.hot.head.level == Head)
         staleHeadReadsTotal.incrementAndGet()
-      view.take(i + 1)
+      v.copy(hot = v.hot.take(i + 1))
     } else if (now - pinnedThrough <= budget) {
       staleReadsTotal.incrementAndGet()
-      view
+      v
     } else {
       drainToBudget(budget)
     }
   }
 
-  /** Tier-3 drain, bounded by the staleness budget (r16): the flush
-    * queue is FIFO and the completeness stamps ascend, so coverage is
-    * restored the moment the oldest OVERDUE snapshots pin — not when
-    * the entire backlog does. The pre-r16 tier 3 called
-    * [[flushPending]] (wait for the LAST queued snapshot); under a
-    * rewrite-window backlog that makes the reader pay for the fresh
-    * tail too, and the tail keeps refilling while the drain waits —
-    * the r16 ceiling soak (8 writers at ~150 k pts/s offered, cold
-    * rewrites co-located) measured exactly those whole-queue drains as
-    * its 50-160 s read spikes. Waiting only to coverage serves the
-    * documented contract ("any view that includes every sample acked ≥
-    * S ago") at the cheapest point the contract admits.
+  /** Under the lock: whether everything acked is pinned (write()
+    * appends under `this`; queuedFlushes releases only after the
+    * snapshot's append or re-prepend), the current View, and the
+    * pinned-through stamp captured WITH it — a later pin advances the
+    * stamp for a newer View, not for this one.
+    */
+  private def capture(): (Boolean, View, Long) = synchronized {
+    val q = pending.isEmpty && queuedFlushes.get == 0
+    if (q) pinnedThroughWallMs = System.currentTimeMillis()
+    (q, view, pinnedThroughWallMs)
+  }
+
+  /** Tier-3 drain, bounded by the staleness budget: the flush queue is
+    * FIFO and the completeness stamps ascend, so coverage is restored
+    * the moment the oldest OVERDUE snapshots pin — not when the whole
+    * backlog does (whole-queue drains under a refilling backlog were the
+    * r16 ceiling soak's 50-160 s read spikes).
     *
     * Each wait slice rides the in-flight flush future (50 ms `get`), so
     * a pin failure surfaces to the reader as in [[flushPending]], and a
     * completed future re-submits whatever buffered since.
     */
-  private def drainToBudget(budgetMs: Long): Vector[HotBatch] = {
-    // the freshness horizon is pinned at ENTRY — staleness is measured
-    // from request arrival, not from a moving "now": a re-evaluated
-    // horizon is a livelock under sustained refill (per-pin latency
-    // above the budget means no stamp is ever fresh enough when it
-    // lands), while the entry horizon is covered at latest by the
-    // snapshot this drain submits itself (its wall stamp IS the entry
-    // instant), so termination is one overdue-prefix drain, never the
-    // refilling tail
+  private def drainToBudget(budgetMs: Long): View = {
+    // the freshness horizon is pinned at ENTRY: a moving "now" is a
+    // livelock under sustained refill, while the entry horizon is
+    // covered at latest by the snapshot this drain submits itself
     val horizon = System.currentTimeMillis() - budgetMs
     var f = synchronized(submitFlush())
     while (true) {
-      val (quiesced, view, pinnedThrough) = synchronized {
-        val q = pending.isEmpty && queuedFlushes.get == 0
-        if (q) pinnedThroughWallMs = System.currentTimeMillis()
-        (q, hot, pinnedThroughWallMs)
-      }
-      if (quiesced) return view
+      val (quiesced, v, pinnedThrough) = capture()
+      if (quiesced) return v
       // first covering index: stamps ascend, so the prefix through i
       // contains every post acked at or before its stamp >= horizon
-      val i = view.indexWhere(_.wallMs >= horizon)
-      if (i >= 0) return view.take(i + 1)
-      if (pinnedThrough >= horizon) return view
+      val i = v.hot.indexWhere(_.wallMs >= horizon)
+      if (i >= 0) return v.copy(hot = v.hot.take(i + 1))
+      if (pinnedThrough >= horizon) return v
       if (f == null || f.isDone) f = synchronized(submitFlush())
       if (f == null) Thread.sleep(1) // not quiesced ⇒ transiently racing
       else
@@ -814,12 +780,9 @@ final class Tsdb(spark: SparkSession,
     try {
       import spark.implicits._
       // one driver row per SERIES, samples riding as a (ts_ms, value)
-      // array: [[Ingest.ingestLabeled]] only touches `labels`, so the
-      // validation regexes and the canonical-encode + xxhash64 run once
-      // per series; the explode to sample rows happens AFTER, inside the
-      // same codegen stage (the pre-r16 flat shape paid all label work
-      // per SAMPLE — at the soak's 10-samples-per-series posts that was
-      // the single-threaded flusher's measured ingest ceiling)
+      // array: [[Ingest.ingestLabeled]]'s label work runs once per
+      // series, and the explode to sample rows happens AFTER, in the
+      // same codegen stage (per-sample label work capped the flusher)
       val perSeries = snap.flatMap(p => p.series.map(s =>
         (s.labels, s.samples, p.seq, p.ttlSec, p.tenant)))
       val nSamples = snap.iterator.map(_.rowCount).sum
@@ -832,12 +795,9 @@ final class Tsdb(spark: SparkSession,
         t: String =>
           Ingest.ingestLabeled(df.where(col("__tenant") === t), tenantLabel, t)
       }.reduce(_.unionByName(_))
-      // dashboard-sized flushes pin as ONE block: a LocalRelation
-      // inherits the session's default parallelism, and a 32-task job
-      // per flush is pure scheduling overhead for a few thousand rows
-      // (measured: the per-flush floor, not the encode, bounds
-      // small-post ingest). One partition per ~flushEveryRows keeps
-      // giant backfill flushes parallel.
+      // dashboard-sized flushes pin as ONE block (a LocalRelation would
+      // run a default-parallelism job per flush); one partition per
+      // ~flushEveryRows keeps giant backfill flushes parallel
       val parts = math.max(1L, nSamples / flushEveryRows).toInt
       val (batch, path) = pinHot(ingested
         .select(col("labels"), explode(col("samples")).as("__s"),
@@ -848,7 +808,9 @@ final class Tsdb(spark: SparkSession,
         .coalesce(parts), "hot-batch")
       val minTs = snap.map(_.minTs).min
       synchronized {
-        hot :+= HotBatch(batch, minTs, path, snapWallMs, Raw)
+        publish(v => v.copy(
+          hot = v.hot :+ HotBatch(batch, minTs, path, snapWallMs, Raw),
+          coldDirty = v.coldDirty || minTs < v.lastSpillCutoff))
         pinned = true
         // the snapshot's rows are now readable: the staleness bound moves
         pinnedThroughWallMs = math.max(pinnedThroughWallMs, snapWallMs)
@@ -860,19 +822,15 @@ final class Tsdb(spark: SparkSession,
         // pendingBatches only overcounts toward "not yet quiesced".)
         if (pending.size >= flushEveryPosts ||
           pendingRowCount >= flushEveryRows) submitFlush()
-        if (minTs < lastSpillCutoff) coldDirty = true
         pinsSinceFullFold += 1
         // bounded union depth, OFF the write path: the fold runs in the
         // background over a snapshot prefix, swapped in copy-on-write
         maybeScheduleCompact()
       }
     } finally {
-      // re-prepend BEFORE releasing the slot: a staleness-bounded read's
-      // quiesce check (pending.isEmpty && queuedFlushes == 0) must never
-      // observe a failed snapshot's rows in neither place — holding the
-      // slot until the rows are back in `pending` keeps the transient
-      // error on the "not yet quiesced" side, matching the overcount
-      // discipline documented at the submit site
+      // re-prepend BEFORE releasing the slot: a quiesce check
+      // (pending.isEmpty && queuedFlushes == 0) must never see a failed
+      // snapshot's rows in neither place
       if (!pinned) synchronized {
         pending = snap ++ pending
         pendingRowCount += snap.iterator.map(_.rowCount).sum
@@ -889,14 +847,10 @@ final class Tsdb(spark: SparkSession,
     */
   private def maybeScheduleCompact(): Unit = {
     val fullWanted = pinsSinceFullFold >= compactEvery
-    // a full fold needs the COLD lock (it spills into the current cold
-    // generation); while compactCold's minutes-long rewrite (or a
-    // pre-agg / expiry sweep) holds it, the full DEMOTES to a delta
-    // fold so the raw pin tail stays bounded — the r13 hour soak proved
-    // every read-p99 spike window was exactly this dam (SCALE.md r13).
-    // pinsSinceFullFold is untouched by the delta path, so the full
-    // trigger stays armed and fires when the lock frees (withColdLock
-    // re-checks on release).
+    // a full fold needs the COLD lock (it spills); while a cold rewrite,
+    // pre-agg or expiry sweep holds it, the full DEMOTES to a delta fold
+    // so the raw pin tail stays bounded (SCALE.md r13). Its trigger stays
+    // armed and fires when the lock frees (withColdLock re-checks).
     val full = fullWanted && !compactLock.isLocked
     val delta = deltaFoldEvery > 0 && rawTailLen >= deltaFoldEvery
     if ((full || delta) && compacting.compareAndSet(false, true)) {
@@ -916,7 +870,7 @@ final class Tsdb(spark: SparkSession,
   }
 
   /** Raw (unfolded) pins at the tail of the hot vector. */
-  private def rawTailLen: Int = hot.count(_.level == Raw)
+  private def rawTailLen: Int = view.hot.count(_.level == Raw)
 
   /** Batches appended since the last completed compaction, INCLUDING
     * flush snapshots queued on the flusher but not yet pinned — so
@@ -926,10 +880,10 @@ final class Tsdb(spark: SparkSession,
   def pendingBatches: Int = pinnedPending + queuedFlushes.get
 
   /** Mid (delta-folded) batches between head and raw tail (tests/soak). */
-  private[graft] def midCount: Int = hot.count(_.level == Mid)
+  private[graft] def midCount: Int = view.hot.count(_.level == Mid)
 
   /** Total pinned hot relations: head + mids + raw tail (tests/soak). */
-  private[graft] def hotDepth: Int = hot.size
+  private[graft] def hotDepth: Int = view.hot.size
 
   /** Staged hot pins the store still tracks for reclaim at [[stop]]:
     * the live batches plus the retirees awaiting their grace (tests).
@@ -940,14 +894,14 @@ final class Tsdb(spark: SparkSession,
     * trigger counts only these (a queued-but-unpinned flush must not
     * start a fold that would miss it).
     */
-  private def pinnedPending: Int = hot.count(_.level != Head)
+  private def pinnedPending: Int = view.hot.count(_.level != Head)
 
   /** The raw appended store (tests/introspection): a union of pinned
     * batches between compactions — never an aggregate.
     */
   def rawPoints: Option[DataFrame] = {
     flushPending()
-    unionAll(hot)
+    unionAll(view.hot)
   }
 
   private def unionAll(bs: Vector[HotBatch]): Option[DataFrame] =
@@ -978,15 +932,11 @@ final class Tsdb(spark: SparkSession,
   }
 
   // COLD-tier lock: everything that touches the durable store — the
-  // full fold's spill (it appends into the current cold generation),
-  // compactCold's generation rewrite, pre-aggregation, the expiry
-  // sweep — serializes here, WITHOUT blocking writes (which append
-  // under `this`-lock only) and, as of r14, WITHOUT blocking delta
-  // folds: the r13 hour soak proved every read-p99 spike window (6-12 s)
-  // was compactCold's minutes-long rewrite holding this lock while the
-  // raw pin tail climbed to depth 22-30 (SCALE.md r13). Reentrant so
-  // compactCold → compactNow → preAggregate compose. Lock order is
-  // always compactLock → foldLock, never the reverse.
+  // full fold's spill, compactCold's rewrite, retention, pre-aggregation,
+  // the expiry sweep — serializes here, WITHOUT blocking writes or delta
+  // folds (a rewrite holding it used to dam the raw pin tail, SCALE.md
+  // r13). Reentrant so compactCold → compactNow → preAggregate compose.
+  // Lock order is always compactLock → foldLock → `this`.
   private val compactLock = new java.util.concurrent.locks.ReentrantLock
   private def withColdLock[A](f: => A): A = {
     compactLock.lock()
@@ -998,38 +948,24 @@ final class Tsdb(spark: SparkSession,
       maybeScheduleCompact()
     }
   }
-  // HOT-vector restructure lock (r14): delta and full folds serialize
-  // their snapshot/prefix-swap arithmetic here — one fold at a time —
-  // while the cold tier stays independently lockable, so a delta fold
-  // can bound the read-side union depth DURING a cold rewrite.
+  // HOT-vector restructure lock: delta and full folds serialize their
+  // snapshot/prefix-swap arithmetic here, one fold at a time, so a delta
+  // fold can bound the read-side union depth DURING a cold rewrite.
   private val foldLock = new Object
 
-  /** Write-cadence DELTA fold (the r13 read-tail fix): collapse the raw
-    * pin tail into ONE deduped "mid" batch. Folding a CONTIGUOUS run of
-    * batches preserves read-side LWW exactly — per-(series, ts) argmax
-    * over (__seq, value) is associative, the same property the full
-    * fold's prefix swap already relies on. No spill, no TTL/expiry dim
-    * upkeep, no pre-agg — all durable-tier work stays on the full
-    * fold's `compactEvery` cadence; this fold exists purely to bound a
-    * bounded-staleness read's union depth (p99 was paying a
-    * `compactEvery`-deep scan whenever the head stamp missed the
-    * budget). Cost per fold is O(deltaFoldEvery pins), off the read
-    * path.
+  /** Write-cadence DELTA fold: collapse the raw pin tail into ONE
+    * deduped "mid" batch. Folding a CONTIGUOUS run of batches preserves
+    * read-side LWW exactly (per-(series, ts) argmax over (__seq, value)
+    * is associative). No durable-tier work: this fold only bounds a
+    * bounded-staleness read's union depth, at O(deltaFoldEvery pins).
     */
   private def deltaFoldNow(): Unit = foldLock.synchronized {
-    // upkeep pool, NOT graft-writes: within a FIFO pool jobs run in
-    // submit order, so any restructure job submitted ahead of a pin
-    // stalls that pin for the restructure's whole runtime — and a pin
-    // stall ages the completeness stamps past the staleness budget,
-    // which cascades into read-side drains that wait on the same dammed
-    // pins (the r14 hour soak measured exactly this: its 13-33 s read
-    // spikes were precisely its 7 non-stale drain reads, each during a
-    // cold compaction). Pins are ack-backed latency work; folds,
-    // spills, rewrites and pre-agg are background upkeep — they get
-    // their own pool so the pin lane is never queued behind them.
+    // upkeep pool, NOT graft-writes: a fold queued ahead of a pin in a
+    // FIFO pool stalls it, ages the completeness stamps and turns
+    // budgeted reads into drains (the class doc's scheduler isolation)
     spark.sparkContext.setLocalProperty("spark.scheduler.pool",
       "graft-upkeep")
-    val snap = synchronized(hot)
+    val snap = view.hot
     val prefixLen = snap.indexWhere(_.level == Raw)
     if (prefixLen < 0 || snap.size - prefixLen < 2) return
     val raw = snap.drop(prefixLen)
@@ -1041,8 +977,9 @@ final class Tsdb(spark: SparkSession,
       // is exactly hot[prefixLen, snap.size). The mid's completeness
       // stamp is its newest member's (the prefix through this mid
       // contains every post acked at or before it)
-      hot = hot.take(prefixLen) ++ (HotBatch(folded, raw.map(_.minTs).min,
-        foldedPath, raw.map(_.wallMs).max, Mid) +: hot.drop(snap.size))
+      publish(v => v.copy(hot = v.hot.take(prefixLen) ++
+        (HotBatch(folded, raw.map(_.minTs).min, foldedPath,
+          raw.map(_.wallMs).max, Mid) +: v.hot.drop(snap.size))))
       // delta retirees ACCUMULATE (deleted only by the full fold after
       // next, one full generation of grace — ADVICE r13); nothing drops
       // on the delta cadence
@@ -1063,7 +1000,8 @@ final class Tsdb(spark: SparkSession,
     // background-upkeep pool, not the pin lane (see deltaFoldNow)
     spark.sparkContext.setLocalProperty("spark.scheduler.pool",
       "graft-upkeep")
-    val snap = synchronized(hot)
+    val cur = view
+    val snap = cur.hot
     // snapshot the block flag ONCE: re-reading the volatile at each gate
     // lets a concurrent block+unblock skip the sidecar yet still spill —
     // reintroducing the stale-sidecar hazard the ordering below fixes
@@ -1082,40 +1020,27 @@ final class Tsdb(spark: SparkSession,
     // dim BEFORE the swap (spilled rows leave memory here, so this is the
     // last cheap look at them). Series that max-merge back to the default
     // sentinel drop out of the dim.
-    val newDim = if (!ttlSeen) None else {
+    val newDim = if (!cur.ttlSeen) None else {
       val delta = unionAll(snap).get
         .groupBy("metric_id").agg(max(col("__ttl_sec")).as("__ttl_sec"))
-      val merged = ttlDim.fold(delta)(_.unionByName(delta))
+      val merged = cur.ttlDim.fold(delta)(_.unionByName(delta))
         .groupBy("metric_id").agg(max(col("__ttl_sec")).as("__ttl_sec"))
         .where(col("__ttl_sec") =!= DefaultTtlSec)
       Some(merged.localCheckpoint(true))
     }
     // restart sidecars land BEFORE the spill (ADVICE r8): the persisted
-    // writeSeq is monotonically ≥ any __seq about to reach the cold tier
-    // and the merged TTL dim already covers the spilling rows, so a crash
-    // between sidecar and spill leaves only an over-claiming sidecar
-    // (harmless — new writes still outrank everything on disk). The old
-    // after-spill order left a window where a crash kept a STALE sidecar:
-    // restart would restore a writeSeq lower than seqs already spilled
-    // (post-restart rewrites silently losing read-side LWW) and TTLs
-    // first seen in that window never reached the persisted dim.
+    // writeSeq is ≥ any __seq about to reach the cold tier and the merged
+    // TTL dim covers the spilling rows, so a crash in between leaves only
+    // an over-claiming sidecar. The dim is staged, then renamed
     if (!blocked) {
-      // stage-then-rename, same discipline as the mutable dim (ADVICE
-      // r8): an in-place Overwrite could tear the only on-disk TTL copy —
-      // the full-history bootstrap fallback would mask it, but only at
-      // the cost of a cold rescan on the next restart
       newDim.foreach(d => ttlDimPath.foreach(Store.atomicOverwrite(d, _)))
       persistMeta()
     }
-    // series-expiry refresh (the reference refreshes each written series'
-    // expiration day, `cassandra/index/index.go:1516-1531`): each fold
-    // APPENDS per-series (max ts + ttl, label names) refresh rows —
-    // appends ARE the refresh, [[sweepExpiredSeries]] compacts them out
-    // of band. The names ride along so the sweep re-derives the live
-    // label-name list from this per-series dim instead of re-exploding
-    // the whole cold tier. Same before-spill discipline: a duplicate
-    // append after a crash-and-redo max-merges away; a missing one could
-    // expire a live series.
+    // series-expiry refresh (`cassandra/index/index.go:1516-1531`): each
+    // fold APPENDS per-series (max ts + ttl, label names) rows, which
+    // [[sweepExpiredSeries]] compacts out of band and re-derives the
+    // label names from. Same before-spill discipline: a duplicate append
+    // after a crash max-merges away; a missing one could expire a series.
     if (!blocked) expiryPath.foreach { ep =>
       folded0.groupBy("metric_id")
         .agg((max(col("ts_ms")) + max(col("__ttl_sec")) * 1000L)
@@ -1126,75 +1051,66 @@ final class Tsdb(spark: SparkSession,
         .write.mode(SaveMode.Append).parquet(ep)
     }
     // S8 tiering: points older than the hot horizon spill to the durable
-    // day-partitioned parquet store (APPEND — late duplicates resolve
-    // read-side by __seq); the spill lands BEFORE the swap so a write
-    // failure loses nothing
-    // two DIFFERENT frontiers come out of a spill and must not be
-    // conflated (r13): `aggTo` is a TIME frontier — data at/below the
-    // wall-derived cutoff is final-modulo-repair, the reference's
-    // fullyAggregatedAt semantics, and may legitimately run ahead of
-    // the data; `overlapTo` is a DATA frontier — the max key actually
-    // on disk + 1. Using the time frontier for overlap detection made
-    // every workload whose event time lags the wall clock (backfill /
-    // replay streams; the r13 soak's synthetic clock) permanently
-    // coldDirty: EVERY write landed "behind" the frontier, so every
-    // read paid a global LWW shuffle over hot ∪ cold (measured: read
-    // exec 2 s → 49 s as the cold tier grew, then heap death). A write
-    // can only duplicate a disk key if it reaches at or below the max
-    // spilled ts; the max runs over the pinned fold, one cheap pass.
-    val (folded, foldedPath, foldedMin, aggTo, overlapTo) = coldPath match {
-      case Some(_) if blocked =>
-        (folded0, folded0Path, snapMin, Long.MinValue, Long.MinValue)
-      case Some(path) =>
+    // tier (APPEND — late duplicates resolve read-side by __seq) BEFORE
+    // the swap, so a write failure loses nothing. Two frontiers come out
+    // of a spill (the View's `spillTimeFrontier` and `lastSpillCutoff`):
+    // `aggTo`, the wall-derived TIME cutoff, and `overlapTo`, the DATA
+    // frontier (max spilled ts + 1). Overlap detection must use the data
+    // one, or every write whose event time lags the wall clock would
+    // mark the tier dirty (r13: reads 2 s → 49 s).
+    val noSpill =
+      (folded0, folded0Path, snapMin, Long.MinValue, Long.MinValue, cur.cold)
+    val (folded, foldedPath, foldedMin, aggTo, overlapTo, cold) =
+      coldPath match {
+      case Some(path) if !blocked =>
         val cutoff = System.currentTimeMillis() - hotRetainMs
         val spill = folded0.where(col("ts_ms") < cutoff)
-        if (spill.limit(1).count() == 0)
-          (folded0, folded0Path, snapMin, Long.MinValue, Long.MinValue)
+        if (spill.limit(1).count() == 0) noSpill
         else {
           spillToCold(spill, path)
           val spilledMax =
             spill.agg(max(col("ts_ms"))).head().getLong(0)
-          // TWCS bookkeeping: every day this spill may have appended
-          // into becomes dirty for the next generation rewrite. The
-          // range form [snapMin, spilledMax] is conservative (snapMin
-          // IS the spill's min — the kept side is all >= cutoff) and
-          // costs no extra job; a backfill too wide to track falls
-          // back to None → one full rewrite
+          // every day this spill may have appended into, [snapMin,
+          // spilledMax] (snapMin IS the spill's min), becomes dirty for
+          // the next generation rewrite and is relisted for the next
+          // View; every other day keeps its listing. A range too wide
+          // to track relists all, and makes the next rewrite full
+          val days = daySpan(snapMin, spilledMax)
           synchronized {
-            dirtyColdDays = trackDirtyDays(dirtyColdDays,
-              snapMin, spilledMax)
+            dirtyColdDays = for (s <- dirtyColdDays; d <- days
+              if s.size + d.size <= MaxTrackedDirtyDays) yield s ++ d
           }
+          val relisted = frozenCold(cur.coldGen, cur.cold,
+            d => days.forall(s => parseDay(d).forall(s.contains)))
           val (trimmed, tp) =
             pinHot(folded0.where(col("ts_ms") >= cutoff), "hot-fold")
-          (trimmed, tp, cutoff, cutoff, spilledMax + 1)
+          (trimmed, tp, cutoff, cutoff, spilledMax + 1, relisted)
         }
-      case None => (folded0, folded0Path, snapMin, Long.MinValue, Long.MinValue)
+      case _ => noSpill
     }
     val dropNow = synchronized {
-      val tail = hot.drop(snap.size)
-      if (overlapTo != Long.MinValue) {
+      val tail = view.hot.drop(snap.size)
+      // the spill and the swap publish as ONE View: a read sees the
+      // spilled rows in the old hot head or in the new cold files, never
+      // in both
+      publish(v => v.copy(
+        // the head's completeness stamp is the newest folded batch's
+        hot = HotBatch(folded, foldedMin, foldedPath,
+          snap.map(_.wallMs).max, Head) +: tail,
+        cold = cold,
         // keys below the PREVIOUS frontier may already be on disk, and
         // batches appended DURING the fold may now sit below the new one
-        if (snapMin < lastSpillCutoff) coldDirty = true
-        if (tail.exists(_.minTs < overlapTo)) coldDirty = true
-        // monotone: a later fold can spill a LOWER max (backfill data
-        // below an earlier spill's keys) — the frontier keeps covering
-        // everything ever written to disk
-        lastSpillCutoff = math.max(lastSpillCutoff, overlapTo)
-        spillTimeFrontier = math.max(spillTimeFrontier, aggTo)
-      }
-      newDim.foreach(d => ttlDim = Some(d))
-      // the head's view-completeness stamp is the newest folded batch's;
+        coldDirty = v.coldDirty || (overlapTo != Long.MinValue &&
+          (snapMin < v.lastSpillCutoff || tail.exists(_.minTs < overlapTo))),
+        // monotone: a backfill can spill a LOWER max than an earlier spill
+        lastSpillCutoff = math.max(v.lastSpillCutoff, overlapTo),
+        spillTimeFrontier = math.max(v.spillTimeFrontier, aggTo),
+        ttlDim = newDim.orElse(v.ttlDim)))
       // pins appended DURING the fold (the remaining raw tail) count
       // toward the next full fold
-      hot = HotBatch(folded, foldedMin, foldedPath, snap.map(_.wallMs).max,
-        Head) +: tail
       pinsSinceFullFold = tail.size
       // retire superseded staged pins with ONE FULL-fold generation of
-      // grace (readers holding plans over the old batches finish their
-      // scans — the coldGen discipline); the PREVIOUS generation's
-      // retirees (including delta-fold retirees accumulated since —
-      // ADVICE r13) delete now, outside the lock
+      // grace; the PREVIOUS generation's retirees delete now, unlocked
       val out = retiredPrevGen
       retiredPrevGen = retiredCurGen ++ snap.map(_.path) ++
         Option(folded0Path).filter(_ != foldedPath)
@@ -1209,10 +1125,8 @@ final class Tsdb(spark: SparkSession,
       // frontier, which bounds a post-restart on-demand preAggregate
       persistMeta()
       // A5 at compaction: data behind the spill frontier is final
-      // (modulo explicit backfill repair) — extend agg_5m up to it,
-      // incrementally. OUTSIDE foldLock: pre-agg is durable-tier work
-      // (compactLock is held) and must not dam delta folds any more
-      // than compactCold may
+      // (modulo backfill repair) — extend agg_5m up to it. OUTSIDE
+      // foldLock, so pre-agg does not dam delta folds
       preAggregateWith(aggTo, tasks)
     }
   }
@@ -1238,13 +1152,14 @@ final class Tsdb(spark: SparkSession,
         val dimNames = spark.read.parquet(ep)
           .select(explode(col("names")).as("n"))
           .distinct().as[String].collect().toSeq
-        val hotNames = unionAll(synchronized(hot)) match {
+        val hotNames = unionAll(view.hot) match {
           case Some(h) =>
             h.select(explode(map_keys(col("labels"))).as("n"))
               .distinct().as[String].collect().toSeq
           case None => Nil
         }
-        labelNames = (dimNames ++ hotNames).distinct.sorted
+        val names = (dimNames ++ hotNames).distinct.sorted
+        publish(_.copy(labelNames = names))
         dropped
       }
     }
@@ -1308,9 +1223,10 @@ final class Tsdb(spark: SparkSession,
       if (isDir(p)) listDir(Paths.get(p))
         .filter(_.getFileName.toString.startsWith("_build_g"))
         .foreach(Store.deleteRecursively)
-      coldPoints().foreach { c =>
-        val nextGen = coldGen + 1
-        val curDir = Paths.get(s"$p/g$coldGen")
+      val cur = view
+      coldPoints(cur).foreach { c =>
+        val nextGen = cur.coldGen + 1
+        val curDir = Paths.get(s"$p/g${cur.coldGen}")
         val existing: Seq[String] =
           if (!Files.isDirectory(curDir)) Seq.empty
           else listDir(curDir).map(_.getFileName.toString)
@@ -1325,7 +1241,7 @@ final class Tsdb(spark: SparkSession,
         val rw0 = System.nanoTime()
         def logRewrite(mode: String, nDirty: Int): Unit =
           System.err.println(f"[graft compactCold] $mode dirtyDays=" +
-            f"$nDirty/${existing.size} gen=$coldGen " +
+            f"$nDirty/${existing.size} gen=${cur.coldGen} " +
             f"took=${(System.nanoTime() - rw0) / 1e9}%.1fs")
         // layout of the generation being rewritten vs the target: a
         // partial rewrite hardlink-carries g<N>'s files into g<N+1>, so
@@ -1383,7 +1299,7 @@ final class Tsdb(spark: SparkSession,
             // no spill since the last flip: the tier is already deduped
             // and clustered — rewriting it would be pure waste. Keep
             // aging out retired generations on the cadence.
-            retireGenerations(p, coldGen)
+            retireGenerations(p, cur.coldGen)
             logRewrite("skip", 0)
           case Some(d) if d.size * 2 < existing.size &&
               curSpec.contains(wantSpec) =>
@@ -1398,7 +1314,7 @@ final class Tsdb(spark: SparkSession,
             // clean days compose into one consistent bucketed
             // generation (same spec on both sides, enforced by the
             // curSpec guard above).
-            buildGen(coldPoints(days = d.map(x =>
+            buildGen(coldPoints(cur, days = d.map(x =>
               java.sql.Date.valueOf(x.stripPrefix("day=")))).get, wantSpec)
             existing.filterNot(d.contains).foreach { cd =>
               linkTree(curDir.resolve(cd), staging.resolve(cd))
@@ -1474,17 +1390,14 @@ final class Tsdb(spark: SparkSession,
     * the overlap flag, reset dirty-day tracking, retire aged snapshots.
     */
   private def finishColdFlip(p: String, nextGen: Int): Unit = {
-    coldGen = nextGen // flip: new reads plan against the new snapshot
-    // NOT a blind `coldDirty = false`: with delta folds running
-    // concurrently (r14) — and even before, with writes never
-    // blocked here — a pin appended DURING the rewrite can land
-    // behind the spill frontier; clearing unconditionally would
-    // lose its overlap flag and reads would skip the LWW dedup a
-    // duplicated key needs. Recompute from the hot mins under the
-    // write lock (a concurrent append either shows in `hot` or
-    // sets the flag itself afterwards — no lost update).
+    // flip: new reads plan against the new snapshot, listed here once
+    val cold = frozenCold(nextGen, None, _ => true)
+    // NOT a blind `coldDirty = false`: a pin appended DURING the rewrite
+    // can land behind the spill frontier. Recomputed from the hot mins in
+    // the publish (a later append sets the flag in its own publish)
     synchronized {
-      coldDirty = hot.exists(_.minTs < lastSpillCutoff)
+      publish(v => v.copy(coldGen = nextGen, cold = cold,
+        coldDirty = v.hot.exists(_.minTs < v.lastSpillCutoff)))
       // the new generation is fully deduped: tracking restarts empty
       // (no spill can have raced this — compactLock is held)
       dirtyColdDays = Some(Set.empty)
@@ -1492,17 +1405,14 @@ final class Tsdb(spark: SparkSession,
     retireGenerations(p, nextGen)
   }
 
-  /** Fold the day range [fromMs, toMs] into the dirty-day set; a range
-    * too wide to track degrades to None (→ one full rewrite).
-    */
-  private def trackDirtyDays(cur: Option[Set[java.time.LocalDate]],
-      fromMs: Long, toMs: Long): Option[Set[java.time.LocalDate]] =
-    cur.flatMap { s =>
-      val (lo, hi) = (utcDay(fromMs), utcDay(toMs))
-      val n = java.time.temporal.ChronoUnit.DAYS.between(lo, hi) + 1
-      if (n <= 0 || n + s.size > MaxTrackedDirtyDays) None
-      else Some(s ++ Iterator.iterate(lo)(_.plusDays(1)).take(n.toInt))
-    }
+  /** The UTC days of [fromMs, toMs]; None when too many to track. */
+  private def daySpan(fromMs: Long,
+      toMs: Long): Option[Set[java.time.LocalDate]] = {
+    val (lo, hi) = (utcDay(fromMs), utcDay(toMs))
+    val n = java.time.temporal.ChronoUnit.DAYS.between(lo, hi) + 1
+    Option.when(n > 0 && n <= MaxTrackedDirtyDays)(
+      Iterator.iterate(lo)(_.plusDays(1)).take(n.toInt).toSet)
+  }
 
   /** T9 at the cold tier: drop whole day partitions strictly older than
     * the cutoff — a metadata-only delete, no rewrite (the analogue of
@@ -1515,78 +1425,62 @@ final class Tsdb(spark: SparkSession,
     // read tasks over the same generation (FAILED_READ_FILE under load —
     // caught by the retention spec running concurrently with a busy box)
     val dropped = coldPath.toSeq.flatMap(Store.applyRetention(_, cutoffMs))
-    // a bucketed generation's catalog table caches its partition list
-    // and file index; dropping day dirs on disk without telling the
-    // catalog would leave readers planning over deleted files
-    // (FAILED_READ_FILE) — re-register from the manifest, which relists
-    // the surviving partitions.
+    // a bucketed generation's catalog table caches its partition list;
+    // dropping day dirs on disk without telling the catalog would leave
+    // the next View planning over deleted files (FAILED_READ_FILE) —
+    // re-register from the manifest, which relists the surviving
+    // partitions, whose files keep their listing.
     // registerBucketedDayTable drops the stale table even when EVERY
     // day was retired (no files left to infer a schema from), so a
     // fully-aged generation degrades to "empty store", never to a
-    // catalog still planning the deleted files
-    if (dropped.nonEmpty) registerColdGen(coldGen)
+    // View still planning the deleted files
+    if (dropped.nonEmpty) {
+      val cur = view
+      registerColdGen(cur.coldGen)
+      val cold = frozenCold(cur.coldGen, cur.cold, _ => false)
+      publish(_.copy(cold = cold))
+    }
     dropped
   }
 
-  /** The durable cold tier, when configured and non-empty, with `value`
+  /** View `v`'s cold tier, when configured and non-empty, with `value`
     * decoded from its stored bits. Finite time bounds become a `day`
     * predicate so parquet PARTITION PRUNING kicks in before the
     * row-group ts stats do (the bulk-export path must not scan the whole
     * history for a bounded read); `days` instead keeps exactly those day
-    * partitions. Retention can leave the directory without any
-    * partition — treated as empty.
+    * partitions. The relation is the generation's catalog table, so
+    * per-series aggregations (downsample, rate windows, LWW dedup — all
+    * keyed on metric_id ⊇ the bucket column) plan with NO Exchange
+    * straight off the scan.
     */
-  private def coldPoints(fromMs: Long = Long.MinValue,
+  private def coldPoints(v: View, fromMs: Long = Long.MinValue,
       toMs: Long = Long.MaxValue,
       days: Seq[java.sql.Date] = Nil): Option[DataFrame] =
-    coldPath
-      .filter(isDir)
-      .flatMap { p =>
-        scala.util.Try {
-          // generations read through their catalog table so
-          // per-series aggregations (downsample, rate windows, LWW
-          // dedup — all keyed on metric_id ⊇ the bucket column) plan
-          // with NO Exchange straight off the scan; a registration gap
-          // falls back to the plain parquet read, which is correct but
-          // pays the shuffle
-          val name = coldTableName(coldGen)
-          val df =
-            if (spark.catalog.tableExists(name)) spark.table(name)
-            else spark.read.parquet(p)
-          val pruned =
-            if (days.nonEmpty) df.where(col("day").isin(days: _*))
-            else if (fromMs == Long.MinValue || toMs == Long.MaxValue) df
-            else df.where(col("day").between(
-              to_date(timestamp_millis(lit(fromMs))),
-              to_date(timestamp_millis(lit(toMs)))))
-          decodeValue(pruned.drop("day"))
-        }.toOption
-      }
+    v.cold.map { df =>
+      val pruned =
+        if (days.nonEmpty) df.where(col("day").isin(days: _*))
+        else if (fromMs == Long.MinValue || toMs == Long.MaxValue) df
+        else df.where(col("day").between(
+          to_date(timestamp_millis(lit(fromMs))),
+          to_date(timestamp_millis(lit(toMs)))))
+      decodeValue(pruned.drop("day"))
+    }
 
   /** Read view: LWW-deduped (skipped when already compacted) with T9
     * retention — a series' TTL is the max any write supplied; the tiny
     * per-series TTL dim broadcasts (skipped entirely when no write ever
-    * set one).
+    * set one). `ttl = false` skips the T9 filter (debug dumps show
+    * expired-but-registered series too).
     */
-  private def dedupedPoints(fromMs: Long = Long.MinValue,
-      toMs: Long = Long.MaxValue,
-      staleness: Option[Long] = None): Option[DataFrame] = {
-    val read = rawRead(fromMs, toMs, staleness)
+  private def dedupedPoints(v: View, fromMs: Long = Long.MinValue,
+      toMs: Long = Long.MaxValue, ttl: Boolean = true): Option[DataFrame] = {
+    val read = rawRead(v, fromMs, toMs)
     val single = oneStage(read.bytes)
-    merge(read, single).map(applyTtl(_, hot, single))
+    merge(v, read, single).map(d => if (ttl) applyTtl(d, v, single) else d)
   }
 
-  /** The merged hot ∪ cold LWW view WITHOUT the T9 filter (debug dumps
-    * need to show expired-but-registered series too).
-    */
-  private def mergedDeduped(fromMs: Long, toMs: Long,
-      staleness: Option[Long]): Option[DataFrame] = {
-    val read = rawRead(fromMs, toMs, staleness)
-    merge(read, oneStage(read.bytes))
-  }
-
-  /** One read's raw inputs: the current cold generation and the hot
-    * view, each bounded to [fromMs, toMs], whether the hot view is one
+  /** One read's raw inputs: the View's cold generation and hot batches,
+    * each bounded to [fromMs, toMs], whether the hot part is one
     * compacted (already deduped) batch, and the bytes the inputs hold
     * (None when unknown).
     */
@@ -1594,32 +1488,36 @@ final class Tsdb(spark: SparkSession,
       val hot: Option[DataFrame], val hotClean: Boolean,
       val bytes: Option[Long])
 
-  private def rawRead(fromMs: Long, toMs: Long,
-      staleness: Option[Long]): RawRead = {
-    // read-your-writes across the micro-batch buffer (or the cheapest
-    // staleness-budgeted view when the caller opted in)
-    val view = readView(staleness)
+  private def rawRead(v: View, fromMs: Long, toMs: Long): RawRead = {
     // time bounds apply BELOW the dedup aggregate (ts_ms is a grouping
     // key, so this is where the scan-level pruning comes from)
     def bounded(df: DataFrame): DataFrame =
       if (fromMs == Long.MinValue && toMs == Long.MaxValue) df
       else df.where(col("ts_ms") >= fromMs && col("ts_ms") <= toMs)
-    val cold = coldPoints(fromMs, toMs)
+    val cold = coldPoints(v, fromMs, toMs)
+    // the cold bytes of the day partitions the read scans, every day when
+    // either bound is open (as coldPoints prunes)
+    val open = fromMs == Long.MinValue || toMs == Long.MaxValue
+    val (lo, hi) = (utcDay(fromMs), utcDay(toMs))
+    def scanned(dir: String): Boolean = open ||
+      parseDay(dir).forall(d => !d.isBefore(lo) && !d.isAfter(hi))
     // a view is clean (no dedup) only when it is exactly the compacted head
-    new RawRead(cold.map(bounded), unionAll(view).map(bounded),
-      view.size == 1 && view.head.level == Head, knownSum(
-        cold.map(_ => coldBytes(fromMs, toMs)) ++:
-          view.map(b => indexedBytes(b.df))))
+    new RawRead(cold.map(bounded), unionAll(v.hot).map(bounded),
+      v.hot.size == 1 && v.hot.head.level == Head, knownSum(
+        cold.map(indexedBytes(_, scanned)) ++:
+          v.hot.map(b => indexedBytes(b.df))))
   }
 
   /** The sum of `parts`, None when any part is unknown. */
   private def knownSum(parts: Seq[Option[Long]]): Option[Long] =
     if (parts.forall(_.isDefined)) Some(parts.flatten.sum) else None
 
-  /** Assemble a [[RawRead]] into the LWW view. `single` coalesces every
-    * input, and the union, to one partition ([[oneStage]]).
+  /** Assemble a [[RawRead]] of View `v` into the LWW view. `single`
+    * coalesces every input, and the union, to one partition
+    * ([[oneStage]]).
     */
-  private def merge(read: RawRead, single: Boolean): Option[DataFrame] = {
+  private def merge(v: View, read: RawRead,
+      single: Boolean): Option[DataFrame] = {
     def in(df: DataFrame): DataFrame = if (single) df.coalesce(1) else df
     // the dedup SHUFFLE is paid only where duplicate keys can exist: a
     // compacted single hot batch is clean, and the cold tier is clean
@@ -1629,10 +1527,10 @@ final class Tsdb(spark: SparkSession,
       if (read.hotClean) h else lwwDedup(h)
     (read.cold.map(in), read.hot.map(in)) match {
       case (Some(c), Some(h)) =>
-        Some(if (coldDirty) lwwDedup(in(c.unionByName(h)))
+        Some(if (v.coldDirty) lwwDedup(in(c.unionByName(h)))
         else in(c.unionByName(hotDeduped(h))))
       case (Some(c), None) =>
-        Some(if (coldDirty) lwwDedup(c) else c)
+        Some(if (v.coldDirty) lwwDedup(c) else c)
       case (None, Some(h)) => Some(hotDeduped(h))
       case (None, None) => None
     }
@@ -1655,55 +1553,30 @@ final class Tsdb(spark: SparkSession,
     single
   }
 
-  /** Bytes of the files under `df`'s file scans whose directory name
-    * passes `keep`, read off the file index each scan built when its
-    * DataFrame was made (a hot pin's at pin time): no listing, no job.
-    * None when a leaf is not an indexed file scan.
+  /** The files each leaf of `df` scans, as its file index listed them;
+    * None for a leaf that is not an indexed file scan.
     */
-  private def indexedBytes(df: DataFrame,
-      keep: String => Boolean = _ => true): Option[Long] = {
+  private def leafFiles(df: DataFrame)
+      : Seq[Option[Seq[org.apache.hadoop.fs.FileStatus]]] = {
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
       LogicalRelation, PartitioningAwareFileIndex}
-    knownSum(df.queryExecution.analyzed.collectLeaves().map {
-      case l: LogicalRelation => l.relation match {
-        case r: HadoopFsRelation => r.location match {
-          case i: PartitioningAwareFileIndex => Some(i.allFiles().iterator
-            .filter(f => keep(f.getPath.getParent.getName))
-            .map(_.getLen).sum)
-          case _ => None
-        }
-        case _ => None
-      }
+    df.queryExecution.analyzed.collectLeaves().map {
+      case LogicalRelation(HadoopFsRelation(i: PartitioningAwareFileIndex,
+          _, _, _, _, _), _, _, _, _) => Some(i.allFiles())
       case _ => None
-    })
+    }
   }
 
-  /** Bytes of the current cold generation's day partitions that a read
-    * of [fromMs, toMs] scans (every day when either bound is open, as
-    * [[coldPoints]] prunes). A day the generation's `_daybytes` sidecar
-    * recorded, and no spill has appended into since, is taken from the
-    * sidecar; any other day is listed. None when the generation went
-    * away under the listing.
+  /** Bytes of the files under `df`'s file scans whose directory name
+    * passes `keep`, read off the file index each scan built when its
+    * DataFrame was made (a hot pin's at pin time, a cold or agg_5m
+    * relation's when its View was published): no listing, no job. None
+    * when a leaf is not an indexed file scan.
     */
-  private def coldBytes(fromMs: Long, toMs: Long): Option[Long] =
-    coldPath.map(Paths.get(_)).filter(Files.isDirectory(_))
-      .fold(Option(0L)) { gen =>
-        val open = fromMs == Long.MinValue || toMs == Long.MaxValue
-        val (lo, hi) = (utcDay(fromMs), utcDay(toMs))
-        val dirty = synchronized(dirtyColdDays)
-        scala.util.Try {
-          val recorded = readDayBytes(gen)
-          listDir(gen).map(_.getFileName.toString)
-            .filter(_.startsWith("day=")).iterator.flatMap { n =>
-              val d = scala.util.Try(
-                java.time.LocalDate.parse(n.stripPrefix("day="))).toOption
-              if (!open && d.exists(x => x.isBefore(lo) || x.isAfter(hi))) None
-              else Some(recorded.get(n)
-                .filter(_ => d.exists(x => dirty.exists(!_.contains(x))))
-                .getOrElse(dirBytes(gen.resolve(n))))
-            }.sum
-        }.toOption
-      }
+  private def indexedBytes(df: DataFrame,
+      keep: String => Boolean = _ => true): Option[Long] =
+    knownSum(leafFiles(df).map(_.map(_.iterator
+      .filter(f => keep(f.getPath.getParent.getName)).map(_.getLen).sum)))
 
   /** T9 read filter: the per-series TTL is max-merged over the WHOLE
     * history (a bounded read must not shrink a series' TTL).
@@ -1718,20 +1591,19 @@ final class Tsdb(spark: SparkSession,
     * `api/remotestorage/remotestorage.go:103-114`).
     *
     * History =
-    * the pinned compacted dim ∪ the hot tail's (metric_id, ttl) pairs —
-    * never a cold-tier rescan. Left join with NO broadcast hint: the dim
-    * holds only non-default-TTL series (tiny in practice; AQE broadcasts
-    * it from runtime size, and a pathological 10⁸-series dim degrades to
-    * a shuffle join instead of a driver OOM). Absent row = default TTL =
-    * survives.
+    * View `v`'s pinned compacted dim ∪ its hot batches' (metric_id, ttl)
+    * pairs — never a cold-tier rescan. Left join with NO broadcast hint:
+    * the dim holds only non-default-TTL series (tiny in practice; AQE
+    * broadcasts it from runtime size, and a pathological 10⁸-series dim
+    * degrades to a shuffle join instead of a driver OOM). Absent row =
+    * default TTL = survives.
     */
-  private def applyTtl(d: DataFrame, bs: Vector[HotBatch],
-      single: Boolean): DataFrame =
-    if (!ttlSeen) d
+  private def applyTtl(d: DataFrame, v: View, single: Boolean): DataFrame =
+    if (!v.ttlSeen) d
     else {
-      val hotTtls = unionAll(bs)
+      val hotTtls = unionAll(v.hot)
         .map(_.select(col("metric_id"), col("__ttl_sec")))
-      val dims = (ttlDim ++ hotTtls).reduceOption(_.unionByName(_))
+      val dims = (v.ttlDim ++ hotTtls).reduceOption(_.unionByName(_))
       dims.fold(d) { all =>
         val ttls = (if (single) all.coalesce(1) else all).groupBy("metric_id")
           .agg(max(col("__ttl_sec")).as("__series_ttl"))
@@ -1748,9 +1620,12 @@ final class Tsdb(spark: SparkSession,
 
   /** The tenant's mutable-label mappings, name-sorted. */
   def mappingsFor(tenant: String): Seq[MutableMapping] =
-    mutableNames.collect { case ((t, n), target) if t == tenant =>
+    mappingsFor(view, tenant)
+
+  private def mappingsFor(v: View, tenant: String): Seq[MutableMapping] =
+    v.mutableNames.collect { case ((t, n), target) if t == tenant =>
       MutableMapping(t, n, target,
-        mutableValues.collect {
+        v.mutableValues.collect {
           case ((t2, n2, v), assoc) if t2 == tenant && n2 == n => v -> assoc
         }.toMap)
     }.toSeq.sortBy(_.name)
@@ -1760,14 +1635,14 @@ final class Tsdb(spark: SparkSession,
     */
   def updateMutableNames(ops: Seq[((String, String), Option[String])]): Unit =
     synchronized {
-      ops.foreach {
-        case (key, Some(target)) => mutableNames += key -> target
-        case (key, None) =>
-          mutableNames -= key
-          mutableValues = mutableValues.filter { case ((t, n, _), _) =>
-            (t, n) != key }
-      }
-      persistMutable()
+      persistMutable(publish(v => ops.foldLeft(v) {
+        case (v, (key, Some(target))) =>
+          v.copy(mutableNames = v.mutableNames + (key -> target))
+        case (v, (key, None)) =>
+          v.copy(mutableNames = v.mutableNames - key,
+            mutableValues = v.mutableValues.filter { case ((t, n, _), _) =>
+              (t, n) != key })
+      }))
     }
 
   /** Define (Some(associated values)) or delete (None) mutable label
@@ -1776,20 +1651,19 @@ final class Tsdb(spark: SparkSession,
   def updateMutableValues(
       ops: Seq[((String, String, String), Option[Seq[String]])]): Unit =
     synchronized {
-      ops.foreach {
-        case (key, Some(assoc)) => mutableValues += key -> assoc
-        case (key, None) => mutableValues -= key
-      }
-      persistMutable()
+      persistMutable(publish(v => v.copy(mutableValues =
+        ops.foldLeft(v.mutableValues) {
+          case (m, (key, Some(assoc))) => m + (key -> assoc)
+          case (m, (key, None)) => m - key
+        })))
     }
 
   /** Replace ALL mutable labels, then persist. */
   def replaceMutable(names: Map[(String, String), String],
       values: Map[(String, String, String), Seq[String]]): Unit =
     synchronized {
-      mutableNames = names
-      mutableValues = values
-      persistMutable()
+      persistMutable(publish(_.copy(mutableNames = names,
+        mutableValues = values)))
     }
 
   /** The mutable labels as (tenant, name, associated_name, value,
@@ -1799,8 +1673,12 @@ final class Tsdb(spark: SparkSession,
     * reference's CSV dump (`cassandra/mutable/provider.go:423-487`).
     */
   def mutableRows: Seq[(String, String, String, String, String)] =
-    mutableNames.toSeq.sortBy(_._1).flatMap { case ((t, n), target) =>
-      val vals = mutableValues.toSeq.collect {
+    mutableRows(view)
+
+  private def mutableRows(
+      v: View): Seq[(String, String, String, String, String)] =
+    v.mutableNames.toSeq.sortBy(_._1).flatMap { case ((t, n), target) =>
+      val vals = v.mutableValues.toSeq.collect {
         case ((t2, n2, v), assoc) if t2 == t && n2 == n => (v, assoc)
       }.sortBy(_._1).flatMap { case (v, assoc) =>
         assoc.map(av => (t, n, target, v, av)) }
@@ -1827,7 +1705,11 @@ final class Tsdb(spark: SparkSession,
       fromMs: Long = Long.MinValue,
       toMs: Long = Long.MaxValue,
       staleness: Option[Long] = None): Option[PromSource] =
-    dedupedPoints(fromMs, toMs, staleness).map(sourceFrom(_, tenant))
+    source(readView(staleness), tenant, fromMs, toMs)
+
+  private def source(v: View, tenant: String, fromMs: Long,
+      toMs: Long): Option[PromSource] =
+    dedupedPoints(v, fromMs, toMs).map(sourceFrom(_, v, tenant))
 
   private val LegacyName = "^[a-zA-Z_][a-zA-Z0-9_]*$"
 
@@ -1836,25 +1718,29 @@ final class Tsdb(spark: SparkSession,
     * safe). The facade renames back before serialization.
     */
   private[graft] def labelAliases: Map[String, String] =
-    labelNames.filterNot(Reserved)
+    labelAliases(view)
+
+  private def labelAliases(v: View): Map[String, String] =
+    v.labelNames.filterNot(Reserved)
       .filterNot(_.matches(LegacyName))
       .map(n => n -> utf8Alias(n)).toMap
 
-  private def sourceFrom(df0: DataFrame, tenant: String): PromSource = {
+  private def sourceFrom(df0: DataFrame, v: View,
+      tenant: String): PromSource = {
       // legacy-charset names become columns under their own name; UTF-8
       // names (accepted since the reference's UTF8Validation) become
       // SANITIZED alias columns so they join the PromQL identity set —
       // grouping by them works after the AST rewrite, and two series
       // differing only in a UTF-8 label stay distinct in results
-      val names = labelNames.filterNot(Reserved)
+      val names = v.labelNames.filterNot(Reserved)
         .filter(_.matches(LegacyName))
-      val aliases = labelAliases
+      val aliases = labelAliases(v)
       val withLegacy = names.foldLeft(df0)((d, n) =>
         d.withColumn(n, element_at(col("labels"), n)))
       val withLabels = aliases.foldLeft(withLegacy) { case (d, (n, a)) =>
         d.withColumn(a, element_at(col("labels"), n))
       }
-      val mappings = mappingsFor(tenant)
+      val mappings = mappingsFor(v, tenant)
         .filterNot(m => names.contains(m.name) || Reserved(m.name))
       // a mapping whose associated real label has no stored column yet
       // decorates to null instead of failing analysis (the column appears
@@ -1882,19 +1768,18 @@ final class Tsdb(spark: SparkSession,
   val PreAggResolutionMs: Long = graft.tsdb.Downsample.DefaultResolutionMs
 
   // agg-table snapshot generation (same isolation as the cold tier): the
-  // ROOT holds the watermark; the data lives in g<N> (`aggGen`, declared
-  // above the bootstrap block). Incremental runs APPEND to the current
-  // generation (append never breaks an in-flight reader); the forced
-  // REBUILD writes g<N+1> — unchanged months carried forward — and
-  // flips, so routed readers never race a file overwrite
+  // ROOT holds the watermark; the data lives in g<N> (the View's
+  // `aggGen`). Incremental runs APPEND to the current generation (append
+  // never breaks an in-flight reader, whose View keeps its file set); the
+  // forced REBUILD writes g<N+1> — unchanged months carried forward —
+  // and flips, so routed readers never race a file overwrite
 
   private def aggPath: Option[String] = durablePath.map(_ + "_agg5m")
-  private def aggDataPath: Option[String] = aggPath.map(p => s"$p/g$aggGen")
 
   /** `fullyAggregatedAt` — buckets ending at or before this are served
     * from the agg table; later data re-aggregates from raw at query time.
     */
-  def preAggWatermark: Long = aggWatermark
+  def preAggWatermark: Long = view.aggWatermark
 
   /** Downsample a deduped point slice into the agg-table row shape:
     * (metric_id, labels, bucket_ms, min, max, avg, count, __ttl_sec),
@@ -1942,23 +1827,25 @@ final class Tsdb(spark: SparkSession,
     spark.sparkContext.setLocalProperty("spark.scheduler.pool",
       "graft-upkeep")
     aggPath.fold(0L) { ap =>
-    val wm = aggWatermark
-    val endAt = math.min(endMs, spillTimeFrontier)
+    val cur = view
+    val wm = cur.aggWatermark
+    val endAt = math.min(endMs, cur.spillTimeFrontier)
     val end = endAt - math.floorMod(endAt, PreAggResolutionMs)
     if (end <= wm || coldWritesBlocked) wm
-    else coldPoints(wm, end - 1) match {
+    else coldPoints(cur, wm, end - 1) match {
       case None => wm
       case Some(c) =>
         val bounded = c.where(col("ts_ms") >= wm && col("ts_ms") < end)
-        val slice = if (coldDirty) lwwDedup(bounded) else bounded
+        val slice = if (cur.coldDirty) lwwDedup(bounded) else bounded
         if (slice.limit(1).count() > 0)
           Store.repartitionForWrite(
               aggSlice(slice), "month", Seq("metric_id"), tasks)
             .write.partitionBy("month")
             .mode(SaveMode.Append)
-            .parquet(aggDataPath.get)
+            .parquet(s"$ap/g${cur.aggGen}")
         Store.writeWatermark(ap, end)
-        aggWatermark = end
+        val agg = frozenAgg(cur.aggGen)
+        publish(_.copy(agg = agg, aggWatermark = end))
         end
     }
   } }
@@ -1977,7 +1864,7 @@ final class Tsdb(spark: SparkSession,
       spark.sparkContext.setLocalProperty("spark.scheduler.pool",
         "graft-upkeep")
       aggPath.toSeq.flatMap { ap =>
-      val wm = aggWatermark
+      val wm = view.aggWatermark
       val hi = math.min(toMs, wm) // beyond wm the raw tail serves anyway
       if (hi <= fromMs || coldWritesBlocked) Seq.empty
       else rebuildAggWindow(ap, fromMs, hi, wm)
@@ -1985,13 +1872,15 @@ final class Tsdb(spark: SparkSession,
 
   private def rebuildAggWindow(ap: String, fromMs: Long, hi: Long,
       wm: Long): Seq[String] = {
+      // read STRICT: un-spilled and still-buffered backfill counts too
+      val cur = readView(None)
       val utc = java.time.ZoneOffset.UTC
       val mStart = utcDay(fromMs).withDayOfMonth(1)
       val mEnd = utcDay(hi - 1).withDayOfMonth(1).plusMonths(1)
       val loMs = mStart.atStartOfDay(utc).toInstant.toEpochMilli
       val hiMs = math.min(
         mEnd.atStartOfDay(utc).toInstant.toEpochMilli, wm)
-      dedupedPoints(loMs, hiMs - 1).toSeq.flatMap { d =>
+      dedupedPoints(cur, loMs, hiMs - 1).toSeq.flatMap { d =>
         val slice = d.where(col("ts_ms") >= loMs && col("ts_ms") < hiMs)
         val months = Iterator.iterate(mStart)(_.plusMonths(1))
           .takeWhile(_.isBefore(mEnd))
@@ -2013,7 +1902,7 @@ final class Tsdb(spark: SparkSession,
           .write.partitionBy("month")
           .mode(SaveMode.Overwrite)
           .parquet(staging.toString)
-        aggDataPath.map(Paths.get(_)).filter(Files.isDirectory(_))
+        Some(Paths.get(s"$ap/g${cur.aggGen}")).filter(Files.isDirectory(_))
           .foreach { cur =>
             listDir(cur).filter { m =>
               val n = m.getFileName.toString
@@ -2021,14 +1910,15 @@ final class Tsdb(spark: SparkSession,
                 !months.contains(n.stripPrefix("month="))
             }.foreach(m => linkTree(m, staging.resolve(m.getFileName.toString)))
           }
-        val nextGen = aggGen + 1
+        val nextGen = cur.aggGen + 1
         // a torn g<N+1> can predate this code (the old rebuild wrote the
         // generation directly and could crash mid-write; bootstrap skips
         // it for lack of _SUCCESS but leaves the directory) — clear it or
         // the staging move throws FileAlreadyExists forever
         Store.deleteRecursively(Paths.get(s"$ap/g$nextGen"))
         Files.move(staging, Paths.get(s"$ap/g$nextGen"))
-        aggGen = nextGen
+        val agg = frozenAgg(nextGen)
+        publish(_.copy(aggGen = nextGen, agg = agg))
         retireGenerations(ap, nextGen)
         months
       }
@@ -2087,24 +1977,29 @@ final class Tsdb(spark: SparkSession,
       }
   }
 
-  /** The routed point view (A2/A4): agg rows for buckets fully below the
-    * watermark — month-pruned, the chosen column as `value`, bucket start
-    * as `ts_ms` — unioned with the raw tail re-aggregated at query time
-    * (`read.go:229-237`), so rates don't jump at the boundary. None when
-    * no agg table exists yet (callers fall back to raw).
+  /** The routed point view (A2/A4) of View `v`: agg rows for buckets
+    * fully below the watermark — month-pruned, the chosen column as
+    * `value`, bucket start as `ts_ms` — unioned with the raw tail
+    * re-aggregated at query time (`read.go:229-237`), so rates don't jump
+    * at the boundary. None when no agg table exists yet (callers fall
+    * back to raw).
+    *
+    * A bucket is stamped at its START, as the reference stamps it
+    * (`ts − ts % resolution`, `aggregate/aggregate.go:43-137`, SURVEY.md
+    * A1): a routed `avg_over_time` therefore sees each 5-min bucket at
+    * its first instant, not at its samples' times. That is reference
+    * behaviour, kept on purpose.
     */
-  private def routedPoints(fromMs: Long, toMs: Long, column: String,
-      staleness: Option[Long]): Option[DataFrame] = aggPath.flatMap { _ =>
-    val wm = aggWatermark
-    if (wm <= 0L || !aggDataPath.exists(isDir)) None
+  private def routedPoints(v: View, fromMs: Long, toMs: Long,
+      column: String): Option[DataFrame] = v.agg.flatMap { agg0 =>
+    val wm = v.aggWatermark
+    if (wm <= 0L) None
     else {
       val fmt = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM")
         .withZone(java.time.ZoneOffset.UTC)
       val open = fromMs == Long.MinValue || toMs == Long.MaxValue
       val (mLo, mHi) = (fmt.format(java.time.Instant.ofEpochMilli(fromMs)),
         fmt.format(java.time.Instant.ofEpochMilli(toMs)))
-      // the declared layout spares the per-call inference job
-      val agg0 = spark.read.schema(AggSchema).parquet(aggDataPath.get)
       val monthPruned =
         if (open) agg0
         else agg0.where(col("month").between(mLo, mHi))
@@ -2118,23 +2013,22 @@ final class Tsdb(spark: SparkSession,
       // shape) is a pure agg scan with no tail subplan at all
       val tailRead =
         if (math.max(fromMs, wm) > toMs) None
-        else Some(rawRead(math.max(fromMs, wm), toMs, staleness))
+        else Some(rawRead(v, math.max(fromMs, wm), toMs))
       // one gate for the whole routed read: the agg months it scans
       // plus the raw tail
       val aggBytes = indexedBytes(agg0, d => open ||
         !d.startsWith("month=") || (d.drop(6) >= mLo && d.drop(6) <= mHi))
       val single = oneStage(knownSum(aggBytes +: tailRead.map(_.bytes).toSeq))
       def in(df: DataFrame): DataFrame = if (single) df.coalesce(1) else df
-      val bs = hot
-      val tail = tailRead.flatMap(merge(_, single))
-        .map(d => aggSlice(applyTtl(d, bs, single)
+      val tail = tailRead.flatMap(merge(v, _, single))
+        .map(d => aggSlice(applyTtl(d, v, single)
           .where(col("ts_ms") >= wm), single).drop("month"))
       val routed = tail.fold(in(old.drop("month")))(t =>
         in(in(old.drop("month")).unionByName(t)))
       Some(applyTtl(
         routed.select(col("labels"), col("metric_id"),
           col("bucket_ms").as("ts_ms"), col(column).as("value"),
-          lit(0L).as("__seq"), col("__ttl_sec")), bs, single))
+          lit(0L).as("__seq"), col("__ttl_sec")), v, single))
     }
   }
 
@@ -2143,8 +2037,10 @@ final class Tsdb(spark: SparkSession,
     * raw source.
     */
   private[graft] def routedSource(tenant: String, fromMs: Long, toMs: Long,
-      column: String, staleness: Option[Long] = None): Option[PromSource] =
-    routedPoints(fromMs, toMs, column, staleness).map(sourceFrom(_, tenant))
+      column: String, staleness: Option[Long] = None): Option[PromSource] = {
+    val v = readView(staleness)
+    routedPoints(v, fromMs, toMs, column).map(sourceFrom(_, v, tenant))
+  }
 
   /** The PromQL query source: the raw multi-metric source, with the
     * per-selector routing hook attached when `allowRoute` (the
@@ -2152,12 +2048,14 @@ final class Tsdb(spark: SparkSession,
     * `queryable.go:367-373` → `read.go:594-613`): the hook maps each
     * selector's innermost enclosing function to its counter-safe agg
     * column, so `max_over_time(a)/min_over_time(b)` reads agg_5m twice
-    * (max and min columns) instead of falling back to a raw scan.
+    * (max and min columns) instead of falling back to a raw scan. The
+    * raw source and every routed one read the same View.
     */
   private[graft] def querySource(tenant: String, mint: Long, maxt: Long,
       allowRoute: Boolean,
       staleness: Option[Long] = None): Option[PromSource] = {
-    val raw = source(tenant, mint, maxt, staleness)
+    val v = readView(staleness)
+    val raw = source(v, tenant, mint, maxt)
     if (!allowRoute) raw
     else raw.map { base =>
       // memoize per column — one agg-table read per distinct column, and
@@ -2168,7 +2066,7 @@ final class Tsdb(spark: SparkSession,
       base.copy(routeFor = { fnOpt =>
         val c = graft.tsdb.PreAgg.columnFor(fnOpt.getOrElse("avg"))
         val r = cache.synchronized { cache.getOrElseUpdate(c,
-          routedSource(tenant, mint, maxt, c, staleness).map(_.points)) }
+          routedPoints(v, mint, maxt, c).map(sourceFrom(_, v, tenant).points)) }
         if (r.isDefined && counted.compareAndSet(false, true))
           preAggRoutedTotal.incrementAndGet()
         r
@@ -2190,12 +2088,13 @@ final class Tsdb(spark: SparkSession,
       extra: Seq[Matcher] = Nil, forcePre: Boolean = false,
       forceRaw: Boolean = false,
       staleness: Option[Long] = None): Option[DataFrame] = {
+    val v = readView(staleness)
     val routed =
       if (forceRaw || (!forcePre && q.stepMs < PreAggResolutionMs)) None
-      else routedPoints(q.startMs, q.endMs,
-        graft.tsdb.PreAgg.columnFor(q.func), staleness)
+      else routedPoints(v, q.startMs, q.endMs,
+        graft.tsdb.PreAgg.columnFor(q.func))
     routed.foreach(_ => preAggRoutedTotal.incrementAndGet())
-    routed.orElse(dedupedPoints(q.startMs, q.endMs, staleness)).map { df =>
+    routed.orElse(dedupedPoints(v, q.startMs, q.endMs)).map { df =>
       val ms = extra ++ q.matchers
       df.where(if (ms.isEmpty) lit(true) else Matchers.all(labelCol, ms))
         .groupBy("metric_id")
@@ -2206,15 +2105,14 @@ final class Tsdb(spark: SparkSession,
     }
   }
 
-  /** Points in [fromMs, toMs] of series matching ANY of `selectors`
-    * (each a conjunction; none = all series) and every `extra` matcher
-    * (the filtering the reference's label APIs do via matcher+shard
-    * intersection, `cassandra/index/index.go:1265-1325`).
+  /** Points of View `v` in [fromMs, toMs] of series matching ANY of
+    * `selectors` (each a conjunction; none = all series) and every
+    * `extra` matcher (the filtering the reference's label APIs do via
+    * matcher+shard intersection, `cassandra/index/index.go:1265-1325`).
     */
-  private def matchedPoints(fromMs: Long, toMs: Long,
-      selectors: Seq[Seq[Matcher]], extra: Seq[Matcher],
-      staleness: Option[Long]): Option[DataFrame] =
-    dedupedPoints(fromMs, toMs, staleness).map { df =>
+  private def matchedPoints(v: View, fromMs: Long, toMs: Long,
+      selectors: Seq[Seq[Matcher]], extra: Seq[Matcher]): Option[DataFrame] =
+    dedupedPoints(v, fromMs, toMs).map { df =>
       val matched =
         if (selectors.isEmpty) df
         else df.where(selectors.map(Matchers.all(labelCol, _)).reduce(_ || _))
@@ -2228,9 +2126,10 @@ final class Tsdb(spark: SparkSession,
     */
   def seriesLabels(tenant: String, fromMs: Long, toMs: Long,
       selectors: Seq[Seq[Matcher]], extra: Seq[Matcher],
-      staleness: Option[Long] = None): Option[DataFrame] =
-    matchedPoints(fromMs, toMs, selectors, extra, staleness).map { df =>
-      val decorated = mappingsFor(tenant).foldLeft(latestLabels(df)) {
+      staleness: Option[Long] = None): Option[DataFrame] = {
+    val v = readView(staleness)
+    matchedPoints(v, fromMs, toMs, selectors, extra).map { df =>
+      val decorated = mappingsFor(v, tenant).foldLeft(latestLabels(df)) {
         (d, m) =>
           val mv = decorationCol(m, element_at(col("labels"), m.targetName))
           d.withColumn("labels", when(mv.isNotNull,
@@ -2245,6 +2144,7 @@ final class Tsdb(spark: SparkSession,
         .orderBy("__k")
         .select("labels")
     }
+  }
 
   /** Label names: physical names on matching series (every stored name
     * when nothing restricts the read) plus the tenant's mutable names
@@ -2254,15 +2154,16 @@ final class Tsdb(spark: SparkSession,
       selectors: Seq[Seq[Matcher]], extra: Seq[Matcher],
       staleness: Option[Long] = None): Seq[String] = {
     import spark.implicits._
+    val v = readView(staleness)
     val physical =
       if (selectors.isEmpty && extra.isEmpty && fromMs == Long.MinValue &&
-        toMs == Long.MaxValue) labelNames
-      else matchedPoints(fromMs, toMs, selectors, extra, staleness)
+        toMs == Long.MaxValue) v.labelNames
+      else matchedPoints(v, fromMs, toMs, selectors, extra)
         .fold(Seq.empty[String]) { df =>
           df.select(explode(map_keys(col("labels"))).as("n")).distinct()
             .as[String].collect().toSeq
         }
-    (physical ++ mutableNames.keysIterator
+    (physical ++ v.mutableNames.keysIterator
       .collect { case (t, n) if t == tenant => n }).distinct
   }
 
@@ -2274,10 +2175,11 @@ final class Tsdb(spark: SparkSession,
       selectors: Seq[Seq[Matcher]], extra: Seq[Matcher],
       staleness: Option[Long] = None): Seq[String] = {
     import spark.implicits._
-    if (mutableNames.contains((tenant, name))) mutableValues.keysIterator
-      .collect { case (t, n, v) if t == tenant && n == name => v }
+    val v = readView(staleness)
+    if (v.mutableNames.contains((tenant, name))) v.mutableValues.keysIterator
+      .collect { case (t, n, x) if t == tenant && n == name => x }
       .toSeq.distinct
-    else matchedPoints(fromMs, toMs, selectors, extra, staleness)
+    else matchedPoints(v, fromMs, toMs, selectors, extra)
       .fold(Seq.empty[String]) { df =>
         df.select(element_at(col("labels"), name).as("v"))
           .where(col("v").isNotNull && col("v") =!= "")
@@ -2300,7 +2202,7 @@ final class Tsdb(spark: SparkSession,
     def top10(d: DataFrame): Seq[(String, Long)] = d
       .orderBy(col("value").desc, col("name").asc).limit(10)
       .as[(String, Long)].collect().toSeq
-    dedupedPoints(staleness = staleness).flatMap { df =>
+    dedupedPoints(readView(staleness)).flatMap { df =>
       val stats = df.agg(min("ts_ms"), max("ts_ms"), count(lit(1))).head()
       Option.when(!stats.isNullAt(0)) {
         // MAP columns can't feed distinct(); the canonical series id can
@@ -2328,15 +2230,16 @@ final class Tsdb(spark: SparkSession,
 
   /** Store-level counts for operators, in report order. */
   def indexInfo: Seq[(String, Long)] = {
-    val (nPoints, nSeries) = rawPoints match {
+    val v = readView(None)
+    val (nPoints, nSeries) = unionAll(v.hot) match {
       case None => (0L, 0L)
       case Some(df) =>
         (df.count(), df.select("metric_id").distinct().count())
     }
     Seq("points" -> nPoints, "series" -> nSeries,
-      "labelNames" -> labelNames.size.toLong,
+      "labelNames" -> v.labelNames.size.toLong,
       "pendingBatches" -> pendingBatches.toLong,
-      "mutableNames" -> mutableNames.size.toLong)
+      "mutableNames" -> v.mutableNames.size.toLong)
   }
 
   /** Identity invariants over the stored view (reference
@@ -2350,7 +2253,7 @@ final class Tsdb(spark: SparkSession,
     */
   def indexVerify(strict: Boolean,
       staleness: Option[Long] = None): Seq[(String, Long)] = {
-    val (badIds, collisions) = dedupedPoints(staleness = staleness) match {
+    val (badIds, collisions) = dedupedPoints(readView(staleness)) match {
       case None => (0L, 0L)
       case Some(df) =>
         val canonical = graft.tsdb.SeriesDim.canonicalMap(col("labels"))
@@ -2376,8 +2279,7 @@ final class Tsdb(spark: SparkSession,
   def seriesIndex(fromMs: Long, toMs: Long, where: Column,
       ttlFiltered: Boolean,
       staleness: Option[Long] = None): Option[DataFrame] =
-    (if (ttlFiltered) dedupedPoints(fromMs, toMs, staleness)
-    else mergedDeduped(fromMs, toMs, staleness))
+    dedupedPoints(readView(staleness), fromMs, toMs, ttlFiltered)
       .map(df => latestLabels(df.where(where)).orderBy("metric_id"))
 
   /** One (metric_id, labels) row per series: its newest label map. */
@@ -2399,7 +2301,7 @@ final class Tsdb(spark: SparkSession,
       }
       val onDay = dim.where(to_date(timestamp_millis(col("expiration_ms"))) ===
         lit(java.sql.Date.valueOf(day)))
-      mergedDeduped(Long.MinValue, Long.MaxValue, staleness).map(latestLabels)
+      dedupedPoints(readView(staleness), ttl = false).map(latestLabels)
         .fold(onDay.withColumn("labels",
           map().cast("map<string,string>")))(ld =>
           onDay.join(ld, Seq("metric_id"), "left"))
@@ -2449,6 +2351,55 @@ object Tsdb {
     */
   private[store] final case class HotBatch(df: DataFrame, minTs: Long,
       path: String, wallMs: Long, level: Level)
+
+  /** Everything a read of a [[Tsdb]] sees, as of one publish (the class
+    * doc's "Views").
+    *
+    * @param hot the hot batches, oldest first: [head?] ++ mids ++ raw
+    *   pin tail
+    * @param coldGen the current cold generation (`$durablePath/g<N>`):
+    *   [[Tsdb.compactCold]] rewrites into g<N+1> and flips, never in
+    *   place, so a View over the old generation keeps scanning it
+    * @param cold generation `coldGen`'s relation, its files listed when
+    *   this View was published; None while it holds no data
+    * @param coldDirty whether cold may hold keys that are also in hot or
+    *   twice in cold, so reads must LWW-dedup across the tiers
+    * @param lastSpillCutoff the DATA frontier: max spilled ts_ms + 1,
+    *   monotone. A write whose oldest sample falls behind it MAY
+    *   duplicate keys already on disk
+    * @param spillTimeFrontier the TIME frontier of the latest spill (the
+    *   wall-derived cutoff): everything below it is on disk, so it bounds
+    *   how far [[Tsdb.preAggregate]] may move the agg_5m watermark (0 =
+    *   nothing spilled yet). The restart sidecar carries it
+    * @param aggGen the current agg_5m generation
+    * @param agg generation `aggGen`'s relation, listed at publish
+    * @param aggWatermark `fullyAggregatedAt`, kept in step with every
+    *   write of its file, so a routed read never reads the file
+    * @param labelNames every stored label name, sorted
+    * @param ttlSeen whether any write carried a non-default TTL
+    * @param ttlDim T9: per-series max-merged TTL over COMPACTED history,
+    *   pinned and tiny (only series whose effective TTL is non-default).
+    *   Reads union the hot batches' TTLs in, so no read rescans the cold
+    *   history for TTLs
+    * @param mutableNames mutable-label dimension (M4): (tenant, name) →
+    *   real label name. Durable-backed when a durable path is configured
+    *   (the reference persists these in Cassandra,
+    *   `cassandra/mutable/provider.go`)
+    * @param mutableValues (tenant, name, value) → associated real values
+    */
+  private[store] final case class View(hot: Vector[HotBatch], coldGen: Int,
+      cold: Option[DataFrame], coldDirty: Boolean, lastSpillCutoff: Long,
+      spillTimeFrontier: Long, aggGen: Int, agg: Option[DataFrame],
+      aggWatermark: Long, labelNames: Seq[String], ttlSeen: Boolean,
+      ttlDim: Option[DataFrame],
+      mutableNames: Map[(String, String), String],
+      mutableValues: Map[(String, String, String), Seq[String]])
+
+  private[store] object View {
+    val Empty: View = View(Vector.empty, 0, None, coldDirty = false,
+      Long.MinValue, 0L, 0, None, 0L, Nil, ttlSeen = false, None, Map.empty,
+      Map.empty)
+  }
 
   /** [[Tsdb.tsdbStatus]]'s head stats and top-10 tables, in payload
     * order.
@@ -2507,6 +2458,11 @@ object Tsdb {
   private def utcDay(ms: Long): java.time.LocalDate =
     java.time.Instant.ofEpochMilli(ms).atZone(java.time.ZoneOffset.UTC)
       .toLocalDate
+
+  /** The day of a `day=yyyy-MM-dd` partition directory name. */
+  private def parseDay(dir: String): Option[java.time.LocalDate] =
+    scala.util.Try(java.time.LocalDate.parse(dir.stripPrefix("day=")))
+      .toOption
 
   /** The entries of one directory, listed and closed. */
   private def listDir(dir: Path): Seq[Path] = {

@@ -158,6 +158,7 @@ object Ingest {
         .localCheckpoint(true)
       child.catalog.dropTempView(name)
       q.stop() // release source/sink resources beyond termination
+      org.apache.spark.sql.graftshim.ListenerShim.releaseQuerySession(q)
       child.streams.resetTerminated()
       // unload state-store providers + their maintenance thread — the last
       // streaming residue that can tax later batch queries in the session

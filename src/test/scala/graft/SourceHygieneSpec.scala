@@ -5,8 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Guards the repo against raw control bytes in source files, the
   * tools against growing their own listeners back, the engine
   * against passing parameters through session conf or growing knobs
-  * unnoticed, and the storage engine against folding back into the
-  * HTTP facade.
+  * unnoticed, the storage engine against folding back into the HTTP
+  * facade, and its read state against leaving its one View.
   *
   * Raw U+0000/U+0001 bytes in string/char literals make git classify the
   * file as BINARY — diffs, blame, and review silently break. This happened
@@ -100,6 +100,19 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(store.isDirectory, "run from the repo root")
     val offenders = codeNaming("graft.api", scalaSources(store))
     assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("the storage engine publishes its read state through one View: " +
+    "its @volatile fields are exactly the allowlist") {
+    // a read must see one consistent state, so read-side state joins the
+    // View; a field published on its own beside it can tear a read
+    val allowed =
+      Set("view", "pinsSinceFullFold", "coldWritesBlocked", "stopped")
+    val field = "@volatile\\s+(private\\s+)?(var|val)\\s+(\\w+)".r
+    val fields = field.findAllMatchIn(
+      text(new java.io.File("src/main/scala/graft/store/Tsdb.scala")))
+      .map(_.group(3)).toSet
+    assert(fields === allowed)
   }
 
   test("the graft conf keys src/main reads are exactly the allowlist") {

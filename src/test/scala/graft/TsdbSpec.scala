@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions.col
 
 import graft.store.Tsdb
@@ -7,7 +9,9 @@ import graft.streaming.Prompb.PromSeries
 
 /** The storage engine on its own, with no HTTP in the loop: writes,
   * strict and staleness-budgeted reads, a spilling fold with restart
-  * recovery, stop-time pin reclaim, and the cold tier's StaleNaN bits.
+  * recovery, stop-time pin reclaim, the cold tier's StaleNaN bits, a
+  * read planned across a spilling fold, and a seeded run of concurrent
+  * writers, readers and upkeep.
   */
 class TsdbSpec extends SparkSpec {
 
@@ -128,6 +132,134 @@ class TsdbSpec extends SparkSpec {
       assert(coldBits() === Seq(java.lang.Double.doubleToRawLongBits(1.0),
         staleBits, java.lang.Double.doubleToRawLongBits(3.0)),
         "after the cold rewrite")
+    } finally db.stop()
+  }
+
+  test("a read built before a spilling fold counts every point once") {
+    val dir = tempDir("tsdb_torn")
+    val db = new Tsdb(spark, compactEvery = 1000000, durablePath = Some(dir))
+    try {
+      val a = series("tt", "a", Seq.tabulate(50)(_.toDouble))
+      db.write(Seq(a), "default")
+      db.compact() // round 1: the tier gets its cold generation
+      val b = PromSeries(Map("__name__" -> "tt", "instance" -> "b",
+        "job" -> "node"), Seq.tabulate(50)(i =>
+        (T0 + 3600000L + i * 60000L, i.toDouble)))
+      db.write(Seq(b), "default")
+      val pts = db.source().get.points // planned, not run
+      db.compact() // round 2: a clean spill of b's 50 points
+      assert(pts.count() === 100L)
+    } finally db.stop()
+  }
+
+  test("seeded writers, readers and upkeep: every strict read is " +
+    "duplicate-free, holds every acknowledged point and only written " +
+    "values") {
+    val seed = sys.env.get("TSDB_SPEC_SEED").map(_.toLong)
+      .getOrElse(System.nanoTime())
+    info(s"seed $seed (rerun with TSDB_SPEC_SEED=$seed)")
+    val rnd = new scala.util.Random(seed)
+    val dir = tempDir("tsdb_concurrent")
+    val db = new Tsdb(spark, compactEvery = 16, durablePath = Some(dir))
+    type Key = (String, Long) // (instance, ts_ms)
+    // every write is logged before it is sent (`sent`, with its value)
+    // and once acknowledged (`acked`); a log position orders the events
+    val clock = new java.util.concurrent.atomic.AtomicLong
+    val sent = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Key, Double)]
+    val acked = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Key)]
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val writersDone = new java.util.concurrent.CountDownLatch(2)
+    val upkeepDone = new java.util.concurrent.CountDownLatch(1)
+    val strictReads = new java.util.concurrent.atomic.AtomicInteger
+    val posts = 40
+    val perPost = 10
+    // per thread: its own generator, drawn from the seed
+    val seeds = Seq.fill(6)(rnd.nextLong())
+    def guarded(name: String)(body: => Unit): Thread = {
+      val t = new Thread(() =>
+        try body catch { case e: Throwable => failures.add(s"$name: $e") },
+        name)
+      t.setDaemon(true)
+      t
+    }
+    def writer(w: Int) = guarded(s"writer-$w") {
+      val r = new scala.util.Random(seeds(w))
+      try (0 until posts).foreach { i =>
+        // fresh keys, or (one post in five) overwrites of earlier ones
+        val keys = (0 until perPost).map { j =>
+          val at = if (i > 0 && r.nextInt(5) == 0) r.nextInt(i) else i
+          T0 + at * 6 * 3600000L + j * 1000L // 40 posts span 10 days
+        }.distinct
+        val samples = keys.zipWithIndex.map { case (ts, j) =>
+          (ts, w * 1e6 + i * 100 + j) }
+        val inst = s"w$w"
+        samples.foreach { case (ts, v) =>
+          sent.add((clock.incrementAndGet(), (inst, ts), v)) }
+        db.write(Seq(PromSeries(Map("__name__" -> "cc", "instance" -> inst,
+          "job" -> "node"), samples)), "default")
+        samples.foreach { case (ts, _) =>
+          acked.add((clock.incrementAndGet(), (inst, ts))) }
+        Thread.sleep(r.nextInt(100))
+      } finally writersDone.countDown()
+    }
+    def read(staleness: Option[Long]): Map[Key, Double] = {
+      val rows = db.source(staleness = staleness).toSeq.flatMap(
+        _.points.where(col("__name__") === "cc")
+          .select("instance", "ts_ms", "value").collect())
+        .map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(2))
+      val dups = rows.groupBy(_._1).collect { case (k, rs) if rs.size > 1 => k }
+      if (dups.nonEmpty) failures.add(s"duplicate keys: ${dups.take(5)}")
+      rows.toMap
+    }
+    def check(got: Map[Key, Double], start: Long, end: Long): Unit = {
+      val missing = acked.iterator.asScala
+        .collect { case (t, k) if t < start && !got.contains(k) => k }.toSeq
+      if (missing.nonEmpty)
+        failures.add(s"acknowledged points missing: ${missing.take(5)}")
+      val written = sent.iterator.asScala.filter(_._1 < end)
+        .map { case (_, k, v) => (k, v) }.toSet
+      val unwritten = got.filterNot(written)
+      if (unwritten.nonEmpty)
+        failures.add(s"values never written: ${unwritten.take(5)}")
+    }
+    def reader(n: Int, staleness: Option[Long]) = guarded(s"reader-$n") {
+      while (writersDone.getCount > 0 || upkeepDone.getCount > 0 ||
+          strictReads.get < 6) {
+        val start = clock.incrementAndGet()
+        val got = read(staleness)
+        val end = clock.incrementAndGet()
+        if (staleness.isEmpty) {
+          check(got, start, end)
+          strictReads.incrementAndGet()
+        } else check(got, Long.MinValue, end) // a budget may lag the acks
+      }
+    }
+    // at least 8 upkeep steps, and more while the writers run
+    val upkeep = guarded("upkeep") {
+      val r = new scala.util.Random(seeds(5))
+      var steps = 0
+      try while (writersDone.getCount > 0 || steps < 8) {
+        r.nextInt(3) match {
+          case 0 => db.compact()
+          case 1 => db.compactCold()
+          case _ => db.preAggregate(System.currentTimeMillis())
+        }
+        steps += 1
+        Thread.sleep(r.nextInt(200))
+      } finally upkeepDone.countDown()
+    }
+    val threads = Seq(writer(0), writer(1), reader(2, None),
+      reader(3, None), reader(4, Some(200L)), upkeep)
+    val t0 = System.nanoTime()
+    try {
+      threads.foreach(_.start())
+      threads.foreach(_.join(120000L))
+      assert(threads.forall(!_.isAlive), "a thread did not finish")
+      val end = clock.incrementAndGet()
+      check(read(None), end, end)
+      assert(failures.isEmpty, s"seed $seed: ${failures.asScala.take(5)}")
+      info(f"${strictReads.get} strict reads in " +
+        f"${(System.nanoTime() - t0) / 1e9}%.1f s")
     } finally db.stop()
   }
 }
