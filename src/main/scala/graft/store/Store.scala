@@ -4,8 +4,15 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.{BucketSpec => CatalystBucketSpec}
+import org.apache.spark.sql.execution.datasources.{DataSource,
+  FileStatusCache, HadoopFsRelation, InMemoryFileIndex, NoopCache}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.DatasetShim
+import org.apache.spark.sql.types.StructType
 
 import graft.tsdb.Downsample
 
@@ -122,22 +129,23 @@ object Store {
   /** Bucket-layout manifest of a cold-tier generation, persisted as
     * `_bucketspec.json` INSIDE the generation dir — underscore-prefixed
     * so parquet reads skip it, carried verbatim by the TWCS atomic
-    * rename, untouched by the clean-day hardlink carry. The manifest is
-    * what makes the layout survive a facade restart: `bucketBy`
-    * metadata lives only in the session catalog (in-memory — gone with
-    * the process), and a bare `spark.read.parquet` over the same files
-    * plans the per-series Exchange again. With the manifest, restart
-    * re-issues the `CREATE TABLE … CLUSTERED BY … INTO n BUCKETS
-    * LOCATION` DDL ([[registerBucketedDayTable]]) and per-series reads
-    * stay exchange-free across process lifetimes. Bucket ids are
-    * FILENAME-encoded (`part-…_00003.…`), so files written by different
+    * rename, untouched by the clean-day hardlink carry. The generation
+    * dir plus this manifest IS the table: no session-catalog entry
+    * exists and no DDL is re-issued. [[writeBucketedDays]] writes under
+    * it and [[readBucketedDays]] reads it back as a bucketed relation,
+    * so per-series reads stay exchange-free across process lifetimes
+    * with nothing to re-register. Bucket ids are FILENAME-encoded
+    * (`part-…_00003.…`), so files written by different
     * jobs/sessions — rewrite output, spill appends, hardlinked clean
     * days — compose into one consistent bucketed table as long as they
     * share this spec; that is exactly why the spec is frozen per
     * generation (a count change forces a full rewrite, never a mix).
     */
   final case class BucketSpec(cols: Seq[String], n: Int,
-      sortCols: Seq[String])
+      sortCols: Seq[String]) {
+    /** This layout as Spark's writer and file scan take it. */
+    def catalyst: CatalystBucketSpec = CatalystBucketSpec(n, cols, sortCols)
+  }
 
   object BucketSpec {
     val ManifestName = "_bucketspec.json"
@@ -200,7 +208,7 @@ object Store {
     * scan task; the bucket count is a per-generation constant, changed
     * only through a full rewrite.
     */
-  def writeBucketedDays(points: DataFrame, table: String, path: String,
+  def writeBucketedDays(points: DataFrame, path: String,
       spec: BucketSpec, mode: SaveMode, tasks: Int): Unit = {
     val withDay =
       points.withColumn("day", to_date(timestamp_millis(col("ts_ms"))))
@@ -210,63 +218,46 @@ object Store {
         val k = math.max(1, (tasks + spec.n - 1) / spec.n)
         withDay.repartition(k * spec.n, spec.cols.map(col): _*)
       }
-    shaped.write
-      .partitionBy("day")
-      .bucketBy(spec.n, spec.cols.head, spec.cols.tail: _*)
-      .sortBy(spec.sortCols.head, spec.sortCols.tail: _*)
-      .option("path", path)
-      .mode(mode)
-      .saveAsTable(table)
+    // the InsertIntoHadoopFsRelationCommand `saveAsTable` plans, without
+    // the catalog: an append into a dir holding only the manifest keeps it
+    val spark = points.sparkSession
+    DatasetShim.ofRows(spark, DataSource(spark, "parquet",
+      partitionColumns = Seq("day"), bucketSpec = Some(spec.catalyst),
+      options = Map("path" -> path))
+      .planForWriting(mode, shaped.queryExecution.analyzed))
   }
 
-  /** Re-register a generation's bucketed table from its on-disk
-    * manifest (restart recovery; also the flip-time registration). The
-    * DDL recreates exactly what `saveAsTable` recorded in the lost
-    * in-memory catalog: parquet source, `day` partitioning, the
-    * CLUSTERED/SORTED BY bucket spec, external LOCATION. `RECOVER
-    * PARTITIONS` relists the day dirs (the generation was assembled by
-    * rename + hardlinks, which no catalog observed). Returns the spec
-    * when the generation is bucketed; None for a legacy (manifest-less)
-    * generation — callers fall back to the plain parquet read.
+  /** Generation `genPath` as a day-partitioned, bucketed relation read
+    * straight off its directory and manifest: the `day=` dirs are listed
+    * once into an in-memory index whose partition listings `cache`
+    * answers first, and `dataSchema` declares the stored columns (`day`
+    * comes from the paths). None without a manifest or a `day=` dir.
     */
-  def registerBucketedDayTable(spark: SparkSession, table: String,
-      genPath: String): Option[BucketSpec] =
+  def readBucketedDays(spark: SparkSession, genPath: String,
+      dataSchema: StructType,
+      cache: FileStatusCache = NoopCache): Option[DataFrame] =
     BucketSpec.read(genPath).flatMap { spec =>
-      // schema comes from the surviving files, so it is read BEFORE the
-      // drop — but the drop must happen even when the read fails: a
-      // generation whose every day partition was just retired has no
-      // data files left to infer from, and skipping the drop would
-      // leave the PREVIOUS registration (with its pre-retention
-      // partition list) serving reads over deleted files
-      val schema = scala.util.Try(spark.read.parquet(genPath).schema)
-      spark.sql(s"DROP TABLE IF EXISTS `$table`")
-      schema.toOption.flatMap { sch =>
-        scala.util.Try(createBucketedDayTable(spark, table, genPath, spec,
-          sch)).toOption.map(_ => spec)
+      val gen = Paths.get(genPath)
+      val days = if (!Files.isDirectory(gen)) Nil else {
+        val s = Files.list(gen)
+        try s.iterator().asScala.map(_.getFileName.toString)
+          .filter(_.startsWith("day=")).toList.sorted
+        finally s.close()
+      }
+      Option.when(days.nonEmpty) {
+        val base = new HPath(genPath)
+        val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
+        val index = new InMemoryFileIndex(spark,
+          days.map(d => fs.makeQualified(new HPath(base, d))),
+          Map("basePath" -> genPath), Some(DaySchema), cache)
+        spark.baseRelationToDataFrame(HadoopFsRelation(index, DaySchema,
+          dataSchema, Some(spec.catalyst), new ParquetFileFormat,
+          Map.empty)(spark))
       }
     }
 
-  /** Declare generation `genPath`'s bucketed day table under `spec`,
-    * with `schema`'s data columns, over whatever day dirs it holds — so
-    * a bucketed append into a generation with no data files yet inserts
-    * into this table instead of creating it, which would clear the
-    * directory and its manifest.
-    */
-  def createBucketedDayTable(spark: SparkSession, table: String,
-      genPath: String, spec: BucketSpec,
-      schema: org.apache.spark.sql.types.StructType): Unit = {
-    val dataDdl = org.apache.spark.sql.types.StructType(
-      schema.filterNot(_.name == "day")).toDDL
-    spark.sql(s"DROP TABLE IF EXISTS `$table`")
-    spark.sql(
-      s"""CREATE TABLE `$table` ($dataDdl, day DATE) USING PARQUET
-         |PARTITIONED BY (day)
-         |CLUSTERED BY (${spec.cols.map(c => s"`$c`").mkString(", ")})
-         |SORTED BY (${spec.sortCols.map(c => s"`$c`").mkString(", ")})
-         |INTO ${spec.n} BUCKETS
-         |LOCATION '$genPath'""".stripMargin)
-    spark.sql(s"ALTER TABLE `$table` RECOVER PARTITIONS")
-  }
+  /** The partition schema of [[writeBucketedDays]]' layout. */
+  private val DaySchema = StructType.fromDDL("day DATE")
 
   /** Read back with partition pruning for a time range. */
   def readPoints(spark: SparkSession, path: String,

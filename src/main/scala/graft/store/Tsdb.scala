@@ -32,7 +32,10 @@ import graft.tsdb.{Matcher, Matchers, MutableMapping}
   * write ever waits on it. Last-write-wins conflict resolution moves to
   * the read side (the verified O2 dedup shape). The durable cold tier is
   * day-partitioned and series-bucketed in every generation
-  * ([[Store.writeBucketedDays]], S8).
+  * ([[Store.writeBucketedDays]], S8); a generation's directory plus its
+  * bucket manifest is the whole table, written and read without the
+  * session catalog, so a restart re-reads the directory and stores in
+  * one session share nothing.
   *
   * Scheduler isolation: pins run in the `graft-writes` pool, background
   * upkeep (folds, the cold rewrite, pre-agg) in `graft-upkeep` (r14:
@@ -239,22 +242,13 @@ final class Tsdb(spark: SparkSession,
     durablePath.map(p => s"$p/g${view.coldGen}")
 
   // ---- series-bucketed cold layout (S8 productized; SURVEY §4.1) ----
-  // Every generation is day-partitioned AND metric_id-bucketed,
-  // described by its own _bucketspec.json manifest and registered as a
-  // catalog table, so per-series reads ride HashPartitioning(metric_id)
-  // straight off the scan, across restarts too (the manifest re-issues
-  // the DDL). `value` is stored as its raw bits (BIGINT): parquet
+  // Every generation is day-partitioned AND metric_id-bucketed, and its
+  // directory plus its _bucketspec.json manifest is the whole table: no
+  // session-catalog entry, so per-series reads ride
+  // HashPartitioning(metric_id) straight off the scan across restarts
+  // with nothing to re-register, and stores in one session share
+  // nothing. `value` is stored as its raw bits (BIGINT): parquet
   // canonicalizes NaNs ([[coldPoints]] decodes).
-
-  /** Catalog name of a generation's bucketed table under `root` —
-    * path-keyed so stores over different tiers in one session never
-    * collide, gen-keyed so the flip is a table switch.
-    */
-  private def genTableName(root: String, gen: Int): String =
-    f"graft_cold_${root.hashCode.toLong & 0xFFFFFFFFL}%08x_g$gen"
-
-  private def coldTableName(gen: Int): String =
-    genTableName(durablePath.getOrElse(""), gen)
 
   /** The bucket count a generation's data calls for. A bucketed scan
     * runs one task per bucket however few days it touches (a read
@@ -288,55 +282,25 @@ final class Tsdb(spark: SparkSession,
     Store.BucketSpec(Seq("metric_id"),
       sizedBucketCount(dayBytes, cap), Seq("metric_id", "ts_ms"))
 
-  /** (Re-)register generation `gen`'s bucketed table from its
-    * manifest (dropped, not registered, while it holds no data files).
-    * Called at bootstrap (restart recovery) and at each flip.
-    */
-  private def registerColdGen(gen: Int): Unit =
-    durablePath.foreach(p => Store.registerBucketedDayTable(
-      spark, coldTableName(gen), s"$p/g$gen"))
-
-  /** Generation `gen`'s bucketed table with its file set listed now,
-    * once, for a View (None while the generation has no table). A
-    * catalog table lists its partitions' files whenever a read is
-    * planned, which can be after that read captured its hot batches —
-    * so its leaf is swapped for an in-memory index over the catalog's
-    * partitions, keeping the relation's bucket spec (the bucketed scan
-    * is unchanged). Day dirs `relist` rejects keep `prev`'s listing;
-    * the rest are listed.
+  /** Generation `gen` with its file set listed now, once, for a View
+    * (None while it has no manifest or no `day=` dir): the bucketed
+    * relation [[Store.readBucketedDays]] builds off the directory, so no
+    * read lists it again. Day dirs `relist` rejects keep `prev`'s
+    * listing; the rest are listed.
     */
   private def frozenCold(gen: Int, prev: Option[DataFrame],
-      relist: String => Boolean): Option[DataFrame] = {
+      relist: String => Boolean): Option[DataFrame] = durablePath.flatMap { p =>
     import org.apache.hadoop.fs.{FileStatus, Path => HPath}
-    import org.apache.spark.sql.execution.datasources.{FileStatusCache,
-      HadoopFsRelation, InMemoryFileIndex, LogicalRelation, PartitionPath,
-      PartitionSpec}
-    val name = coldTableName(gen)
-    Option.when(spark.catalog.tableExists(name)) {
-      val known = prev.toSeq.flatMap(leafFiles(_).flatten.flatten)
-        .groupBy(_.getPath.getParent).filter(d => !relist(d._1.getName))
-      // the index asks this cache before it lists a partition
-      val seeded = new FileStatusCache {
-        override def getLeafFiles(p: HPath) = known.get(p).map(_.toArray)
-        override def putLeafFiles(p: HPath, fs: Array[FileStatus]): Unit = ()
-        override def invalidateAll(): Unit = ()
-      }
-      val state = spark.sessionState
-      val hadoopConf = state.newHadoopConf()
-      org.apache.spark.sql.graftshim.DatasetShim.ofRows(spark,
-        spark.table(name).queryExecution.analyzed.transformUp {
-          case l @ LogicalRelation(r: HadoopFsRelation, _, Some(t), _, _) =>
-            val parts = state.catalog.listPartitions(t.identifier).map { p =>
-              val path = new HPath(p.location)
-              PartitionPath(p.toRow(r.partitionSchema,
-                state.conf.sessionLocalTimeZone),
-                path.getFileSystem(hadoopConf).makeQualified(path))
-            }
-            l.copy(relation = r.copy(location = new InMemoryFileIndex(spark,
-              parts.map(_.path), Map.empty, Some(r.partitionSchema), seeded,
-              Some(PartitionSpec(r.partitionSchema, parts))))(r.sparkSession))
-        })
+    import org.apache.spark.sql.execution.datasources.FileStatusCache
+    val known = prev.toSeq.flatMap(leafFiles(_).flatten.flatten)
+      .groupBy(_.getPath.getParent).filter(d => !relist(d._1.getName))
+    // the index asks this cache before it lists a partition
+    val seeded = new FileStatusCache {
+      override def getLeafFiles(p: HPath) = known.get(p).map(_.toArray)
+      override def putLeafFiles(p: HPath, fs: Array[FileStatus]): Unit = ()
+      override def invalidateAll(): Unit = ()
     }
+    Store.readBucketedDays(spark, s"$p/g$gen", ColdSchema, seeded)
   }
 
   /** The agg_5m generation `gen` with its files listed now, once, for a
@@ -354,16 +318,12 @@ final class Tsdb(spark: SparkSession,
   }
 
   /** Spill append into the current cold generation: a bucketed append
-    * through its catalog table, under the spec of its manifest (mixed
-    * bucket counts in one dir would corrupt the filename-derived bucket
-    * ids). A fresh tier's spec is sized from the spill's plan estimate,
-    * capped at 32, and its manifest is written BEFORE the first append.
-    * A generation without data files has no catalog table: the spill
-    * declares it first, as creating it through the write would clear
-    * the directory, manifest included.
+    * under the spec of its manifest (mixed bucket counts in one dir
+    * would corrupt the filename-derived bucket ids). A fresh tier's spec
+    * is sized from the spill's plan estimate, capped at 32, and its
+    * manifest is written BEFORE the first append.
     */
   private def spillToCold(spill: DataFrame, path: String): Unit = {
-    val table = coldTableName(view.coldGen)
     val spec = Store.BucketSpec.read(path).getOrElse {
       val estimate = scala.util.Try(
         spill.queryExecution.optimizedPlan.stats.sizeInBytes).toOption
@@ -372,10 +332,7 @@ final class Tsdb(spark: SparkSession,
       Store.BucketSpec.write(path, fresh)
       fresh
     }
-    val encoded = encodeValue(spill)
-    if (!spark.catalog.tableExists(table))
-      Store.createBucketedDayTable(spark, table, path, spec, encoded.schema)
-    Store.writeBucketedDays(encoded, table, path, spec, SaveMode.Append,
+    Store.writeBucketedDays(encodeValue(spill), path, spec, SaveMode.Append,
       tasks = spec.n)
   }
 
@@ -438,11 +395,6 @@ final class Tsdb(spark: SparkSession,
         s"cold generation $g stores value as ${s("value").dataType.sql}, " +
           "not as its raw bits (BIGINT): it was not written by this store"))
     }
-    // re-register the adopted generation's bucketed table from its
-    // on-disk manifest — the bucket spec must survive the restart (the
-    // in-memory catalog died with the previous process; without this,
-    // every per-series cold read would silently replan the Exchange)
-    durablePath.filter(isDir).foreach(_ => registerColdGen(coldGen))
     val aggGen = aggPath.filter(isDir).map(maxGenIn).filter(_ >= 0)
       .getOrElse(0)
     // an expiry sweep interrupted between moving the live dim aside and
@@ -1251,47 +1203,34 @@ final class Tsdb(spark: SparkSession,
         // so a resize waits for the data to grow (or shrink) 4x and all
         // the bytes ever rewritten to resize stay ≤ ~4/3 of the tier
         val curSpec = Store.BucketSpec.read(curDir.toString)
-        // bytes per day: a clean day's from the generation's sidecar, a
-        // day spilled into since the build (all of them when provenance
-        // is unknown) listed again. Lazy, so a skip lists nothing and a
-        // partial rewrite lists only its dirty days
-        lazy val daySizes: Map[String, Long] = {
-          val listed = dirty.getOrElse(existing).toSet
-          val recorded = readDayBytes(curDir)
-          existing.map(d => d -> recorded.get(d).filterNot(_ => listed(d))
-            .getOrElse(dayBytes(curDir.resolve(d)))).toMap
-        }
         lazy val wantSpec = {
-          val sized =
-            confBucketSpec(Some(daySizes.values.maxOption.getOrElse(0L)))
+          // the largest day's bytes, off the View's listing of g<N>: each
+          // spill relisted the days it appended into at its publish
+          val largest = cur.cold.toSeq.flatMap(leafFiles(_).flatten.flatten)
+            .groupMapReduce(_.getPath.getParent)(_.getLen)(_ + _).values
+            .maxOption
+          val sized = confBucketSpec(Some(largest.getOrElse(0L)))
           curSpec.filter(c => sized.n < 4L * c.n && 4L * sized.n > c.n)
             .getOrElse(sized)
         }
-        // build a generation dir under the staging discipline: through a
-        // throwaway catalog name (bucketBy requires saveAsTable; the
-        // table is EXTERNAL, so dropping it keeps the files) plus the
-        // manifest — the staging dir is never adopted, and the rename
-        // publishes data and manifest together. Dedup runs over doubles;
-        // the bits are encoded only for the write
+        // build a generation dir under the staging discipline: the
+        // bucketed write plus the manifest — the staging dir is never
+        // adopted, and the rename publishes data and manifest together.
+        // Dedup runs over doubles; the bits are encoded only for the write
         val staging = Paths.get(s"$p/_build_g$nextGen")
         def buildGen(src: DataFrame, spec: Store.BucketSpec): Unit = {
           Store.deleteRecursively(staging)
-          val buildTable = coldTableName(nextGen) + "_build"
-          spark.sql(s"DROP TABLE IF EXISTS `$buildTable`")
           Store.writeBucketedDays(
             encodeValue(lwwDedup(fineForUpkeep(src, spec, tasks))),
-            buildTable, staging.toString, spec, SaveMode.Overwrite, tasks = 0)
-          spark.sql(s"DROP TABLE IF EXISTS `$buildTable`")
+            staging.toString, spec, SaveMode.Overwrite, tasks = 0)
           Store.BucketSpec.write(staging.toString, spec)
         }
         // the atomic rename to g<N+1> is the commit point, so a crash at
         // ANY step leaves either the intact g<N> alone or a complete
         // g<N+1> — never a generation missing its clean days
-        def publish(sizes: Map[String, Long]): Unit = {
-          writeDayBytes(staging, sizes)
+        def publish(): Unit = {
           Files.move(staging, Paths.get(s"$p/g$nextGen"),
             java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          registerColdGen(nextGen)
           finishColdFlip(p, nextGen)
         }
         dirty match {
@@ -1319,8 +1258,7 @@ final class Tsdb(spark: SparkSession,
             existing.filterNot(d.contains).foreach { cd =>
               linkTree(curDir.resolve(cd), staging.resolve(cd))
             }
-            publish(daySizes -- d ++
-              d.map(x => x -> dayBytes(staging.resolve(x))))
+            publish()
             logRewrite("partial", d.size)
           case _ =>
             // FULL rewrite: dirty-day provenance unknown (restart over
@@ -1335,56 +1273,17 @@ final class Tsdb(spark: SparkSession,
             // blocks lingered until the cleaner's periodic GC (default
             // 30 min) — the r13 soak's heap death curve tracked the
             // compactCold cadence (r13). The target goes through the
-            // same staging + atomic-rename discipline (saveAsTable
-            // has no committer-level direct-to-final story for a dir a
-            // crash could leave half-written with a _SUCCESS-free but
+            // same staging + atomic-rename discipline (the write has no
+            // committer-level direct-to-final story for a dir a crash
+            // could leave half-written with a _SUCCESS-free but
             // manifest-carrying state).
             buildGen(c, wantSpec)
-            publish(listDir(staging).map(_.getFileName.toString)
-              .filter(_.startsWith("day="))
-              .map(x => x -> dayBytes(staging.resolve(x))).toMap)
+            publish()
             logRewrite("full", tracked.map(_.size).getOrElse(-1))
         }
       }
     }
   }
-
-  /** Sidecar of a cold generation: its data bytes per `day=` directory
-    * as they stood when the generation was built, so sizing the next
-    * rewrite re-lists only the days spilled into since.
-    */
-  private val DayBytesFile = "_daybytes"
-
-  /** Day directories listed to size a rewrite, for tests. */
-  private[graft] val daysListed = new AtomicLong
-
-  /** [[dirBytes]] of one day directory, listed to size a rewrite. */
-  private def dayBytes(dir: Path): Long = {
-    daysListed.incrementAndGet()
-    dirBytes(dir)
-  }
-
-  /** Data-file bytes of one directory (Spark's hidden `.`/`_` names
-    * skipped, as its reads skip them).
-    */
-  private def dirBytes(dir: Path): Long =
-    listDir(dir).filter(f => !f.getFileName.toString.startsWith(".") &&
-      !f.getFileName.toString.startsWith("_")).map(Files.size).sum
-
-  private def readDayBytes(gen: Path): Map[String, Long] = {
-    val f = gen.resolve(DayBytesFile)
-    if (!Files.isRegularFile(f)) Map.empty
-    else Files.readString(f).linesIterator.flatMap { l =>
-      l.split('\t') match {
-        case Array(d, b) => b.toLongOption.map(d -> _)
-        case _ => None
-      }
-    }.toMap
-  }
-
-  private def writeDayBytes(gen: Path, sizes: Map[String, Long]): Unit =
-    Files.writeString(gen.resolve(DayBytesFile),
-      sizes.toSeq.sorted.map { case (d, b) => s"$d\t$b\n" }.mkString)
 
   /** Publish cold generation `nextGen`: flip the read pointer, recompute
     * the overlap flag, reset dirty-day tracking, retire aged snapshots.
@@ -1425,18 +1324,11 @@ final class Tsdb(spark: SparkSession,
     // read tasks over the same generation (FAILED_READ_FILE under load —
     // caught by the retention spec running concurrently with a busy box)
     val dropped = coldPath.toSeq.flatMap(Store.applyRetention(_, cutoffMs))
-    // a bucketed generation's catalog table caches its partition list;
-    // dropping day dirs on disk without telling the catalog would leave
-    // the next View planning over deleted files (FAILED_READ_FILE) —
-    // re-register from the manifest, which relists the surviving
-    // partitions, whose files keep their listing.
-    // registerBucketedDayTable drops the stale table even when EVERY
-    // day was retired (no files left to infer a schema from), so a
-    // fully-aged generation degrades to "empty store", never to a
-    // View still planning the deleted files
+    // the next View lists the surviving day dirs, whose files keep their
+    // listing, so no read plans over a deleted file (FAILED_READ_FILE); a
+    // generation with every day retired reads as an empty store
     if (dropped.nonEmpty) {
       val cur = view
-      registerColdGen(cur.coldGen)
       val cold = frozenCold(cur.coldGen, cur.cold, _ => false)
       publish(_.copy(cold = cold))
     }
@@ -1448,7 +1340,7 @@ final class Tsdb(spark: SparkSession,
     * predicate so parquet PARTITION PRUNING kicks in before the
     * row-group ts stats do (the bulk-export path must not scan the whole
     * history for a bounded read); `days` instead keeps exactly those day
-    * partitions. The relation is the generation's catalog table, so
+    * partitions. The relation carries the generation's bucket spec, so
     * per-series aggregations (downsample, rate windows, LWW dedup — all
     * keyed on metric_id ⊇ the bucket column) plan with NO Exchange
     * straight off the scan.
@@ -1967,11 +1859,6 @@ final class Tsdb(spark: SparkSession,
             scala.util.Try(Files.writeString(marker, now.toString))
           case Some(t) if now - t >= grace =>
             Store.deleteRecursively(g)
-            // drop the retired generation's catalog entry with its dir
-            // (no-op for agg generations, which never have one)
-            scala.util.Try(spark.sql("DROP TABLE IF EXISTS `" +
-              genTableName(root,
-                g.getFileName.toString.drop(1).toInt) + "`"))
           case _ => () // inside the grace window: leave it
         }
       }
@@ -2419,6 +2306,15 @@ object Tsdb {
       "metric_id BIGINT, bucket_ms BIGINT, min DOUBLE, max DOUBLE, " +
         "avg DOUBLE, count BIGINT, labels MAP<STRING, STRING>, " +
         "__ttl_sec BIGINT, month STRING")
+
+  /** A cold generation's stored columns, as spills and rewrites write
+    * them (`value` as its raw bits; `day` comes from the partition
+    * paths). Every View's cold relation declares it.
+    */
+  private[graft] val ColdSchema: org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.StructType.fromDDL(
+      "metric_id BIGINT, ts_ms BIGINT, labels MAP<STRING, STRING>, " +
+        "value BIGINT, __seq BIGINT, __ttl_sec BIGINT")
 
   /** Deterministic plain-identifier alias for a UTF-8 label name. */
   private[graft] def utf8Alias(n: String): String =

@@ -2064,28 +2064,23 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
       .filter(_.endsWith(".parquet")).toSeq
     assert(spilled.nonEmpty && spilled.forall(_.matches(".*_\\d{5}\\..*")),
       spilled.take(3).toString)
-    apiB.store.compactCold() // full rewrite → g1, bucketed + registered
+    apiB.store.compactCold() // full rewrite → g1, bucketed
     assert(manifest(1).isDefined)
-    val tbl1 = f"graft_cold_${dir.hashCode.toLong & 0xFFFFFFFFL}%08x_g1"
-    assert(spark.catalog.tableExists(tbl1), "flip must register the table")
     // the headline: per-series aggregation straight off the cold scan,
     // NO Exchange — the layout pays the shuffle once at write time
-    val agg = spark.table(tbl1)
+    def perSeries() = coldGen(root, 1)
       .groupBy(col("metric_id"), col("ts_ms")).agg(max(col("value")))
+    val agg = perSeries()
     assert(!agg.queryExecution.executedPlan.toString.contains("Exchange"),
       agg.queryExecution.executedPlan.toString)
-    // restart: wipe the in-memory catalog (what a process death does),
-    // re-construct — the manifest re-registers the adopted generation
-    spark.catalog.listTables().collect()
-      .filter(_.name.startsWith("graft_cold_"))
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `${t.name}`"))
-    assert(!spark.catalog.tableExists(tbl1))
+    // restart: a new facade over the same directory reads the adopted
+    // generation bucketed, from its manifest alone
+    apiB.stop()
     val apiR = new HttpApi(spark, compactEvery = 1000000,
       durablePath = Some(dir), hotRetainMs = 0L)
-    assert(spark.catalog.tableExists(tbl1),
-      "restart must re-register the bucketed table from the manifest")
-    val aggR = spark.table(tbl1)
-      .groupBy(col("metric_id"), col("ts_ms")).agg(max(col("value")))
+    assert(coldScanBuckets(apiR.source().get.points) === Seq(manifest(1).get.n),
+      "restart must read the adopted generation under its manifest's spec")
+    val aggR = perSeries()
     assert(!aggR.queryExecution.executedPlan.toString.contains("Exchange"),
       "per-series cold aggregation must stay exchange-free across restart")
     // and the facade's own read serves the same data through it
@@ -2334,6 +2329,24 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
         root.resolve(s"g$gen").resolve(d).resolve(f))).sum
     }.max
 
+  /** Cold generation `gen` as the engine reads it. */
+  private def coldGen(root: java.nio.file.Path,
+      gen: Int): org.apache.spark.sql.DataFrame =
+    graft.store.Store.readBucketedDays(spark, root.resolve(s"g$gen").toString,
+      graft.store.Tsdb.ColdSchema).get
+
+  /** The bucket counts of `df`'s cold-tier (day-partitioned) file scans. */
+  private def coldScanBuckets(df: org.apache.spark.sql.DataFrame): Seq[Int] = {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    object Plans extends AdaptiveSparkPlanHelper
+    Plans.collect(df.queryExecution.executedPlan) {
+      case s: FileSourceScanExec
+          if s.relation.partitionSchema.fieldNames.contains("day") =>
+        s.relation.bucketSpec.fold(0)(_.numBuckets)
+    }
+  }
+
   private def sizedSeries(name: String, d: Int, v: Double, n: Int) =
     Seq(PromSeries(Map("__name__" -> name, "job" -> "sized"),
       (0 until n).map(i => (T0 + d * 86400000L + i * 60000L, v + i))))
@@ -2353,17 +2366,11 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
     assert(bucketsOf(root, 0) === 1)
     assert(dayFiles(root, 0).values.forall(_.size == 1), dayFiles(root, 0))
     apiS.stop()
-    // restart: the catalog forgets the table, the manifest does not
-    spark.catalog.listTables().collect()
-      .filter(_.name.startsWith("graft_cold_"))
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `${t.name}`"))
+    // restart: the manifest alone carries the count
     val apiR = new HttpApi(spark, compactEvery = 1000000,
       durablePath = Some(dir), hotRetainMs = 0L)
     try {
-      val tbl = f"graft_cold_${dir.hashCode.toLong & 0xFFFFFFFFL}%08x_g0"
-      val meta = spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(tbl))
-      assert(meta.bucketSpec.map(_.numBuckets) === Some(1))
+      assert(coldScanBuckets(apiR.source().get.points) === Seq(1))
       // a spill after the restart appends at the frozen count
       apiR.write(sizedSeries("bs", 4, 40.0, 5), "default")
       apiR.drainFlushes()
@@ -2402,17 +2409,11 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
     val files = dayFiles(root, 0).values.flatten
     assert(files.size >= 3 && files.forall(_.matches(".*_0000[01]\\..*")),
       files)
-    // restart: the catalog forgets the table, the manifest does not
-    spark.catalog.listTables().collect()
-      .filter(_.name.startsWith("graft_cold_"))
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `${t.name}`"))
+    // restart: the manifest alone carries the count
     val apiR = new HttpApi(spark, compactEvery = 1000000,
       durablePath = Some(dir), hotRetainMs = 0L)
     try {
-      val tbl = f"graft_cold_${dir.hashCode.toLong & 0xFFFFFFFFL}%08x_g0"
-      val meta = spark.sessionState.catalog.getTableMetadata(
-        org.apache.spark.sql.catalyst.TableIdentifier(tbl))
-      assert(meta.bucketSpec.map(_.numBuckets) === Some(2))
+      assert(coldScanBuckets(apiR.source().get.points) === Seq(2))
       val got = apiR.source().get.points.where(col("__name__") === "mo")
         .select("ts_ms", "value").collect()
         .map(r => (r.getLong(0), r.getDouble(1))).toSeq.sorted
@@ -2515,38 +2516,23 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
     }
   }
 
-  test("compactCold sizes a rewrite without listing clean days: a skip " +
-    "lists none, a partial rewrite lists only its dirty day, and each " +
-    "generation records its day bytes") {
+  test("compactCold sizes a rewrite from the View's listing: a skip " +
+    "writes no generation, and a partial rewrite reads back every point") {
     val root = java.nio.file.Files.createTempDirectory("graft_blist")
       .resolve("cold")
     val apiL = new HttpApi(spark, compactEvery = 1000000,
       durablePath = Some(root.toString), hotRetainMs = 0L)
-    def recorded(gen: Int): Map[String, Long] =
-      java.nio.file.Files.readAllLines(root.resolve(s"g$gen/_daybytes"))
-        .asScala.map(_.split('\t')).map(a => a(0) -> a(1).toLong).toMap
-    def actual(gen: Int): Map[String, Long] =
-      dayFiles(root, gen).map { case (d, fs) => d -> fs.iterator.map(f =>
-        java.nio.file.Files.size(root.resolve(s"g$gen/$d/$f"))).sum }
     try {
       (0 until 6).foreach(d =>
         apiL.write(sizedSeries("ls", d, d * 100.0, 60), "default"))
       apiL.drainFlushes()
       apiL.store.compactCold() // spill into g0, then a full rewrite → g1
-      assert(recorded(1) === actual(1))
-      assert(recorded(1).size === 6)
-      val l0 = apiL.store.daysListed.get
       apiL.store.compactCold() // nothing spilled since: a skip
-      assert(apiL.store.daysListed.get === l0, "a skip must list no day")
       assert(!java.nio.file.Files.exists(root.resolve("g2")))
       apiL.write(sizedSeries("ls", 3, 9000.0, 60), "default")
       apiL.drainFlushes()
       apiL.compact() // spills into g1's day 3
-      val l1 = apiL.store.daysListed.get
-      apiL.store.compactCold() // partial: day 3 sized before and after rewrite
-      assert(apiL.store.daysListed.get - l1 === 2,
-        "a partial rewrite must list its dirty day only")
-      assert(recorded(2) === actual(2))
+      apiL.store.compactCold() // partial: day 3 rewritten, the rest carried
       assert(apiL.source().get.points.count() === 6 * 60)
     } finally apiL.stop()
   }

@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * tools against growing their own listeners back, the engine
   * against passing parameters through session conf or growing knobs
   * unnoticed, the storage engine against folding back into the HTTP
-  * facade, and its read state against leaving its one View.
+  * facade, its read state against leaving its one View, and its cold
+  * tier against the session catalog.
   *
   * Raw U+0000/U+0001 bytes in string/char literals make git classify the
   * file as BINARY — diffs, blame, and review silently break. This happened
@@ -113,6 +114,22 @@ class SourceHygieneSpec extends AnyFunSuite {
       text(new java.io.File("src/main/scala/graft/store/Tsdb.scala")))
       .map(_.group(3)).toSet
     assert(fields === allowed)
+  }
+
+  test("the storage engine reads and writes its cold tier without the " +
+    "session catalog") {
+    // a generation's directory plus its manifest is the whole table; a
+    // catalog entry is one more copy of it, shared by every store in the
+    // session
+    val tsdb = new java.io.File("src/main/scala/graft/store/Tsdb.scala")
+    val named = Seq("spark.catalog", "spark.table", "saveAsTable",
+      "sessionState.catalog").flatMap(codeNaming(_, Seq(tsdb)))
+    val code = text(tsdb).linesIterator.filterNot { l =>
+      l.trim.startsWith("*") || l.trim.startsWith("/")
+    }.mkString("\n")
+    val ddl = "spark\\.sql\\(\\s*s?(\"\"\"[\\s\\S]*?\"\"\"|\"[^\"]*\")".r
+      .findAllIn(code).filter(_.contains("TABLE")).toSeq
+    assert(named.isEmpty && ddl.isEmpty, (named ++ ddl).mkString("\n"))
   }
 
   test("the graft conf keys src/main reads are exactly the allowlist") {

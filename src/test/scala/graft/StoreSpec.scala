@@ -238,41 +238,43 @@ class StoreSpec extends SparkSpec {
   }
 
   test("day-partitioned bucketed layout: appends land, the manifest " +
-    "re-registers across a catalog wipe, per-series aggs stay " +
+    "alone reads the generation back, per-series aggs stay " +
     "exchange-free, and day pruning holds") {
     import org.apache.spark.sql.functions._
     import scala.jdk.CollectionConverters._
     val dir = Files.createTempDirectory("graft_bday").toString
     val gen = s"$dir/g0"
-    val tbl = "spec_bday_g0"
     val spec = Store.BucketSpec(Seq("metric_id"), 8, Seq("metric_id", "ts_ms"))
     val raw = Tables.points(spark, "/root/testdata/sf0.001")
       .select(col("user_id").as("metric_id"), col("ts_ms"), col("value"))
     val (d1, d2) = (raw.where(col("ts_ms") < 1705276800000L),
       raw.where(col("ts_ms") >= 1705276800000L))
-    // create (append-to-nonexistent creates the table), then append the
-    // later days — the spill discipline
-    Store.writeBucketedDays(d1, tbl, gen, spec,
-      org.apache.spark.sql.SaveMode.Append, tasks = spec.n)
+    // the manifest first, then appends into the generation — the spill
+    // discipline
     Store.BucketSpec.write(gen, spec)
-    Store.writeBucketedDays(d2, tbl, gen, spec,
+    Store.writeBucketedDays(d1, gen, spec,
       org.apache.spark.sql.SaveMode.Append, tasks = spec.n)
-    assert(spark.table(tbl).count() === raw.count())
+    Store.writeBucketedDays(d2, gen, spec,
+      org.apache.spark.sql.SaveMode.Append, tasks = spec.n)
     // manifest round-trips
     assert(Store.BucketSpec.read(gen) === Some(spec))
-    // restart simulation: the in-memory catalog forgets the table; the
-    // manifest re-registers it and the layout survives
-    spark.sql(s"DROP TABLE `$tbl`")
-    assert(Store.registerBucketedDayTable(spark, tbl, gen) === Some(spec))
-    val t = spark.table(tbl)
+    // every written file is bucket-named (the filename IS the bucket id)
+    val written = Files.walk(Paths.get(gen)).iterator().asScala
+      .map(_.getFileName.toString).filter(_.endsWith(".parquet")).toSeq
+    assert(written.nonEmpty && written.forall(_.matches(".*_\\d{5}\\..*")),
+      written.take(3).toString)
+    // the directory and its manifest are the whole table: no catalog
+    val read = (g: String) =>
+      Store.readBucketedDays(spark, g, raw.schema).get
+    val t = read(gen)
     assert(t.count() === raw.count())
-    // exchange-free per-series aggregation off the re-registered scan —
-    // the whole point of persisting the spec (subset rule: the group
-    // keys CONTAIN the bucket column)
+    // exchange-free per-series aggregation off the bucketed scan — the
+    // whole point of persisting the spec (subset rule: the group keys
+    // CONTAIN the bucket column)
     val agg = t.groupBy(col("metric_id"), col("ts_ms"))
       .agg(max(col("value")))
     assert(!agg.queryExecution.executedPlan.toString.contains("Exchange"))
-    // day partition pruning through the catalog table
+    // day partition pruning
     val pruned = t.where(col("day") === lit("2024-01-03").cast("date"))
     val scan = pruned.queryExecution.executedPlan.toString
     assert(scan.contains("PartitionFilters") || pruned.count() ===
@@ -280,7 +282,7 @@ class StoreSpec extends SparkSpec {
         .where(col("day") === lit("2024-01-03").cast("date")).count())
     // hardlink compose: carry one day dir into a sibling generation,
     // bucket ids are filename-encoded so the carried files read as the
-    // same buckets under the new generation's table
+    // same buckets under the new generation's manifest
     val gen1 = s"$dir/g1"
     Files.createDirectories(Paths.get(gen1))
     val someDay = Files.list(Paths.get(gen)).iterator().asScala
@@ -295,15 +297,11 @@ class StoreSpec extends SparkSpec {
     linkTree(Paths.get(gen, someDay), Paths.get(gen1, someDay))
     Files.copy(Paths.get(gen, "_SUCCESS"), Paths.get(gen1, "_SUCCESS"))
     Store.BucketSpec.write(gen1, spec)
-    assert(Store.registerBucketedDayTable(spark, "spec_bday_g1", gen1)
-      === Some(spec))
-    val t1 = spark.table("spec_bday_g1")
+    val t1 = read(gen1)
     assert(t1.count() ===
       spark.read.parquet(gen).where(col("day") ===
         lit(someDay.stripPrefix("day=")).cast("date")).count())
     val agg1 = t1.groupBy(col("metric_id")).agg(sum(col("value")))
     assert(!agg1.queryExecution.executedPlan.toString.contains("Exchange"))
-    spark.sql(s"DROP TABLE IF EXISTS `$tbl`")
-    spark.sql("DROP TABLE IF EXISTS spec_bday_g1")
   }
 }

@@ -10,8 +10,9 @@ import graft.streaming.Prompb.PromSeries
 /** The storage engine on its own, with no HTTP in the loop: writes,
   * strict and staleness-budgeted reads, a spilling fold with restart
   * recovery, stop-time pin reclaim, the cold tier's StaleNaN bits, a
-  * read planned across a spilling fold, and a seeded run of concurrent
-  * writers, readers and upkeep.
+  * read planned across a spilling fold, two stores in one session whose
+  * paths share a hash, and a seeded run of concurrent writers, readers
+  * and upkeep.
   */
 class TsdbSpec extends SparkSpec {
 
@@ -150,6 +151,34 @@ class TsdbSpec extends SparkSpec {
       db.compact() // round 2: a clean spill of b's 50 points
       assert(pts.count() === 100L)
     } finally db.stop()
+  }
+
+  test("two stores whose paths share a String hash keep their cold tiers " +
+    "apart and leave no session-catalog table behind") {
+    val tmp = java.nio.file.Files.createTempDirectory("tsdb_collide")
+    val (pa, pb) = (tmp.resolve("Aa").toString, tmp.resolve("BB").toString)
+    assert(pa.hashCode === pb.hashCode)
+    val tables = () => spark.catalog.listTables().collect().map(_.name).toSet
+    val before = tables()
+    val a = series("ca", "a", Seq.tabulate(10)(_.toDouble))
+    val b = series("cb", "b", Seq.tabulate(10)(i => 100.0 + i))
+    val dbA = new Tsdb(spark, compactEvery = 1000000, durablePath = Some(pa),
+      hotRetainMs = 0L)
+    val dbB = new Tsdb(spark, compactEvery = 1000000, durablePath = Some(pb),
+      hotRetainMs = 0L)
+    try {
+      dbA.write(Seq(a), "default")
+      dbA.compact()
+      dbB.write(Seq(b), "default")
+      dbB.compact()
+      assert(points(dbA) === expected(a))
+      assert(points(dbB) === expected(b))
+    } finally {
+      dbA.stop()
+      dbB.stop()
+    }
+    val made = tables() -- before
+    assert(made.isEmpty, made)
   }
 
   test("seeded writers, readers and upkeep: every strict read is " +
