@@ -55,19 +55,16 @@ final class HttpApi(spark: SparkSession,
     defaultTenant: String = "default",
     lookbackMs: Long = 300000L,
     compactEvery: Int = 64,
-    deltaFoldEvery: Int = 8,
     maxBytesInFrame: Int = 1 << 20, // reference api.go:60 (1 MiB)
     durablePath: Option[String] = None,
     hotRetainMs: Long = 2 * 3600000L,
-    flushEveryPosts: Int = 1,
-    flushEveryRows: Long = 50000L) {
+    flushEveryPosts: Int = 1) {
 
   import Prompb.{ChunkMeta, PromSeries}
 
   /** The storage engine behind every endpoint. */
   private[graft] val store = new Tsdb(spark, tenantLabel, defaultTenant,
-    compactEvery, deltaFoldEvery, durablePath, hotRetainMs,
-    flushEveryPosts, flushEveryRows)
+    compactEvery, durablePath, hotRetainMs, flushEveryPosts)
 
   // ---- engine calls the repository benchmark makes on the facade ----
 

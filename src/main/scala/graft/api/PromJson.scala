@@ -132,12 +132,6 @@ object PromJson {
   def strings(values: Seq[String]): String =
     success(values.sorted.map(v => s""""${escape(v)}"""").mkString("[", ",", "]"))
 
-  /** /api/v1/series payload: one label-set object per series. */
-  def seriesList(sets: Seq[Seq[(String, String)]]): String =
-    success(sets
-      .sortBy(_.map(lv => lv._1 + "\u0000" + lv._2).mkString("\u0001"))
-      .map(metricJson).mkString("[", ",", "]"))
-
   def success(dataJson: String): String =
     s"""{"status":"success","data":$dataJson}"""
 

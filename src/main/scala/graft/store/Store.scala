@@ -14,8 +14,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.DatasetShim
 import org.apache.spark.sql.types.StructType
 
-import graft.tsdb.Downsample
-
 /** Physical storage layout (SURVEY §2.1 S8/S9, §2.8 T9, §3.4 A5).
   *
   * The reference stores XOR-chunked rows in Cassandra partitioned by
@@ -29,20 +27,21 @@ import graft.tsdb.Downsample
   *    zstd) replace the hand-rolled Gorilla/XOR chunk codec;
   *  - retention (the reference's TTL, `config/default.go:36`) is partition
   *    lifecycle: dropping whole `day=` directories, never row rewrites;
-  *  - the pre-aggregation job (`cassandra/tsdb/aggregate.go:35-119`) is a
-  *    set-oriented batch: read raw beyond the watermark, downsample, append
-  *    to `agg_5m`, advance the watermark — no id-shards, no locks (Spark
-  *    task parallelism replaces the 60-shard round-robin).
+  *  - the pre-aggregation job (`cassandra/tsdb/aggregate.go:35-119`,
+  *    [[Tsdb.preAggregate]]) is a set-oriented batch: read raw beyond the
+  *    watermark, downsample, append to `agg_5m`, advance the watermark —
+  *    no id-shards, no locks (Spark task parallelism replaces the
+  *    60-shard round-robin).
   *
-  * At 100 TB: writes repartition by (day, series-hash split) so each
-  * date partition is written by `splits` parallel tasks — repartitioning
-  * on the partition column ALONE would collapse a whole day (~270 GB at
-  * 100 TB/yr) into one task and one output file, an executor-OOM /
-  * straggler shape for exactly the biggest writes (backfills, cold
-  * rewrites, forced re-aggregation). The split key is a hash of the
-  * series columns, so `sortWithinPartitions(series, ts)` still clusters
-  * each series' rows contiguously inside one file for row-group
-  * statistics pruning; a series never straddles two files of the same day.
+  * This object holds the layout's building blocks; [[Tsdb]] composes
+  * them into the served store. At 100 TB: a time-partitioned write
+  * repartitions by (partition, series-hash split) so each partition is
+  * written by `splits` parallel tasks — repartitioning on the partition
+  * column ALONE would collapse a whole partition into one task and one
+  * output file, an executor-OOM / straggler shape for exactly the
+  * biggest writes (backfills, forced re-aggregation). The split key is a
+  * hash of the series columns, so a series never straddles two files of
+  * the same partition.
   */
 object Store {
 
@@ -75,56 +74,6 @@ object Store {
       else df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt
     df.repartition(n, col(partitionCol), splitKey(series, writeSplits(df)))
   }
-
-  /** S8 — persist points date-partitioned, series-clustered. Append mode
-    * supports incremental spills (e.g. the HTTP facade's hot→cold
-    * tiering); duplicate (series, ts) across appends resolve read-side by
-    * `__seq` LWW.
-    */
-  def writePoints(points: DataFrame, path: String,
-      series: Seq[String], mode: SaveMode = SaveMode.Overwrite,
-      tasks: Int = 0): Unit =
-    repartitionForWrite(
-      points.withColumn("day", to_date(timestamp_millis(col("ts_ms")))),
-      "day", series, tasks)
-      .sortWithinPartitions((series.map(col) :+ col("ts_ms")): _*)
-      .write.partitionBy("day").mode(mode).parquet(path)
-
-  /** SURVEY §4.1's ingest layout, demonstrated: persist a point stream
-    * SERIES-BUCKETED — hash-bucketed by the series key with one file per
-    * bucket, (series, ts)-sorted within — so every per-series
-    * aggregation runs SHUFFLE-FREE. `bucketBy` records the hash
-    * partitioning in the table metadata; any `groupBy` whose keys
-    * contain the bucket columns already satisfies its clustering
-    * requirement straight off the scan (`HashPartitioning(bucketCols)`
-    * satisfies `ClusteredDistribution(groupKeys ⊇ bucketCols)`), and
-    * Catalyst plans the partial+final HashAggregate with NO Exchange.
-    * This is the escape from the r14 fourth-decade spill wall: at
-    * sf1000 the A1 downsample's 1 B-row shuffle spilled 97 GB on one
-    * box — with this layout the shuffle does not exist, each of the
-    * `nBuckets` read tasks folds only its own series, and the cost is
-    * one ingest-time shuffle paid ONCE instead of per query. The bucket
-    * count is sized so one bucket ≈ one scan task (the facade's cold
-    * tier sizes it from its largest day over
-    * `spark.sql.files.maxPartitionBytes`); all per-series operators
-    * (downsample, rate windows, LWW dedup, sessionize) ride the same
-    * layout free.
-    *
-    * The one-file-per-bucket shape comes from the `repartition` on the
-    * bucket columns before the write (each task holds exactly one
-    * bucket's rows); bucketed reads then schedule one task per bucket.
-    */
-  def writeBucketedPoints(points: DataFrame, table: String, path: String,
-      bucketCols: Seq[String], nBuckets: Int,
-      sortCols: Seq[String]): Unit =
-    points
-      .repartition(nBuckets, bucketCols.map(col): _*)
-      .write
-      .bucketBy(nBuckets, bucketCols.head, bucketCols.tail: _*)
-      .sortBy(sortCols.head, sortCols.tail: _*)
-      .option("path", path)
-      .mode(SaveMode.Overwrite)
-      .saveAsTable(table)
 
   /** Bucket-layout manifest of a cold-tier generation, persisted as
     * `_bucketspec.json` INSIDE the generation dir — underscore-prefixed
@@ -177,8 +126,8 @@ object Store {
     }
   }
 
-  /** S8, series-bucketed PRODUCTION layout (the sf1000-proven
-    * [[writeBucketedPoints]] discipline composed with the TWCS day
+  /** S8, series-bucketed layout (SURVEY §4.1's series-bucketed ingest,
+    * proven exchange-free at sf1000, composed with the TWCS day
     * partitioning): day-partitioned AND series-bucketed, so both
     * partition lifecycle (retention = day drop, partial rewrites =
     * dirty days only, hardlink carry for clean days) and exchange-free
@@ -195,10 +144,10 @@ object Store {
     * bucket-id derivation use the same Murmur3 HashPartitioning), which
     * bounds output at one file per (task, day) — k files per
     * bucket-day — while keeping upkeep tasks FINE (the FAIR-pool
-    * head-of-line bound is one task duration; see HttpApi's
-    * compactCold). `tasks <= 0` means the caller already shaped the
-    * frame (e.g. pre-partitioned on the bucket columns so an upstream
-    * dedup aggregate rides the same single exchange) — no repartition
+    * head-of-line bound is one task duration; see [[Tsdb.compactCold]]).
+    * `tasks <= 0` means the caller already shaped the frame (e.g.
+    * pre-partitioned on the bucket columns so an upstream dedup
+    * aggregate rides the same single exchange) — no repartition
     * is added; the bucketed V1 write only requires an ORDERING
     * (partition + bucket id + sort cols, a per-task sort), never its
     * own exchange.
@@ -259,37 +208,6 @@ object Store {
   /** The partition schema of [[writeBucketedDays]]' layout. */
   private val DaySchema = StructType.fromDDL("day DATE")
 
-  /** Read back with partition pruning for a time range. */
-  def readPoints(spark: SparkSession, path: String,
-      fromMs: Long, toMs: Long): DataFrame =
-    spark.read.parquet(path)
-      .where(col("day").between(
-        to_date(timestamp_millis(lit(fromMs))),
-        to_date(timestamp_millis(lit(toMs)))) &&
-        col("ts_ms").between(fromMs, toMs))
-
-  /** A5/S9 — incremental pre-aggregation job: downsample raw points in
-    * [watermark, batchEnd) into agg_5m (partitioned by month), advance the
-    * watermark. Repeated runs are no-ops until new data lands. Returns the
-    * new watermark (`fullyAggregatedAt`, reference `read.go:112-123`).
-    */
-  def runPreAggJob(spark: SparkSession, pointsPath: String, aggPath: String,
-      series: Seq[String], batchEndMs: Long,
-      resolutionMs: Long = Downsample.DefaultResolutionMs): Long = {
-    val wm = readWatermark(aggPath)
-    val end = batchEndMs - batchEndMs % resolutionMs // only whole buckets
-    if (end <= wm) return wm
-    val raw = readPoints(spark, pointsPath, wm, end - 1)
-    val agg = Downsample(raw, series.map(col), col("ts_ms"), col("value"),
-        resolutionMs)
-      .withColumn("month", date_format(timestamp_millis(col("bucket_ms")),
-        "yyyy-MM"))
-    repartitionForWrite(agg, "month", series)
-      .write.partitionBy("month").mode(SaveMode.Append).parquet(aggPath)
-    writeWatermark(aggPath, end)
-    end
-  }
-
   /** T9 — retention by partition drop: remove day partitions strictly
     * before the cutoff. No row-level rewrite — O(expired partitions).
     */
@@ -308,68 +226,6 @@ object Store {
     dropped.foreach(deleteRecursively)
     dropped.map(_.getFileName.toString)
   }
-
-  /** §5.4 — index self-verification (the reference ships a production
-    * `Verifier` walking postings↔labels↔expiration consistency,
-    * `cassandra/index/verify.go`): set-oriented invariant checks between
-    * the points table and the series dimension. All three counts must be
-    * zero on a healthy store.
-    */
-  final case class IndexReport(
-      orphanPoints: Long, // points whose label-set is absent from the dim
-      duplicateLabelSets: Long, // same labels registered twice
-      idCollisions: Long, // one metric_id for two different label-sets
-      badIds: Long = 0L, // metric_id ≠ hash(canonical(labels)) round-trip
-      expiredButPresent: Long = 0L) { // past-expiration series still live
-    def healthy: Boolean = orphanPoints == 0 && duplicateLabelSets == 0 &&
-      idCollisions == 0 && badIds == 0 && expiredButPresent == 0
-  }
-
-  /** Pass `nowMs` to also check expiration consistency (the reference's
-    * `WithStrictExpiration`): series whose refreshed expiration already
-    * passed but are still registered (requires an `expiration_ms` dim
-    * column, the [[refreshSeriesExpiry]] shape).
-    */
-  def verifyIndex(points: DataFrame, dim: DataFrame,
-      labelCols: Seq[String], nowMs: Option[Long] = None): IndexReport = {
-    val orphan = points
-      .select(labelCols.map(col): _*).distinct()
-      .join(dim.select(labelCols.map(col): _*), labelCols, "left_anti")
-      .count()
-    val dups = dim.groupBy(labelCols.map(col): _*)
-      .count().where(col("count") > 1).count()
-    val collisions = dim.groupBy("metric_id")
-      .agg(countDistinct(struct(labelCols.map(col): _*)).as("n"))
-      .where(col("n") > 1).count()
-    // canonical round-trip: every registration must re-derive its own id
-    // (catches bit-rot / hand-edited dims; the reference re-checks
-    // labels2id↔id2labels both ways, `verify.go:382-586`)
-    val badIds = dim.where(col("metric_id") =!=
-      xxhash64(graft.tsdb.SeriesDim.canonical(labelCols))).count()
-    val expired = nowMs match {
-      case Some(now) if dim.columns.contains("expiration_ms") =>
-        dim.groupBy("metric_id")
-          .agg(max(col("expiration_ms")).as("__e"))
-          .where(col("__e") <= now).count()
-      case _ => 0L
-    }
-    IndexReport(orphan, dups, collisions, badIds, expired)
-  }
-
-  /** The `--fix` path (reference `WithDoFix`, `verify.go:82-94`): rebuild
-    * a consistent dim from the union of registered and observed label
-    * sets — duplicates collapse, corrupt ids are re-derived from the
-    * canonical encoding, orphaned points get registered. Expiration
-    * repair is [[expireSeries]]'s job (it compacts to per-series max
-    * expiration); compose both for a full repair.
-    */
-  def fixIndex(points: DataFrame, dim: DataFrame,
-      labelCols: Seq[String]): DataFrame =
-    dim.select(labelCols.map(col): _*)
-      .unionByName(points.select(labelCols.map(col): _*))
-      .distinct()
-      .withColumn("metric_id",
-        xxhash64(graft.tsdb.SeriesDim.canonical(labelCols)))
 
   /** J2 — series get-or-create (reference `cassandra/index/index.go:
     * 1366-1538` under a global lock): new label-sets are appended with
@@ -691,25 +547,15 @@ object Store {
       .drop("__series_ttl")
   }
 
-  /** Series-dim expiration (the reference registers every series under an
-    * expiration day and a background sweep deletes entries whose day
-    * passed, `cassandra/index/index.go:2138-2291`). Spark-native shape:
-    * each write batch APPENDS (metric_id, labels, expiration_ms =
-    * max write ts + TTL) refresh rows — appends are the refresh, no
-    * row rewrites on the hot path — and the sweep compacts the dim to the
-    * per-series max expiration, dropping series whose refreshed
+  /** Series-dim expiration sweep (the reference registers every series
+    * under an expiration day and a background sweep deletes entries whose
+    * day passed, `cassandra/index/index.go:2138-2291`). Spark-native
+    * shape: each [[Tsdb]] fold APPENDS (metric_id, expiration_ms = max
+    * write ts + TTL, label names) refresh rows — appends are the refresh,
+    * no row rewrites on the hot path — and this sweep compacts the dim to
+    * the per-series max expiration, dropping series whose refreshed
     * expiration still lies before `now`. Returns the dropped series count.
     */
-  def refreshSeriesExpiry(spark: SparkSession, dimPath: String,
-      batch: DataFrame, labelCols: Seq[String], ttlSec: Long,
-      tsCol: String = "ts_ms"): Unit =
-    batch
-      .groupBy(labelCols.map(col): _*)
-      .agg((max(col(tsCol)) + ttlSec * 1000L).as("expiration_ms"))
-      .withColumn("metric_id",
-        xxhash64(graft.tsdb.SeriesDim.canonical(labelCols)))
-      .write.mode(SaveMode.Append).parquet(dimPath)
-
   def expireSeries(spark: SparkSession, dimPath: String,
       nowMs: Long, labelCols: Seq[String]): Long = {
     val dim = spark.read.parquet(dimPath)

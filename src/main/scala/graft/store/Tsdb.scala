@@ -85,21 +85,14 @@ final class Tsdb(spark: SparkSession,
     tenantLabel: String = "__account_id",
     defaultTenant: String = "default",
     compactEvery: Int = 64,
-    // write-cadence DELTA folds (r13): every `deltaFoldEvery` pins the
-    // raw tail collapses into one deduped "mid" batch — an LSM-style
-    // middle level between the compacted head and the raw pins, so a
-    // bounded-staleness read scans ≤ ~(compactEvery/deltaFoldEvery +
-    // deltaFoldEvery) relations instead of up to compactEvery. 0 = off.
-    deltaFoldEvery: Int = 8,
     durablePath: Option[String] = None, // S8 cold tier (parquet)
     hotRetainMs: Long = 2 * 3600000L,
     // driver-side micro-batching (the reference's T1 batch semantics,
     // `batch/batch.go:17-37`): posts buffer on the driver and ONE batch
-    // pins per `flushEveryPosts` posts / `flushEveryRows` rows — lifting
-    // the job-scheduling floor off small posts. Any strict read flushes
-    // first (read-your-writes); 1 = pin every post.
-    flushEveryPosts: Int = 1,
-    flushEveryRows: Long = 50000L) {
+    // pins per `flushEveryPosts` posts / [[Tsdb.FlushEveryRows]] rows —
+    // lifting the job-scheduling floor off small posts. Any strict read
+    // flushes first (read-your-writes); 1 = pin every post.
+    flushEveryPosts: Int = 1) {
 
   import Tsdb._
   import Prompb.PromSeries
@@ -545,7 +538,7 @@ final class Tsdb(spark: SparkSession,
       // stall becomes the ingest bound). The ROW threshold submits
       // unconditionally — it is the driver-memory bound.
       if ((pending.size >= flushEveryPosts && queuedFlushes.get == 0) ||
-        pendingRowCount >= flushEveryRows) submitFlush()
+        pendingRowCount >= FlushEveryRows) submitFlush()
     }
     // backpressure waits for a queue SLOT, not the whole queue: a full
     // drain released overloaded writers as a herd that refilled it at
@@ -591,9 +584,9 @@ final class Tsdb(spark: SparkSession,
 
   /** Drain the flusher: every buffered post is pinned when this returns.
     * Called from strict reads (read-your-writes), compaction, and stop;
-    * without reads, staleness is bounded by
-    * `flushEveryPosts`/`flushEveryRows` (buffered rows are driver memory
-    * either way — durability starts at the cold spill). NEVER call while
+    * without reads, staleness is bounded by `flushEveryPosts`/
+    * [[Tsdb.FlushEveryRows]] (buffered rows are driver memory either way
+    * — durability starts at the cold spill). NEVER call while
     * holding `this`: the flusher needs the lock for its append and would
     * deadlock.
     */
@@ -749,8 +742,8 @@ final class Tsdb(spark: SparkSession,
       }.reduce(_.unionByName(_))
       // dashboard-sized flushes pin as ONE block (a LocalRelation would
       // run a default-parallelism job per flush); one partition per
-      // ~flushEveryRows keeps giant backfill flushes parallel
-      val parts = math.max(1L, nSamples / flushEveryRows).toInt
+      // ~FlushEveryRows keeps giant backfill flushes parallel
+      val parts = math.max(1L, nSamples / FlushEveryRows).toInt
       val (batch, path) = pinHot(ingested
         .select(col("labels"), explode(col("samples")).as("__s"),
           col("metric_id"), col("__seq"), col("__ttl_sec"))
@@ -773,7 +766,7 @@ final class Tsdb(spark: SparkSession,
         // flush transiently sees an extra count — harmless:
         // pendingBatches only overcounts toward "not yet quiesced".)
         if (pending.size >= flushEveryPosts ||
-          pendingRowCount >= flushEveryRows) submitFlush()
+          pendingRowCount >= FlushEveryRows) submitFlush()
         pinsSinceFullFold += 1
         // bounded union depth, OFF the write path: the fold runs in the
         // background over a snapshot prefix, swapped in copy-on-write
@@ -804,7 +797,7 @@ final class Tsdb(spark: SparkSession,
     // so the raw pin tail stays bounded (SCALE.md r13). Its trigger stays
     // armed and fires when the lock frees (withColdLock re-checks).
     val full = fullWanted && !compactLock.isLocked
-    val delta = deltaFoldEvery > 0 && rawTailLen >= deltaFoldEvery
+    val delta = rawTailLen >= DeltaFoldEvery
     if ((full || delta) && compacting.compareAndSet(false, true)) {
       // checked AFTER claiming the flag: once stop() has set `stopped`
       // and seen the flag clear, no fold can start behind its back
@@ -813,7 +806,7 @@ final class Tsdb(spark: SparkSession,
         try {
           if (pinsSinceFullFold >= compactEvery && compactLock.tryLock())
             try compactNow() finally compactLock.unlock()
-          else if (deltaFoldEvery > 0) deltaFoldNow()
+          else deltaFoldNow()
         }
         finally compacting.set(false)
         maybeScheduleCompact()
@@ -909,7 +902,8 @@ final class Tsdb(spark: SparkSession,
     * deduped "mid" batch. Folding a CONTIGUOUS run of batches preserves
     * read-side LWW exactly (per-(series, ts) argmax over (__seq, value)
     * is associative). No durable-tier work: this fold only bounds a
-    * bounded-staleness read's union depth, at O(deltaFoldEvery pins).
+    * bounded-staleness read's union depth, at O([[Tsdb.DeltaFoldEvery]]
+    * pins).
     */
   private def deltaFoldNow(): Unit = foldLock.synchronized {
     // upkeep pool, NOT graft-writes: a fold queued ahead of a pin in a
@@ -1838,12 +1832,9 @@ final class Tsdb(spark: SparkSession,
     * one slow scan. Instead each flip stamps every non-current complete
     * generation with a `_retired` marker (idempotent; the stamp is the
     * RETIREMENT time, not the write time) and only generations retired
-    * longer than the grace window (`spark.graft.gen.grace.ms`, default
-    * 10 min ≈ the longest plausible query) are deleted.
+    * longer than [[Tsdb.GenGraceMs]] are deleted.
     */
   private def retireGenerations(root: String, current: Int): Unit = {
-    val grace = spark.conf.get("spark.graft.gen.grace.ms",
-      (10 * 60 * 1000L).toString).toLong
     val now = System.currentTimeMillis()
     val dir = Paths.get(root)
     if (!Files.isDirectory(dir)) return
@@ -1857,7 +1848,7 @@ final class Tsdb(spark: SparkSession,
         stamp match {
           case None =>
             scala.util.Try(Files.writeString(marker, now.toString))
-          case Some(t) if now - t >= grace =>
+          case Some(t) if now - t >= GenGraceMs =>
             Store.deleteRecursively(g)
           case _ => () // inside the grace window: leave it
         }
@@ -2220,6 +2211,26 @@ final class Tsdb(spark: SparkSession,
 }
 
 object Tsdb {
+
+  /** Write-cadence DELTA folds (r13): every `DeltaFoldEvery` raw pins the
+    * tail collapses into one deduped "mid" batch — an LSM-style middle
+    * level between the compacted head and the raw pins, so a
+    * bounded-staleness read scans ≤ ~(compactEvery/DeltaFoldEvery +
+    * DeltaFoldEvery) relations instead of up to compactEvery.
+    */
+  private val DeltaFoldEvery = 8
+
+  /** The row bound of one driver-side flush: buffered posts pin once
+    * they hold this many samples (buffered rows are driver memory), and
+    * a flush pins as one partition per this many rows.
+    */
+  private val FlushEveryRows = 50000L
+
+  /** How long a retired generation stays on disk after its `_retired`
+    * stamp: about the longest plausible query, so a reader planned
+    * before a flip finishes its scan.
+    */
+  private[graft] val GenGraceMs: Long = 10 * 60 * 1000L
 
   /** A hot batch's place in the store: the full fold's compacted,
     * deduped output (only ever first), a delta fold of raw pins, or one

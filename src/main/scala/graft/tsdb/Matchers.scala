@@ -93,10 +93,6 @@ object Matchers {
     }
   }
 
-  /** Compile a matcher set against a labels map<string,string> column. */
-  def predicateOnMap(labels: Column, m: Matcher): Column =
-    predicate(labels.getItem(m.label), m)
-
   /** AND of all matchers, resolving each label via `resolve`
     * (e.g. concrete columns for the events table, map lookups for a
     * generic series table).

@@ -12,16 +12,17 @@ import org.apache.spark.sql.functions._
   *
   *  - `overTime`: per-sample trailing windows via `rangeBetween` on ms longs
   *    — no shuffle beyond the initial repartition by series, no step grid.
-  *  - `stepGrid` + `instantAt`/`rangeAt`: explicit `query_range(start, end,
-  *    step)` evaluation — a generated step grid joined against samples.
-  *    A PromQL range selector `m[R]` is (t-R, t] (left-open), and instant
-  *    selectors take the latest sample within the lookback delta (5 min
-  *    default, `api/promql/engine.go:42`).
+  *  - `instantBucketed`/`rangeBucketed`: explicit `query_range(start, end,
+  *    step)` evaluation — each sample is mapped to the eval steps whose
+  *    window holds it ([[withEvalSteps]]) and aggregated per (series,
+  *    step). A PromQL range selector `m[R]` is (t-R, t] (left-open), and
+  *    instant selectors take the latest sample within the lookback delta
+  *    (5 min default, `api/promql/engine.go:42`).
   *
-  * Scale note: the grid join is a range-bounded equi-ish join; for 100 TB it
-  * shuffles points once on series and replicates the (tiny) grid broadcast,
-  * so the expensive side moves only once. The `rangeBetween` form avoids the
-  * grid entirely when eval points coincide with samples.
+  * Scale note: the step mapping is a projection plus one hash aggregate —
+  * no grid join, so at 100 TB the points move once, on series. The
+  * `rangeBetween` form needs no steps when eval points coincide with
+  * samples.
   */
 object RangeWindows {
   val LookbackDeltaMs: Long = 5 * 60 * 1000L
@@ -115,46 +116,5 @@ object RangeWindows {
     import spark.implicits._
     spark.range(0, (endMs - startMs) / stepMs + 1)
       .select((lit(startMs) + $"id" * stepMs).as("eval_ms"))
-  }
-
-  /** Instant-vector evaluation over a grid: for each (series, eval_ms) the
-    * latest sample with `eval_ms - lookback < ts <= eval_ms`. Series with no
-    * sample in the window are absent (PromQL staleness).
-    */
-  def instantOverGrid(
-      points: DataFrame,
-      grid: DataFrame,
-      series: Seq[String],
-      lookbackMs: Long = LookbackDeltaMs,
-      tsMs: String = "ts_ms",
-      value: String = "value"): DataFrame = {
-    val joined = points.join(
-      broadcast(grid),
-      col(tsMs) <= col("eval_ms") && col(tsMs) > col("eval_ms") - lookbackMs)
-    joined
-      .groupBy((series.map(col) :+ col("eval_ms")): _*)
-      // deterministic last-write-wins: ties on ts resolve by value order
-      // (struct max is lexicographic), so any engine agrees
-      .agg(max(struct(col(tsMs), col(value))).getField(value).as(value))
-  }
-
-  /** Range-vector aggregation over a grid: aggregates all samples in
-    * (eval_ms - rangeMs, eval_ms] per series and step.
-    */
-  def rangeOverGrid(
-      points: DataFrame,
-      grid: DataFrame,
-      series: Seq[String],
-      rangeMs: Long,
-      aggs: Seq[(String, Column => Column)],
-      tsMs: String = "ts_ms",
-      value: String = "value"): DataFrame = {
-    val joined = points.join(
-      broadcast(grid),
-      col(tsMs) <= col("eval_ms") && col(tsMs) > col("eval_ms") - rangeMs)
-    joined
-      .groupBy((series.map(col) :+ col("eval_ms")): _*)
-      .agg(aggs.head._2(col(value)).as(aggs.head._1),
-        aggs.tail.map { case (n, a) => a(col(value)).as(n) }: _*)
   }
 }

@@ -1,25 +1,14 @@
 package graft.tsdb
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
-
-/** Series (dimension) table: label set ↔ metric id, the Spark counterpart of
-  * the reference's bidirectional index (`index_labels2id` /
-  * `index_id2labels`, `cassandra/index/index.go:4091-4108`).
-  *
-  * Two id allocation strategies:
-  *  - [[denseIds]]: dense_rank over the canonical label order. Matches the
-  *    reference's dense int64 ids (`findFreeID`, `index.go:1805-1901`) and
-  *    is reproducible in the DuckDB oracle, but the unpartitioned window is
-  *    a single-reducer sort — fine for dimension-sized data (series count ≪
-  *    points count), wrong for billions of series.
-  *  - [[hashIds]]: xxhash64 of the canonical label string — embarrassingly
-  *    parallel, collision-checked, the strategy to prefer at 100 TB ingest
-  *    (get-or-create becomes a stateless projection instead of a global
-  *    lock, reference `index.go:1903-2120`).
+/** Series identity: the canonical label-set encoding whose xxhash64 is a
+  * series' metric id, the Spark counterpart of the reference's
+  * bidirectional index (`index_labels2id` / `index_id2labels`,
+  * `cassandra/index/index.go:4091-4108`). A hash id is embarrassingly
+  * parallel and collision-checked (the engine's `indexVerify`), so
+  * get-or-create is a stateless projection instead of the reference's
+  * global lock and dense id search (`index.go:1805-2120`).
   */
 object SeriesDim {
 
@@ -58,24 +47,4 @@ object SeriesDim {
       transform(array_sort(map_entries(labels)),
         e => concat(e.getField("key"), lit("\u0002"), e.getField("value"))),
       "\u0001")
-
-  /** Distinct series of the events table with dense ids. */
-  def denseIds(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.orderBy(col("user_id"), col("event_type"))
-    Tables.points(spark, dir)
-      .select("user_id", "event_type")
-      .distinct()
-      .withColumn("metric_id", dense_rank().over(w).cast("long"))
-  }
-
-  /** Distinct series with hash ids and a labels map (the scale path). */
-  def hashIds(spark: SparkSession, dir: String): DataFrame =
-    Tables.points(spark, dir)
-      .select("user_id", "event_type")
-      .distinct()
-      .withColumn("labels",
-        map(lit("user_id"), col("user_id").cast("string"),
-          lit("event_type"), col("event_type")))
-      .withColumn("metric_id",
-        xxhash64(canonical(Seq("user_id", "event_type"))))
 }

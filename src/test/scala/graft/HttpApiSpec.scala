@@ -289,29 +289,33 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
     "deltaFoldEvery pins off the write path; LWW survives the mid " +
     "boundary; the full fold collapses mids back to one head") {
     import org.apache.spark.sql.functions.col
-    val apiDF = new HttpApi(spark, compactEvery = 100, deltaFoldEvery = 2)
-    apiDF.write(Seq(series("dm", "a", i => 1.0 + i)), "default")
-    apiDF.drainFlushes()
-    apiDF.write(Seq(series("dm", "a", i => 100.0 + i)), "default")
-    apiDF.drainFlushes()
-    apiDF.write(Seq(series("dm", "a", i => 200.0 + i)), "default")
-    apiDF.drainFlushes()
-    apiDF.write(Seq(series("dm", "b", i => 7.0)), "default")
-    apiDF.drainFlushes()
-    apiDF.write(Seq(series("dm", "c", i => 8.0)), "default")
-    apiDF.drainFlushes()
-    // delta folds run on the background compact executor: 5 pins at
-    // deltaFoldEvery=2 must produce at least two mids, and the hot
-    // depth must drop well below the pin count — compactEvery=100 is
-    // out of reach, so none of this is the full fold
+    val apiDF = new HttpApi(spark, compactEvery = 100)
+    // 24 pins, one post each: instance a is written at pins 0, 10 and 20
+    // with new values, every other pin is a series of its own
+    val pins = 24
+    (0 until pins).foreach { p =>
+      val s = p match {
+        case 0 => series("dm", "a", i => 1.0 + i)
+        case 10 => series("dm", "a", i => 100.0 + i)
+        case 20 => series("dm", "a", i => 200.0 + i)
+        case _ => series("dm", s"o$p", i => p.toDouble)
+      }
+      apiDF.write(Seq(s), "default")
+      apiDF.drainFlushes()
+    }
+    // delta folds run on the background compact executor, one per 8 raw
+    // pins: 24 pins must produce at least two mids. Each mid folds at
+    // least 8 pins and a quiesced raw tail holds fewer than 8, so the hot
+    // depth ends at most 3 mids + 7 pins, well below the pin count —
+    // compactEvery=100 is out of reach, so none of this is the full fold
     val deadline = System.nanoTime() + 30L * 1000000000L
-    while ((apiDF.midCount < 2 || apiDF.hotDepth > 3) &&
+    while ((apiDF.midCount < 2 || apiDF.hotDepth > 10) &&
       System.nanoTime() < deadline) Thread.sleep(50)
     assert(apiDF.midCount >= 2)
-    assert(apiDF.hotDepth <= 3)
+    assert(apiDF.hotDepth <= 10)
     assert(apiDF.pendingBatches > 0) // mids are NOT a full fold
-    // LWW across the mid boundary: the third write (its own pin,
-    // possibly a different mid than the first two) wins at read
+    // LWW across the mid boundary: the third write of instance a (its own
+    // pin, in a later mid or the raw tail) wins at read
     val v = apiDF.source().get.points
       .where(col("__name__") === "dm" && col("instance") === "a" &&
         col("ts_ms") === T0)
@@ -1370,12 +1374,14 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
       assert(gens().contains(g0))
       assert(repair().statusCode() === 200)
       assert(gens().contains(g0) && gens().contains(g1))
-      // with a zero grace window the next flip reaps stamped generations
-      spark.conf.set("spark.graft.gen.grace.ms", "0")
-      try {
-        assert(repair().statusCode() === 200)
-        assert(!gens().contains(g0), s"grace=0 must reap g$g0: ${gens()}")
-      } finally spark.conf.unset("spark.graft.gen.grace.ms")
+      // once its retirement stamp is older than the grace window, the
+      // next flip reaps the generation
+      java.nio.file.Files.writeString(aggRoot.resolve(s"g$g0/_retired"),
+        (System.currentTimeMillis() - graft.store.Tsdb.GenGraceMs -
+          60000L).toString)
+      assert(repair().statusCode() === 200)
+      assert(!gens().contains(g0),
+        s"a stamp past the grace window must reap g$g0: ${gens()}")
     } finally apiSR.stop()
   }
 
@@ -2423,12 +2429,14 @@ class HttpApiSpec extends SparkSpec with BeforeAndAfterAll {
 
   test("a cold generation holding data files but no bucket manifest " +
     "fails facade construction") {
-    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.functions.{col, lit, timestamp_millis, to_date}
     val root = java.nio.file.Files.createTempDirectory("graft_nomanifest")
       .resolve("cold")
-    graft.store.Store.writePoints(spark.range(3).select(
-      col("id").as("metric_id"), (lit(T0) + col("id")).as("ts_ms"),
-      lit(1.0).as("value")), root.resolve("g0").toString, Seq("metric_id"))
+    // plain day-partitioned parquet: data files, no bucket manifest
+    spark.range(3).select(col("id").as("metric_id"),
+      (lit(T0) + col("id")).as("ts_ms"), lit(1.0).as("value"))
+      .withColumn("day", to_date(timestamp_millis(col("ts_ms"))))
+      .write.partitionBy("day").parquet(root.resolve("g0").toString)
     val e = intercept[IllegalArgumentException](
       new HttpApi(spark, durablePath = Some(root.toString)))
     assert(e.getMessage.contains("_bucketspec.json"), e.getMessage)

@@ -382,7 +382,7 @@ class PlanSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("plan_bound_read")
       .resolve("cold").toString
     val api = new graft.api.HttpApi(spark, compactEvery = 1000000,
-      deltaFoldEvery = 0, durablePath = Some(dir))
+      durablePath = Some(dir))
     def s(base: Long) = PromSeries(Map("__name__" -> "b_metric",
       "instance" -> "a"), (0 until 10).map(i => (base + i * 60000L, i * 1.0)))
     val t0 = 1704067200000L

@@ -6,8 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * tools against growing their own listeners back, the engine
   * against passing parameters through session conf or growing knobs
   * unnoticed, the storage engine against folding back into the HTTP
-  * facade, its read state against leaving its one View, and its cold
-  * tier against the session catalog.
+  * facade, its read state against leaving its one View, and every
+  * src/main source against the session catalog.
   *
   * Raw U+0000/U+0001 bytes in string/char literals make git classify the
   * file as BINARY — diffs, blame, and review silently break. This happened
@@ -120,23 +120,26 @@ class SourceHygieneSpec extends AnyFunSuite {
     "session catalog") {
     // a generation's directory plus its manifest is the whole table; a
     // catalog entry is one more copy of it, shared by every store in the
-    // session
-    val tsdb = new java.io.File("src/main/scala/graft/store/Tsdb.scala")
-    val named = Seq("spark.catalog", "spark.table", "saveAsTable",
-      "sessionState.catalog").flatMap(codeNaming(_, Seq(tsdb)))
-    val code = text(tsdb).linesIterator.filterNot { l =>
-      l.trim.startsWith("*") || l.trim.startsWith("/")
-    }.mkString("\n")
-    val ddl = "spark\\.sql\\(\\s*s?(\"\"\"[\\s\\S]*?\"\"\"|\"[^\"]*\")".r
-      .findAllIn(code).filter(_.contains("TABLE")).toSeq
+    // session. The guard covers every src/main source, so no other
+    // writer brings a catalog table back either
+    val named = Seq("spark.catalog", "spark.table", "saveAsTable", "bucketBy",
+      "sessionState.catalog").flatMap(codeNaming(_, mainSources))
+    val ddl = mainSources.flatMap { f =>
+      val code = text(f).linesIterator.filterNot { l =>
+        l.trim.startsWith("*") || l.trim.startsWith("/")
+      }.mkString("\n")
+      "spark\\.sql\\(\\s*s?(\"\"\"[\\s\\S]*?\"\"\"|\"[^\"]*\")".r
+        .findAllIn(code).filter(_.contains("TABLE"))
+        .map(d => s"${f.getPath}: $d")
+    }
     assert(named.isEmpty && ddl.isEmpty, (named ++ ddl).mkString("\n"))
   }
 
   test("the graft conf keys src/main reads are exactly the allowlist") {
     // a new knob is one more mechanism to keep working, so adding one
     // means editing this list
-    val allowed = Set("graft.stage.dir", "spark.graft.gen.grace.ms",
-      "spark.graft.ivf.retrain.ratio", "spark.graft.write.splits")
+    val allowed = Set("graft.stage.dir", "spark.graft.ivf.retrain.ratio",
+      "spark.graft.write.splits")
     val read =
       "conf\\.(get|getOption|contains)\\(\\s*\"((spark\\.)?graft\\.[^\"]+)\"".r
     val keys = mainSources.flatMap(f =>

@@ -2,32 +2,37 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.store.Store
 import graft.tsdb.{Downsample, PreAgg}
 
-/** Storage layout: partitioned write (S8), partition-drop retention (T9),
-  * and the incremental pre-aggregation job with watermark (A5/S9), wired
-  * into the raw↔agg routed read (A2/A4).
+/** Storage building blocks the engine composes: the time-partitioned
+  * write's per-partition fan-out (S8), partition-drop retention (T9), the
+  * raw↔agg routed read (A2/A4), series get-or-create (J2), the
+  * series-expiry sweep, per-write TTL (T9) and the day-partitioned,
+  * series-bucketed layout of the cold tier (S8).
   */
 class StoreSpec extends SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
   private lazy val tmp = Files.createTempDirectory("graft_store").toString
-  private lazy val pointsPath = s"$tmp/points"
-  private lazy val aggPath = s"$tmp/agg_5m"
   private val series = Seq("event_type")
 
   private lazy val pts = Tables.points(spark, sfDir)
     .select("event_type", "ts_ms", "value")
 
-  test("S8: write is date-partitioned; day directories exist") {
-    Store.writePoints(pts, pointsPath, series)
-    val days = Files.list(Paths.get(pointsPath)).iterator()
-    var names = List.empty[String]
-    while (days.hasNext) names ::= days.next().getFileName.toString
-    assert(names.count(_.startsWith("day=2024-01-")) === 30)
+  /** `pts` as plain day-partitioned parquet, shuffled into the
+    * time-partitioned write shape ([[Store.repartitionForWrite]]).
+    */
+  private lazy val pointsPath: String = {
+    val p = s"$tmp/points"
+    Store.repartitionForWrite(
+      pts.withColumn("day", to_date(timestamp_millis(col("ts_ms")))),
+      "day", series)
+      .write.partitionBy("day").parquet(p)
+    p
   }
 
   test("S8 at scale: a day partition is written by multiple tasks") {
@@ -43,48 +48,11 @@ class StoreSpec extends SparkSpec {
     assert(files.size <= Store.writeSplits(pts))
   }
 
-  test("read prunes partitions and preserves every row in range") {
-    val from = 1704844800000L // 2024-01-10
-    val to = 1705708799999L // 2024-01-19 end
-    val got = Store.readPoints(spark, pointsPath, from, to).count()
-    val want = pts.where(col("ts_ms").between(from, to)).count()
-    assert(got === want && got > 0)
-    // and the physical plan only lists the matching day partitions
-    val plan = Store.readPoints(spark, pointsPath, from, to)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters"))
-  }
-
-  test("A5: pre-agg job is incremental and watermarked") {
-    val wm1 = Store.runPreAggJob(spark, pointsPath, aggPath, series,
-      1705708800000L) // 2024-01-20
-    assert(wm1 === 1705708800000L)
-    val n1 = spark.read.parquet(aggPath).count()
-    assert(n1 > 0)
-    // re-run with the same end: no-op
-    val wm2 = Store.runPreAggJob(spark, pointsPath, aggPath, series,
-      1705708800000L)
-    assert(wm2 === wm1)
-    assert(spark.read.parquet(aggPath).count() === n1)
-    // advance: only the new window is appended
-    val wm3 = Store.runPreAggJob(spark, pointsPath, aggPath, series,
-      1706659200000L) // 2024-01-31
-    assert(wm3 === 1706659200000L)
-    val all = spark.read.parquet(aggPath)
-    // stored agg == downsampling everything in one go
-    val direct = Downsample(pts, series.map(col), col("ts_ms"), col("value"))
-    assert(all.count() === direct.count())
-    val merged = all.groupBy("event_type")
-      .agg(sum("count").as("n")).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val want = pts.groupBy("event_type").agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(merged === want)
-  }
-
   test("A2/A4: routed read over the stored agg matches the raw aggregate") {
-    val wm = Store.readWatermark(aggPath)
-    // simulate a mid-stream watermark: use a past one so a raw tail exists
+    val aggPath = s"$tmp/agg_5m"
+    Downsample(pts, series.map(col), col("ts_ms"), col("value"))
+      .write.parquet(aggPath)
+    // a mid-stream watermark, so a raw tail exists
     val midWm = 1705708800000L
     val agg = spark.read.parquet(aggPath)
       .select((series.map(col) :+ col("bucket_ms") :+ col("min") :+
@@ -96,7 +64,6 @@ class StoreSpec extends SparkSpec {
     val want = pts.groupBy("event_type").agg(count(lit(1)).as("n"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(got === want)
-    assert(wm === 1706659200000L)
   }
 
   test("J2: series get-or-create is idempotent with stable hash ids") {
@@ -113,63 +80,12 @@ class StoreSpec extends SparkSpec {
     assert(dim.select("metric_id").distinct().count() === first) // no collisions
   }
 
-  test("index verifier: clean store reports zero; corruption is detected") {
-    val dimPath = s"$tmp/series_dim"
-    val points = Tables.points(spark, sfDir)
-    val dim = spark.read.parquet(dimPath)
-    val clean = Store.verifyIndex(points, dim,
-      Seq("user_id", "event_type"))
-    assert(clean === Store.IndexReport(0L, 0L, 0L))
-    // corrupt: drop some series and alias one id to a different label-set
-    import org.apache.spark.sql.functions._
-    val broken = dim.where(col("user_id") =!= 1L)
-      .unionByName(dim.limit(1).withColumn("event_type", lit("hacked")))
-    val r = Store.verifyIndex(points, broken, Seq("user_id", "event_type"))
-    assert(r.orphanPoints > 0L)
-    assert(r.idCollisions === 1L)
-    // the aliased row also fails the canonical round-trip (its stored id
-    // no longer derives from its labels)
-    assert(r.badIds === 1L)
-    assert(!r.healthy)
-    // a duplicated registration is counted
-    val dup = Store.verifyIndex(points,
-      dim.unionByName(dim.limit(1)), Seq("user_id", "event_type"))
-    assert(dup.duplicateLabelSets === 1L)
-    // --fix rebuilds a dim that verifies clean: dups collapsed, ids
-    // re-derived, orphans re-registered
-    val fixed = Store.fixIndex(points, broken.unionByName(dim.limit(1)),
-      Seq("user_id", "event_type"))
-    val after = Store.verifyIndex(points, fixed, Seq("user_id", "event_type"))
-    assert(after.healthy, after.toString)
-  }
-
-  test("index verifier: strict expiration flags past-due series") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val dimPath = s"$tmp/verify_exp_dim"
-    val batch = Seq((5L, "click", 1000L), (6L, "view", 2000L))
-      .toDF("user_id", "event_type", "ts_ms")
-    Store.refreshSeriesExpiry(spark, dimPath, batch,
-      Seq("user_id", "event_type"), ttlSec = 60L)
-    val dim = spark.read.parquet(dimPath)
-    val pts = batch
-    // before the TTL horizon: consistent
-    assert(Store.verifyIndex(pts, dim, Seq("user_id", "event_type"),
-      nowMs = Some(1000L)).expiredButPresent === 0L)
-    // after: both series are past-due but still registered — the exact
-    // drift the reference's cassandraExpire sweep + strict verify catch
-    val late = Store.verifyIndex(pts, dim, Seq("user_id", "event_type"),
-      nowMs = Some(10_000_000L))
-    assert(late.expiredButPresent === 2L)
-    assert(!late.healthy)
-  }
-
   test("T9: retention drops whole day partitions, keeps the rest") {
     val cutoff = 1704844800000L // 2024-01-10
     val dropped = Store.applyRetention(pointsPath, cutoff)
     assert(dropped.toSet === (1 to 9)
       .map(d => f"day=2024-01-$d%02d").toSet)
-    val left = Store.readPoints(spark, pointsPath, 0L, 4102444800000L)
+    val left = spark.read.parquet(pointsPath)
     assert(left.count() ===
       pts.where(col("ts_ms") >= cutoff).count())
   }
@@ -178,12 +94,14 @@ class StoreSpec extends SparkSpec {
     import spark.implicits._
     val dimPath = java.nio.file.Files
       .createTempDirectory("graft_expiry").toString + "/dim"
-    // first batch at t=0: both series get expiry 0 + 100s
-    val b1 = Seq(("A", 0L), ("B", 0L)).toDF("series", "ts_ms")
-    Store.refreshSeriesExpiry(spark, dimPath, b1, Seq("series"), ttlSec = 100L)
+    // the refresh rows a fold appends: (metric_id, label, max ts + TTL).
+    // The first batch at t=0 gives both series expiry 0 + 100s
+    def refresh(rows: (Long, String, Long)*): Unit =
+      rows.toDF("metric_id", "series", "expiration_ms")
+        .write.mode("append").parquet(dimPath)
+    refresh((1L, "A", 100000L), (2L, "B", 100000L))
     // series A writes again at t=200s → refreshed to 300s; B goes silent
-    val b2 = Seq(("A", 200000L)).toDF("series", "ts_ms")
-    Store.refreshSeriesExpiry(spark, dimPath, b2, Seq("series"), ttlSec = 100L)
+    refresh((1L, "A", 300000L))
     // sweep at t=250s: B (expiry 100s) dropped, A (refreshed 300s) kept
     val dropped = Store.expireSeries(spark, dimPath, 250000L, Seq("series"))
     assert(dropped === 1L)
@@ -208,35 +126,6 @@ class StoreSpec extends SparkSpec {
     assert(kept.toSet === Set(("A", 0L), ("A", 40000L)))
   }
 
-  test("series-bucketed layout: per-series aggregation plans with NO " +
-    "exchange and returns the same rows as the plain layout") {
-    import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft_bucketed")
-    val pts = Tables.points(spark, "/root/testdata/sf0.001")
-    Store.writeBucketedPoints(pts, "spec_events_bucketed",
-      s"$dir/events_bucketed", Seq("user_id", "event_type"), 8,
-      Seq("user_id", "event_type", "ts_ms"))
-    def a1(src: org.apache.spark.sql.DataFrame) =
-      graft.tsdb.Downsample(src, Seq(col("user_id"), col("event_type")),
-        col("ts_ms"), col("value"))
-    val bucketed = a1(spark.table("spec_events_bucketed"))
-    // the clustering requirement is satisfied off the bucketed scan —
-    // the shuffle the r14 sf1000 probe measured spilling 97 GB at 1B
-    // events simply does not exist in this plan
-    val plan = bucketed.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), plan)
-    // physical change only: same rows as the plain-layout aggregate
-    // (min/max/count exactly; avg through the same single-partition add
-    // order per group here, so the full row compares equal at this size)
-    val plain = a1(pts)
-    val key = (df: org.apache.spark.sql.DataFrame) => df
-      .select(col("user_id"), col("event_type"), col("bucket_ms"),
-        col("min"), col("max"), round(col("avg"), 6), col("count"))
-      .collect().map(_.toString).sorted
-    assert(key(bucketed) === key(plain))
-    spark.sql("DROP TABLE IF EXISTS spec_events_bucketed")
-  }
-
   test("day-partitioned bucketed layout: appends land, the manifest " +
     "alone reads the generation back, per-series aggs stay " +
     "exchange-free, and day pruning holds") {
@@ -258,6 +147,10 @@ class StoreSpec extends SparkSpec {
       org.apache.spark.sql.SaveMode.Append, tasks = spec.n)
     // manifest round-trips
     assert(Store.BucketSpec.read(gen) === Some(spec))
+    // one `day=` directory per day of data (January 1-30)
+    val dayDirs = Files.list(Paths.get(gen)).iterator().asScala
+      .map(_.getFileName.toString).filter(_.startsWith("day=")).toSeq
+    assert(dayDirs.size === 30, dayDirs)
     // every written file is bucket-named (the filename IS the bucket id)
     val written = Files.walk(Paths.get(gen)).iterator().asScala
       .map(_.getFileName.toString).filter(_.endsWith(".parquet")).toSeq
@@ -274,6 +167,20 @@ class StoreSpec extends SparkSpec {
     val agg = t.groupBy(col("metric_id"), col("ts_ms"))
       .agg(max(col("value")))
     assert(!agg.queryExecution.executedPlan.toString.contains("Exchange"))
+    // a physical change only: per-series downsampling off the bucketed
+    // generation plans with no exchange either, and returns the same rows
+    // as off the plain frame (min/max/count exactly; avg rounded, as its
+    // add order may differ)
+    def a1(src: DataFrame) =
+      Downsample(src, Seq(col("metric_id")), col("ts_ms"), col("value"))
+    val key = (df: DataFrame) => df
+      .select(col("metric_id"), col("bucket_ms"), col("min"), col("max"),
+        round(col("avg"), 6), col("count"))
+      .collect().map(_.toString).sorted
+    val bucketedA1 = a1(t)
+    assert(!bucketedA1.queryExecution.executedPlan.toString
+      .contains("Exchange"))
+    assert(key(bucketedA1) === key(a1(raw)))
     // day partition pruning
     val pruned = t.where(col("day") === lit("2024-01-03").cast("date"))
     val scan = pruned.queryExecution.executedPlan.toString

@@ -11,8 +11,9 @@ import graft.streaming.Prompb.PromSeries
   * strict and staleness-budgeted reads, a spilling fold with restart
   * recovery, stop-time pin reclaim, the cold tier's StaleNaN bits, a
   * read planned across a spilling fold, two stores in one session whose
-  * paths share a hash, and a seeded run of concurrent writers, readers
-  * and upkeep.
+  * paths share a hash, the identity verifier on a corrupted generation,
+  * incremental pre-aggregation, and a seeded run of concurrent writers,
+  * readers and upkeep.
   */
 class TsdbSpec extends SparkSpec {
 
@@ -179,6 +180,91 @@ class TsdbSpec extends SparkSpec {
     }
     val made = tables() -- before
     assert(made.isEmpty, made)
+  }
+
+  test("the verifier counts a metric_id that does not re-derive from its " +
+    "labels and an id shared by two label sets") {
+    import org.apache.spark.sql.SaveMode
+    import org.apache.spark.sql.functions.{lit, map, xxhash64}
+    import graft.store.Store
+    val dir = tempDir("tsdb_verify")
+    def labels(inst: String) = map(lit("__name__"), lit("tv"),
+      lit("instance"), lit(inst), lit("job"), lit("node"))
+    def idOf(inst: String) =
+      xxhash64(graft.tsdb.SeriesDim.canonicalMap(labels(inst)))
+    // a hand-built g0 in the engine's layout (bucket manifest first,
+    // `value` as its raw bits): a is healthy, b's id is not its labels'
+    // hash, and c carries a's id
+    val rows = Seq((labels("a"), idOf("a"), T0), (labels("b"), lit(42L), T0),
+      (labels("c"), idOf("a"), T0 + 60000L)).map { case (l, id, ts) =>
+      spark.range(1).select(id.as("metric_id"), lit(ts).as("ts_ms"),
+        l.as("labels"),
+        lit(java.lang.Double.doubleToRawLongBits(1.0)).as("value"),
+        lit(1L).as("__seq"), lit(3155760000L).as("__ttl_sec"))
+    }.reduce(_.unionByName(_))
+    val g0 = s"$dir/g0"
+    val spec = Store.BucketSpec(Seq("metric_id"), 1, Seq("metric_id", "ts_ms"))
+    Store.BucketSpec.write(g0, spec)
+    Store.writeBucketedDays(rows, g0, spec, SaveMode.Append, tasks = spec.n)
+    val db = new Tsdb(spark, durablePath = Some(dir))
+    try {
+      val report = db.indexVerify(strict = false).toMap
+      assert(report("badIds") === 2L, report) // b, and c under a's id
+      assert(report("idCollisions") === 1L, report) // a's id serves a and c
+    } finally db.stop()
+  }
+
+  test("pre-aggregation over a spilled history is incremental: the same " +
+    "end adds no file, a later end appends only the new buckets") {
+    import org.apache.spark.sql.functions.sum
+    val root = java.nio.file.Files.createTempDirectory("tsdb_preagg")
+    val dir = root.resolve("cold").toString
+    val day = 86400000L
+    val step = 300000L
+    // three days, one sample per 5-min bucket, all past the hot horizon
+    val s = PromSeries(Map("__name__" -> "tp", "instance" -> "a",
+      "job" -> "node"), (0 until 3 * 288).map(i => (T0 + i * step, i * 1.0)))
+    val db = new Tsdb(spark, compactEvery = 1000000, durablePath = Some(dir))
+    try {
+      db.write(Seq(s), "default")
+      db.compact() // spills all three days
+    } finally db.stop()
+    // drop the agg tier the spill's own pre-aggregation wrote: the
+    // restarted engine's watermark starts at 0 behind a spilled history
+    graft.store.Store.deleteRecursively(root.resolve("cold_agg5m"))
+    val db2 = new Tsdb(spark, compactEvery = 1000000, durablePath = Some(dir))
+    try {
+      val gen = root.resolve("cold_agg5m").resolve("g0")
+      def files(): Set[String] =
+        if (!java.nio.file.Files.isDirectory(gen)) Set.empty
+        else {
+          val w = java.nio.file.Files.walk(gen)
+          try w.iterator().asScala.map(_.toString)
+            .filter(_.endsWith(".parquet")).toSet
+          finally w.close()
+        }
+      assert(db2.preAggWatermark === 0L)
+      assert(db2.preAggregate(T0 + day) === T0 + day)
+      val first = files()
+      assert(first.nonEmpty)
+      // the same end again: the same watermark, and no file written
+      assert(db2.preAggregate(T0 + day) === T0 + day)
+      assert(files() === first)
+      // a later end appends only the buckets in [T0 + day, T0 + 2 day)
+      assert(db2.preAggregate(T0 + 2 * day) === T0 + 2 * day)
+      val added = (files() -- first).toSeq
+      assert(added.nonEmpty)
+      val addedBuckets = spark.read.parquet(added: _*).select("bucket_ms")
+        .collect().map(_.getLong(0))
+      assert(addedBuckets.nonEmpty &&
+        addedBuckets.forall(b => b >= T0 + day && b < T0 + 2 * day),
+        addedBuckets.sorted.take(3).toSeq)
+      // together: every bucket below the watermark once, one sample each
+      val agg = spark.read.parquet(gen.toString)
+      assert(agg.select("bucket_ms").collect().map(_.getLong(0)).sorted
+        .toSeq === (0 until 2 * 288).map(i => T0 + i * step))
+      assert(agg.agg(sum("count")).head().getLong(0) === 2L * 288)
+    } finally db2.stop()
   }
 
   test("seeded writers, readers and upkeep: every strict read is " +
